@@ -24,6 +24,17 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def spark_tier(monkeypatch):
+    """Forces the Spark execution tier (LOCAL_TIER_MAX_POSTINGS = 0). Each
+    parity battery runs twice: as itself, under the default cost rule that
+    sends the small test corpora to the local tier, and as its
+    ``*_spark_tier`` twin with this fixture."""
+    from veloci_spark import search
+
+    monkeypatch.setattr(search, "LOCAL_TIER_MAX_POSTINGS", 0)
+
+
 @pytest.fixture(scope="session")
 def index_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("index")

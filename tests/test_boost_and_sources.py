@@ -101,6 +101,23 @@ def test_boost_matches_oracle(boosted_spark_index, boosted_ref_index, req):
         assert np.float32(d["score"]) == np.float32(ws), (d, ws)
 
 
+@pytest.mark.parametrize("req", [
+    BOOST_REQUESTS[0],
+    # per-leg boost-by-field (options.boost): the composed path
+    {"or": [{"search": {"terms": ["greg"], "path": "text", "options": {
+        "boost": [{"path": "n_chars_", "boost_fun": "Add", "param": 1.0}]}}},
+            {"search": {"terms": ["text"], "path": "text"}}], "top": 10},
+], ids=["anchor_boost", "per_leg_boost"])
+def test_boost_shapes_run_on_spark(boosted_spark_index, boosted_ref_index, req):
+    from veloci_spark.search import search
+
+    got = search(boosted_spark_index, {**req, "explain": True})
+    assert got["explain"]["tier"] == "spark"
+    want = pyref.search_request(boosted_ref_index, req)
+    assert [(d["doc_id"], np.float32(d["score"])) for d in got["data"]] == \
+        [(d, np.float32(s)) for d, s in want]
+
+
 class TestSources:
     def test_ndjson_roundtrip(self, spark, tmp_path):
         from veloci_spark.sources import read_ndjson, read_webtext, to_ndjson

@@ -195,6 +195,12 @@ class TestFuzzDifferential:
         self.phrase_pool = phrase_pool
 
     def test_random_trees_match_oracle(self):
+        self._random_trees()
+
+    def test_random_trees_match_oracle_spark_tier(self, spark_tier):
+        self._random_trees()
+
+    def _random_trees(self):
         @settings(max_examples=N_EXAMPLES, deadline=None,
                   derandomize=DERANDOMIZE,
                   suppress_health_check=[HealthCheck.too_slow])
@@ -358,6 +364,14 @@ def _composed_request_strategy(phrase_pairs):
 
 class TestFuzzComposedExtras:
     def test_composed_extras_match_oracle(self, boost_engines):
+        self._composed_extras(boost_engines)
+
+    def test_composed_extras_match_oracle_spark_tier(self, boost_engines,
+                                                     spark_tier):
+        self._composed_extras(boost_engines)
+
+    @staticmethod
+    def _composed_extras(boost_engines):
         from veloci_spark.search import search
 
         idx, ref, pairs = boost_engines
@@ -454,6 +468,14 @@ def _query_string_strategy():
 
 class TestFuzzQueryStrings:
     def test_query_strings_match_oracle(self, query_engines):
+        self._query_strings(query_engines)
+
+    def test_query_strings_match_oracle_spark_tier(self, query_engines,
+                                                   spark_tier):
+        self._query_strings(query_engines)
+
+    @staticmethod
+    def _query_strings(query_engines):
         from veloci_spark.query import query_to_request
         from veloci_spark.search import search
 

@@ -1,0 +1,143 @@
+"""Local execution tier: the cost rule, the fallback shapes, and shared
+index handles under concurrent requests.
+
+Parity of the two tiers is certified by the differential batteries
+(test_search_engine / test_fuzz_differential run every case on the
+default tier and again, as ``*_spark_tier``, with the Spark tier forced);
+these tests pin which tier runs and that the local one runs no Spark job.
+"""
+
+import sys
+import threading
+
+import numpy as np
+
+from veloci_spark import search as S
+
+EXACT = {"search": {"terms": ["die"], "path": "text"}, "top": 5}
+
+
+def _tier(index, req):
+    return S.search(index, {**req, "explain": True})["explain"]
+
+
+def _result(res):
+    return (res["num_hits"],
+            [(d["doc_id"], np.float32(d["score"])) for d in res["data"]],
+            res.get("facets"))
+
+
+class TestCostRule:
+    def test_estimate_is_sum_of_doc_freq(self, spark_index, ref_index):
+        req = {"or": [{"search": {"terms": ["die"], "path": "text"}},
+                      {"search": {"terms": ["greg"], "path": "text"}}]}
+        postings = ref_index.fields["text"].postings
+        assert _tier(spark_index, req)["posting_estimate"] == \
+            len(postings["die"]) + len(postings["greg"])
+
+    def test_threshold_sides(self, spark_index, monkeypatch):
+        est = _tier(spark_index, EXACT)["posting_estimate"]
+        assert est > 0
+        monkeypatch.setattr(S, "LOCAL_TIER_MAX_POSTINGS", est)
+        at = S.search(spark_index, {**EXACT, "explain": True})
+        monkeypatch.setattr(S, "LOCAL_TIER_MAX_POSTINGS", est - 1)
+        over = S.search(spark_index, {**EXACT, "explain": True})
+        assert at["explain"]["tier"] == "local"
+        assert over["explain"]["tier"] == "spark"
+        assert _result(at) == _result(over)
+
+    def test_scan_rows_guard(self, spark_index, monkeypatch):
+        req = {**EXACT, "phrase_boosts": [{
+            "path": "text", "search1": {"terms": ["die"], "path": "text"},
+            "search2": {"terms": ["erbin"], "path": "text"}}]}
+        ex = _tier(spark_index, req)
+        postings = S._scan_rows(spark_index, {
+            "postings": S._local_reads(S._plan_search(spark_index, req,
+                                                      False))["postings"]})
+        assert ex["tier"] == "local" and ex["scan_rows"] > postings > 0
+        monkeypatch.setattr(S, "LOCAL_TIER_MAX_SCAN_ROWS", ex["scan_rows"] - 1)
+        assert _tier(spark_index, req)["tier"] == "spark"
+
+    def test_local_tier_runs_no_spark_job(self, spark, spark_index):
+        req = {**EXACT, "facets": [{"field": "lang", "top": 5}]}
+        # warm the driver-side dictionary and facet map (one job each)
+        spark_index.local_dict("text")
+        spark_index.facet_map("lang")
+        sc = spark.sparkContext
+        sc.setJobGroup("local-tier-no-job", "local tier")
+        try:
+            res = S.search(spark_index, {**req, "explain": True})
+        finally:
+            sc.setJobGroup("", "")
+        assert res["explain"]["tier"] == "local"
+        assert res["num_hits"] > 0
+        assert list(sc.statusTracker().getJobIdsForGroup("local-tier-no-job")) == []
+
+
+class TestFallbackShapes:
+    """Shapes the local tier does not evaluate run on Spark, as reported by
+    ``explain.tier``. Anchor ``boost`` and per-leg field boosts are pinned
+    in test_boost_and_sources, nested post-locality in test_nested_engine,
+    MultiIndex in test_streaming."""
+
+    def test_identity_leaf(self, spark_index):
+        req = {"or": [{"search": {"terms": ["urge"], "path": "text"}},
+                      {"search": {"terms": ["urge"], "path": "url",
+                                  "starts_with": True}}]}
+        assert _tier(spark_index, req)["tier"] == "spark"
+
+    def test_spark_join_facets(self, spark_index):
+        # no driver facet map for a non-string column → Spark-join facets
+        assert spark_index.facet_map("warc_ts") is None
+        req = {**EXACT, "facets": [{"field": "warc_ts", "top": 3}]}
+        assert _tier(spark_index, req)["tier"] == "spark"
+
+    def test_remote_index_dir(self, spark_index, monkeypatch):
+        monkeypatch.setattr(spark_index, "local_path", None)
+        assert _tier(spark_index, EXACT)["tier"] == "spark"
+
+    def test_distributed_dictionary(self, spark, spark_index):
+        # no driver-resident dictionary → no posting estimate → Spark
+        dist = S.FulltextIndex(spark, spark_index.index_dir,
+                               local_dict_max_terms=0)
+        ex = _tier(dist, EXACT)
+        assert ex["tier"] == "spark" and ex["posting_estimate"] is None
+
+    def test_search_df_stays_on_spark(self, spark_index, monkeypatch):
+        def boom(*_a, **_k):
+            raise AssertionError("search_df must not use the local tier")
+
+        want = _result(S.search(spark_index, EXACT))[1]
+        monkeypatch.setattr(S, "_local_hits", boom)
+        rows = S.search_df(spark_index, EXACT).collect()
+        assert [(r["doc_id"], np.float32(r["score"])) for r in rows] == want
+
+
+def test_concurrent_requests_on_fresh_handle(spark, spark_index, ref_index):
+    """The lazy driver-side dictionary, facet maps and pyarrow datasets are
+    published whole under a lock: threads racing to fill fresh handles all
+    get the single-thread response."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    terms = ref_index.fields["text"].terms[100:1100:125]
+    req = {"or": [{"search": {"terms": [t], "path": "text"}} for t in terms],
+           "top": 5, "facets": [{"field": "lang", "top": 5}]}
+    want = _result(S.search(spark_index, req))
+    assert want[0] > 0
+    n_threads = 12
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads inside the lazy fills
+    try:
+        for _round in range(3):
+            fresh = S.FulltextIndex(spark, spark_index.index_dir)
+            barrier = threading.Barrier(n_threads, timeout=60)
+
+            def one(_):
+                barrier.wait()
+                return _result(S.search(fresh, req))
+
+            with ThreadPoolExecutor(max_workers=n_threads) as ex:
+                got = list(ex.map(one, range(n_threads), timeout=300))
+            assert got == [want] * n_threads
+    finally:
+        sys.setswitchinterval(interval)

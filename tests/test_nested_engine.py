@@ -177,6 +177,19 @@ class TestNestedSearchAndFacets:
 
 
 class TestNestedLocality:
+    def test_post_locality_runs_on_spark(self, nested_index):
+        # per-VALUE locality over a nested leaf is a post-kernel pass: the
+        # request stays on the Spark tier
+        from veloci_spark.search import search
+
+        req = {"or": [
+            {"search": {"terms": ["majestätischer"], "path": "meanings.ger[]"}},
+            {"search": {"terms": ["anblick"], "path": "meanings.ger[]"}}],
+            "top": 10, "text_locality": True, "explain": True}
+        assert search(nested_index, req)["explain"]["tier"] == "spark"
+        plain = {**req, "text_locality": False}
+        assert search(nested_index, plain)["explain"]["tier"] == "local"
+
     def test_same_value_locality_boost(self, nested_index):
         # "majestätischer" and "anblick" co-occur in ONE value of doc0 →
         # per-text n=2 → factor 2·2² = 8 (boost.rs:50-57)

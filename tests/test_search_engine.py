@@ -136,8 +136,7 @@ REQUESTS = [
 ]
 
 
-@pytest.mark.parametrize("req", REQUESTS, ids=lambda r: str(r)[:60])
-def test_request_matches_oracle(spark_index, ref_index, req):
+def _check_request(spark_index, ref_index, req):
     from veloci_spark.search import search
 
     got = search(spark_index, req)
@@ -147,6 +146,17 @@ def test_request_matches_oracle(spark_index, ref_index, req):
     assert [p[0] for p in got_pairs] == [p[0] for p in want_pairs]
     for (gd, gs), (wd, ws) in zip(got_pairs, want_pairs):
         assert gs == ws, (gd, gs, ws)
+
+
+@pytest.mark.parametrize("req", REQUESTS, ids=lambda r: str(r)[:60])
+def test_request_matches_oracle(spark_index, ref_index, req):
+    _check_request(spark_index, ref_index, req)
+
+
+@pytest.mark.parametrize("req", REQUESTS, ids=lambda r: str(r)[:60])
+def test_request_matches_oracle_spark_tier(spark_index, ref_index, req,
+                                           spark_tier):
+    _check_request(spark_index, ref_index, req)
 
 
 @pytest.mark.parametrize("term,kw", [
@@ -342,10 +352,26 @@ class TestPartitionPreMerge:
         want = sorted(((s, d) for d, s, _c in recs), reverse=True)[:k]
         assert [(np.float32(s), d) for s, d in got] \
             == [(np.float32(s), d) for s, d in want]
+        # the local tier runs the same function over its kernel output as
+        # ONE driver-side partition: same count, same k best rows
+        local = pd.concat(_partition_topk_factory(k, count_col="seg_hits")(
+            iter([pdf.iloc[:50], pdf.iloc[50:]])))
+        assert int(local["cnt"].sum()) == 40 * 17
+        assert [(np.float32(s), d) for d, s in
+                zip(local["doc_id"], local["score"])] \
+            == [(np.float32(s), d) for s, d in want]
 
     def test_search_plain_path_unchanged(self, spark_index, ref_index):
         # end-to-end: plain top-k result + exact count identical through the
         # pre-merge (multi-segment index, broad one-letter prefix query)
+        self._check_plain_path(spark_index, ref_index)
+
+    def test_search_plain_path_unchanged_spark_tier(self, spark_index,
+                                                    ref_index, spark_tier):
+        self._check_plain_path(spark_index, ref_index)
+
+    @staticmethod
+    def _check_plain_path(spark_index, ref_index):
         from veloci_spark.search import search
 
         req = {"search": {"terms": ["s"], "path": "text",

@@ -60,6 +60,26 @@ class TestGenerations:
         pairs = [(np.float32(d["score"]), d["doc_id"]) for d in res["data"]]
         assert pairs == sorted(pairs, key=lambda p: (-p[0], -p[1]))
 
+    def test_multiindex_stays_on_spark(self, spark, stream_cfg, tmp_path,
+                                       monkeypatch):
+        from veloci_spark import search as S
+        from veloci_spark.streaming import MultiIndex, ingest_batch
+
+        root = str(tmp_path / "root")
+        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 12, "a")),
+                     stream_cfg, root)
+        req = {"search": {"terms": ["spark"], "path": "text"}, "top": 5}
+        mi = MultiIndex(spark, root)
+        want = S.search(mi.indexes[0][1], req)
+
+        def boom(*_a, **_k):
+            raise AssertionError("MultiIndex must not use the local tier")
+
+        monkeypatch.setattr(S, "_local_hits", boom)
+        got = mi.search(req)
+        assert got["num_hits"] == want["num_hits"] == 12
+        assert got["data"] == want["data"]
+
     def test_sparse_caller_ids_set_high_water_mark(self, spark, stream_cfg,
                                                    tmp_path):
         """Caller-supplied batch-local ids need not be dense: id_hi must be

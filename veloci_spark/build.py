@@ -589,8 +589,15 @@ def value_pair_rows(values: DataFrame, separators: str) -> DataFrame:
 
 def _assign_term_ids(terms: DataFrame, num_partitions: int) -> DataFrame:
     """(field, term, num_occurences) → + term_id (global lexicographic rank
-    per field). Range partition on (field, term), prefix sums per field."""
-    parts = terms.repartitionByRange(num_partitions, "field", "term")
+    per field). Range partition on (field, term), prefix sums per field.
+
+    The count job and the id job must see the SAME partitioning: every
+    execution of a ``repartitionByRange`` plan samples its own range
+    bounds, and two samplings can disagree, which gave distinct terms the
+    same id. A lazy local checkpoint is filled by the count job and the id
+    job reads it back, so both share one partitioning at no extra job."""
+    parts = (terms.repartitionByRange(num_partitions, "field", "term")
+             .localCheckpoint(eager=False))
     counts = (
         parts.select(F.spark_partition_id().alias("pid"), "field")
         .groupBy("pid", "field").count().collect()

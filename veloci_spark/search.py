@@ -1,32 +1,56 @@
 """Query-side engine: term matching + segment-local request evaluation.
 
 The reference executes a query as a DAG of channel-connected plan steps over
-in-memory posting stores (/root/reference/src/plan_creator/execution_plan.rs,
-SURVEY.md §3.1). The Spark-native shape used here is **scatter-gather**:
+in-memory posting stores (reference src/plan_creator/execution_plan.rs,
+SURVEY.md §3.1). The shape used here is **scatter-gather** over
+doc-partitioned segments, in four steps:
 
-1. *Term match* (Q1–Q4) — the query's leaf terms are matched against the
-   sorted term dictionary (exact filter / length-banded vectorized
-   Levenshtein / prefix / regex). Matched terms are tiny (bounded by the
-   dictionary hit count) and are collected to the driver.
-2. *Plan broadcast* — the whole request tree (boolean ops, filters, boosts)
-   plus the matched (term_id → term_score) tables are serialized into a
-   small plan dict captured by the kernel closure (broadcast by Spark).
-3. *Segment kernel* — postings rows for the matched term_ids are scanned
-   (parquet predicate pushdown on ``field``/``term_id``), and the **entire**
-   request tree is evaluated per segment inside one vectorized
-   ``mapInPandas`` kernel (numpy over unpacked delta+VByte postings): leaf
-   max-dedup (semantics of /root/reference/src/search/search_field.rs:449-463),
+1. *Plan* (:func:`_plan_search`, no Spark job) — the request tree is
+   parsed, every leaf is matched against the sorted term dictionary
+   (exact filter / length-banded vectorized Levenshtein / prefix / regex;
+   driver-side for dictionaries up to LOCAL_DICT_MAX_TERMS), and the
+   whole tree (boolean ops, filters, boosts) plus the matched
+   (field, term_id, leaf_id, term_score) rows become a small plan dict.
+2. *Segment kernel* (:func:`_segment_kernel_factory`) — postings rows for
+   the matched term_ids (``field``/``term_id`` predicates) are grouped by
+   segment and the **entire** request tree is evaluated per segment with
+   numpy over unpacked delta+VByte postings: leaf max-dedup (semantics of
+   reference src/search/search_field.rs:449-463),
    OR = ``sum(max per distinct query term) × n_distinct²``
    (set_op.rs:166-186), AND = sum of leg scores (set_op.rs:414-417),
    ids-only filter (set_op.rs:311-326), phrase ×5.0
    (plan_steps.rs:267), term boost, text-locality 2n² (boost.rs:70-80).
-   Because postings are doc-partitioned by segment, every per-doc operation
-   is segment-local — no shuffle; a 1000-executor cluster evaluates segments
-   independently.
-4. *Global top-k* — each segment emits only its local top (top+skip) (unless
-   facets/why-found need the full hit set), then a global
-   ``orderBy(score DESC, doc_id DESC).limit(...)`` — the required tie-break
-   (/root/reference/src/search.rs:128-135).
+   Plain top-k plans prune posting rows WAND-style. Each segment emits
+   its top (top+skip) hits plus its exact hit count (or its full hit set
+   when facets / why-found / boosts need it).
+3. *Partition pre-merge* (:func:`_partition_topk_factory`,
+   :func:`_partition_topk_facets_factory`) — one narrow pass per
+   partition keeps its k best rows by (score DESC, doc_id DESC), the
+   required tie-break (reference src/search.rs:128-135), sums the
+   exact counts and, for fused facets, counts facet values from
+   driver-resident doc→value maps; the driver merges partitions × (k+1)
+   rows.
+4. *Post-processing* — select, snippets, why-found, explain (Spark).
+
+Steps 2-3 run on one of two **execution tiers**, both with the same
+kernel and merge functions:
+
+* *spark* (:func:`_spark_hits`) — a ``repartition("segment")`` of the
+  pruned posting rows feeds a ``mapInPandas`` kernel stage; the pre-merge
+  is chained onto it, so a request is one Spark job. Because postings are
+  doc-partitioned by segment, every per-doc operation is segment-local —
+  no shuffle of hits; a 1000-executor cluster evaluates segments
+  independently.
+* *local* (:func:`_local_hits`) — the driver reads the same pruned rows
+  with ``pyarrow.dataset`` and runs the kernel and the pre-merge
+  in-process, as one partition. No Spark job: a selective request costs
+  tens of ms instead of the ~0.7 s Spark scheduling floor.
+
+The cost rule (:func:`_choose_tier`) runs a request locally when the index
+dir is on the local disk and Σ doc_freq of its matched dictionary rows is
+at most LOCAL_TIER_MAX_POSTINGS. Identity leaves, per-leg field boosts
+(the composed path), anchor ``boost``, nested post-locality and Spark-join
+facets stay on Spark, as do :func:`search_df` and ``MultiIndex.search``.
 
 All score arithmetic is float32 (veloci_spark.scoring) for rank-identical
 parity with the reference formulas; the pure-Python model in
@@ -36,10 +60,15 @@ parity with the reference formulas; the pure-Python model in
 from __future__ import annotations
 
 import os
+import threading
 import time
+from typing import NamedTuple
+from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -71,6 +100,36 @@ LOCAL_DICT_MAX_TERMS = 2_000_000
 # stats. Exactness then comes from the broadcast join (scan sites) or an
 # explicit broadcast semi-join (`_filter_term_ids`).
 TID_PUSHDOWN_MAX_IN = 1_000
+
+
+# local execution tier: a request whose matched dictionary rows promise at
+# most this many posting entries (Σ doc_freq) runs the segment kernel in
+# the driver over a pyarrow read of the pruned posting rows — no Spark job.
+# Break-even, measured on a 4-core VM (local[4], 100k synthetic docs, 13
+# segments): a Spark request pays a ~1 s floor; the driver kernel runs
+# ~0.5 M entries/s on its slowest shape (emit-all with facets over a
+# prefix expansion) and ~1.2 M/s on WAND top-k. At 1.09 M entries the
+# facet request took 2.05 s local vs 2.38 s on Spark, the top-k one 0.91 s
+# vs 1.81 s; with more executors the parallel decode wins sooner.
+LOCAL_TIER_MAX_POSTINGS = 1_000_000
+# ... and when its pyarrow reads decode at most this many parquet rows
+# (row groups the predicates cannot skip). Same VM: a filtered read of a
+# 2.7 M-row phrase table (one row group per file) took ~0.15 s, so 4 M
+# rows stay well under the Spark floor.
+LOCAL_TIER_MAX_SCAN_ROWS = 4_000_000
+
+
+def _local_dir(index_dir: str) -> "str | None":
+    """Filesystem path of an index dir on the local disk; None for remote
+    stores (hdfs://, s3a://, ...), which stay on the Spark tier."""
+    u = urlparse(index_dir)
+    if u.scheme == "file":
+        path = u.path
+    elif u.scheme == "":
+        path = index_dir
+    else:
+        return None
+    return path if os.path.isdir(path) else None
 
 
 def _tid_pushdown_pred(col, tids):
@@ -135,6 +194,14 @@ class FulltextIndex:
         self._local_dict: dict[str, pd.DataFrame] | None = None
         # per-field driver-resident facet stores (see facet_map)
         self._facet_maps: dict[str, "tuple | None"] = {}
+        # filesystem path when the index lives on a local disk (the local
+        # execution tier reads it with pyarrow in the driver), else None
+        self.local_path = _local_dir(index_dir)
+        self._datasets: dict[str, object] = {}
+        # guards the lazy driver-side fills above: a fill is built into a
+        # local and published whole, so a concurrent request under the
+        # threaded server never sees a half-built dictionary or map
+        self._lazy_lock = threading.Lock()
 
     def cache(self):
         """Pin the dictionary + postings (the reference's LoadingType=InMemory)."""
@@ -155,36 +222,57 @@ class FulltextIndex:
             return None
         if fld in self._facet_maps:
             return self._facet_maps[fld]
+        with self._lazy_lock:
+            if fld not in self._facet_maps:
+                self._facet_maps[fld] = self._build_facet_map(fld)
+            return self._facet_maps[fld]
+
+    def _build_facet_map(self, fld: str):
         if fld in self.values:
             src = self.values[fld].select("doc_id", F.col("value").alias("_fv"))
         elif fld in self.docs.columns:
             src = self.docs.select("doc_id", F.col(fld).alias("_fv"))
         else:
-            self._facet_maps[fld] = None
             return None
-        out = None
-        if dict(src.dtypes)["_fv"] == "string":
-            pdf = src.orderBy("doc_id").toPandas()
-            out = (pdf["doc_id"].to_numpy(np.int64),
-                   pdf["_fv"].to_numpy(dtype=object))
-        self._facet_maps[fld] = out
-        return out
+        if dict(src.dtypes)["_fv"] != "string":
+            return None
+        pdf = src.orderBy("doc_id").toPandas()
+        return (pdf["doc_id"].to_numpy(np.int64),
+                pdf["_fv"].to_numpy(dtype=object))
 
     def local_dict(self, field: str) -> "pd.DataFrame | None":
         """Per-field driver-side dictionary (term, term_id, lower) sorted by
         term, or None when the dictionary exceeds the local threshold."""
         if self.manifest["n_terms"] > self._local_dict_max_terms:
             return None
-        if self._local_dict is None:
-            full = self.dict_df.toPandas()
-            self._local_dict = {}
-            for fld, g in full.groupby("field"):
-                g = g.sort_values("term_id", kind="mergesort").reset_index(drop=True)
-                g["lower"] = g["term"].str.lower()
-                self._local_dict[fld] = g
-        return self._local_dict.get(
+        local = self._local_dict
+        if local is None:
+            with self._lazy_lock:
+                if self._local_dict is None:
+                    full = self.dict_df.toPandas()
+                    built = {}
+                    for fld, g in full.groupby("field"):
+                        g = g.sort_values("term_id", kind="mergesort") \
+                            .reset_index(drop=True)
+                        g["lower"] = g["term"].str.lower()
+                        built[fld] = g
+                    self._local_dict = built
+                local = self._local_dict
+        return local.get(
             field, pd.DataFrame(columns=["field", "term", "num_occurences",
-                                         "term_id", "lower"]))
+                                         "doc_freq", "term_id", "lower"]))
+
+    def arrow_dataset(self, table: str):
+        """pyarrow dataset over one parquet table of a local index dir
+        (``postings`` / ``phrase``), opened once per handle."""
+        dset = self._datasets.get(table)
+        if dset is None:
+            with self._lazy_lock:
+                if table not in self._datasets:
+                    self._datasets[table] = ds.dataset(
+                        os.path.join(self.local_path, table), format="parquet")
+                dset = self._datasets[table]
+        return dset
 
 
 # ---------------------------------------------------------------------------
@@ -1075,15 +1163,41 @@ def _leaf_kernel_rows(index: FulltextIndex, leaf):
         return _identity_leaf_rows(index, leaf)
     if leaf.matched.empty:
         return None
-    spark = index.spark
-    matched_df = spark.createDataFrame(
-        [(leaf.field, int(r["term_id"]), leaf.leaf_id, float(r["score"]))
-         for _, r in leaf.matched.iterrows()],
-        "field string, term_id long, leaf_id int, term_score float")
-    tids = [int(t) for t in leaf.matched["term_id"]]
+    return _posting_kernel_rows(index, _matched_rows([leaf]))
+
+
+_MATCHED_SCHEMA = "field string, term_id long, leaf_id int, term_score float"
+
+
+def _matched_rows(leaves) -> pd.DataFrame:
+    """Kernel input keys of the dictionary-matched leaves, one row per
+    (leaf, matched term): (field, term_id, leaf_id, term_score f32)."""
+    ms = [l for l in leaves if l.matched is not None and len(l.matched)]
+    n = [len(l.matched) for l in ms]
+    return pd.DataFrame({
+        "field": np.repeat(np.array([l.field for l in ms], dtype=object), n),
+        "term_id": np.concatenate(
+            [l.matched["term_id"].to_numpy(np.int64) for l in ms]
+            or [np.empty(0, np.int64)]),
+        "leaf_id": np.repeat(np.array([l.leaf_id for l in ms], dtype=np.int32), n),
+        "term_score": np.concatenate(
+            [l.matched["score"].to_numpy(_F32) for l in ms]
+            or [np.empty(0, _F32)]),
+    })
+
+
+def _posting_kernel_rows(index: FulltextIndex, matched: pd.DataFrame) -> DataFrame:
+    """Spark kernel-input rows: the posting rows of the matched terms,
+    tagged with their leaf and term score (broadcast join)."""
+    matched_df = index.spark.createDataFrame(
+        list(zip(matched["field"].tolist(), matched["term_id"].tolist(),
+                 matched["leaf_id"].tolist(), matched["term_score"].tolist())),
+        _MATCHED_SCHEMA)
+    fields = sorted(set(matched["field"]))
+    tids = sorted(set(matched["term_id"].tolist()))
     return (
         index.postings
-        .where((F.col("field") == leaf.field)
+        .where(F.col("field").isin(fields)
                & _tid_pushdown_pred(F.col("term_id"), tids))
         .join(F.broadcast(matched_df), on=["field", "term_id"])
         .select("segment", "leaf_id", "term_score", "max_score",
@@ -1252,7 +1366,7 @@ def _composed_search_hits(index: FulltextIndex, cplan: dict, leaves,
 
 def _phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int):
     """Kernel-input rows for the requested phrase pairs, tagged with
-    synthetic leaf ids ≥ ``next_leaf_id``. Returns (rows, phrase_leaf_ids).
+    synthetic leaf ids ``next_leaf_id + i`` (the plan's phrase_leaves).
 
     Explicit isin predicates reach the parquet row-group stats (the phrase
     table is sorted by pair); rows are already packed per (pair, segment) —
@@ -1261,7 +1375,6 @@ def _phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int):
     specs_df = spark.createDataFrame(
         [(f, a, b, next_leaf_id + i) for i, (f, a, b) in enumerate(phrase_specs)],
         "field string, tok_a string, tok_b string, phrase_leaf int")
-    phrase_leaf_ids = [next_leaf_id + i for i in range(len(phrase_specs))]
     a_set = list({a for _f, a, _b in phrase_specs})
     b_set = list({b for _f, _a, b in phrase_specs})
     prows = (
@@ -1277,12 +1390,26 @@ def _phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int):
                 F.lit(None).cast("array<long>").alias("doc_ids"),
                 "phrase_leaf")
     )
-    return prows, phrase_leaf_ids
+    return prows
 
 
-def _search_hits(index: FulltextIndex, request: dict, need_all: bool,
-                 count_hits: bool = False):
-    """Run the segment kernel. Returns (hits DataFrame, plan context).
+class _SearchPlan(NamedTuple):
+    """Spark-free product of :func:`_plan_search`. Either executor takes
+    it: :func:`_spark_hits` (a DataFrame over the segment kernel) or
+    :func:`_local_hits` (the same kernel in the driver)."""
+
+    plan: dict                 # kernel plan (or the composed path's cplan)
+    leaves: list
+    matched: pd.DataFrame      # (field, term_id, leaf_id, term_score f32)
+    phrase_specs: list
+    identity_leaves: list
+    composed: bool             # per-leg field boosts: the composed path
+
+
+def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
+                 count_hits: bool = False) -> _SearchPlan:
+    """Parse the request, match every leaf against the dictionary and
+    build the kernel plan — no Spark job and no DataFrame.
 
     ``count_hits``: make the kernel report each segment's EXACT hit count in
     the ``seg_hits`` column (first row per segment) even on the truncating
@@ -1296,6 +1423,23 @@ def _search_hits(index: FulltextIndex, request: dict, need_all: bool,
     (tombstoned hits subtracted in-kernel, VERDICT r4 #3)."""
     (tree, filter_tree, leaves, scored_ids, phrase_specs,
      term_boost_leaves) = _collect_leaves(index, request)
+    # kernel input keys: postings rows of the matched terms, tagged with
+    # leaf_id; identity-field leaves read the doc store instead
+    matched = _matched_rows(leaves)
+    identity_leaves = [l for l in leaves if l.matched is None]
+    # phrase legs carry synthetic leaf ids after the real leaves
+    phrase_leaf_ids = list(range(len(leaves), len(leaves) + len(phrase_specs)))
+    # text locality over any NESTED leaf needs per-VALUE grouping, which the
+    # segment kernel cannot see (postings are doc-level) → move the whole
+    # locality boost post-kernel (reference boost_text_locality_all merges
+    # per-path text groups and takes the max factor per anchor)
+    post_locality = bool(request.get("text_locality")) and any(
+        index.fields.get(l.field, {}).get("is_nested")
+        for l in leaves if l.leaf_id in scored_ids)
+    segment_docs = int(index.manifest["segment_docs"])
+    # veloci mode quantizes stored scores through f16 on read (reference
+    # parity); bm25 scores skip the lossy round-trip
+    quantize_f16 = index.manifest.get("scoring", "veloci") == "veloci"
 
     if any(l.field_boosts for l in leaves):
         # per-leg boost-by-field (reference options.boost inside a search
@@ -1306,63 +1450,37 @@ def _search_hits(index: FulltextIndex, request: dict, need_all: bool,
         # the same post-tree pipeline: filter ∩ → phrase ×5 → term boost →
         # locality; nested locality moves post-combine exactly as the main
         # path moves it post-kernel)
-        post_loc = bool(request.get("text_locality")) and any(
-            index.fields.get(l.field, {}).get("is_nested")
-            for l in leaves if l.leaf_id in scored_ids)
         cplan = {
             # scalar leaf boosts are applied in the LEG kernels (leaf-level,
             # before the per-leg field boosts — reference order); strip them
             # so the combine doesn't re-apply
             "tree": _strip_leaf_boosts(tree),
             "filter": filter_tree,
-            "phrase_leaves": [],
+            "phrase_leaves": phrase_leaf_ids,
             "term_boost_leaves": term_boost_leaves,
-            "locality": bool(request.get("text_locality")) and not post_loc,
-            "post_locality": post_loc,
+            "locality": bool(request.get("text_locality")) and not post_locality,
+            "post_locality": post_locality,
             "scored_leaf_ids": set(scored_ids),
             "locality_leaves": [(l.leaf_id, l.tag) for l in leaves
                                 if l.leaf_id in scored_ids],
             "top": None,
-            "segment_docs": int(index.manifest["segment_docs"]),
-            "quantize_f16":
-                index.manifest.get("scoring", "veloci") == "veloci",
+            "segment_docs": segment_docs,
+            "quantize_f16": quantize_f16,
         }
-        phrase_rows = None
-        if phrase_specs:
-            phrase_rows, cplan["phrase_leaves"] = _phrase_rows(
-                index, phrase_specs, len(leaves))
-        hits = _composed_search_hits(index, cplan, leaves, phrase_rows)
-        return hits, cplan, leaves
+        return _SearchPlan(cplan, leaves, matched, phrase_specs,
+                           identity_leaves, composed=True)
 
     top = request.get("top", 10)
     skip = request.get("skip", 0)
-    # text locality over any NESTED leaf needs per-VALUE grouping, which the
-    # segment kernel cannot see (postings are doc-level) → move the whole
-    # locality boost post-kernel (reference boost_text_locality_all merges
-    # per-path text groups and takes the max factor per anchor)
-    post_locality = bool(request.get("text_locality")) and any(
-        index.fields.get(l.field, {}).get("is_nested")
-        for l in leaves if l.leaf_id in scored_ids)
     # anchor boosts (Q13) reorder scores post-kernel → per-segment top-k
     # truncation would be unsound; emit full hit sets in that case
     emit_all = (need_all or bool(request.get("facets"))
                 or bool(request.get("why_found")) or bool(request.get("boost"))
                 or post_locality)
-
-    # kernel input: postings rows for matched terms, tagged with leaf_id
-    matched_rows = []  # (field, term_id, leaf_id, term_score)
-    identity_leaves = []
-    for leaf in leaves:
-        if leaf.matched is None:
-            identity_leaves.append(leaf)
-            continue
-        for _, r in leaf.matched.iterrows():
-            matched_rows.append((leaf.field, int(r["term_id"]), leaf.leaf_id,
-                                 float(r["score"])))
     plan = {
         "tree": tree,
         "filter": filter_tree,
-        "phrase_leaves": [],
+        "phrase_leaves": phrase_leaf_ids,
         "term_boost_leaves": term_boost_leaves,
         "locality": bool(request.get("text_locality")) and not post_locality,
         "post_locality": post_locality,
@@ -1377,10 +1495,8 @@ def _search_hits(index: FulltextIndex, request: dict, need_all: bool,
         # {segment: [segment-relative tombstoned ids]} — the kernel reports
         # LIVE per-segment counts (streamed indexes, VERDICT r4 #3)
         "seg_deleted": request.get("_seg_deleted") or {},
-        "segment_docs": int(index.manifest["segment_docs"]),
-        # veloci mode quantizes stored scores through f16 on read (reference
-        # parity); bm25 scores skip the lossy round-trip
-        "quantize_f16": index.manifest.get("scoring", "veloci") == "veloci",
+        "segment_docs": segment_docs,
+        "quantize_f16": quantize_f16,
     }
     # WAND-style pruning (single unboosted leaf, plain top-k): posting rows
     # are processed in descending max-possible-score order and skipped —
@@ -1431,41 +1547,178 @@ def _search_hits(index: FulltextIndex, request: dict, need_all: bool,
             plan.pop("wand_tree")
             plan.pop("wand_ntags")
             plan.pop("wand_op")
-    spark = index.spark
-    if not matched_rows and not identity_leaves:
-        return spark.createDataFrame([], schema=_HITS_SCHEMA), plan, leaves
+    return _SearchPlan(plan, leaves, matched, phrase_specs, identity_leaves,
+                       composed=False)
 
+
+def _spark_hits(index: FulltextIndex, sp: _SearchPlan):
+    """Spark executor: the kernel-input DataFrame (postings ⋈ matched
+    terms, identity rows, phrase rows) through the segment kernel, one
+    ``repartition("segment")``. Returns (hits DataFrame, plan, leaves)."""
+    plan, leaves = sp.plan, sp.leaves
+    if sp.composed:
+        phrase_rows = (_phrase_rows(index, sp.phrase_specs, len(leaves))
+                       if sp.phrase_specs else None)
+        return (_composed_search_hits(index, plan, leaves, phrase_rows),
+                plan, leaves)
+    if sp.matched.empty and not sp.identity_leaves:
+        return index.spark.createDataFrame([], schema=_HITS_SCHEMA), plan, leaves
     rows = None
-    if matched_rows:
-        matched_df = spark.createDataFrame(
-            matched_rows, "field string, term_id long, leaf_id int, term_score float")
-        fields = list({m[0] for m in matched_rows})
-        tids = list({m[1] for m in matched_rows})
-        rows = (
-            index.postings
-            .where(F.col("field").isin(fields)
-                   & _tid_pushdown_pred(F.col("term_id"), tids))
-            .join(F.broadcast(matched_df), on=["field", "term_id"])
-            .select("segment", "leaf_id", "term_score", "max_score",
-                    "docs_bin", "scores_bin")
-            .withColumn("doc_ids", F.lit(None).cast("array<long>"))
-            .withColumn("phrase_leaf", F.lit(-1))
-        )
-    for leaf in identity_leaves:
+    if not sp.matched.empty:
+        rows = _posting_kernel_rows(index, sp.matched)
+    for leaf in sp.identity_leaves:
         irows = _identity_leaf_rows(index, leaf)
         rows = irows if rows is None else rows.unionByName(irows)
-
     # phrase legs: segment-local doc-id lists from the phrase index
-    next_leaf_id = len(leaves)
-    phrase_leaf_ids = []
-    if phrase_specs:
-        prows, phrase_leaf_ids = _phrase_rows(index, phrase_specs, next_leaf_id)
-        rows = rows.unionByName(prows)
-    plan["phrase_leaves"] = phrase_leaf_ids
-
-    kernel = _segment_kernel_factory(plan, set(scored_ids))
+    if sp.phrase_specs:
+        rows = rows.unionByName(_phrase_rows(index, sp.phrase_specs, len(leaves)))
+    kernel = _segment_kernel_factory(plan, plan["scored_leaf_ids"])
     hits = rows.repartition("segment").mapInPandas(kernel, schema=_HITS_SCHEMA)
     return hits, plan, leaves
+
+
+def _search_hits(index: FulltextIndex, request: dict, need_all: bool,
+                 count_hits: bool = False):
+    """Plan + Spark executor. Returns (hits DataFrame, plan, leaves); see
+    :func:`_plan_search` for ``count_hits`` and the streamed-index keys."""
+    return _spark_hits(index, _plan_search(index, request, need_all,
+                                           count_hits))
+
+
+# ---------------------------------------------------------------------------
+# local execution tier: the segment kernel in the driver over a pyarrow
+# read of the pruned posting / phrase rows (no Spark job)
+
+
+def _posting_estimate(index: FulltextIndex, sp: _SearchPlan) -> "int | None":
+    """Posting entries the request's kernel input holds at most: Σ doc_freq
+    of the matched dictionary rows. None when a field's dictionary is not
+    driver-resident (no cheap estimate)."""
+    total = 0
+    for field, g in sp.matched.groupby("field", sort=False):
+        local = index.local_dict(field)
+        if local is None or "doc_freq" not in local:
+            return None
+        pos = np.searchsorted(local["term_id"].to_numpy(np.int64),
+                              g["term_id"].to_numpy(np.int64))
+        total += int(local["doc_freq"].to_numpy(np.int64)[pos].sum())
+    return total
+
+
+def _posting_filter(matched: pd.DataFrame):
+    """The Spark scan's ``field``/``term_id`` predicates as a pyarrow
+    filter; the term_id range lets a read skip row groups by statistics
+    (an ``isin`` alone does not)."""
+    tids = matched["term_id"].to_numpy(np.int64)
+    return (pc.field("field").isin(sorted(set(matched["field"])))
+            & (pc.field("term_id") >= int(tids.min()))
+            & (pc.field("term_id") <= int(tids.max()))
+            & pc.field("term_id").isin(np.unique(tids)))
+
+
+def _phrase_filter(phrase_specs):
+    """The Spark scan's ``tok_a``/``tok_b`` predicates as a pyarrow filter
+    (the phrase table is sorted by pair: the tok_a range prunes)."""
+    a_set = sorted({a for _f, a, _b in phrase_specs})
+    b_set = sorted({b for _f, _a, b in phrase_specs})
+    return ((pc.field("tok_a") >= a_set[0]) & (pc.field("tok_a") <= a_set[-1])
+            & pc.field("tok_a").isin(a_set) & pc.field("tok_b").isin(b_set))
+
+
+def _local_reads(sp: _SearchPlan) -> dict:
+    """{table: pyarrow filter} of the reads the local tier makes."""
+    if sp.matched.empty:
+        return {}
+    reads = {"postings": _posting_filter(sp.matched)}
+    if sp.phrase_specs:
+        reads["phrase"] = _phrase_filter(sp.phrase_specs)
+    return reads
+
+
+def _scan_rows(index: FulltextIndex, reads: dict) -> int:
+    """Rows of the parquet row groups the local reads cannot skip by their
+    statistics — what pyarrow decodes, whatever the filter keeps. (Spark's
+    reader also skips pages by column index; pyarrow reads whole row
+    groups, so a big single-row-group file costs a full column scan.)"""
+    return sum(rg.num_rows
+               for table, flt in reads.items()
+               for frag in index.arrow_dataset(table).get_fragments(filter=flt)
+               for part in frag.split_by_row_group(flt)
+               for rg in part.row_groups)
+
+
+def _choose_tier(index: FulltextIndex, request: dict, sp: _SearchPlan,
+                 fused_facets: bool) -> "tuple[str, int | None, int | None]":
+    """("local" | "spark", posting estimate, scan rows). The local tier runs
+    only for an index on the local disk, a posting estimate within
+    LOCAL_TIER_MAX_POSTINGS, reads within LOCAL_TIER_MAX_SCAN_ROWS, and a
+    plan shape it evaluates identically: identity leaves, the composed
+    per-leg field-boost path, anchor ``boost``, nested post-locality and
+    Spark-join facets stay on Spark. The scan rows are only counted when
+    everything else allows the local tier."""
+    est = _posting_estimate(index, sp)
+    scan = None
+    if (index.local_path is not None
+            and est is not None and est <= LOCAL_TIER_MAX_POSTINGS
+            and not sp.composed and not sp.identity_leaves
+            and not request.get("boost")
+            and not sp.plan.get("post_locality")
+            and (fused_facets or not request.get("facets"))):
+        scan = _scan_rows(index, _local_reads(sp))
+    local = scan is not None and scan <= LOCAL_TIER_MAX_SCAN_ROWS
+    return ("local" if local else "spark"), est, scan
+
+
+_LOCAL_KERNEL_COLS = ["segment", "leaf_id", "term_score", "max_score",
+                      "docs_bin", "scores_bin", "doc_ids"]
+
+
+def _local_posting_rows(index: FulltextIndex, matched: pd.DataFrame,
+                        flt) -> pd.DataFrame:
+    """Kernel-input rows of the matched terms, read in the driver, then the
+    exact join on (field, term_id) that tags each row with its leaf and
+    term score."""
+    table = index.arrow_dataset("postings").to_table(
+        columns=["field", "term_id", "segment", "max_score", "docs_bin",
+                 "scores_bin"], filter=flt)
+    rows = table.to_pandas().merge(matched, on=["field", "term_id"])
+    rows["doc_ids"] = None
+    return rows[_LOCAL_KERNEL_COLS]
+
+
+def _local_phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int,
+                       flt) -> pd.DataFrame:
+    """Driver-side :func:`_phrase_rows`: the pruned read, joined exactly
+    with the requested (field, a, b) pairs."""
+    specs = pd.DataFrame(
+        [(f, a, b, next_leaf_id + i) for i, (f, a, b) in enumerate(phrase_specs)],
+        columns=["field", "tok_a", "tok_b", "leaf_id"])
+    table = index.arrow_dataset("phrase").to_table(
+        columns=["field", "tok_a", "tok_b", "segment", "docs_bin"], filter=flt)
+    rows = table.to_pandas().merge(specs, on=["field", "tok_a", "tok_b"])
+    rows["leaf_id"] = rows["leaf_id"].astype(np.int32)
+    rows["term_score"] = _F32(0.0)
+    rows["max_score"] = np.int64(0)
+    rows["scores_bin"] = None
+    rows["doc_ids"] = None
+    return rows[_LOCAL_KERNEL_COLS]
+
+
+def _local_hits(index: FulltextIndex, sp: _SearchPlan) -> list:
+    """Local executor: the segment kernel of :func:`_spark_hits`, run in
+    the driver over every matched segment at once. Returns the kernel's
+    output frames (doc_id, score, seg_hits) — the input the partition
+    merge functions take on the Spark tier."""
+    reads = _local_reads(sp)
+    if not reads:
+        return []
+    parts = [_local_posting_rows(index, sp.matched, reads["postings"])]
+    if "phrase" in reads:
+        parts.append(_local_phrase_rows(index, sp.phrase_specs, len(sp.leaves),
+                                        reads["phrase"]))
+    data = pd.concat(parts, ignore_index=True)
+    kernel = _segment_kernel_factory(sp.plan, sp.plan["scored_leaf_ids"])
+    return list(kernel(iter([data])))
 
 
 def _stored_to_f32(stored: np.ndarray, quantize_f16: bool) -> np.ndarray:
@@ -2046,16 +2299,30 @@ def search(index: FulltextIndex, request: dict) -> dict:
     t_start = time.monotonic()
     need_all = (bool(request.get("facets")) or bool(request.get("exact_count"))
                 or bool(request.get("why_found")) or bool(request.get("boost")))
-    hits, _plan, leaves = _search_hits(index, request, need_all=need_all,
-                                       count_hits=True)
-    if _plan.get("post_locality"):
-        hits = _apply_post_locality(index, hits, leaves,
-                                    _plan["scored_leaf_ids"])
-        need_all = True  # full hit set already materialized by the kernel
-    hits = _apply_anchor_boosts(index, hits, request, leaves)
+    sp = _plan_search(index, request, need_all=need_all, count_hits=True)
+    _plan, leaves = sp.plan, sp.leaves
     top = request.get("top", 10)
     skip = request.get("skip", 0)
     facet_specs = request.get("facets") or []
+    # fused facet path: when every requested facet field has a
+    # driver-resident doc→value map (≤1M-doc corpus), count facets inside
+    # the same single job that ranks and counts hits
+    _ufields = list(dict.fromkeys(s["field"] for s in facet_specs))
+    _maps = {f: index.facet_map(f) for f in _ufields}
+    fused_facets = bool(facet_specs) and all(
+        _maps[f] is not None for f in _ufields)
+    tier, posting_estimate, scan_rows = _choose_tier(index, request, sp,
+                                                     fused_facets)
+    if tier == "local":
+        frames = _local_hits(index, sp)
+        hits = None
+    else:
+        hits = _spark_hits(index, sp)[0]
+        if _plan.get("post_locality"):
+            hits = _apply_post_locality(index, hits, leaves,
+                                        _plan["scored_leaf_ids"])
+            need_all = True  # full hit set already materialized by the kernel
+        hits = _apply_anchor_boosts(index, hits, request, leaves)
     # cache the hit set ONLY when several facet jobs will re-read it.
     # With 0-1 re-readers, recomputing is measurably cheaper than an
     # InMemoryRelation between two Python stages (profiled r5 at sf0.1:
@@ -2066,26 +2333,29 @@ def search(index: FulltextIndex, request: dict) -> dict:
     # re-pays the post-shuffle segment-kernel decode — and skipping the
     # cache also removes the unbounded memory of materializing a
     # match-everything hit set.
-    # fused facet path: when every requested facet field has a
-    # driver-resident doc→value map (≤1M-doc corpus), count facets inside
-    # the same single job that ranks and counts hits
-    _ufields = list(dict.fromkeys(s["field"] for s in facet_specs))
-    _maps = {f: index.facet_map(f) for f in _ufields}
-    fused_facets = bool(facet_specs) and all(
-        _maps[f] is not None for f in _ufields)
-    cache_hits = need_all and len(facet_specs) >= 2 and not fused_facets
+    cache_hits = (hits is not None and need_all and len(facet_specs) >= 2
+                  and not fused_facets)
     if cache_hits:
         hits = hits.cache()
+
+    def _merge_pass(fn, schema: str, kernel_cols: bool = False):
+        """Run a partition-merge function over the kernel output: chained
+        onto the kernel stage on the Spark tier (one job, partitions ×
+        (k+1) rows collected), or over the local kernel frames as ONE
+        partition in the driver. Returns row records."""
+        if hits is None:
+            return [r for pdf in fn(iter(frames))
+                    for r in pdf.to_dict("records")]
+        src = hits if kernel_cols else hits.select("doc_id", "score")
+        return src.mapInPandas(fn, schema=schema).collect()
 
     def _collect_rows():
         if need_all:
             # ONE job returns each partition's exact row count + its
             # (top+skip) best rows — the separate count() pass and the
             # TakeOrdered ranking pass collapse into it (r4)
-            return (hits.select("doc_id", "score")
-                    .mapInPandas(_partition_topk_factory(top + skip),
-                                 schema="doc_id long, score float, cnt long")
-                    .collect())
+            return _merge_pass(_partition_topk_factory(top + skip),
+                               "doc_id long, score float, cnt long")
         # plain top-k: a partition-level pre-merge (narrow map chained onto
         # the kernel stage — same job, no shuffle) reduces each partition's
         # kernel output (≤ k hits + exact count per SEGMENT) to its k best
@@ -2094,10 +2364,10 @@ def search(index: FulltextIndex, request: dict) -> dict:
         # 10¹² docs). This also hard-bounds the rare plan shapes that force
         # the kernel to emit full hit sets without need_all (ADVICE r4:
         # `_plan["top"] is None` must never raw-collect).
-        return (hits.mapInPandas(_partition_topk_factory(top + skip,
-                                                         count_col="seg_hits"),
-                                 schema="doc_id long, score float, cnt long")
-                .collect())
+        return _merge_pass(_partition_topk_factory(top + skip,
+                                                   count_col="seg_hits"),
+                           "doc_id long, score float, cnt long",
+                           kernel_cols=True)
 
     def _ranked(rows):
         if not rows:
@@ -2112,14 +2382,11 @@ def search(index: FulltextIndex, request: dict) -> dict:
     # set (same discipline as MultiIndex.search, ADVICE r4)
     try:
         if fused_facets:
-            out_rows = (
-                hits.select("doc_id", "score")
-                .mapInPandas(
-                    _partition_topk_facets_factory(
-                        top + skip, [(f, *_maps[f]) for f in _ufields]),
-                    schema="doc_id long, score float, cnt long, "
-                           "ff string, fv string, fcnt long")
-                .collect())
+            out_rows = _merge_pass(
+                _partition_topk_facets_factory(
+                    top + skip, [(f, *_maps[f]) for f in _ufields]),
+                "doc_id long, score float, cnt long, "
+                "ff string, fv string, fcnt long")
             rows = [r for r in out_rows if r["ff"] is None]
             num_hits = int(sum(r["cnt"] for r in rows))
             ranked = _ranked(rows)
@@ -2237,13 +2504,17 @@ def search(index: FulltextIndex, request: dict) -> dict:
             "boost": request.get("boost") or [],
             "wand": (_plan.get("wand_leaf") is not None
                      or _plan.get("wand_tree") is not None),
+            # execution tier and the estimates behind it
+            "tier": tier,
+            "posting_estimate": posting_estimate,
+            "scan_rows": scan_rows,
             "leaves": [
                 {"leaf_id": l.leaf_id, "field": l.field, "term": l.term,
                  "opts": l.opts,
                  "identity": l.matched is None,
                  "matched": [] if l.matched is None else
-                            [(r["term"], float(np.float32(r["score"])))
-                             for _, r in l.matched.iterrows()]}
+                            list(zip(l.matched["term"].tolist(),
+                                     l.matched["score"].to_numpy(_F32).tolist()))}
                 for l in leaves
             ],
         }
