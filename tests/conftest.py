@@ -26,13 +26,16 @@ def spark():
 
 @pytest.fixture
 def spark_tier(monkeypatch):
-    """Forces the Spark execution tier (LOCAL_TIER_MAX_POSTINGS = 0). Each
-    parity battery runs twice: as itself, under the default cost rule that
-    sends the small test corpora to the local tier, and as its
+    """Forces the Spark execution tier (LOCAL_TIER_MAX_POSTINGS = 0) and
+    puts the post-processing reads (select, snippets, why-found, explain)
+    on Spark too (LOCAL_TIER_MAX_SCAN_BYTES = -1: no read is small enough).
+    Each parity battery runs twice: as itself, under the default cost rule
+    that sends the small test corpora to the local tier, and as its
     ``*_spark_tier`` twin with this fixture."""
     from veloci_spark import search
 
     monkeypatch.setattr(search, "LOCAL_TIER_MAX_POSTINGS", 0)
+    monkeypatch.setattr(search, "LOCAL_TIER_MAX_SCAN_BYTES", -1)
 
 
 @pytest.fixture(scope="session")

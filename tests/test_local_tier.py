@@ -1,5 +1,5 @@
-"""Local execution tier: the cost rule, the fallback shapes, and shared
-index handles under concurrent requests.
+"""Local execution tier: the cost rule, the fallback shapes, the
+post-processing reads, and shared index handles under concurrent requests.
 
 Parity of the two tiers is certified by the differential batteries
 (test_search_engine / test_fuzz_differential run every case on the
@@ -7,6 +7,7 @@ default tier and again, as ``*_spark_tier``, with the Spark tier forced);
 these tests pin which tier runs and that the local one runs no Spark job.
 """
 
+import operator
 import sys
 import threading
 
@@ -15,6 +16,14 @@ import numpy as np
 from veloci_spark import search as S
 
 EXACT = {"search": {"terms": ["die"], "path": "text"}, "top": 5}
+PHRASE = {**EXACT, "phrase_boosts": [{
+    "path": "text", "search1": {"terms": ["die"], "path": "text"},
+    "search2": {"terms": ["erbin"], "path": "text"}}]}
+# every post-processing key; the selected columns cover the doc store's
+# string, timestamp and binary types
+POST = {"select": ["url", "lang", "warc_ts", "html"],
+        "snippets": {"field": "text"}, "why_found": True,
+        "explain_hits": True}
 
 
 def _tier(index, req):
@@ -46,17 +55,25 @@ class TestCostRule:
         assert over["explain"]["tier"] == "spark"
         assert _result(at) == _result(over)
 
-    def test_scan_rows_guard(self, spark_index, monkeypatch):
-        req = {**EXACT, "phrase_boosts": [{
-            "path": "text", "search1": {"terms": ["die"], "path": "text"},
-            "search2": {"terms": ["erbin"], "path": "text"}}]}
-        ex = _tier(spark_index, req)
-        postings = S._scan_rows(spark_index, {
-            "postings": S._local_reads(S._plan_search(spark_index, req,
+    def test_scan_bytes_guard(self, spark_index, monkeypatch):
+        ex = _tier(spark_index, PHRASE)
+        postings = S._scan_bytes(spark_index, {
+            "postings": S._local_reads(S._plan_search(spark_index, PHRASE,
                                                       False))["postings"]})
-        assert ex["tier"] == "local" and ex["scan_rows"] > postings > 0
-        monkeypatch.setattr(S, "LOCAL_TIER_MAX_SCAN_ROWS", ex["scan_rows"] - 1)
-        assert _tier(spark_index, req)["tier"] == "spark"
+        assert ex["tier"] == "local" and ex["scan_bytes"] > postings > 0
+        monkeypatch.setattr(S, "LOCAL_TIER_MAX_SCAN_BYTES",
+                            ex["scan_bytes"] - 1)
+        assert _tier(spark_index, PHRASE)["tier"] == "spark"
+
+    def test_scan_bytes_count_columns_read(self, spark_index):
+        """Only the chunks of the columns read count: a wider projection
+        of the same row groups costs more."""
+        ids = sorted(d["doc_id"] for d in S.search(spark_index, EXACT)["data"])
+        flt = S._doc_id_filter(ids)
+        narrow = S._scan_bytes(spark_index, {"docs": (flt, ["doc_id"])})
+        wide = S._scan_bytes(spark_index,
+                             {"docs": (flt, ["doc_id", "url", "text"])})
+        assert 0 < narrow < wide
 
     def test_local_tier_runs_no_spark_job(self, spark, spark_index):
         req = {**EXACT, "facets": [{"field": "lang", "top": 5}]}
@@ -72,6 +89,86 @@ class TestCostRule:
         assert res["explain"]["tier"] == "local"
         assert res["num_hits"] > 0
         assert list(sc.statusTracker().getJobIdsForGroup("local-tier-no-job")) == []
+
+
+class TestPostProcessing:
+    """select, snippets, why-found and explain read the result docs, their
+    postings and phrase rows under the local tier's scan rule."""
+
+    def test_runs_no_spark_job(self, spark, spark_index):
+        req = {**PHRASE, **POST, "explain": True}
+        S.search(spark_index, req)  # warm the driver-side dictionary
+        sc = spark.sparkContext
+        sc.setJobGroup("post-no-job", "post-processing")
+        try:
+            res = S.search(spark_index, req)
+        finally:
+            sc.setJobGroup("", "")
+        assert res["explain"]["tier"] == "local"
+        assert res["data"] and all(
+            d["doc"]["url"] and d["snippet"] and d["why_found"]
+            and d["explain"] for d in res["data"])
+        assert list(sc.statusTracker().getJobIdsForGroup("post-no-job")) == []
+
+    def test_scan_guard(self, spark, spark_index, monkeypatch):
+        req = {**PHRASE, **POST}
+        want = S.search(spark_index, req)
+        ids = sorted(d["doc_id"] for d in want["data"])
+        want_docs = S.get_docs(spark_index, ids)
+        flt = S._doc_id_filter(ids)
+        cols = ["doc_id", "text"]  # the snippets fetch
+        read = S._scan_bytes(spark_index, {"docs": (flt, cols)})
+        every = S._scan_bytes(spark_index, {"docs": (None, cols)})
+        assert 0 < read < every  # row groups skipped
+        monkeypatch.setattr(S, "LOCAL_TIER_MAX_SCAN_BYTES", read)
+        assert spark_index._reads_locally("docs", flt, cols)
+        monkeypatch.setattr(S, "LOCAL_TIER_MAX_SCAN_BYTES", read - 1)
+        assert not spark_index._reads_locally("docs", flt, cols)
+        sc = spark.sparkContext
+        sc.setJobGroup("post-guard", "post-processing over the guard")
+        try:
+            got = S.search(spark_index, req)
+            got_docs = S.get_docs(spark_index, ids)
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup("post-guard"))
+        for res in (want, got):
+            res.pop("execution_time_ms")
+        # repr: the same values of the same Python types
+        assert repr(got) == repr(want)
+        assert repr(got_docs) == repr(want_docs)
+
+
+    def test_rows_match_collect(self, spark, tmp_path):
+        """The driver read's rows carry ``collect()``'s values and Python
+        types: INT96 timestamps at any depth, NTZ timestamps, binary."""
+        import datetime as dt
+
+        import pyarrow.dataset as ds
+        from pyspark.sql import types as T
+
+        ts = T.TimestampType()
+        schema = T.StructType([
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("ts", ts),
+            T.StructField("ntz", T.TimestampNTZType()),
+            T.StructField("bin", T.BinaryType()),
+            T.StructField("s", T.StructType([T.StructField("t", ts),
+                                             T.StructField("b", T.BinaryType())])),
+            T.StructField("a", T.ArrayType(ts)),
+            T.StructField("m", T.MapType(T.StringType(), ts))])
+        t0 = dt.datetime(2024, 3, 31, 1, 30, 5, 123456)
+        path = str(tmp_path / "rows")
+        spark.createDataFrame(
+            [(1, t0, t0, b"x", (t0, b"y"), [t0, None], {"k": t0}),
+             (2, None, None, None, None, None, None)],
+            schema).write.parquet(path)
+        df = spark.read.parquet(path)
+        got = S._arrow_rows(ds.dataset(path).to_table(columns=df.columns),
+                            df.schema)
+        by_id = operator.itemgetter("doc_id")
+        assert repr(sorted(got, key=by_id)) == \
+            repr(sorted(df.collect(), key=by_id))
 
 
 class TestFallbackShapes:

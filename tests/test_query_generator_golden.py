@@ -203,6 +203,32 @@ class TestWildcardsAndRegex:
         assert _sq(qg_index, "tags[]:*wesam*")["num_hits"] == 0
 
 
+def _explained(index):
+    # :139-152 simple_search_querygenerator_explained — explain=true
+    # attaches per-hit derivation steps; steps re-derive the score
+    import numpy as np
+
+    res = _sq(index, "urge", explain_hits=True)
+    assert res["num_hits"] == 1
+    assert _ent(index, res) == "1587690"
+    steps = res["data"][0]["explain"]
+    assert len(steps) >= 2  # term_to_anchor rows + leaf max at minimum
+    assert np.float32(steps[-1]["score"]) == np.float32(
+        res["data"][0]["score"])
+
+
+def _or_connect_explained(index):
+    # :154-168 — the OR query explains every hit; winner unchanged
+    import numpy as np
+
+    res = _sq(index, "urge OR いよく", explain_hits=True)
+    assert res["num_hits"] == 3
+    assert _ent(index, res) == "1587690"
+    for d in res["data"]:
+        assert np.float32(d["explain"][-1]["score"]) == \
+            np.float32(d["score"])
+
+
 class TestFieldErrors:
     def test_no_matching_fields_from_field_list(self, qg_index):
         # :362-371 — reference errors at generation; we error at search
@@ -215,25 +241,13 @@ class TestFieldErrors:
             _sq(qg_index, "notexistingfield:awes*")
 
     def test_explained(self, qg_index):
-        # :139-152 simple_search_querygenerator_explained — explain=true
-        # attaches per-hit derivation steps; steps re-derive the score
-        import numpy as np
+        _explained(qg_index)
 
-        res = _sq(qg_index, "urge", explain_hits=True)
-        assert res["num_hits"] == 1
-        assert _ent(qg_index, res) == "1587690"
-        steps = res["data"][0]["explain"]
-        assert len(steps) >= 2  # term_to_anchor rows + leaf max at minimum
-        assert np.float32(steps[-1]["score"]) == np.float32(
-            res["data"][0]["score"])
+    def test_explained_spark_tier(self, qg_index, spark_tier):
+        _explained(qg_index)
 
     def test_or_connect_explained(self, qg_index):
-        # :154-168 — the OR query explains every hit; winner unchanged
-        import numpy as np
+        _or_connect_explained(qg_index)
 
-        res = _sq(qg_index, "urge OR いよく", explain_hits=True)
-        assert res["num_hits"] == 3
-        assert _ent(qg_index, res) == "1587690"
-        for d in res["data"]:
-            assert np.float32(d["explain"][-1]["score"]) == \
-                np.float32(d["score"])
+    def test_or_connect_explained_spark_tier(self, qg_index, spark_tier):
+        _or_connect_explained(qg_index)

@@ -145,6 +145,15 @@ class TestEndToEnd:
         assert [d["doc_id"] for d in res["data"]] == [d for d, _ in want]
 
 
+def _snippets_in_search(index):
+    from veloci_spark.search import search
+
+    res = search(index, {
+        "search": {"terms": ["story"], "path": "text"},
+        "snippets": {"field": "text"}, "top": 3})
+    assert any("<b>story</b>" in (d.get("snippet") or "") for d in res["data"])
+
+
 class TestHighlight:
     def test_basic(self):
         from veloci_spark.highlight import highlight_text
@@ -199,12 +208,10 @@ class TestHighlight:
                 assert plain.strip(" .").split()[0] in text
 
     def test_snippets_in_search(self, spark_index):
-        from veloci_spark.search import search
+        _snippets_in_search(spark_index)
 
-        res = search(spark_index, {
-            "search": {"terms": ["story"], "path": "text"},
-            "snippets": {"field": "text"}, "top": 3})
-        assert any("<b>story</b>" in (d.get("snippet") or "") for d in res["data"])
+    def test_snippets_in_search_spark_tier(self, spark_index, spark_tier):
+        _snippets_in_search(spark_index)
 
 
 class TestReferenceStopwords:
@@ -359,38 +366,50 @@ class TestSuggestMulti:
         assert scores == sorted(scores, reverse=True)
 
 
+_EXPLAIN_REQS = [
+    {"search": {"terms": ["urge"], "path": "text"}, "top": 5},
+    {"or": [{"search": {"terms": ["will"], "path": "text"}},
+            {"search": {"terms": ["urge"], "path": "text"}}], "top": 5},
+    {"and": [{"search": {"terms": ["greg"], "path": "text"}},
+             {"search": {"terms": ["tagebuch"], "path": "text"}}], "top": 5},
+    {"search": {"terms": ["erbin"], "path": "text"},
+     "phrase_boosts": [{"path": "text",
+                        "search1": {"terms": ["die"], "path": "text"},
+                        "search2": {"terms": ["erbin"], "path": "text"}}],
+     "top": 5},
+    {"or": [{"search": {"terms": ["text"], "path": "text"}},
+            {"search": {"terms": ["localität"], "path": "text"}}],
+     "text_locality": True, "top": 5},
+    {"or": [{"search": {"terms": ["will"], "path": "text"}},
+            {"search": {"terms": ["urge"], "path": "text"}}],
+     "boost_term": [{"terms": ["testo"], "path": "text", "boost": 5.0}],
+     "top": 5},
+]
+
+
+def _last_step_equals_hit_score(index, req):
+    import numpy as np
+
+    from veloci_spark.search import search
+
+    res = search(index, {**req, "explain_hits": True})
+    assert res["data"], "query must hit for the test to mean anything"
+    for d in res["data"]:
+        steps = d["explain"]
+        assert steps, d
+        assert np.float32(steps[-1]["score"]) == np.float32(d["score"]), (
+            d["doc_id"], steps)
+
+
 class TestExplainHits:
-    @pytest.mark.parametrize("req", [
-        {"search": {"terms": ["urge"], "path": "text"}, "top": 5},
-        {"or": [{"search": {"terms": ["will"], "path": "text"}},
-                {"search": {"terms": ["urge"], "path": "text"}}], "top": 5},
-        {"and": [{"search": {"terms": ["greg"], "path": "text"}},
-                 {"search": {"terms": ["tagebuch"], "path": "text"}}], "top": 5},
-        {"search": {"terms": ["erbin"], "path": "text"},
-         "phrase_boosts": [{"path": "text",
-                            "search1": {"terms": ["die"], "path": "text"},
-                            "search2": {"terms": ["erbin"], "path": "text"}}],
-         "top": 5},
-        {"or": [{"search": {"terms": ["text"], "path": "text"}},
-                {"search": {"terms": ["localität"], "path": "text"}}],
-         "text_locality": True, "top": 5},
-        {"or": [{"search": {"terms": ["will"], "path": "text"}},
-                {"search": {"terms": ["urge"], "path": "text"}}],
-         "boost_term": [{"terms": ["testo"], "path": "text", "boost": 5.0}],
-         "top": 5},
-    ], ids=lambda r: str(r)[:45])
+    @pytest.mark.parametrize("req", _EXPLAIN_REQS, ids=lambda r: str(r)[:45])
     def test_last_step_equals_hit_score(self, spark_index, req):
-        import numpy as np
+        _last_step_equals_hit_score(spark_index, req)
 
-        from veloci_spark.search import search
-
-        res = search(spark_index, {**req, "explain_hits": True})
-        assert res["data"], "query must hit for the test to mean anything"
-        for d in res["data"]:
-            steps = d["explain"]
-            assert steps, d
-            assert np.float32(steps[-1]["score"]) == np.float32(d["score"]), (
-                d["doc_id"], steps)
+    @pytest.mark.parametrize("req", _EXPLAIN_REQS, ids=lambda r: str(r)[:45])
+    def test_last_step_equals_hit_score_spark_tier(self, spark_index, req,
+                                                   spark_tier):
+        _last_step_equals_hit_score(spark_index, req)
 
 
 class TestGeneratorOptions:

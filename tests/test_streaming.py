@@ -280,6 +280,25 @@ def _facet_rows(start, n, stamp):
     ]
 
 
+def _select_and_why_found_across_generations(spark, stream_cfg, tmp_path):
+    from veloci_spark.streaming import MultiIndex, ingest_batch
+
+    root = str(tmp_path / "root")
+    ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 8, "a")),
+                 stream_cfg, root)
+    ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 8, "b")),
+                 stream_cfg, root)
+    res = MultiIndex(spark, root).search(
+        {"search": {"terms": ["spark"], "path": "text"},
+         "select": ["url", "lang"], "why_found": True, "top": 16})
+    assert len(res["data"]) == 16
+    for d in res["data"]:
+        stamp = "a" if d["doc_id"] < 8 else "b"
+        assert f"/{stamp}/" in d["doc"]["url"]  # routed to its generation
+        assert d["doc"]["lang"] == "en"
+        assert "spark" in " ".join(d["why_found"].get("text", [])).lower()
+
+
 class TestMultiIndexResultShape:
     """VERDICT r3 #7: the streamed (MultiIndex) path returns the full
     reference result shape — facets, select, why_found, suggest, exact
@@ -309,22 +328,11 @@ class TestMultiIndexResultShape:
 
     def test_select_and_why_found_across_generations(self, spark, stream_cfg,
                                                      tmp_path):
-        from veloci_spark.streaming import MultiIndex, ingest_batch
+        _select_and_why_found_across_generations(spark, stream_cfg, tmp_path)
 
-        root = str(tmp_path / "root")
-        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 8, "a")),
-                     stream_cfg, root)
-        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 8, "b")),
-                     stream_cfg, root)
-        res = MultiIndex(spark, root).search(
-            {"search": {"terms": ["spark"], "path": "text"},
-             "select": ["url", "lang"], "why_found": True, "top": 16})
-        assert len(res["data"]) == 16
-        for d in res["data"]:
-            stamp = "a" if d["doc_id"] < 8 else "b"
-            assert f"/{stamp}/" in d["doc"]["url"]  # routed to its generation
-            assert d["doc"]["lang"] == "en"
-            assert "spark" in " ".join(d["why_found"].get("text", [])).lower()
+    def test_select_and_why_found_across_generations_spark_tier(
+            self, spark, stream_cfg, tmp_path, spark_tier):
+        _select_and_why_found_across_generations(spark, stream_cfg, tmp_path)
 
     def test_suggest_across_generations(self, spark, stream_cfg, tmp_path):
         from veloci_spark.search import FulltextIndex, suggest

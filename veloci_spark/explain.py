@@ -6,9 +6,16 @@ NumDistintTermsBoost / Boost).
 The segment kernel ranks without remembering *why*; explanation re-derives
 each returned doc's score from the same inputs (matched dictionary terms ×
 stored posting scores), walking the request tree with the identical float32
-arithmetic — so ``steps[-1]["score"] == hit score`` exactly. Cost: one
-partition-pruned posting scan over the result docs' segments (top-k docs
-only — never the full hit set).
+arithmetic — so ``steps[-1]["score"] == hit score`` exactly. Cost: the
+posting rows of the matched terms in the result docs' segments
+(:meth:`FulltextIndex.read_postings`), their phrase rows
+(``read_phrase``) and identity leaves' doc values (``read_docs``) — top-k
+docs only, never the full hit set. Each read runs with pyarrow in the
+driver under the local tier's scan rule, on Spark otherwise. The per-leg
+boost values keep their Spark reads (the nested ones a join): requests
+with per-leg boosts take the composed path, which runs on Spark. The tree
+and the matched leaves come from the planner when :func:`search.search`
+passes them.
 """
 
 from __future__ import annotations
@@ -23,8 +30,10 @@ def _doc_leaf_entries(index, leaves, doc_ids):
     """(doc_id, leaf_id) → list of (term, term_score, stored_u32, final_f32)
     from the postings of the matched dictionary terms (identity leaves are
     resolved against the doc store)."""
+    import pandas as pd
+
     from veloci_spark.search import (IDENTITY_STORED, _identity_scores,
-                                     _stored_to_f32, _tid_pushdown_pred)
+                                     _stored_to_f32)
     from veloci_spark.vbyte import unpack_postings
 
     # bm25 indexes skip the f16 read quantization in the kernel
@@ -40,28 +49,25 @@ def _doc_leaf_entries(index, leaves, doc_ids):
     for leaf in leaves:
         if leaf.matched is None:
             continue
-        for _, r in leaf.matched.iterrows():
-            tid_rows.setdefault((leaf.field, int(r["term_id"])), []).append(
-                (leaf.leaf_id, r["term"], _F32(r["score"])))
+        for tid, term, tscore in zip(leaf.matched["term_id"].tolist(),
+                                     leaf.matched["term"].tolist(),
+                                     leaf.matched["score"].to_numpy(_F32)):
+            tid_rows.setdefault((leaf.field, tid), []).append(
+                (leaf.leaf_id, term, tscore))
     if tid_rows:
-        fields = list({f for f, _ in tid_rows})
-        tids = list({t for _, t in tid_rows})
-        rows = (
-            index.postings
-            .where(F.col("segment").isin(segs))
-            .where(F.col("field").isin(fields)
-                   & _tid_pushdown_pred(F.col("term_id"), tids))
-            .select("field", "term_id", "segment", "docs_bin", "scores_bin")
-            .toPandas()
-        )
-        for _, r in rows.iterrows():
-            # past the In cap the pushdown is a (min,max) range — superset
+        rows = index.read_postings(
+            pd.DataFrame(list(tid_rows), columns=["field", "term_id"]), segs)
+        for field, tid, seg, docs_bin, scores_bin in zip(
+                rows["field"], rows["term_id"].tolist(),
+                rows["segment"].tolist(), rows["docs_bin"],
+                rows["scores_bin"]):
+            # past the In cap a Spark read is a (min,max) range — superset
             # rows resolve to no matched leaf and are skipped here
-            entries = tid_rows.get((r["field"], int(r["term_id"])))
+            entries = tid_rows.get((field, tid))
             if not entries:
                 continue
-            docs, stored = unpack_postings(r["docs_bin"], r["scores_bin"])
-            docs = docs + int(r["segment"]) * segment_docs
+            docs, stored = unpack_postings(docs_bin, scores_bin)
+            docs = docs + seg * segment_docs
             present = np.isin(docs, want)
             if not present.any():
                 continue
@@ -77,22 +83,20 @@ def _doc_leaf_entries(index, leaves, doc_ids):
         if leaf.matched is not None:
             continue
         fc = index.fields[leaf.field]
-        vals = (
-            index.docs.where(F.col("doc_id").isin([int(d) for d in doc_ids]))
-            .select("doc_id", F.col(leaf.field).alias("v")).toPandas()
-        )
+        rows = index.read_docs(doc_ids, ["doc_id", leaf.field])
         ignore_case = leaf.opts.get("ignore_case", True)
         lower = leaf.term.lower() if ignore_case else leaf.term
         n_chars = max(len(lower), 1)
         d_auto = min(leaf.opts.get("levenshtein", 0), n_chars - 1, 4)
         check_prefix = (leaf.opts.get("starts_with", False)
                         or leaf.opts.get("levenshtein", 0) != 0)
-        fin = _identity_scores(vals["v"].values, lower, leaf.term, n_chars,
+        vals = np.array([r[leaf.field] for r in rows], dtype=object)
+        fin = _identity_scores(vals, lower, leaf.term, n_chars,
                                d_auto, check_prefix,
                                leaf.opts.get("starts_with", False),
                                leaf.opts.get("is_regex", False),
                                ignore_case)
-        for d, v, s in zip(vals["doc_id"].values, vals["v"].values, fin):
+        for d, v, s in zip([r["doc_id"] for r in rows], vals, fin):
             if not np.isnan(s):
                 ts = float(s / (np.float16(IDENTITY_STORED).astype(_F32) / _F32(100.0)))
                 out.setdefault((int(d), leaf.leaf_id), []).append(
@@ -252,14 +256,23 @@ def _leg_nested_boost_vals(index, leaves, doc_ids):
     return out
 
 
-def explain_hits(index, request, doc_ids: list[int]) -> dict[int, list[dict]]:
+def explain_hits(index, request, doc_ids: list[int],
+                 collected=None) -> dict[int, list[dict]]:
     """Per-document score derivation for the given (already-ranked) docs.
     Returns doc_id → ordered list of Explain steps; the last step's score is
-    the doc's final score (pre anchor-boost)."""
-    from veloci_spark.search import _collect_leaves
+    the doc's final score (pre anchor-boost).
 
-    (tree, _filter_tree, leaves, scored_ids, phrase_specs,
-     term_boost_leaves) = _collect_leaves(index, request)
+    ``collected`` — the planner's (tree, leaves, scored leaf ids, phrase
+    specs, term-boost leaves) for ``request``, as :func:`search.search`
+    passes them; without it the request's leaves are matched again."""
+    from veloci_spark.search import _collect_leaves
+    from veloci_spark.vbyte import unpack_ids
+
+    if collected is None:
+        (tree, _filter_tree, leaves, scored_ids, phrase_specs,
+         term_boost_leaves) = _collect_leaves(index, request)
+    else:
+        tree, leaves, scored_ids, phrase_specs, term_boost_leaves = collected
     boost_cols = {spec["path"] for l in leaves
                   for spec in (l.field_boosts or [])}
     nested_boost_paths = {c for c in boost_cols if c in index.values}
@@ -269,6 +282,7 @@ def explain_hits(index, request, doc_ids: list[int]) -> dict[int, list[dict]]:
     leg_nested_vals = _leg_nested_boost_vals(
         index, leaves, doc_ids) if nested_boost_paths else {}
     # flat per-leg boost values for the explained docs: one bounded collect
+    # (their requests take the composed path, which runs on Spark)
     leg_boost_vals: dict[tuple[int, str], float] = {}
     if boost_cols - nested_boost_paths:
         cols = sorted(boost_cols - nested_boost_paths)
@@ -279,31 +293,34 @@ def explain_hits(index, request, doc_ids: list[int]) -> dict[int, list[dict]]:
                       for i, c in enumerate(cols)])
             .toPandas()
         )
-        for _, r in rows.iterrows():
-            for i, c in enumerate(cols):
-                leg_boost_vals[(int(r["doc_id"]), c)] = float(r[f"_b{i}"])
+        for i, c in enumerate(cols):
+            for d, v in zip(rows["doc_id"].tolist(), rows[f"_b{i}"].tolist()):
+                leg_boost_vals[(d, c)] = float(v)
     entries = _doc_leaf_entries(
         index, [l for l in leaves if l.leaf_id in scored_ids
                 or l.leaf_id in {lid for lid, _ in term_boost_leaves}],
         doc_ids)
 
-    # phrase-pair presence per doc
+    # phrase-pair presence per doc: the pairs' packed doc lists in the
+    # explained docs' segments, decoded here
     phrase_docs: dict[int, set] = {}
-    if phrase_specs:
-        from veloci_spark.search import phrase_doc_rows
-
-        a_set = list({a for _f, a, _b in phrase_specs})
-        b_set = list({b for _f, _a, b in phrase_specs})
-        prows = (
-            phrase_doc_rows(index, a_set, b_set)
-            .where(F.col("doc_id").isin([int(d) for d in doc_ids]))
-            .select("field", "tok_a", "tok_b", "doc_id").toPandas()
-        )
-        for i, (f, a, b) in enumerate(phrase_specs):
-            hit = prows[(prows["field"] == f) & (prows["tok_a"] == a)
-                        & (prows["tok_b"] == b)]
-            for d in hit["doc_id"]:
-                phrase_docs.setdefault(int(d), set()).add(i)
+    if phrase_specs and doc_ids:
+        segment_docs = index.manifest["segment_docs"]
+        want = np.array(sorted(doc_ids), dtype=np.int64)
+        spec_ix: dict[tuple, list] = {}
+        for i, spec in enumerate(phrase_specs):
+            spec_ix.setdefault(tuple(spec), []).append(i)
+        prows = index.read_phrase(phrase_specs,
+                                  {d // segment_docs for d in doc_ids})
+        for f, a, b, seg, docs_bin in zip(
+                prows["field"], prows["tok_a"], prows["tok_b"],
+                prows["segment"].tolist(), prows["docs_bin"]):
+            ix = spec_ix.get((f, a, b))
+            if not ix:
+                continue
+            docs = unpack_ids(docs_bin) + seg * segment_docs
+            for d in docs[np.isin(docs, want)].tolist():
+                phrase_docs.setdefault(d, set()).update(ix)
 
     leaf_map = {l.leaf_id: l for l in leaves}
     out: dict[int, list[dict]] = {}

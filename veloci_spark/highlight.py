@@ -89,10 +89,11 @@ def highlight_series(texts: pd.Series, terms, separators: str = DEFAULT_SEPARATO
 def why_found_terms(index, doc_ids: list[int], leaves) -> dict[int, dict[str, list[str]]]:
     """For each doc in ``doc_ids``: which matched dictionary terms hit which
     field (/root/reference/src/search/why_found.rs:11-49). Only the segments
-    containing the requested docs are scanned (parquet partition pruning)."""
-    from pyspark.sql import functions as F
+    containing the requested docs are read
+    (:meth:`FulltextIndex.read_postings`)."""
+    import pandas as pd
 
-    from veloci_spark.vbyte import unpack_postings
+    from veloci_spark.vbyte import unpack_ids
 
     if not doc_ids:
         return {}
@@ -106,29 +107,25 @@ def why_found_terms(index, doc_ids: list[int], leaves) -> dict[int, dict[str, li
     for leaf in leaves:
         if leaf.matched is None:
             continue
-        for _, r in leaf.matched.iterrows():
-            tid_term[(leaf.field, int(r["term_id"]))] = r["term"]
+        tid_term.update(zip(
+            ((leaf.field, t) for t in leaf.matched["term_id"].tolist()),
+            leaf.matched["term"].tolist()))
     if not tid_term:
         return {}
-    fields = list({f for f, _ in tid_term})
-    tids = list({t for _, t in tid_term})
-    rows = (
-        index.postings
-        .where(F.col("segment").isin(segs))
-        .where(F.col("field").isin(fields) & F.col("term_id").isin(tids))
-        .select("field", "term_id", "segment", "docs_bin", "scores_bin")
-        .toPandas()
-    )
+    rows = index.read_postings(
+        pd.DataFrame(list(tid_term), columns=["field", "term_id"]), segs)
     out: dict[int, dict[str, list[str]]] = {int(d): {} for d in doc_ids}
-    for _, r in rows.iterrows():
-        term = tid_term.get((r["field"], int(r["term_id"])))
+    for field, tid, seg, docs_bin in zip(
+            rows["field"], rows["term_id"].tolist(), rows["segment"].tolist(),
+            rows["docs_bin"]):
+        # past the In cap a Spark read is a (min,max) term_id range —
+        # superset rows resolve to no matched term and are skipped here
+        term = tid_term.get((field, tid))
         if term is None:
             continue
-        docs, _scores = unpack_postings(r["docs_bin"], r["scores_bin"])
-        docs = docs + int(r["segment"]) * segment_docs  # stored segment-relative
-        present = docs[np.isin(docs, want)]
-        for d in present:
-            out[int(d)].setdefault(r["field"], []).append(term)
+        docs = unpack_ids(docs_bin) + seg * segment_docs  # segment-relative
+        for d in docs[np.isin(docs, want)].tolist():
+            out[d].setdefault(field, []).append(term)
     for d in out:
         for f in out[d]:
             out[d][f] = sorted(set(out[d][f]))
@@ -148,8 +145,6 @@ def why_found(index, doc_ids: list[int], leaves) -> dict[int, dict[str, list[str
     wraps the entire text; token matches highlight in place with the
     field's own separators. Texts that contain no match are omitted; long
     texts window to snippets exactly like :func:`highlight_text`."""
-    from pyspark.sql import functions as F
-
     terms_by_doc = why_found_terms(index, doc_ids, leaves)
     if not terms_by_doc:
         return {}
@@ -159,17 +154,16 @@ def why_found(index, doc_ids: list[int], leaves) -> dict[int, dict[str, list[str
     texts: dict[str, dict[int, list[str]]] = {}
     flat = [f for f in fields if f not in index.values]
     if flat:
-        rows = (index.docs.where(F.col("doc_id").isin(ids))
-                .select("doc_id", *flat).collect())
-        for r in rows:
+        for r in index.read_docs(ids, ["doc_id", *flat]):
             for f in flat:
                 if r[f] is not None:
                     texts.setdefault(f, {})[r["doc_id"]] = [str(r[f])]
     for f in fields:
         if f not in index.values:
             continue
-        vrows = (index.values[f].where(F.col("doc_id").isin(ids))
-                 .orderBy("doc_id", "pos").collect())
+        vrows = sorted(
+            index.read_docs(ids, ["doc_id", "pos", "value"], path=f),
+            key=lambda r: (r["doc_id"], r["pos"]))
         for r in vrows:
             if r["value"] is not None:
                 texts.setdefault(f, {}).setdefault(r["doc_id"], []) \

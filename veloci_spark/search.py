@@ -30,7 +30,11 @@ doc-partitioned segments, in four steps:
    exact counts and, for fused facets, counts facet values from
    driver-resident doc→value maps; the driver merges partitions × (k+1)
    rows.
-4. *Post-processing* — select, snippets, why-found, explain (Spark).
+4. *Post-processing* — select, snippets, why-found, explain: bounded
+   reads of the result docs (:meth:`FulltextIndex.read_docs`) and of
+   their segments' posting / phrase rows (``read_postings``,
+   ``read_phrase``), each under the same scan rule as the local tier
+   (below), whichever tier ran the kernel.
 
 Steps 2-3 run on one of two **execution tiers**, both with the same
 kernel and merge functions:
@@ -47,10 +51,17 @@ kernel and merge functions:
   tens of ms instead of the ~0.7 s Spark scheduling floor.
 
 The cost rule (:func:`_choose_tier`) runs a request locally when the index
-dir is on the local disk and Σ doc_freq of its matched dictionary rows is
-at most LOCAL_TIER_MAX_POSTINGS. Identity leaves, per-leg field boosts
-(the composed path), anchor ``boost``, nested post-locality and Spark-join
-facets stay on Spark, as do :func:`search_df` and ``MultiIndex.search``.
+dir is on the local disk, Σ doc_freq of its matched dictionary rows is
+at most LOCAL_TIER_MAX_POSTINGS and its pyarrow reads decode at most
+LOCAL_TIER_MAX_SCAN_BYTES bytes of parquet column chunks. Identity
+leaves, per-leg field boosts (the composed path), anchor ``boost``, nested
+post-locality and Spark-join facets stay on Spark, as do
+:func:`search_df` and ``MultiIndex.search``. Each post-processing read is
+decided on its own, by the scan-bytes part of the rule: a pyarrow read in
+the driver, or the Spark ``where(...)``. Explain's per-leg boost values
+(a collect; the nested ones ``_leg_nested_boost_vals`` joins) and the
+identity-leaf doc-store scan keep their Spark reads — all in requests
+already on Spark.
 
 All score arithmetic is float32 (veloci_spark.scoring) for rank-identical
 parity with the reference formulas; the pure-Python model in
@@ -67,6 +78,7 @@ from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
@@ -112,11 +124,17 @@ TID_PUSHDOWN_MAX_IN = 1_000
 # facet request took 2.05 s local vs 2.38 s on Spark, the top-k one 0.91 s
 # vs 1.81 s; with more executors the parallel decode wins sooner.
 LOCAL_TIER_MAX_POSTINGS = 1_000_000
-# ... and when its pyarrow reads decode at most this many parquet rows
-# (row groups the predicates cannot skip). Same VM: a filtered read of a
-# 2.7 M-row phrase table (one row group per file) took ~0.15 s, so 4 M
-# rows stay well under the Spark floor.
-LOCAL_TIER_MAX_SCAN_ROWS = 4_000_000
+# ... and when its pyarrow reads decode at most this many bytes: the
+# uncompressed chunks of the columns they read, in the row groups their
+# predicates cannot skip (:func:`_scan_bytes`). The post-processing reads
+# (FulltextIndex.read_docs / read_postings / read_phrase) follow the same
+# bound. Set by the widest rows, the doc store; same VM, a 10-id url+text
+# fetch took, locally vs on Spark: 13 MiB 50 vs 184 ms, 29 MiB 102 vs 185,
+# 53 MiB (one 200k-row row group) 147 vs 251, 59 MiB (one 250k-row group)
+# 221 vs 245, 133 MiB 144 vs 192, 209 MiB 241 vs 176, 651 MiB 634 vs 165.
+# The kernel's reads at 100k docs (postings 8-9 MiB, with phrase rows
+# 27-31 MiB) ran 2-38x faster locally than the request on Spark.
+LOCAL_TIER_MAX_SCAN_BYTES = 64 << 20
 
 
 def _local_dir(index_dir: str) -> "str | None":
@@ -273,6 +291,130 @@ class FulltextIndex:
                         os.path.join(self.local_path, table), format="parquet")
                 dset = self._datasets[table]
         return dset
+
+    # -- bounded reads of post-processing (select, snippets, why-found,
+    # explain). A read runs in the driver with pyarrow when the index dir
+    # is local and the row groups it cannot skip hold at most
+    # LOCAL_TIER_MAX_SCAN_BYTES bytes of the columns read — the local
+    # tier's scan rule — and as the Spark ``where(...)`` otherwise; callers
+    # get the same rows.
+
+    def _reads_locally(self, table: str, flt, columns: list) -> bool:
+        return (self.local_path is not None
+                and _scan_bytes(self, {table: (flt, columns)})
+                <= LOCAL_TIER_MAX_SCAN_BYTES)
+
+    def read_docs(self, doc_ids, columns: "list[str] | None" = None,
+                  path: "str | None" = None) -> list:
+        """Rows of the doc store — or of the 1:n value relation
+        ``values/<path>`` — for the given doc ids, as the pyspark Rows
+        ``collect()`` returns (all columns when ``columns`` is None), in
+        no particular order."""
+        from veloci_spark.nested import safe_path_name
+
+        ids = sorted({int(d) for d in doc_ids})
+        sdf = self.docs if path is None else self.values[path]
+        if columns is not None:
+            columns = list(dict.fromkeys(columns))
+        if not ids:
+            return []
+        table = "docs" if path is None else f"values/{safe_path_name(path)}"
+        flt = _doc_id_filter(ids)
+        # an unknown column keeps Spark's AnalysisException
+        if ((columns is None or set(columns) <= set(sdf.columns))
+                and self._reads_locally(table, flt,
+                                        ["doc_id", *(columns or sdf.columns)])):
+            schema = (sdf.schema if columns is None else
+                      T.StructType([sdf.schema[c] for c in columns]))
+            return _arrow_rows(self.arrow_dataset(table).to_table(
+                columns=schema.names, filter=flt), schema)
+        if columns is not None:
+            sdf = sdf.select(*columns)
+        return sdf.where(F.col("doc_id").isin(ids)).collect()
+
+    def read_postings(self, keys: pd.DataFrame, segments) -> pd.DataFrame:
+        """Posting rows (field, term_id, segment, docs_bin, scores_bin) of
+        the (field, term_id) ``keys`` within ``segments``, sorted by
+        (field, term_id, segment) so both reads list them alike (explain
+        emits its term steps in row order). Past TID_PUSHDOWN_MAX_IN term
+        ids the Spark read is a superset (range) — callers look rows up by
+        key."""
+        segs = sorted({int(s) for s in segments})
+        cols = ["field", "term_id", "segment", "docs_bin", "scores_bin"]
+        flt = _posting_filter(keys) & pc.field("segment").isin(segs)
+        if self._reads_locally("postings", flt, cols):
+            rows = self.arrow_dataset("postings").to_table(
+                columns=cols, filter=flt).to_pandas()
+        else:
+            tids = sorted(set(keys["term_id"].tolist()))
+            rows = (self.postings
+                    .where(F.col("segment").isin(segs)
+                           & F.col("field").isin(sorted(set(keys["field"])))
+                           & _tid_pushdown_pred(F.col("term_id"), tids))
+                    .select(*cols).toPandas())
+        return rows.sort_values(["field", "term_id", "segment"],
+                                kind="mergesort", ignore_index=True)
+
+    def read_phrase(self, phrase_specs, segments) -> pd.DataFrame:
+        """Phrase rows (field, tok_a, tok_b, segment, docs_bin) of the
+        requested (field, tok_a, tok_b) pairs within ``segments`` — a
+        superset over the tok_a × tok_b sets; callers match the pairs."""
+        segs = sorted({int(s) for s in segments})
+        cols = _PHRASE_READ_COLS
+        flt = _phrase_filter(phrase_specs) & pc.field("segment").isin(segs)
+        if self._reads_locally("phrase", flt, cols):
+            return self.arrow_dataset("phrase").to_table(
+                columns=cols, filter=flt).to_pandas()
+        a_set = sorted({a for _f, a, _b in phrase_specs})
+        b_set = sorted({b for _f, _a, b in phrase_specs})
+        return (self.phrase
+                .where(F.col("tok_a").isin(a_set) & F.col("tok_b").isin(b_set)
+                       & F.col("segment").isin(segs))
+                .select(*cols).toPandas())
+
+
+def _doc_id_filter(ids: list):
+    """pyarrow filter for sorted doc ids that skips row groups by their
+    doc_id min/max (the doc store is range-partitioned by doc_id): an
+    equality disjunction — pyarrow does not check an ``isin`` against
+    statistics — or, past TID_PUSHDOWN_MAX_IN ids, range plus ``isin``."""
+    col = pc.field("doc_id")
+    if len(ids) > TID_PUSHDOWN_MAX_IN:
+        return (col >= ids[0]) & (col <= ids[-1]) & col.isin(ids)
+    terms = [col == i for i in ids]
+    while len(terms) > 1:  # pairwise, so the expression stays shallow
+        terms = ([a | b for a, b in zip(terms[::2], terms[1::2])]
+                 + terms[len(terms) - len(terms) % 2:])
+    return terms[0]
+
+
+def _int96_as_utc(t):
+    """``t`` with every INT96 timestamp — pyarrow reads them as naive ns
+    values; they hold UTC instants — typed ``timestamp[us, UTC]``, at any
+    nesting depth. (Spark writes TimestampNTZType as naive us.)"""
+    if pa.types.is_timestamp(t):
+        return (pa.timestamp("us", tz="UTC")
+                if t.tz is None and t.unit == "ns" else t)
+    if pa.types.is_struct(t):
+        return pa.struct([f.with_type(_int96_as_utc(f.type)) for f in t])
+    if pa.types.is_map(t):
+        return pa.map_(t.key_field.with_type(_int96_as_utc(t.key_type)),
+                       t.item_field.with_type(_int96_as_utc(t.item_type)))
+    if pa.types.is_list(t):
+        return pa.list_(t.value_field.with_type(_int96_as_utc(t.value_type)))
+    return t
+
+
+def _arrow_rows(table, schema: T.StructType) -> list:
+    """pyspark Rows of a pyarrow table with the values ``collect()``
+    gives (Spark Connect's Arrow→Row conversion). Spark writes
+    TimestampType as INT96: marked UTC, the conversion shifts those
+    instants to local time, as ``collect()`` does."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    utc = pa.schema([f.with_type(_int96_as_utc(f.type)) for f in table.schema])
+    return ArrowTableToRowsConversion.convert(table.cast(utc, safe=False),
+                                              schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1404,6 +1546,7 @@ class _SearchPlan(NamedTuple):
     phrase_specs: list
     identity_leaves: list
     composed: bool             # per-leg field boosts: the composed path
+    tree: dict                 # the request tree, leaf boosts intact
 
 
 def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
@@ -1468,7 +1611,7 @@ def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
             "quantize_f16": quantize_f16,
         }
         return _SearchPlan(cplan, leaves, matched, phrase_specs,
-                           identity_leaves, composed=True)
+                           identity_leaves, composed=True, tree=tree)
 
     top = request.get("top", 10)
     skip = request.get("skip", 0)
@@ -1548,7 +1691,7 @@ def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
             plan.pop("wand_ntags")
             plan.pop("wand_op")
     return _SearchPlan(plan, leaves, matched, phrase_specs, identity_leaves,
-                       composed=False)
+                       composed=False, tree=tree)
 
 
 def _spark_hits(index: FulltextIndex, sp: _SearchPlan):
@@ -1625,36 +1768,50 @@ def _phrase_filter(phrase_specs):
             & pc.field("tok_a").isin(a_set) & pc.field("tok_b").isin(b_set))
 
 
+_POSTING_READ_COLS = ["field", "term_id", "segment", "max_score",
+                      "docs_bin", "scores_bin"]
+_PHRASE_READ_COLS = ["field", "tok_a", "tok_b", "segment", "docs_bin"]
+
+
 def _local_reads(sp: _SearchPlan) -> dict:
-    """{table: pyarrow filter} of the reads the local tier makes."""
+    """{table: (pyarrow filter, columns)} of the reads the local tier
+    makes."""
     if sp.matched.empty:
         return {}
-    reads = {"postings": _posting_filter(sp.matched)}
+    reads = {"postings": (_posting_filter(sp.matched), _POSTING_READ_COLS)}
     if sp.phrase_specs:
-        reads["phrase"] = _phrase_filter(sp.phrase_specs)
+        reads["phrase"] = (_phrase_filter(sp.phrase_specs), _PHRASE_READ_COLS)
     return reads
 
 
-def _scan_rows(index: FulltextIndex, reads: dict) -> int:
-    """Rows of the parquet row groups the local reads cannot skip by their
-    statistics — what pyarrow decodes, whatever the filter keeps. (Spark's
-    reader also skips pages by column index; pyarrow reads whole row
-    groups, so a big single-row-group file costs a full column scan.)"""
-    return sum(rg.num_rows
-               for table, flt in reads.items()
-               for frag in index.arrow_dataset(table).get_fragments(filter=flt)
-               for part in frag.split_by_row_group(flt)
-               for rg in part.row_groups)
+def _scan_bytes(index: FulltextIndex, reads: dict) -> int:
+    """Uncompressed bytes of the column chunks the ``{table: (filter,
+    columns)}`` reads decode: those columns' chunks (the filter's columns
+    among them) in the row groups the filters cannot skip by statistics —
+    what pyarrow decodes, whatever the filter keeps. (Spark's reader also
+    skips pages by column index; pyarrow decodes whole column chunks, so a
+    big row group costs a full scan of the columns read.)"""
+    total = 0
+    for table, (flt, columns) in reads.items():
+        for frag in index.arrow_dataset(table).get_fragments(filter=flt):
+            meta = frag.metadata
+            paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
+            chunks = [j for j, p in enumerate(paths)
+                      if any(p == c or p.startswith(c + ".") for c in columns)]
+            total += sum(meta.row_group(rg.id).column(j).total_uncompressed_size
+                         for part in frag.split_by_row_group(flt)
+                         for rg in part.row_groups for j in chunks)
+    return total
 
 
 def _choose_tier(index: FulltextIndex, request: dict, sp: _SearchPlan,
                  fused_facets: bool) -> "tuple[str, int | None, int | None]":
-    """("local" | "spark", posting estimate, scan rows). The local tier runs
-    only for an index on the local disk, a posting estimate within
-    LOCAL_TIER_MAX_POSTINGS, reads within LOCAL_TIER_MAX_SCAN_ROWS, and a
+    """("local" | "spark", posting estimate, scan bytes). The local tier
+    runs only for an index on the local disk, a posting estimate within
+    LOCAL_TIER_MAX_POSTINGS, reads within LOCAL_TIER_MAX_SCAN_BYTES, and a
     plan shape it evaluates identically: identity leaves, the composed
     per-leg field-boost path, anchor ``boost``, nested post-locality and
-    Spark-join facets stay on Spark. The scan rows are only counted when
+    Spark-join facets stay on Spark. The scan bytes are only counted when
     everything else allows the local tier."""
     est = _posting_estimate(index, sp)
     scan = None
@@ -1664,8 +1821,8 @@ def _choose_tier(index: FulltextIndex, request: dict, sp: _SearchPlan,
             and not request.get("boost")
             and not sp.plan.get("post_locality")
             and (fused_facets or not request.get("facets"))):
-        scan = _scan_rows(index, _local_reads(sp))
-    local = scan is not None and scan <= LOCAL_TIER_MAX_SCAN_ROWS
+        scan = _scan_bytes(index, _local_reads(sp))
+    local = scan is not None and scan <= LOCAL_TIER_MAX_SCAN_BYTES
     return ("local" if local else "spark"), est, scan
 
 
@@ -1674,27 +1831,26 @@ _LOCAL_KERNEL_COLS = ["segment", "leaf_id", "term_score", "max_score",
 
 
 def _local_posting_rows(index: FulltextIndex, matched: pd.DataFrame,
-                        flt) -> pd.DataFrame:
+                        read) -> pd.DataFrame:
     """Kernel-input rows of the matched terms, read in the driver, then the
     exact join on (field, term_id) that tags each row with its leaf and
     term score."""
-    table = index.arrow_dataset("postings").to_table(
-        columns=["field", "term_id", "segment", "max_score", "docs_bin",
-                 "scores_bin"], filter=flt)
+    flt, cols = read
+    table = index.arrow_dataset("postings").to_table(columns=cols, filter=flt)
     rows = table.to_pandas().merge(matched, on=["field", "term_id"])
     rows["doc_ids"] = None
     return rows[_LOCAL_KERNEL_COLS]
 
 
 def _local_phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int,
-                       flt) -> pd.DataFrame:
+                       read) -> pd.DataFrame:
     """Driver-side :func:`_phrase_rows`: the pruned read, joined exactly
     with the requested (field, a, b) pairs."""
     specs = pd.DataFrame(
         [(f, a, b, next_leaf_id + i) for i, (f, a, b) in enumerate(phrase_specs)],
         columns=["field", "tok_a", "tok_b", "leaf_id"])
-    table = index.arrow_dataset("phrase").to_table(
-        columns=["field", "tok_a", "tok_b", "segment", "docs_bin"], filter=flt)
+    flt, cols = read
+    table = index.arrow_dataset("phrase").to_table(columns=cols, filter=flt)
     rows = table.to_pandas().merge(specs, on=["field", "tok_a", "tok_b"])
     rows["leaf_id"] = rows["leaf_id"].astype(np.int32)
     rows["term_score"] = _F32(0.0)
@@ -1976,8 +2132,8 @@ def phrase_doc_rows(index: FulltextIndex, a_set: list, b_set: list) -> DataFrame
     """Decode the packed phrase index back to per-doc rows
     ``(field, tok_a, tok_b, doc_id)`` for the given pair candidates — the
     (tok_a, tok_b) predicates prune parquet row groups before the
-    distributed decode. Used by explain/why-found and the contract oracle;
-    the search path feeds packed rows to the kernel directly."""
+    distributed decode. Used by the contract oracle and the tests; the
+    search path and explain read the packed rows directly."""
     segment_docs = int(index.manifest["segment_docs"])
 
     def dec(iterator):
@@ -2311,8 +2467,8 @@ def search(index: FulltextIndex, request: dict) -> dict:
     _maps = {f: index.facet_map(f) for f in _ufields}
     fused_facets = bool(facet_specs) and all(
         _maps[f] is not None for f in _ufields)
-    tier, posting_estimate, scan_rows = _choose_tier(index, request, sp,
-                                                     fused_facets)
+    tier, posting_estimate, scan_bytes = _choose_tier(index, request, sp,
+                                                      fused_facets)
     if tier == "local":
         frames = _local_hits(index, sp)
         hits = None
@@ -2507,7 +2663,7 @@ def search(index: FulltextIndex, request: dict) -> dict:
             # execution tier and the estimates behind it
             "tier": tier,
             "posting_estimate": posting_estimate,
-            "scan_rows": scan_rows,
+            "scan_bytes": scan_bytes,
             "leaves": [
                 {"leaf_id": l.leaf_id, "field": l.field, "term": l.term,
                  "opts": l.opts,
@@ -2522,7 +2678,10 @@ def search(index: FulltextIndex, request: dict) -> dict:
         # per-document score derivation (reference explain.rs steps)
         from veloci_spark.explain import explain_hits as _explain_hits
 
-        eh = _explain_hits(index, request, [d["doc_id"] for d in out["data"]])
+        eh = _explain_hits(
+            index, request, [d["doc_id"] for d in out["data"]],
+            collected=(sp.tree, leaves, _plan["scored_leaf_ids"],
+                       sp.phrase_specs, _plan["term_boost_leaves"]))
         for d in out["data"]:
             d["explain"] = eh.get(d["doc_id"], [])
     if request.get("snippets"):
@@ -2546,8 +2705,8 @@ def search(index: FulltextIndex, request: dict) -> dict:
                  for t in leaf.matched["term"].tolist()]
         sep = index.fields[fld]["separators"]
         ids = [d["doc_id"] for d in out["data"]]
-        rows = index.docs.where(F.col("doc_id").isin(ids)).select("doc_id", fld).collect()
-        texts = {r["doc_id"]: r[fld] for r in rows}
+        texts = {r["doc_id"]: r[fld]
+                 for r in index.read_docs(ids, ["doc_id", fld])}
         for d in out["data"]:
             d["snippet"] = highlight_text(texts.get(d["doc_id"]) or "",
                                           terms, sep, **kw)
@@ -2565,15 +2724,11 @@ def select_docs(index: FulltextIndex, ids: list, cols: list) -> dict:
     if not ids:
         return by_id
     if flat_cols:
-        rows = index.docs.where(F.col("doc_id").isin([int(i) for i in ids])) \
-            .select("doc_id", *flat_cols).collect()
-        for r in rows:
+        for r in index.read_docs(ids, ["doc_id", *flat_cols]):
             by_id[r["doc_id"]].update({c: r[c] for c in flat_cols})
     for c in nested_cols:
-        vrows = (
-            index.values[c].where(F.col("doc_id").isin([int(i) for i in ids]))
-            .orderBy("doc_id", "pos").collect()
-        )
+        vrows = sorted(index.read_docs(ids, path=c),
+                       key=lambda r: (r["doc_id"], r["pos"]))
         from itertools import groupby
 
         depth = c.count("[]")
@@ -2592,10 +2747,8 @@ def get_docs(index: FulltextIndex, doc_ids: list[int],
     """Fetch documents by id, in the requested id order."""
     if not doc_ids:
         return []
-    df = index.docs.where(F.col("doc_id").isin([int(d) for d in doc_ids]))
-    if columns:
-        df = df.select("doc_id", *columns)
-    rows = {r["doc_id"]: r.asDict() for r in df.collect()}
+    rows = {r["doc_id"]: r.asDict() for r in index.read_docs(
+        doc_ids, ["doc_id", *columns] if columns else None)}
     return [rows[d] for d in doc_ids if d in rows]
 
 
@@ -2693,10 +2846,8 @@ def read_data(index: FulltextIndex, doc_id: int,
         if row else {}
     for f in fields:
         if f in index.values:
-            vrows = (
-                index.values[f].where(F.col("doc_id") == int(doc_id))
-                .orderBy("pos").collect()
-            )
+            vrows = sorted(index.read_docs([doc_id], path=f),
+                           key=lambda r: r["pos"])
             if vrows:
                 out[f] = _nest_value_rows(vrows, f.count("[]"))
     if len(out) <= 1 and row is None:
