@@ -1,3 +1,4 @@
+import contextlib
 import os
 import shutil
 
@@ -38,6 +39,31 @@ def spark_tier(monkeypatch):
     monkeypatch.setattr(search, "LOCAL_TIER_MAX_SCAN_BYTES", -1)
 
 
+@contextlib.contextmanager
+def forced_spark_build():
+    """Builds inside this block take the Spark build tier
+    (LOCAL_BUILD_MAX_TEXT_BYTES = -1: no batch is small enough)."""
+    from veloci_spark import build
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(build, "LOCAL_BUILD_MAX_TEXT_BYTES", -1)
+        yield
+
+
+@pytest.fixture
+def spark_build():
+    """Forces the Spark build tier. The test corpora are small, so every
+    build takes the local tier under the default cost rule; tests that
+    exist to exercise the Spark build stages (multi-partition term ids,
+    stage resume) take this fixture, or build inside
+    :func:`forced_spark_build` where a module- or session-scoped fixture
+    builds, so the Spark tier stays tested. The ``*_spark_build`` twins of
+    the parity batteries search ``spark_build_index``, the golden corpus
+    built that way."""
+    with forced_spark_build():
+        yield
+
+
 @pytest.fixture(scope="session")
 def index_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("index")
@@ -74,8 +100,7 @@ def ref_index(corpus):
     return pyref.RefIndex(corpus, webtext_config(segment_docs=SEGMENT_DOCS))
 
 
-@pytest.fixture(scope="session")
-def spark_index(spark, corpus, index_dir):
+def _build_golden(spark, corpus, index_dir):
     from veloci_spark.build import build_index
     from veloci_spark.config import webtext_config
     from veloci_spark.search import FulltextIndex
@@ -88,3 +113,17 @@ def spark_index(spark, corpus, index_dir):
     ).repartition(4)
     build_index(spark, df, cfg, index_dir)
     return FulltextIndex(spark, index_dir).cache()
+
+
+@pytest.fixture(scope="session")
+def spark_index(spark, corpus, index_dir):
+    """The golden corpus built under the default cost rule (local tier)."""
+    return _build_golden(spark, corpus, index_dir)
+
+
+@pytest.fixture(scope="session")
+def spark_build_index(spark, corpus, tmp_path_factory):
+    """The golden corpus built on the Spark build tier."""
+    d = str(tmp_path_factory.mktemp("index_spark_build"))
+    with forced_spark_build():
+        return _build_golden(spark, corpus, d)

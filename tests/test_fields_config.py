@@ -56,6 +56,14 @@ class TestParse:
             "do_not_store_document": True}))
         assert cfg == {"text": {"facet": True}}
 
+    def test_field_named_fields_config_is_not_a_wrapper(self):
+        # a flat map with more keys than the wrapper's is a flat config,
+        # even with a field path literally named fields_config
+        cfg = parse_fields_config(json.dumps({
+            "fields_config": {"facet": True}, "text": {"facet": True}}))
+        assert cfg == {"fields_config": {"facet": True},
+                       "text": {"facet": True}}
+
     def test_scalar_field_entry_rejected(self):
         with pytest.raises(ValueError, match="option maps"):
             parse_fields_config('{"text": true}')
@@ -87,12 +95,24 @@ class TestLowering:
         # disabling everything except Search keeps a search-only field;
         # (documented intent — the reference's invert() quirk makes its own
         # disabled_features behave as features; we lower the intent)
-        fc = field_from_config("t", {"disabled_features": [
-            "TokensToTextID", "BoostTextLocality", "Highlight", "WhyFound",
-            "Select", "PhraseBoost"]})
+        with pytest.warns(UserWarning, match="disabled_features"):
+            fc = field_from_config("t", {"disabled_features": [
+                "TokensToTextID", "BoostTextLocality", "Highlight",
+                "WhyFound", "Select", "PhraseBoost"]})
         assert fc is not None and not fc.token_texts and not fc.phrase_pairs
-        fc = field_from_config("t", {"disabled_features": ["PhraseBoost"]})
+        with pytest.warns(UserWarning, match="disabled_features"):
+            fc = field_from_config("t", {"disabled_features": ["PhraseBoost"]})
         assert fc.token_texts and not fc.phrase_pairs
+
+    def test_disabled_features_warns(self):
+        # lowered as the complement, which the reference does not do
+        with pytest.warns(UserWarning, match="disabled_features"):
+            field_from_config("t", {"disabled_features": ["PhraseBoost"]})
+
+    def test_multi_char_separator_rejected(self):
+        with pytest.raises(ValueError, match="single characters"):
+            field_from_config("t", {"fulltext": {
+                "tokenize_on_chars": [" ", "ab"]}})
 
     def test_search_disabled_field_skipped(self):
         assert field_from_config("t", {"features": ["Facets"]}) is None
@@ -122,6 +142,12 @@ class TestLowering:
         assert not ic.field("text").token_texts      # per-field entry won
         assert ic.field("lang").tokenize is False    # *GLOBAL* fallback
         assert ic.field("lang").token_texts          # default features
+
+    def test_duplicate_textindex_key_is_an_error(self):
+        cfg = json.dumps({"text": {"features": ["Search"]},
+                          "text.textindex": {"features": ["All"]}})
+        with pytest.raises(ValueError, match="two entries for 'text'"):
+            index_config_from_string(cfg, ["text"])
 
     def test_all_paths_disabled_is_an_error(self):
         cfg = json.dumps({"*GLOBAL*": {"features": ["Facets"]}})

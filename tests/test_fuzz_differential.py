@@ -200,13 +200,18 @@ class TestFuzzDifferential:
     def test_random_trees_match_oracle_spark_tier(self, spark_tier):
         self._random_trees()
 
-    def _random_trees(self):
+    def test_random_trees_match_oracle_spark_build(self, spark_build_index):
+        self._random_trees(spark_build_index)
+
+    def _random_trees(self, index=None):
+        index = index or self.spark_index
+
         @settings(max_examples=N_EXAMPLES, deadline=None,
                   derandomize=DERANDOMIZE,
                   suppress_health_check=[HealthCheck.too_slow])
         @given(req=_request_strategy(self.vocab, self.phrase_pool))
         def check(req):
-            _check_request_vs_model(self.spark_index, self.ref_index, req)
+            _check_request_vs_model(index, self.ref_index, req)
 
         check()
 

@@ -11,6 +11,8 @@ import json
 
 import pytest
 
+from tests.conftest import forced_spark_build
+
 
 @pytest.fixture(scope="module")
 def no_stop():
@@ -42,8 +44,10 @@ def built_dir(no_stop, spark, corpus_parquet, tmp_path_factory):
     from jobs import build_index_job
 
     out = str(tmp_path_factory.mktemp("jobs") / "idx")
-    build_index_job.main(["--input", corpus_parquet, "--output", out,
-                          "--segment-docs", "32"])
+    # the Spark build tier: the resume test re-submits onto its stages
+    with forced_spark_build():
+        build_index_job.main(["--input", corpus_parquet, "--output", out,
+                              "--segment-docs", "32"])
     return out
 
 
@@ -55,7 +59,8 @@ class TestBuildJob:
         assert idx.manifest["n_docs"] == len(corpus)
         assert {f["name"] for f in idx.manifest["fields"]} >= {"text", "lang"}
 
-    def test_resume_with_same_input(self, built_dir, corpus_parquet, capsys):
+    def test_resume_with_same_input(self, built_dir, corpus_parquet, capsys,
+                                    spark_build):
         # re-submitting with the same --output resumes (stage markers)
         from jobs import build_index_job
 
@@ -64,6 +69,7 @@ class TestBuildJob:
         out = capsys.readouterr().out
         manifest = json.loads(out)
         assert manifest["n_docs"] > 0
+        assert manifest["build_tier"] == "spark"
 
 
 class TestSearchJob:

@@ -5,9 +5,12 @@ Parity of the two tiers is certified by the differential batteries
 (test_search_engine / test_fuzz_differential run every case on the
 default tier and again, as ``*_spark_tier``, with the Spark tier forced);
 these tests pin which tier runs and that the local one runs no Spark job.
+The build tiers' parity and cost rule are in test_build_tiers.
 """
 
+import json
 import operator
+import os
 import sys
 import threading
 
@@ -238,3 +241,88 @@ def test_concurrent_requests_on_fresh_handle(spark, spark_index, ref_index):
             assert got == [want] * n_threads
     finally:
         sys.setswitchinterval(interval)
+
+
+class TestLocalBuild:
+    """The local build tier runs no Spark job after the doc store, and
+    its stages resume on the Spark tier and back."""
+
+    def _df(self, spark, corpus):
+        from veloci_spark.synth import WEBTEXT_SCHEMA
+
+        return spark.createDataFrame(
+            [{k: r[k] for k in ("url", "warc_ts", "html", "text", "lang")}
+             for r in corpus], schema=WEBTEXT_SCHEMA).repartition(2)
+
+    def test_only_docs_stage_runs_jobs(self, spark, corpus, tmp_path,
+                                       monkeypatch):
+        from veloci_spark import build as B
+        from veloci_spark.config import webtext_config
+
+        sc = spark.sparkContext
+        mark = B._mark_stage
+
+        def mark_then_switch_group(index_dir, name, *a, **k):
+            mark(index_dir, name, *a, **k)
+            if name == "docs":
+                sc.setJobGroup("build-after-docs", "after the doc store")
+
+        monkeypatch.setattr(B, "_mark_stage", mark_then_switch_group)
+        sc.setJobGroup("build-docs", "doc store")
+        try:
+            m = B.build_index(spark, self._df(spark, corpus),
+                              webtext_config(segment_docs=32),
+                              str(tmp_path / "idx"))
+        finally:
+            sc.setJobGroup("", "")
+        assert m["build_tier"] == "local"
+        assert set(m["stages"]) == {"docs", "tokens", "dict", "postings",
+                                    "phrase"}
+        st = sc.statusTracker()
+        assert list(st.getJobIdsForGroup("build-docs"))
+        assert list(st.getJobIdsForGroup("build-after-docs")) == []
+
+    def test_resume_across_tiers(self, spark, corpus, tmp_path):
+        from tests.conftest import forced_spark_build
+        from veloci_spark.build import build_index
+        from veloci_spark.config import webtext_config
+
+        d = str(tmp_path / "idx")
+        df, cfg = self._df(spark, corpus), webtext_config(segment_docs=32)
+        reqs = [PHRASE, {**EXACT, "facets": [{"field": "lang", "top": 5}]},
+                {"search": {"terms": ["majes"], "path": "text",
+                            "starts_with": True}, "top": 10}]
+
+        def markers():
+            out = {}
+            for s in ("docs", "tokens", "dict", "postings", "phrase"):
+                with open(f"{d}/_stage_{s}.done") as f:
+                    out[s] = json.load(f)["ts"]
+            return out
+
+        def results():
+            idx = S.FulltextIndex(spark, d)
+            return [_result(S.search(idx, r)) for r in reqs]
+
+        def resume(drop, spark_tier):
+            before = markers()
+            for s in drop:
+                os.remove(f"{d}/_stage_{s}.done")
+            if spark_tier:
+                with forced_spark_build():
+                    m = build_index(spark, df, cfg, d)
+            else:
+                m = build_index(spark, df, cfg, d)
+            after = markers()
+            assert m["build_tier"] == ("spark" if spark_tier else "local")
+            # exactly the dropped stages ran again
+            assert {s for s in after if after[s] != before.get(s)} == set(drop)
+            assert results() == want
+
+        assert build_index(spark, df, cfg, d)["build_tier"] == "local"
+        want = results()
+        # the Spark tier resumes on the local tier's tokens and dict ...
+        resume(["postings", "phrase"], spark_tier=True)
+        # ... and the local tier on the Spark tier's (multi-file) ones
+        resume(["tokens", "dict", "postings", "phrase"], spark_tier=True)
+        resume(["postings", "phrase"], spark_tier=False)

@@ -13,7 +13,7 @@ import numpy as np
 import pytest
 
 from veloci_spark import pyref
-from tests.conftest import SEGMENT_DOCS
+from tests.conftest import SEGMENT_DOCS, forced_spark_build
 
 
 @pytest.fixture(scope="module")
@@ -30,13 +30,17 @@ def four_partition_index(spark, corpus, tmp_path_factory):
     parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        build_index(spark, df, webtext_config(segment_docs=SEGMENT_DOCS), d)
+        # the Spark build tier: the local tier numbers terms without
+        # partitions
+        with forced_spark_build():
+            build_index(spark, df, webtext_config(segment_docs=SEGMENT_DOCS), d)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", parts)
     return FulltextIndex(spark, d)
 
 
 def test_ids_are_lexicographic_rank(four_partition_index, ref_index):
+    assert four_partition_index.manifest["build_tier"] == "spark"
     full = four_partition_index.dict_df.toPandas()
     for field, g in full.groupby("field"):
         g = g.sort_values("term", kind="mergesort")

@@ -64,49 +64,85 @@ def test_empty():
     assert tokenize_batch([""]) == [[]]
 
 
-class TestSqlTokenizeParity:
-    """The JVM-codegen tokenize path must emit exactly the Arrow kernels'
-    rows (the engine default is sql; arrow is the reference semantics)."""
+SEP = " "  # the default separator run of the edge inputs below
+
+# edge inputs of the build's tokenize kernel: punctuation and unicode
+# separators, empty/null/single-run texts (no entries, no pairs) and a long
+# repetitive text
+EDGE_DOCS = [
+    (0, "Hello World, test… „quote“ (x)"),
+    (1, "a a a b-b"),
+    (2, ""),
+    (3, None),
+    (4, "singlerun"),
+    (5, "ä Ö ü ß — dash…dots"),
+    (6, "x " * 300),
+]
+# (doc_id, token, best_pos, n_tokens, cnt)
+EDGE_ENTRIES = [
+    (0, "Hello", 0, 10, 1), (0, SEP, 1, 10, 1), (0, "World", 2, 10, 1),
+    (0, ", ", 3, 10, 1), (0, "test", 4, 10, 1), (0, "… ", 5, 10, 1),
+    (0, "„quote", 6, 10, 1), (0, "“ (", 7, 10, 1), (0, "x", 8, 10, 1),
+    (0, ")", 9, 10, 1),
+    (1, "a", 0, 9, 3), (1, SEP, 1, 9, 3), (1, "b", 6, 9, 2),
+    (1, "-", 7, 9, 1),
+    (5, "ä", 0, 11, 1), (5, SEP, 1, 11, 3), (5, "Ö", 2, 11, 1),
+    (5, "ü", 4, 11, 1), (5, "ß", 6, 11, 1), (5, " — ", 7, 11, 1),
+    (5, "dash", 8, 11, 1), (5, "…", 9, 11, 1), (5, "dots", 10, 11, 1),
+    (6, "x", 0, 600, 300), (6, SEP, 1, 600, 300),
+]
+# (doc_id, tok_a, tok_b): distinct adjacent non-separator pairs per text
+EDGE_PAIRS = [
+    (0, "Hello", "World"), (0, "World", "test"), (0, "test", "„quote"),
+    (0, "„quote", "x"),
+    (1, "a", "a"), (1, "a", "b"), (1, "b", "b"),
+    (5, "ä", "Ö"), (5, "Ö", "ü"), (5, "ü", "ß"), (5, "ß", "dash"),
+    (5, "dash", "dots"),
+    (6, "x", "x"),
+]
+
+
+def _rows(pdf, cols):
+    return sorted(map(tuple, pdf[cols].values.tolist()))
+
+
+class TestBuildTokenizeKernel:
+    """Expected rows of the build's tokenize kernel, on the Spark stages
+    (``mapInPandas`` wrappers) and on the local tier's direct call."""
 
     def _docs(self, spark):
-        rows = [
-            (0, "Hello World, test… „quote“ (x)"),
-            (1, "a a a b-b"),
-            (2, ""),            # empty → nothing
-            (3, None),          # null → nothing
-            (4, "singlerun"),   # <2 runs → nothing
-            (5, "ä Ö ü ß — dash…dots"),
-            (6, "x " * 300),    # long repetitive
-        ]
-        return spark.createDataFrame(rows, "doc_id long, text string")
+        return spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
 
-    def test_token_entries_parity(self, spark):
-        from veloci_spark.build import token_entry_rows, token_entry_rows_sql
+    def test_token_entries(self, spark):
+        from veloci_spark.build import _tokenize_texts, token_entry_rows
         from veloci_spark.config import DEFAULT_SEPARATORS
 
-        docs = self._docs(spark)
-        a = token_entry_rows(docs, "text", DEFAULT_SEPARATORS).toPandas()
-        b = token_entry_rows_sql(docs, "text", DEFAULT_SEPARATORS).toPandas()
-        key = ["doc_id", "token"]
-        a = a.sort_values(key).reset_index(drop=True)
-        b = b[a.columns].sort_values(key).reset_index(drop=True)
-        assert a.equals(b), (a, b)
+        cols = ["doc_id", "token", "best_pos", "n_tokens", "cnt"]
+        got = token_entry_rows(self._docs(spark), "text",
+                               DEFAULT_SEPARATORS).toPandas()
+        assert _rows(got, cols) == sorted(EDGE_ENTRIES)
+        ent, _ = _tokenize_texts([d for d, _ in EDGE_DOCS],
+                                 [t for _, t in EDGE_DOCS], DEFAULT_SEPARATORS,
+                                 pairs=False)
+        assert _rows(ent, cols) == sorted(EDGE_ENTRIES)
+        assert set(ent["pos"]) == {0}
 
-    def test_pair_rows_parity(self, spark):
-        from veloci_spark.build import pair_rows, pair_rows_sql
+    def test_pair_rows(self, spark):
+        from veloci_spark.build import _tokenize_texts, pair_rows
         from veloci_spark.config import DEFAULT_SEPARATORS
 
-        docs = self._docs(spark)
-        a = pair_rows(docs, "text", DEFAULT_SEPARATORS).toPandas()
-        b = pair_rows_sql(docs, "text", DEFAULT_SEPARATORS).toPandas()
-        sa = set(map(tuple, a.values.tolist()))
-        sb = set(map(tuple, b.values.tolist()))
-        assert sa == sb
+        cols = ["doc_id", "tok_a", "tok_b"]
+        got = pair_rows(self._docs(spark), "text", DEFAULT_SEPARATORS).toPandas()
+        assert _rows(got, cols) == sorted(EDGE_PAIRS)
+        _, prs = _tokenize_texts([d for d, _ in EDGE_DOCS],
+                                 [t for _, t in EDGE_DOCS], DEFAULT_SEPARATORS,
+                                 entries=False)
+        assert _rows(prs, cols) == sorted(EDGE_PAIRS)
 
-    def test_value_pair_rows_parity(self, spark):
-        # ROW MULTISETS must match — dedup is per VALUE in both engines, so
-        # the same pair in N sibling values yields exactly N rows from each.
-        from veloci_spark.build import value_pair_rows, value_pair_rows_sql
+    def test_value_pair_rows(self, spark):
+        # dedup is per VALUE: the same pair in N sibling values yields N
+        # rows, a repeat within one value yields one
+        from veloci_spark.build import value_pair_rows
         from veloci_spark.config import DEFAULT_SEPARATORS
 
         vals = spark.createDataFrame(
@@ -116,28 +152,28 @@ class TestSqlTokenizeParity:
              (1, 1, "one two"),
              (2, 0, "solo")],
             "doc_id long, pos int, value string")
-        a = value_pair_rows(vals, DEFAULT_SEPARATORS).toPandas()
-        b = value_pair_rows_sql(vals, DEFAULT_SEPARATORS).toPandas()
-        key = ["doc_id", "tok_a", "tok_b"]
-        a = a.sort_values(key).reset_index(drop=True)
-        b = b[a.columns].sort_values(key).reset_index(drop=True)
-        assert a.equals(b), (a, b)
-        # per-value dedup: 3 sibling rows survive, within-value repeat doesn't
-        assert len(a[(a.doc_id == 0) & (a.tok_a == "alpha") & (a.tok_b == "beta")]) == 3
-        assert len(a[(a.doc_id == 1) & (a.tok_a == "one") & (a.tok_b == "two")]) == 2
+        got = value_pair_rows(vals, DEFAULT_SEPARATORS).toPandas()
+        assert _rows(got, ["doc_id", "tok_a", "tok_b"]) == sorted(
+            [(0, "alpha", "beta")] * 3
+            + [(0, "beta", "gamma"), (0, "beta", "delta")]
+            + [(1, "one", "two")] * 2 + [(1, "two", "one")])
 
-    def test_value_entries_parity(self, spark):
-        from veloci_spark.build import (value_token_entry_rows,
-                                        value_token_entry_rows_sql)
+    def test_value_entries(self, spark):
+        from veloci_spark.build import value_token_entry_rows
         from veloci_spark.config import DEFAULT_SEPARATORS
 
         vals = spark.createDataFrame(
             [(0, 0, "alpha beta alpha"), (0, 1, "gamma (delta)"),
              (1, 0, "one"), (1, 1, "two three")],
             "doc_id long, pos int, value string")
-        a = value_token_entry_rows(vals, DEFAULT_SEPARATORS).toPandas()
-        b = value_token_entry_rows_sql(vals, DEFAULT_SEPARATORS).toPandas()
-        key = ["doc_id", "pos", "token"]
-        a = a.sort_values(key).reset_index(drop=True)
-        b = b[a.columns].sort_values(key).reset_index(drop=True)
-        assert a.equals(b)
+        got = value_token_entry_rows(vals, DEFAULT_SEPARATORS).toPandas()
+        # n_tokens and best_pos are per value; pos is the value's position
+        assert _rows(got, ["doc_id", "pos", "token", "best_pos", "n_tokens",
+                           "cnt"]) == sorted([
+            (0, 0, "alpha", 0, 5, 2), (0, 0, SEP, 1, 5, 2),
+            (0, 0, "beta", 2, 5, 1),
+            (0, 1, "gamma", 0, 4, 1), (0, 1, " (", 1, 4, 1),
+            (0, 1, "delta", 2, 4, 1), (0, 1, ")", 3, 4, 1),
+            (1, 1, "two", 0, 3, 1), (1, 1, SEP, 1, 3, 1),
+            (1, 1, "three", 2, 3, 1),
+        ])

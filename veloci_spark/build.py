@@ -1,51 +1,74 @@
-"""Distributed inverted-index build (the write path).
+"""Inverted-index build (the write path).
 
-Reproduces the reference build dataflow (SURVEY.md §2.2, B1–B12) as an
-idiomatic Spark pipeline. Stage map (reference citations are for *semantics*,
-the implementation is Spark-first):
+Reproduces the reference build dataflow (SURVEY.md §2.2, B1–B12). Stage map
+(reference citations are for *semantics*):
 
-1. ``assign_doc_ids`` — deterministic global doc ids = rank of ``url`` in the
-   global sort order (veloci anchor_id ≈ insertion order,
-   /root/reference/json_converter/src/lib.rs:152-168). Implemented
-   shuffle-once: ``repartitionByRange(order_col)`` + per-partition counts →
-   driver-side prefix sum → ``mapInPandas`` local rank + partition offset.
-   No single-node ``Window.orderBy`` — this is the piece that must survive
-   10^12 rows.
-2. tokenization — one ``mapInPandas`` pass emitting flat token rows
-   (grouped-separator semantics, veloci_spark.tokenizer). Flat rows beat an
-   ``array<struct>`` column here: the downstream aggregations all want the
-   exploded form, and Arrow moves flat columns cheaper than nested lists.
-3. term stats (B2) — token counts ∪ storable full-text counts →
-   ``groupBy(term).sum`` (partial aggregation handles stop-word skew
-   map-side).
-4. term-id assignment (B3) — term_id = global lexicographic rank per field
-   (/root/reference/src/create/create_fulltext.rs:68-77). Same
-   range-partition + prefix-sum trick as doc ids; per-field offsets.
-5. index-time scores (B4, veloci_spark.scoring, float32 + u32 truncation),
-   duplicate (term, doc) scores summed (B7,
-   /root/reference/src/create.rs:388-413).
-6. segmenting + packing (B6–B8): ``segment = doc_id // segment_docs`` —
-   postings are **doc-partitioned**, so even a stop-word's posting list is
-   bounded by ``segment_docs`` per storage row: hot-term skew is structurally
-   capped, and query-side evaluation is segment-local (scatter-gather).
-   Within a segment each (field, term) list is sorted by doc_id,
-   delta+VByte-packed (veloci_spark.vbyte), with per-block max scores for
-   block-max WAND pruning. Packing is ``repartitionByRange`` +
-   ``sortWithinPartitions`` + one vectorized ``mapInPandas`` (numpy
-   run-grouping, no per-row Python).
-7. phrase-pair index (B9) — adjacent non-separator token pairs via window
-   ``lag`` over non-sep tokens, grouped to sorted doc-id arrays
-   (/root/reference/src/create.rs:251-263 semantics).
-8. per-task checkpoint metrics (docs/sec, postings/sec, bytes) + stage
+1. ``docs`` — the doc store: deterministic global doc ids = rank of ``url``
+   in the global sort order (veloci anchor_id ≈ insertion order,
+   reference json_converter/src/lib.rs:152-168), or a caller-supplied
+   id column. ``assign_doc_ids`` is shuffle-once and JVM-side:
+   ``repartitionByRange(order_col)`` + per-partition counts → driver-side
+   prefix sum → partition offset + local rank. No single-node
+   ``Window.orderBy`` — this is the piece that must survive 10^12 rows.
+   Always a Spark stage.
+2. ``tokens`` — one tokenize kernel (grouped-separator semantics,
+   veloci_spark.tokenizer) emitting per-(text, token) aggregated entries
+   (first position, in-text count, text length): the per-doc grouping is
+   text-local, so no shuffle of raw occurrences.
+3. ``dict`` — term stats (B2): token counts ∪ storable full-text counts
+   summed per (field, term); term ids (B3) = lexicographic rank per field
+   (reference src/create/create_fulltext.rs:68-77); per-field text
+   stats (BM25 N + avgdl) in ``_field_stats.json``.
+4. ``postings`` — index-time scores (B4, veloci_spark.scoring, float32 +
+   u32 truncation; or BM25), duplicate (term, doc) scores summed (B7,
+   reference src/create.rs:388-413), then segmenting + packing
+   (B6–B8): ``segment = doc_id // segment_docs`` — postings are
+   **doc-partitioned**, so even a stop-word's posting list is bounded by
+   ``segment_docs`` per storage row: hot-term skew is structurally capped,
+   and query-side evaluation is segment-local (scatter-gather). Each
+   (field, term, segment) list is sorted by doc_id, delta+VByte-packed
+   (veloci_spark.vbyte) with segment-relative ids, with per-block max
+   scores for block-max WAND pruning; one row per group, the table sorted
+   by (field, term_id, segment) so row-group statistics prune term lookups.
+5. ``phrase`` — the phrase-pair index (B9): the distinct adjacent
+   non-separator token pairs of each text, emitted by the tokenize kernel
+   (reference src/create.rs:251-263 semantics), packed per (field,
+   pair, segment) into a delta+VByte ``docs_bin`` like the postings.
+6. nested (1:n) fields add ``values`` (per-value relations) and
+   ``tokentexts`` (term → value) stages.
+7. per-task checkpoint metrics (docs/sec, postings/sec, bytes) + stage
    markers → resumable build with lineage (north_rule).
+
+Two tiers run stages 2-5, chosen once per build right after ``docs``:
+
+* **spark** (:func:`_spark_stages`) — each stage is Spark jobs: the kernels
+  run in ``mapInPandas``, term ids come from a range partition + prefix
+  sums, packing from a hash ``repartition`` + ``sortWithinPartitions``.
+* **local** (:func:`_local_stages`) — the driver reads ``docs/`` with
+  pyarrow, calls the same kernels (:func:`_tokenize_texts`, the pack
+  kernel, :func:`_pack_pairs`) on one frame, does the relational glue
+  (union, sums, term-id rank, dictionary join, sort) in pandas, and
+  writes the same files with pyarrow. No Spark job after ``docs``.
+
+The index files do not depend on the tier, so readers, compaction and
+resume cannot tell which one built them (``manifest.json`` records it in
+``build_tier``, with ``build_fallback`` and ``stage_wall_s``). The cost
+rule (:func:`_choose_build_tier`) picks local iff the index dir is on the
+local disk, no field is nested, every indexed column is a string column of
+the doc store, and the indexed columns' chunks in the doc store's parquet
+footers hold at most ``LOCAL_BUILD_MAX_TEXT_BYTES`` uncompressed bytes.
 
 Layout under ``index_dir``::
 
     manifest.json            build config + table stats + stage lineage
-    dict/                    parquet (field, term, term_id, num_occurences)
-    postings/                parquet, partitioned by segment
-    phrase/                  parquet (field, tok_a, tok_b, doc_ids)
+    dict/                    parquet (field, term, num_occurences, doc_freq,
+                             term_id), sorted by (field, term)
+    postings/                parquet (field, term_id, segment, df, max_score,
+                             docs_bin, scores_bin, block_max)
+    phrase/                  parquet (field, tok_a, tok_b, segment, docs_bin)
     docs/                    parquet doc store (doc_id + source columns)
+    _tokens/                 the tokens stage's entries (resume input)
+    _field_stats.json        per-field n_texts + avgdl
     checkpoints/             per-task JSON metrics (lineage)
     _stage_<name>.done       stage completion markers (resume skips them)
 """
@@ -54,13 +77,23 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from itertools import repeat
+from urllib.parse import urlparse
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from veloci_spark.config import IndexConfig
 from veloci_spark.scoring import index_score_u32
@@ -281,218 +314,6 @@ _VALUE_ENTRY_SCHEMA = T.StructType([
     T.StructField("cnt", T.IntegerType()),
 ])
 
-
-def value_token_entry_rows(values: DataFrame, separators: str) -> DataFrame:
-    """Per-(value, token) aggregated entries over a (doc_id, pos, value)
-    relation — the nested-field twin of :func:`token_entry_rows`: n_tokens
-    and best_pos are PER VALUE (the reference scores each 1:n value as its
-    own text, create.rs:225-280), and the (doc_id, pos) pair rides along as
-    the value's text identity."""
-    pattern = _runs_re(separators).pattern
-
-    def entries(iterator):
-        import re as _re
-
-        rx = _re.compile(pattern)
-        for pdf in iterator:
-            ids_out, pos_out, tok_out, bp_out, ntok_out, cnt_out = [], [], [], [], [], []
-            for doc_id, vpos, text in zip(pdf["doc_id"].values, pdf["pos"].values,
-                                          pdf["value"].values):
-                if not text:
-                    continue
-                runs = rx.findall(text)
-                n = len(runs)
-                if n < 2:
-                    continue
-                best: dict[str, int] = {}
-                cnt: dict[str, int] = {}
-                for p, tok in enumerate(runs):
-                    if tok not in best:
-                        best[tok] = p
-                        cnt[tok] = 1
-                    else:
-                        cnt[tok] += 1
-                k = len(best)
-                ids_out.extend([doc_id] * k)
-                pos_out.extend([vpos] * k)
-                tok_out.extend(best.keys())
-                bp_out.extend(best.values())
-                ntok_out.extend([n] * k)
-                cnt_out.extend(cnt.values())
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids_out, dtype="int64"),
-                "pos": pd.Series(pos_out, dtype="int64"),
-                "token": pd.Series(tok_out, dtype="object"),
-                "best_pos": pd.Series(bp_out, dtype="int32"),
-                "n_tokens": pd.Series(ntok_out, dtype="int32"),
-                "cnt": pd.Series(cnt_out, dtype="int32"),
-            })
-
-    return values.select("doc_id", "pos", "value").mapInPandas(
-        entries, schema=_VALUE_ENTRY_SCHEMA)
-
-
-def token_entry_rows(docs: DataFrame, field: str, separators: str) -> DataFrame:
-    """Per-(doc, token) aggregated token entries in ONE pass:
-    (doc_id, token, best_pos, n_tokens, cnt).
-
-    The per-doc grouping (best/first position per token, in-doc occurrence
-    count) is doc-local, so it runs inside the tokenize kernel instead of a
-    cluster-wide ``groupBy(doc_id, token)`` — at 10^12 docs that removes a
-    full shuffle of every token occurrence. ``cnt`` feeds the corpus-wide
-    ``num_occurences`` (sum), ``best_pos`` the score formula
-    (/root/reference/src/create/calculate_score.rs:13-29 keeps only the
-    first position per token).
-    """
-    pattern = _runs_re(separators).pattern
-
-    def entries(iterator):
-        import re as _re
-
-        rx = _re.compile(pattern)
-        for pdf in iterator:
-            ids_out, tok_out, pos_out, ntok_out, cnt_out = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"].values, pdf[field].values):
-                if not text:
-                    continue
-                runs = rx.findall(text)
-                n = len(runs)
-                if n < 2:
-                    continue
-                best: dict[str, int] = {}
-                cnt: dict[str, int] = {}
-                for pos, tok in enumerate(runs):
-                    if tok not in best:
-                        best[tok] = pos
-                        cnt[tok] = 1
-                    else:
-                        cnt[tok] += 1
-                k = len(best)
-                ids_out.extend([doc_id] * k)
-                tok_out.extend(best.keys())
-                pos_out.extend(best.values())
-                ntok_out.extend([n] * k)
-                cnt_out.extend(cnt.values())
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids_out, dtype="int64"),
-                "token": pd.Series(tok_out, dtype="object"),
-                "best_pos": pd.Series(pos_out, dtype="int32"),
-                "n_tokens": pd.Series(ntok_out, dtype="int32"),
-                "cnt": pd.Series(cnt_out, dtype="int32"),
-            })
-
-    return docs.select("doc_id", F.col(field).cast("string").alias(field)).mapInPandas(entries, schema=_ENTRY_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# JVM (whole-stage-codegen) tokenize path — no Python workers, no Arrow IPC.
-# Produces EXACTLY the same rows as the Arrow kernels above; parity is
-# enforced by tests (the Arrow kernels remain available via
-# IndexConfig.tokenizer_engine="arrow" and stay the reference semantics).
-
-
-def _runs_pattern_sql(separators: str) -> str:
-    """Java-regex token-runs pattern with \\x{..} hex classes (portable with
-    the Python tokenizer's pattern and the DuckDB oracle)."""
-    cls = "".join(f"\\x{{{ord(c):x}}}" for c in separators)
-    return f"[{cls}]+|[^{cls}]+"
-
-
-def _runs_col(text_col, separators: str):
-    return F.regexp_extract_all(text_col, F.lit(_runs_pattern_sql(separators)), F.lit(0))
-
-
-def _token_entries_arr(r):
-    """array<struct<token,best_pos,cnt>> of distinct tokens with first
-    position + in-text count — the per-text aggregation as pure expressions
-    (O(distinct × runs) per text, all inside codegen)."""
-    return F.transform(
-        F.array_distinct(r),
-        lambda t: F.struct(
-            t.alias("token"),
-            (F.array_position(r, t) - 1).cast("int").alias("best_pos"),
-            F.size(F.filter(r, lambda x: x == t)).cast("int").alias("cnt"),
-        ),
-    )
-
-
-def token_entry_rows_sql(docs: DataFrame, field: str, separators: str) -> DataFrame:
-    """JVM twin of :func:`token_entry_rows` — same output, zero Python."""
-    r = _runs_col(F.col(field), separators)
-    base = (
-        docs.select("doc_id", r.alias("r"))
-        .where(F.size("r") >= 2)
-        .select("doc_id", F.size("r").alias("n_tokens"),
-                F.explode(_token_entries_arr(F.col("r"))).alias("e"))
-    )
-    return base.select(
-        "doc_id", F.col("e.token").alias("token"),
-        F.col("e.best_pos").alias("best_pos"), "n_tokens",
-        F.col("e.cnt").alias("cnt"))
-
-
-def value_token_entry_rows_sql(values: DataFrame, separators: str) -> DataFrame:
-    """JVM twin of :func:`value_token_entry_rows` (nested 1:n values).
-
-    ``pos`` is cast to long to match the Arrow kernel's schema — the packed
-    multi-level value identity needs 64 bits (nested.py pack_pos)."""
-    r = _runs_col(F.col("value"), separators)
-    base = (
-        values.select("doc_id", F.col("pos").cast("long").alias("pos"),
-                      r.alias("r"))
-        .where(F.size("r") >= 2)
-        .select("doc_id", "pos", F.size("r").alias("n_tokens"),
-                F.explode(_token_entries_arr(F.col("r"))).alias("e"))
-    )
-    return base.select(
-        "doc_id", "pos", F.col("e.token").alias("token"),
-        F.col("e.best_pos").alias("best_pos"), "n_tokens",
-        F.col("e.cnt").alias("cnt"))
-
-
-def _pairs_arr(r, separators: str):
-    """array<struct<tok_a,tok_b>> of distinct adjacent non-separator pairs."""
-    seps = list(set(separators))
-    toks = F.filter(r, lambda x: ~F.substring(x, 1, 1).isin(seps))
-    n = F.size(toks)
-    idx = F.when(n >= 2, F.sequence(F.lit(1), n - 1)) \
-        .otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(F.transform(
-        idx, lambda i: F.struct(
-            F.element_at(toks, i).alias("tok_a"),
-            F.element_at(toks, i + 1).alias("tok_b"))))
-
-
-def pair_rows_sql(docs: DataFrame, field: str, separators: str) -> DataFrame:
-    """JVM twin of :func:`pair_rows`."""
-    r = _runs_col(F.col(field), separators)
-    return (
-        docs.select("doc_id", r.alias("r"))
-        .where(F.size("r") >= 2)
-        .select("doc_id", F.explode(_pairs_arr(F.col("r"), separators)).alias("p"))
-        .select("doc_id", F.col("p.tok_a").alias("tok_a"),
-                F.col("p.tok_b").alias("tok_b"))
-    )
-
-
-def value_pair_rows_sql(values: DataFrame, separators: str) -> DataFrame:
-    """JVM twin of :func:`value_pair_rows` (pairs within each value).
-
-    Dedup is per VALUE (``_pairs_arr`` is array_distinct), NOT per doc — the
-    same pair in two sibling values yields two rows, identical to the Arrow
-    kernel (row-multiset parity-tested). No doc-level ``.distinct()``: it
-    would cost a shuffle here, and the query side treats phrase doc-id lists
-    as sets (np.isin), so cross-sibling duplicates are harmless."""
-    r = _runs_col(F.col("value"), separators)
-    return (
-        values.select("doc_id", r.alias("r"))
-        .where(F.size("r") >= 2)
-        .select("doc_id", F.explode(_pairs_arr(F.col("r"), separators)).alias("p"))
-        .select("doc_id", F.col("p.tok_a").alias("tok_a"),
-                F.col("p.tok_b").alias("tok_b"))
-    )
-
-
 _PAIR_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("tok_a", T.StringType()),
@@ -500,87 +321,135 @@ _PAIR_SCHEMA = T.StructType([
 ])
 
 
+def _tokenize_texts(doc_ids, texts, separators: str, vpos=None,
+                    entries: bool = True, pairs: bool = True):
+    """The per-text tokenize loop of both build tiers: one ``findall`` per
+    text feeds its term entries and its phrase pairs.
+
+    Entries are per-(text, token) aggregates — doc-local grouping inside the
+    kernel instead of a cluster-wide ``groupBy(doc_id, token)`` shuffle of
+    every occurrence: ``best_pos`` is the token's first position (the score
+    formula keeps only that,
+    reference src/create/calculate_score.rs:13-29), ``cnt`` its
+    in-text count (summed into ``num_occurences``), ``n_tokens`` the text's
+    run count. ``pos`` is the text's value position (``vpos``; 0 for a flat
+    field's single text). Pairs are the distinct adjacent non-separator
+    token pairs of each text (reference src/create.rs:251-263), so a
+    pair repeated in two sibling values of one doc yields two rows. Texts
+    that are a single run emit nothing — the reference gates the token loop
+    on ``has_tokens`` (reference src/create.rs:225-280).
+
+    Returns ``(entries frame | None, pairs frame | None)``."""
+    findall = _runs_re(separators).findall
+    seps = _sep_set(separators)
+    e_ids, e_pos, e_tok, e_best, e_ntok, e_cnt = [], [], [], [], [], []
+    p_ids, p_a, p_b = [], [], []
+    for doc_id, vp, text in zip(doc_ids, repeat(0) if vpos is None else vpos,
+                                texts):
+        if not text:
+            continue
+        runs = findall(text)
+        n = len(runs)
+        if n < 2:
+            continue
+        if entries:
+            best: dict[str, int] = {}
+            cnt: dict[str, int] = {}
+            for p, tok in enumerate(runs):
+                if tok not in best:
+                    best[tok] = p
+                    cnt[tok] = 1
+                else:
+                    cnt[tok] += 1
+            k = len(best)
+            e_ids.extend([doc_id] * k)
+            e_pos.extend([vp] * k)
+            e_tok.extend(best.keys())
+            e_best.extend(best.values())
+            e_ntok.extend([n] * k)
+            e_cnt.extend(cnt.values())
+        if pairs:
+            seen = set()
+            prev = None
+            for tok in runs:
+                if tok[0] in seps:
+                    continue
+                if prev is not None and (prev, tok) not in seen:
+                    seen.add((prev, tok))
+                    p_ids.append(doc_id)
+                    p_a.append(prev)
+                    p_b.append(tok)
+                prev = tok
+    ent = pd.DataFrame({
+        "doc_id": pd.Series(e_ids, dtype="int64"),
+        "pos": pd.Series(e_pos, dtype="int64"),
+        "token": pd.Series(e_tok, dtype="object"),
+        "best_pos": pd.Series(e_best, dtype="int32"),
+        "n_tokens": pd.Series(e_ntok, dtype="int32"),
+        "cnt": pd.Series(e_cnt, dtype="int32"),
+    }) if entries else None
+    prs = pd.DataFrame({
+        "doc_id": pd.Series(p_ids, dtype="int64"),
+        "tok_a": pd.Series(p_a, dtype="object"),
+        "tok_b": pd.Series(p_b, dtype="object"),
+    }) if pairs else None
+    return ent, prs
+
+
+def _text_kernel(text_col: str, separators: str, emit: str):
+    """``mapInPandas`` wrapper of :func:`_tokenize_texts`; ``emit`` is
+    ``"entries"`` (flat field), ``"value_entries"`` (nested, with ``pos``)
+    or ``"pairs"``."""
+    nested = emit == "value_entries"
+
+    def kernel(iterator):
+        for pdf in iterator:
+            ent, prs = _tokenize_texts(
+                pdf["doc_id"].values, pdf[text_col].values, separators,
+                vpos=pdf["pos"].values if nested else None,
+                entries=emit != "pairs", pairs=emit == "pairs")
+            yield prs if prs is not None else (
+                ent if nested else ent.drop(columns="pos"))
+
+    return kernel
+
+
+def token_entry_rows(docs: DataFrame, field: str, separators: str) -> DataFrame:
+    """Per-(doc, token) aggregated token entries in ONE pass:
+    (doc_id, token, best_pos, n_tokens, cnt)."""
+    return docs.select("doc_id", F.col(field).cast("string").alias(field)) \
+        .mapInPandas(_text_kernel(field, separators, "entries"),
+                     schema=_ENTRY_SCHEMA)
+
+
+def value_token_entry_rows(values: DataFrame, separators: str) -> DataFrame:
+    """Per-(value, token) aggregated entries over a (doc_id, pos, value)
+    relation — the nested-field twin of :func:`token_entry_rows`: n_tokens
+    and best_pos are PER VALUE (the reference scores each 1:n value as its
+    own text, create.rs:225-280), and the (doc_id, pos) pair rides along as
+    the value's text identity."""
+    return values.select("doc_id", "pos", "value").mapInPandas(
+        _text_kernel("value", separators, "value_entries"),
+        schema=_VALUE_ENTRY_SCHEMA)
+
+
 def pair_rows(docs: DataFrame, field: str, separators: str) -> DataFrame:
     """Distinct adjacent non-separator token pairs per doc, emitted directly
-    from the tokenize kernel (doc-local — replaces a window ``lag`` shuffle
-    over every token occurrence; semantics of
-    /root/reference/src/create.rs:251-263)."""
-    pattern = _runs_re(separators).pattern
-
-    def pairs(iterator):
-        import re as _re
-
-        rx = _re.compile(pattern)
-        seps = _sep_set(separators)
-        for pdf in iterator:
-            ids_out, a_out, b_out = [], [], []
-            for doc_id, text in zip(pdf["doc_id"].values, pdf[field].values):
-                if not text:
-                    continue
-                runs = rx.findall(text)
-                if len(runs) < 2:
-                    continue
-                seen = set()
-                prev = None
-                for tok in runs:
-                    if tok[0] in seps:
-                        continue
-                    if prev is not None and (prev, tok) not in seen:
-                        seen.add((prev, tok))
-                        ids_out.append(doc_id)
-                        a_out.append(prev)
-                        b_out.append(tok)
-                    prev = tok
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids_out, dtype="int64"),
-                "tok_a": pd.Series(a_out, dtype="object"),
-                "tok_b": pd.Series(b_out, dtype="object"),
-            })
-
-    return docs.select("doc_id", F.col(field).cast("string").alias(field)).mapInPandas(pairs, schema=_PAIR_SCHEMA)
+    from the tokenize kernel (doc-local — no window ``lag`` shuffle over
+    every token occurrence)."""
+    return docs.select("doc_id", F.col(field).cast("string").alias(field)) \
+        .mapInPandas(_text_kernel(field, separators, "pairs"),
+                     schema=_PAIR_SCHEMA)
 
 
 def value_pair_rows(values: DataFrame, separators: str) -> DataFrame:
     """Adjacent-pair rows over a (doc_id, pos, value) relation: pairs are
     formed WITHIN each value (never across sibling values — the reference's
-    token stream resets per text) and deduped per VALUE — the same pair in
-    two sibling values yields two rows, the identical row multiset to
-    :func:`value_pair_rows_sql` under ANY input partitioning
-    (parity-tested). Query-side phrase matching is set-semantics (np.isin),
-    so cross-sibling duplicates never change results."""
-    pattern = _runs_re(separators).pattern
-
-    def pairs(iterator):
-        import re as _re
-
-        rx = _re.compile(pattern)
-        seps = _sep_set(separators)
-        for pdf in iterator:
-            ids_out, a_out, b_out = [], [], []
-            for doc_id, text in zip(pdf["doc_id"].values, pdf["value"].values):
-                if not text:
-                    continue
-                runs = rx.findall(text)
-                if len(runs) < 2:
-                    continue
-                seen = set()
-                prev = None
-                for tok in runs:
-                    if tok[0] in seps:
-                        continue
-                    if prev is not None and (prev, tok) not in seen:
-                        seen.add((prev, tok))
-                        ids_out.append(doc_id)
-                        a_out.append(prev)
-                        b_out.append(tok)
-                    prev = tok
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids_out, dtype="int64"),
-                "tok_a": pd.Series(a_out, dtype="object"),
-                "tok_b": pd.Series(b_out, dtype="object"),
-            })
-
-    return values.select("doc_id", "value").mapInPandas(pairs, schema=_PAIR_SCHEMA)
+    token stream resets per text) and deduped per VALUE. Query-side phrase
+    matching is set-semantics (np.isin), so cross-sibling duplicates never
+    change results, and no doc-level ``.distinct()`` shuffle is paid."""
+    return values.select("doc_id", "value").mapInPandas(
+        _text_kernel("value", separators, "pairs"), schema=_PAIR_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -675,124 +544,136 @@ def _bm25_u32(tf, df, dl, n_texts: int, avgdl: float) -> "np.ndarray":
     return np.maximum(np.floor(s + 0.5), 1.0).astype(np.uint64)
 
 
+def _pack_postings(pdf: pd.DataFrame, block_docs: int, segment_docs: int,
+                   scoring: str, field_stats: dict, field_names: list,
+                   nested_lut: np.ndarray) -> pd.DataFrame:
+    """Score and pack one batch of entry rows sorted by (fidx, term_id,
+    segment, doc_id, pos) into one posting row per (field, term_id,
+    segment) group of the batch. ``nested_lut[fidx]`` marks 1:n fields."""
+    # group consecutive runs vectorized
+    fidx = pdf["fidx"].values
+    tids = pdf["term_id"].values
+    segs = pdf["segment"].values
+    docs = pdf["doc_id"].values.astype(np.int64)
+    poss = pdf["pos"].values.astype(np.int64)
+    # index-time scores computed HERE (one Arrow pass instead of a
+    # separate pandas_udf round trip over the full entry stream)
+    if scoring == "bm25":
+        scores = np.empty(len(pdf), dtype=np.uint64)
+        for fi in pd.unique(fidx):
+            m = fidx == fi
+            st = field_stats.get(field_names[int(fi)],
+                                 {"n_texts": 1, "avgdl": 1.0})
+            scores[m] = _bm25_u32(
+                pdf["cnt"].values[m], pdf["doc_freq"].values[m],
+                pdf["n_tokens"].values[m],
+                st["n_texts"], st["avgdl"])
+    else:
+        scores = index_score_u32(
+            pdf["best_pos"].values, pdf["num_occurences"].values,
+            pdf["n_tokens"].values, pdf["is_exact"].values,
+        ).astype(np.uint64)
+    n = len(pdf)
+    change = np.empty(n, dtype=bool)
+    change[0] = True
+    change[1:] = (tids[1:] != tids[:-1]) | (segs[1:] != segs[:-1]) | (fidx[1:] != fidx[:-1])
+    # ---- batch-wide dedup/merge — no per-group Python loop (one
+    # iteration per (term, segment) group paid ~40 µs interpreter
+    # overhead × millions of groups per build; same pathology the
+    # r5 phrase-pack fix removed). Two reduceat stages over the
+    # WHOLE batch:
+    #   value level (group, doc, pos): duplicate entries
+    #   (exact-text + token of the same string) SUM
+    #   (create.rs:388-413);
+    #   doc level (group, doc): nested (1:n) fields take the MAX
+    #   over the doc's values — the reference token→anchor
+    #   max-dedup (search_field.rs:449-463) precomputed at build
+    #   time (scores are static) — while flat fields keep the SUM
+    #   (per-doc sum of per-(doc,pos) sums ≡ per-doc sum).
+    vmask = change.copy()
+    vmask[1:] |= (docs[1:] != docs[:-1]) | (poss[1:] != poss[:-1])
+    iv = np.flatnonzero(vmask)
+    sv = np.add.reduceat(scores, iv)
+    dv, change_v = docs[iv], change[iv]
+    dmask = change_v.copy()
+    dmask[1:] |= dv[1:] != dv[:-1]
+    id_d = np.flatnonzero(dmask)
+    sum_d = np.add.reduceat(sv, id_d)
+    max_d = np.maximum.reduceat(sv, id_d)
+    fidx_d = fidx[iv][id_d].astype(np.int64)
+    score_d = np.where(nested_lut[fidx_d], max_d, sum_d)
+    docs_d = dv[id_d]
+    segs_d = segs[iv][id_d].astype(np.int64)
+    starts = np.flatnonzero(change_v[id_d])
+    ends = np.append(starts[1:], len(id_d))
+    # doc ids are stored SEGMENT-RELATIVE (doc_id - segment*segment_docs):
+    # bounded by segment_docs, so the 5-byte LEB128 cap (35 bits)
+    # never truncates even at 10^12 absolute doc ids. The query
+    # kernel adds the segment base back after decode. ONE batched
+    # delta+VByte encode per column, sliced per group —
+    # byte-identical to the per-group codec (property-tested).
+    rel = docs_d.astype(np.uint64) - (segs_d * segment_docs).astype(np.uint64)
+    docs_bins = pack_ids_grouped(rel, starts, ends)
+    scores_bins = vbyte_encode_grouped(score_d, starts, ends)
+    df = (ends - starts).astype(np.int64)
+    max_score = np.maximum.reduceat(score_d, starts)
+    # block-max: the common df ≤ block_docs group is one block equal
+    # to max_score; longer groups take the exact per-block path
+    ms32 = max_score.astype("<u4")
+    block_max = [None] * len(starts)
+    for g in range(len(starts)):
+        if df[g] <= block_docs:
+            block_max[g] = ms32[g].tobytes()
+        else:
+            sc = score_d[starts[g]:ends[g]]
+            nb = (len(sc) + block_docs - 1) // block_docs
+            bmax = np.empty(nb, dtype=np.uint32)
+            for b in range(nb):
+                bmax[b] = sc[b * block_docs:(b + 1) * block_docs].max()
+            block_max[g] = bmax.tobytes()
+    return pd.DataFrame({
+        "field": np.asarray(field_names, dtype=object)[fidx_d[starts]],
+        "term_id": pd.Series(tids[iv][id_d][starts], dtype="int64"),
+        "segment": pd.Series(segs_d[starts], dtype="int32"),
+        "df": pd.Series(df, dtype="int32"),
+        "max_score": pd.Series(max_score.astype(np.int64), dtype="int64"),
+        "docs_bin": docs_bins,
+        "scores_bin": scores_bins,
+        "block_max": block_max,
+    })
+
+
 def _pack_partition_factory(index_dir: str, block_docs: int, segment_docs: int,
                             nested_fields: frozenset = frozenset(),
                             scoring: str = "veloci",
                             field_stats: dict | None = None,
                             field_names: list | None = None):
-    nested_idx = (frozenset(i for i, n in enumerate(field_names or [])
-                            if n in nested_fields))
+    """The pack stage over an iterator of sorted entry batches, with a
+    per-task checkpoint. ``pack(iterator)`` is the ``mapInPandas`` function
+    (task id = the Spark partition); the local build tier calls
+    ``pack(iterator, task_id)`` in the driver, where there is no task."""
+    field_names = list(field_names or [])
+    nested_lut = np.zeros(max(len(field_names), 1), dtype=bool)
+    for i, n in enumerate(field_names):
+        nested_lut[i] = n in nested_fields
 
-    def pack(iterator):
-        from pyspark import TaskContext
+    def pack(iterator, task_id: int | None = None):
+        if task_id is None:
+            from pyspark import TaskContext
 
-        task_id = TaskContext.get().partitionId()
+            task_id = TaskContext.get().partitionId()
         t0 = time.time()
         n_postings = 0
         n_bytes = 0
         for pdf in iterator:
             if pdf.empty:
                 continue
-            # rows arrive sorted by (field, term_id, segment, doc_id, pos);
-            # group consecutive runs vectorized
-            fidx = pdf["fidx"].values
-            tids = pdf["term_id"].values
-            segs = pdf["segment"].values
-            docs = pdf["doc_id"].values.astype(np.int64)
-            poss = pdf["pos"].values.astype(np.int64)
-            # index-time scores computed HERE (one Arrow pass instead of a
-            # separate pandas_udf round trip over the full entry stream)
-            if scoring == "bm25":
-                stats = field_stats or {}
-                names = field_names or []
-                scores = np.empty(len(pdf), dtype=np.uint64)
-                for fi in pd.unique(fidx):
-                    m = fidx == fi
-                    st = stats.get(names[int(fi)], {"n_texts": 1, "avgdl": 1.0})
-                    scores[m] = _bm25_u32(
-                        pdf["cnt"].values[m], pdf["doc_freq"].values[m],
-                        pdf["n_tokens"].values[m],
-                        st["n_texts"], st["avgdl"])
-            else:
-                scores = index_score_u32(
-                    pdf["best_pos"].values, pdf["num_occurences"].values,
-                    pdf["n_tokens"].values, pdf["is_exact"].values,
-                ).astype(np.uint64)
-            n = len(pdf)
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = (tids[1:] != tids[:-1]) | (segs[1:] != segs[:-1]) | (fidx[1:] != fidx[:-1])
-            # ---- batch-wide dedup/merge — no per-group Python loop (one
-            # iteration per (term, segment) group paid ~40 µs interpreter
-            # overhead × millions of groups per build; same pathology the
-            # r5 phrase-pack fix removed). Two reduceat stages over the
-            # WHOLE batch:
-            #   value level (group, doc, pos): duplicate entries
-            #   (exact-text + token of the same string) SUM
-            #   (create.rs:388-413);
-            #   doc level (group, doc): nested (1:n) fields take the MAX
-            #   over the doc's values — the reference token→anchor
-            #   max-dedup (search_field.rs:449-463) precomputed at build
-            #   time (scores are static) — while flat fields keep the SUM
-            #   (per-doc sum of per-(doc,pos) sums ≡ per-doc sum).
-            vmask = change.copy()
-            vmask[1:] |= (docs[1:] != docs[:-1]) | (poss[1:] != poss[:-1])
-            iv = np.flatnonzero(vmask)
-            sv = np.add.reduceat(scores, iv)
-            dv, change_v = docs[iv], change[iv]
-            dmask = change_v.copy()
-            dmask[1:] |= dv[1:] != dv[:-1]
-            id_d = np.flatnonzero(dmask)
-            sum_d = np.add.reduceat(sv, id_d)
-            max_d = np.maximum.reduceat(sv, id_d)
-            fidx_d = fidx[iv][id_d].astype(np.int64)
-            nested_lut = np.zeros(max(len(field_names or []), 1), dtype=bool)
-            for i in nested_idx:
-                nested_lut[i] = True
-            score_d = np.where(nested_lut[fidx_d], max_d, sum_d)
-            docs_d = dv[id_d]
-            segs_d = segs[iv][id_d].astype(np.int64)
-            starts = np.flatnonzero(change_v[id_d])
-            ends = np.append(starts[1:], len(id_d))
-            # doc ids are stored SEGMENT-RELATIVE (doc_id - segment*segment_docs):
-            # bounded by segment_docs, so the 5-byte LEB128 cap (35 bits)
-            # never truncates even at 10^12 absolute doc ids. The query
-            # kernel adds the segment base back after decode. ONE batched
-            # delta+VByte encode per column, sliced per group —
-            # byte-identical to the per-group codec (property-tested).
-            rel = docs_d.astype(np.uint64) - (segs_d * segment_docs).astype(np.uint64)
-            docs_bins = pack_ids_grouped(rel, starts, ends)
-            scores_bins = vbyte_encode_grouped(score_d, starts, ends)
-            df = (ends - starts).astype(np.int64)
-            max_score = np.maximum.reduceat(score_d, starts)
-            # block-max: the common df ≤ block_docs group is one block equal
-            # to max_score; longer groups take the exact per-block path
-            ms32 = max_score.astype("<u4")
-            block_max = [None] * len(starts)
-            for g in range(len(starts)):
-                if df[g] <= block_docs:
-                    block_max[g] = ms32[g].tobytes()
-                else:
-                    sc = score_d[starts[g]:ends[g]]
-                    nb = (len(sc) + block_docs - 1) // block_docs
-                    bmax = np.empty(nb, dtype=np.uint32)
-                    for b in range(nb):
-                        bmax[b] = sc[b * block_docs:(b + 1) * block_docs].max()
-                    block_max[g] = bmax.tobytes()
-            names_arr = np.asarray(field_names or [], dtype=object)
-            n_postings += int(df.sum())
-            n_bytes += (sum(len(b) for b in docs_bins)
-                        + sum(len(b) for b in scores_bins))
-            yield pd.DataFrame({
-                "field": names_arr[fidx_d[starts]],
-                "term_id": pd.Series(tids[iv][id_d][starts], dtype="int64"),
-                "segment": pd.Series(segs_d[starts], dtype="int32"),
-                "df": pd.Series(df, dtype="int32"),
-                "max_score": pd.Series(max_score.astype(np.int64), dtype="int64"),
-                "docs_bin": docs_bins,
-                "scores_bin": scores_bins,
-                "block_max": block_max,
-            })
+            out = _pack_postings(pdf, block_docs, segment_docs, scoring,
+                                 field_stats or {}, field_names, nested_lut)
+            n_postings += int(out["df"].sum())
+            n_bytes += (sum(map(len, out["docs_bin"]))
+                        + sum(map(len, out["scores_bin"])))
+            yield out
         dt = max(time.time() - t0, 1e-9)
         _write_checkpoint(index_dir, "pack", task_id, {
             "postings": int(n_postings),
@@ -804,42 +685,57 @@ def _pack_partition_factory(index_dir: str, block_docs: int, segment_docs: int,
     return pack
 
 
+def _pack_pairs(pdf: pd.DataFrame, segment_docs: int) -> pd.DataFrame:
+    """Pack one batch of pair rows sorted by (field, tok_a, tok_b, segment,
+    doc_id) into one row per (field, pair, segment) group of the batch.
+
+    Fully vectorized: adjacent-dup drop (a group's duplicates are adjacent
+    — equivalent to the per-group np.unique) + ONE batched delta+VByte
+    encode sliced per group. A per-group pack_ids loop here paid one Python
+    call per (pair, segment) group — tens of millions per 1M-doc build —
+    and dominated the whole build (r5 measurement: phrase 1097 s of
+    1408 s at 2 cores)."""
+    ids = pdf["doc_id"].values.astype(np.int64)
+    seg = pdf["segment"].values.astype(np.int64)
+    keys = (pdf["field"].values, pdf["tok_a"].values, pdf["tok_b"].values, seg)
+    change = np.zeros(len(ids), dtype=bool)
+    change[0] = True
+    for k in keys:
+        change[1:] |= k[1:] != k[:-1]
+    keep = change.copy()
+    keep[1:] |= ids[1:] != ids[:-1]
+    ids_u, seg_u, change_u = ids[keep], seg[keep], change[keep]
+    starts = np.flatnonzero(change_u)
+    ends = np.append(starts[1:], len(ids_u))
+    return pd.DataFrame({
+        "field": pdf["field"].values[keep][starts],
+        "tok_a": pdf["tok_a"].values[keep][starts],
+        "tok_b": pdf["tok_b"].values[keep][starts],
+        "segment": seg_u[starts].astype(np.int32),
+        "docs_bin": pack_ids_grouped(ids_u - seg_u * segment_docs, starts, ends),
+    })
+
+
+_PHRASE_SCHEMA = T.StructType([
+    T.StructField("field", T.StringType()),
+    T.StructField("tok_a", T.StringType()),
+    T.StructField("tok_b", T.StringType()),
+    T.StructField("segment", T.IntegerType()),
+    T.StructField("docs_bin", T.BinaryType()),
+])
+
+
 # ---------------------------------------------------------------------------
-# the build driver
+# the Spark build tier
 
 
-def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
-                index_dir: str, num_partitions: int | None = None,
-                input_fingerprint: str = "",
-                token_values: dict | None = None) -> dict:
-    """Build the full index; returns the manifest dict. Resumable: completed
-    stages (marker files) are skipped on re-run — but ONLY when their marker
-    carries the current layout/config/input fingerprint. A fingerprint
-    mismatch (new code version, changed config, changed input) invalidates
-    every stale stage and it rebuilds.
-
-    ``token_values``: optional {field: [(text, value), ...]} side input —
-    the reference's token_values boost index (loaded alongside the corpus,
-    tests.rs:39-41; search_field.rs suggest ``token_value`` boost). Stored
-    as parquet (field, text, value); suggest-time boosting joins matched
-    candidates against it, so the mapping may be dictionary-sized.
-    """
-    os.makedirs(index_dir, exist_ok=True)
-    t_start = time.time()
-    fp = index_fingerprint(config, input_fingerprint)
-    if num_partitions is None:
-        num_partitions = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-
-    # ---- stage: docs (doc ids + doc store) -------------------------------
+def _spark_stages(spark: SparkSession, index_dir: str, fp: str,
+                  config: IndexConfig, num_partitions: int) -> tuple[int, int]:
+    """The Spark build tier: values, tokens, dict, postings, tokentexts and
+    phrase stages as Spark jobs over the doc store. Returns (n_docs,
+    n_terms)."""
     docs_path = os.path.join(index_dir, "docs")
-    if not _stage_done(index_dir, "docs", fp):
-        t0 = time.time()
-        if config.doc_id_col and config.doc_id_col in df.columns:
-            df.withColumn("doc_id", F.col(config.doc_id_col).cast("long")) \
-                .write.mode("overwrite").parquet(docs_path)
-        else:
-            assign_doc_ids(df, config.order_col, num_partitions, out_path=docs_path)
-        _mark_stage(index_dir, "docs", fp, wall_sec=time.time() - t0)
+    segment_docs = config.segment_docs
     docs = spark.read.parquet(docs_path)
     n_docs = docs.count()
 
@@ -871,16 +767,13 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
     tokenized_fields = [fc for fc in config.fields if fc.tokenize]
     if not _stage_done(index_dir, "tokens", fp):
         t0 = time.time()
-        use_sql = config.tokenizer_engine == "sql"
         parts = []
         for fc in tokenized_fields:
             if fc.is_nested:
-                tok_fn = value_token_entry_rows_sql if use_sql else value_token_entry_rows
-                parts.append(tok_fn(field_values(fc), fc.separators)
+                parts.append(value_token_entry_rows(field_values(fc), fc.separators)
                              .withColumn("field", F.lit(fc.name)))
             else:
-                tok_fn = token_entry_rows_sql if use_sql else token_entry_rows
-                parts.append(tok_fn(docs, fc.name, fc.separators)
+                parts.append(token_entry_rows(docs, fc.name, fc.separators)
                              .withColumn("pos", F.lit(0).cast("long"))
                              .withColumn("field", F.lit(fc.name)))
         if parts:
@@ -978,7 +871,6 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
 
     # ---- stage: postings -------------------------------------------------
     postings_path = os.path.join(index_dir, "postings")
-    segment_docs = config.segment_docs
     if not _stage_done(index_dir, "postings", fp):
         t0 = time.time()
         # token entries are already per-(value, token) aggregated in the
@@ -1093,20 +985,14 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
     if not _stage_done(index_dir, "phrase", fp):
         t0 = time.time()
         if phrase_fields:
-            use_sql = config.tokenizer_engine == "sql"
             parts = []
             for fc in config.fields:
                 if fc.name in phrase_fields:
-                    if fc.is_nested:
-                        pair_fn = value_pair_rows_sql if use_sql else value_pair_rows
-                        parts.append(pair_fn(field_values(fc), fc.separators)
-                                     .withColumn("field", F.lit(fc.name)))
-                    else:
-                        pair_fn = (
-                            (lambda d, f, s: pair_rows_sql(d, f, s)) if use_sql
-                            else pair_rows)
-                        parts.append(pair_fn(docs, fc.name, fc.separators)
-                                     .withColumn("field", F.lit(fc.name)))
+                    pair_fn = value_pair_rows if fc.is_nested else pair_rows
+                    args = ((field_values(fc),) if fc.is_nested
+                            else (docs, fc.name))
+                    parts.append(pair_fn(*args, fc.separators)
+                                 .withColumn("field", F.lit(fc.name)))
             pairs_raw = parts[0]
             for p in parts[1:]:
                 pairs_raw = pairs_raw.unionByName(p)
@@ -1119,59 +1005,410 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
             # longs. A (pair, segment) group split across Arrow batches
             # yields two rows; every reader treats the id lists as sets, so
             # splits are benign.
-            from veloci_spark.vbyte import pack_ids_grouped as _pack_grouped
-
-            _seg_docs = segment_docs
-
             def pack_pairs(iterator):
-                # fully vectorized over the Arrow batch: adjacent-dup drop
-                # (rows arrive sorted by (field, pair, segment, doc_id), so
-                # a group's duplicates are adjacent — equivalent to the
-                # per-group np.unique) + ONE batched delta+VByte encode
-                # sliced per group. A per-group pack_ids loop here paid one
-                # Python call per (pair, segment) group — tens of millions
-                # per 1M-doc build — and dominated the whole build (r5
-                # measurement: phrase 1097 s of 1408 s at 2 cores).
                 for pdf in iterator:
-                    if pdf.empty:
-                        continue
-                    ids = pdf["doc_id"].values.astype(np.int64)
-                    seg = pdf["segment"].values.astype(np.int64)
-                    keys = (pdf["field"].values, pdf["tok_a"].values,
-                            pdf["tok_b"].values, seg)
-                    change = np.zeros(len(ids), dtype=bool)
-                    change[0] = True
-                    for k in keys:
-                        change[1:] |= k[1:] != k[:-1]
-                    keep = change.copy()
-                    keep[1:] |= ids[1:] != ids[:-1]
-                    ids_u, seg_u, change_u = ids[keep], seg[keep], change[keep]
-                    starts = np.flatnonzero(change_u)
-                    ends = np.append(starts[1:], len(ids_u))
-                    yield pd.DataFrame({
-                        "field": pdf["field"].values[keep][starts],
-                        "tok_a": pdf["tok_a"].values[keep][starts],
-                        "tok_b": pdf["tok_b"].values[keep][starts],
-                        "segment": seg_u[starts].astype(np.int32),
-                        "docs_bin": _pack_grouped(
-                            ids_u - seg_u * _seg_docs, starts, ends),
-                    })
+                    if not pdf.empty:
+                        yield _pack_pairs(pdf, segment_docs)
 
             pairs = (
                 pairs_raw
                 .withColumn("segment", (F.col("doc_id") / F.lit(segment_docs)).cast("int"))
                 .repartition(num_partitions, "tok_a", "tok_b")
                 .sortWithinPartitions("field", "tok_a", "tok_b", "segment", "doc_id")
-                .mapInPandas(pack_pairs, schema=("field string, tok_a string, "
-                                                 "tok_b string, segment int, "
-                                                 "docs_bin binary"))
+                .mapInPandas(pack_pairs, schema=_PHRASE_SCHEMA)
             )
             pairs.write.mode("overwrite").parquet(phrase_path)
         else:
-            spark.createDataFrame(
-                [], "field string, tok_a string, tok_b string, segment int, docs_bin binary"
-            ).write.mode("overwrite").parquet(phrase_path)
+            spark.createDataFrame([], schema=_PHRASE_SCHEMA) \
+                .write.mode("overwrite").parquet(phrase_path)
         _mark_stage(index_dir, "phrase", fp, wall_sec=time.time() - t0)
+
+    return n_docs, n_terms
+
+
+# ---------------------------------------------------------------------------
+# the local build tier
+
+# Largest batch the local tier builds: the uncompressed bytes of the
+# indexed columns' chunks in the doc store's parquet footers (~227 B per
+# synthetic webtext doc, text + lang). Measured on a 4-core VM, local[4],
+# default shuffle partitions; tokens+dict+postings+phrase wall local vs
+# Spark, the local build's rise in driver VmHWM, and the peak of driver +
+# JVM local vs Spark: 3k docs (0.7 MB) 0.9 vs 16.6 s, +86 MB, 999 vs
+# 1,455 MB; 30k (6.8 MB) 5.2 vs 23.4 s, +300 MB, 1,657 MB both; 100k
+# (22.6 MB) 15.1 vs 31.6 s, +783 MB, 2,518 vs 1,814 MB. The driver grows
+# ~33 MB per MB of text, so past ~8 MiB the local build's peak memory
+# exceeds the Spark tier's while its wall gain shrinks.
+LOCAL_BUILD_MAX_TEXT_BYTES = 8 << 20
+
+
+def _local_dir(index_dir: str) -> "str | None":
+    """Filesystem path of an index dir on the local disk; None for remote
+    stores (hdfs://, s3a://, ...), which stay on the Spark tiers."""
+    u = urlparse(index_dir)
+    if u.scheme == "file":
+        path = u.path
+    elif u.scheme == "":
+        path = index_dir
+    else:
+        return None
+    return path if os.path.isdir(path) else None
+
+
+def _indexed_columns(config: IndexConfig) -> list[str]:
+    """Doc-store columns the tokens and dict stages read: tokenized fields
+    and the exact texts of non-identity fields."""
+    return [fc.name for fc in config.fields if fc.tokenize or not fc.identity]
+
+
+class _DocsFooter(NamedTuple):
+    path: str           # local index dir
+    n_rows: int
+    text_bytes: int     # uncompressed bytes of the indexed columns' chunks
+
+
+def _choose_build_tier(index_dir: str, config: IndexConfig
+                       ) -> "tuple[str, str | None, _DocsFooter | None]":
+    """(tier, reason the rule fell back or None, doc-store footer). Local
+    iff the index dir is on the local disk, no field is nested, every
+    indexed column is a string column of the doc store (so the Spark
+    tier's ``cast("string")`` has nothing to reproduce) and the indexed
+    columns' chunks hold at most ``LOCAL_BUILD_MAX_TEXT_BYTES``
+    uncompressed bytes."""
+    path = _local_dir(index_dir)
+    if path is None:
+        return "spark", "remote dir", None
+    for fc in config.fields:
+        if fc.is_nested:
+            return "spark", f"nested field {fc.name}", None
+    dataset = ds.dataset(os.path.join(path, "docs"), format="parquet")
+    cols = _indexed_columns(config)
+    for name in cols:
+        i = dataset.schema.get_field_index(name)
+        if i < 0 or not pa.types.is_string(dataset.schema.field(i).type):
+            return "spark", f"non-string column {name}", None
+    n_rows = text_bytes = 0
+    wanted = set(cols)
+    for frag in dataset.get_fragments():
+        md = frag.metadata
+        n_rows += md.num_rows
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for c in range(rg.num_columns):
+                chunk = rg.column(c)
+                if chunk.path_in_schema in wanted:
+                    text_bytes += chunk.total_uncompressed_size
+    if text_bytes > LOCAL_BUILD_MAX_TEXT_BYTES:
+        return ("spark", f"text bytes {text_bytes} > "
+                f"{LOCAL_BUILD_MAX_TEXT_BYTES}", None)
+    return "local", None, _DocsFooter(path, n_rows, text_bytes)
+
+
+def _arrow(frames: list, schema: T.StructType) -> pa.Table:
+    """Kernel output frames as one Arrow table under the Spark schema (no
+    pandas metadata); an empty table when there are none."""
+    arrow = to_arrow_schema(schema)
+    return pa.concat_tables(
+        [arrow.empty_table()]
+        + [pa.Table.from_pandas(f, schema=arrow, preserve_index=False)
+           .replace_schema_metadata(None) for f in frames])
+
+
+def _write_local(table: pa.Table, path: str, dictionary=True) -> None:
+    """Replace ``path`` with one parquet file of ``table``. ``dictionary``
+    lists the dictionary-encoded columns: unique-valued columns are
+    written plain, as Spark's writer falls back to, which keeps the files
+    within 1% of Spark's size."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"),
+                   use_dictionary=dictionary, compression="snappy")
+
+
+# the Spark tier's ``withColumn(lit)`` columns are not nullable
+_TOKENS_SCHEMA = T.StructType(
+    _ENTRY_SCHEMA.fields + [T.StructField("pos", T.LongType(), False),
+                            T.StructField("field", T.StringType(), False)])
+_PAIRS_SCHEMA = T.StructType(
+    _PAIR_SCHEMA.fields + [T.StructField("field", T.StringType(), False)])
+
+
+def _group_batches(frame: pd.DataFrame, keys: list, size: int):
+    """Slices of ``frame`` (sorted by ``keys`` first) of about ``size``
+    rows, cut only where a key changes, so no group of equal keys is
+    split; ``size`` ≤ 0 gives one slice."""
+    n = len(frame)
+    if n == 0:
+        return
+    size = size if size > 0 else n
+    change = np.zeros(n, dtype=bool)
+    change[0] = True
+    for k in keys:
+        v = frame[k].values
+        change[1:] |= v[1:] != v[:-1]
+    starts = np.append(np.flatnonzero(change), n)
+    cuts = starts[np.searchsorted(starts, np.arange(size, n, size))]
+    bounds = np.unique(np.concatenate([[0], cuts, [n]]))
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        yield frame.iloc[lo:hi]
+
+
+def _local_stages(index_dir: str, fp: str, config: IndexConfig,
+                  n_docs: int, batch_rows: int) -> tuple[int, int]:
+    """The local build tier: the tokens, dict, postings and phrase stages
+    in the driver over a pyarrow read of ``docs/``, through the Spark
+    tier's kernels (:func:`_tokenize_texts`, the pack kernel,
+    :func:`_pack_pairs`); only the relational glue is new: pyarrow for
+    the reads, unions, sums and the dictionary lookup, which keep strings
+    in Arrow buffers rather than Python objects, and pandas for the sorts
+    the kernels need.
+    Writes the same files, schemas, markers and checkpoints as the Spark
+    tier, so a build resumed on either tier reuses the other's stages.
+    Returns (n_docs, n_terms); ``n_docs`` comes from the doc store's
+    footers. The kernels take batches of about ``batch_rows`` rows, Spark's
+    Arrow batch size, so their temporaries stay as small as on Spark; a
+    packed group is never split across batches."""
+    todo = {s for s in ("tokens", "dict", "postings", "phrase")
+            if not _stage_done(index_dir, s, fp)}
+    tokens_path = os.path.join(index_dir, "_tokens")
+    dict_path = os.path.join(index_dir, "dict")
+    docs = pq.read_table(os.path.join(index_dir, "docs"),
+                         columns=["doc_id", *_indexed_columns(config)])
+    phrase_fields = [fc for fc in config.fields
+                     if fc.tokenize and fc.phrase_pairs]
+
+    def tokenize(entries: bool, pairs: bool):
+        """Entry and pair tables of every tokenized field: one tokenize
+        pass per text, one kernel call per doc-store record batch, as the
+        Spark stages call the kernel per Arrow batch."""
+        ents, prs = [_arrow([], _TOKENS_SCHEMA)], [_arrow([], _PAIRS_SCHEMA)]
+        for batch in docs.to_batches(max_chunksize=batch_rows):
+            ids = batch.column("doc_id").to_numpy()
+            e_frames, p_frames = [], []
+            for fc in config.fields:
+                if not fc.tokenize:
+                    continue
+                ent, pr = _tokenize_texts(
+                    ids, batch.column(fc.name).to_pylist(), fc.separators,
+                    entries=entries, pairs=pairs and fc in phrase_fields)
+                if ent is not None:
+                    e_frames.append(ent.assign(field=fc.name))
+                if pr is not None:
+                    p_frames.append(pr.assign(field=fc.name))
+            # to Arrow per batch: the kernel's Python strings live for one
+            # batch only
+            ents.append(_arrow(e_frames, _TOKENS_SCHEMA))
+            prs.append(_arrow(p_frames, _PAIRS_SCHEMA))
+        return pa.concat_tables(ents), pa.concat_tables(prs)
+
+    # ---- tokens ----------------------------------------------------------
+    pairs = None
+    if "tokens" in todo:
+        t0 = time.time()
+        tokens, pairs = tokenize(True, "phrase" in todo)
+        _write_local(tokens, tokens_path)
+        dt = time.time() - t0
+        _write_checkpoint(index_dir, "tokenize", 0, {
+            "docs": n_docs, "docs_per_sec": n_docs / max(dt, 1e-9),
+            "wall_sec": dt})
+        _mark_stage(index_dir, "tokens", fp, wall_sec=dt)
+    elif todo & {"dict", "postings"}:
+        tokens = pq.read_table(tokens_path)
+
+    # exact-text entries: non-null texts within the dictionary byte cutoff
+    # of the non-identity fields, as (field, doc_id, term)
+    if todo & {"dict", "postings"}:
+        texts = [pa.table({"field": pa.array([], pa.string()),
+                           "doc_id": pa.array([], pa.int64()),
+                           "term": pa.array([], pa.string())})]
+        for fc in config.fields:
+            if fc.identity:
+                continue
+            col = docs.column(fc.name)
+            keep = pc.less_equal(pc.binary_length(col), fc.max_text_store_bytes)
+            term = pc.filter(col, keep)
+            texts.append(pa.table({
+                "field": pa.repeat(pa.scalar(fc.name), len(term)),
+                "doc_id": pc.filter(docs.column("doc_id"), keep),
+                "term": term}))
+        texts = pa.concat_tables(texts)
+
+    # ---- dict ------------------------------------------------------------
+    if "dict" in todo:
+        t0 = time.time()
+        tok = tokens.group_by(["field", "token"]).aggregate(
+            [("cnt", "sum"), ("cnt", "count")])
+        exact = texts.group_by(["field", "term"]).aggregate(
+            [("doc_id", "count")])
+        counts = pa.concat_tables([
+            pa.table({"field": tok["field"], "term": tok["token"],
+                      "num_occurences": tok["cnt_sum"],
+                      "doc_freq": tok["cnt_count"]}),
+            pa.table({"field": exact["field"], "term": exact["term"],
+                      "num_occurences": exact["doc_id_count"],
+                      "doc_freq": exact["doc_id_count"]})])
+        del tok, exact
+        # sorted by (field, term) in UTF-8 byte order, Spark's string
+        # order: term_id = the rank within the field's run
+        summed = counts.group_by(["field", "term"]).aggregate(
+            [("num_occurences", "sum"), ("doc_freq", "sum")]).sort_by(
+            [("field", "ascending"), ("term", "ascending")])
+        del counts
+        field_code = pc.dictionary_encode(
+            summed["field"].combine_chunks()).indices.to_numpy()
+        rank = np.arange(len(field_code), dtype=np.int64)
+        starts = np.flatnonzero(np.diff(field_code, prepend=-1) != 0)
+        rank -= np.repeat(starts, np.diff(np.append(starts, len(rank))))
+        term_dict = pa.table({
+            "field": summed["field"], "term": summed["term"],
+            "num_occurences": summed["num_occurences_sum"],
+            "doc_freq": summed["doc_freq_sum"], "term_id": rank})
+        del summed
+        # per-field text stats (BM25 N + avgdl); a text's entries all carry
+        # its n_tokens
+        lens = tokens.group_by(["field", "doc_id", "pos"]).aggregate(
+            [("n_tokens", "min")]).group_by("field").aggregate(
+            [("n_tokens_min", "sum"), ("n_tokens_min", "count")])
+        field_stats = {
+            r["field"]: {"n_texts": r["n_tokens_min_count"],
+                         "avgdl": r["n_tokens_min_sum"] / r["n_tokens_min_count"]}
+            for r in lens.to_pylist()}
+        with open(os.path.join(index_dir, "_field_stats.json"), "w") as fh:
+            json.dump(field_stats, fh)
+        t1 = time.time()
+        _write_checkpoint(index_dir, "dict-occ", 0, {"wall_sec": t1 - t0})
+        _write_local(term_dict, dict_path,
+                     dictionary=["field", "num_occurences", "doc_freq"])
+        _write_checkpoint(index_dir, "dict-ids", 0,
+                          {"wall_sec": time.time() - t1})
+        _mark_stage(index_dir, "dict", fp, wall_sec=time.time() - t0)
+    elif "postings" in todo:
+        term_dict = pq.read_table(dict_path)
+
+    # ---- postings --------------------------------------------------------
+    if "postings" in todo:
+        t0 = time.time()
+        field_names = [fc.name for fc in config.fields]
+        score_cols = (["cnt", "doc_freq", "n_tokens"]
+                      if config.scoring == "bm25"
+                      else ["best_pos", "num_occurences", "n_tokens", "is_exact"])
+        parts = []
+        for fidx, name in enumerate(field_names):
+            terms = term_dict.filter(pc.equal(term_dict["field"], name))
+            tok = tokens.filter(pc.equal(tokens["field"], name))
+            txt = texts.filter(pc.equal(texts["field"], name))
+            for part in (
+                    {"term": tok["token"], "doc_id": tok["doc_id"],
+                     "pos": tok["pos"], "best_pos": tok["best_pos"],
+                     "n_tokens": tok["n_tokens"], "cnt": tok["cnt"],
+                     "is_exact": np.zeros(len(tok), bool)},
+                    {"term": txt["term"], "doc_id": txt["doc_id"],
+                     "pos": np.zeros(len(txt), np.int64),
+                     "best_pos": np.zeros(len(txt), np.int32),
+                     "n_tokens": np.ones(len(txt), np.int32),
+                     "cnt": np.ones(len(txt), np.int32),
+                     "is_exact": np.ones(len(txt), bool)}):
+                # the dictionary join: a term's row in its field's terms
+                row = pc.index_in(part.pop("term"),
+                                  value_set=terms["term"].combine_chunks())
+                part = pa.table(part).filter(pc.is_valid(row))
+                row = row.filter(pc.is_valid(row))
+                part = part.append_column(
+                    "num_occurences", terms["num_occurences"].take(row))
+                part = part.append_column("doc_freq", terms["doc_freq"].take(row))
+                parts.append(pa.table({
+                    "fidx": pa.array(np.full(len(part), fidx, np.int8)),
+                    "term_id": terms["term_id"].take(row),
+                    "segment": pc.divide(part["doc_id"], config.segment_docs)
+                    .cast(pa.int32()),
+                    "doc_id": part["doc_id"], "pos": part["pos"],
+                    **{c: part[c] for c in score_cols}}))
+        del tokens, texts, term_dict, terms, tok, txt
+        keys = ["fidx", "term_id", "segment", "doc_id", "pos"]
+        scored = pa.concat_tables(parts).to_pandas()
+        del parts
+        scored = scored.sort_values(keys, ignore_index=True)
+        pack = _pack_partition_factory(
+            index_dir, config.posting_block_docs, config.segment_docs,
+            frozenset(), config.scoring, _load_field_stats(index_dir),
+            field_names)
+        packed = _arrow(list(pack(_group_batches(scored, keys[:3], batch_rows),
+                                  task_id=0)), _POSTING_SCHEMA)
+        del scored
+        _write_local(packed, os.path.join(index_dir, "postings"),
+                     dictionary=["field", "segment", "df", "max_score",
+                                 "block_max"])
+        del packed
+        _mark_stage(index_dir, "postings", fp, wall_sec=time.time() - t0)
+
+    # ---- phrase ----------------------------------------------------------
+    if "phrase" in todo:
+        t0 = time.time()
+        if pairs is None:
+            _, pairs = tokenize(False, True)
+        keys = ["field", "tok_a", "tok_b", "segment", "doc_id"]
+        # pandas, not Arrow, sorts the string keys: measured 3x faster here;
+        # to_pandas shares one Python str per distinct value
+        raw = pairs.to_pandas()
+        del pairs
+        raw["segment"] = (raw["doc_id"] // config.segment_docs).astype("int32")
+        raw = raw.sort_values(keys, ignore_index=True)
+        packed = [_pack_pairs(pdf, config.segment_docs)
+                  for pdf in _group_batches(raw, keys[:4], batch_rows)]
+        del raw
+        _write_local(_arrow(packed, _PHRASE_SCHEMA),
+                     os.path.join(index_dir, "phrase"))
+        _mark_stage(index_dir, "phrase", fp, wall_sec=time.time() - t0)
+    return n_docs, ds.dataset(dict_path, format="parquet").count_rows()
+
+
+# ---------------------------------------------------------------------------
+# the build driver
+
+
+def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
+                index_dir: str, num_partitions: int | None = None,
+                input_fingerprint: str = "",
+                token_values: dict | None = None) -> dict:
+    """Build the full index; returns the manifest dict. Resumable: completed
+    stages (marker files) are skipped on re-run — but ONLY when their marker
+    carries the current layout/config/input fingerprint. A fingerprint
+    mismatch (new code version, changed config, changed input) invalidates
+    every stale stage and it rebuilds.
+
+    ``token_values``: optional {field: [(text, value), ...]} side input —
+    the reference's token_values boost index (loaded alongside the corpus,
+    tests.rs:39-41; search_field.rs suggest ``token_value`` boost). Stored
+    as parquet (field, text, value); suggest-time boosting joins matched
+    candidates against it, so the mapping may be dictionary-sized.
+    """
+    os.makedirs(index_dir, exist_ok=True)
+    t_start = time.time()
+    fp = index_fingerprint(config, input_fingerprint)
+    if num_partitions is None:
+        num_partitions = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+
+    # ---- stage: docs (doc ids + doc store) -------------------------------
+    docs_path = os.path.join(index_dir, "docs")
+    if not _stage_done(index_dir, "docs", fp):
+        t0 = time.time()
+        if config.doc_id_col and config.doc_id_col in df.columns:
+            df.withColumn("doc_id", F.col(config.doc_id_col).cast("long")) \
+                .write.mode("overwrite").parquet(docs_path)
+        else:
+            assign_doc_ids(df, config.order_col, num_partitions, out_path=docs_path)
+        _mark_stage(index_dir, "docs", fp, wall_sec=time.time() - t0)
+
+    # ---- tokens, dict, postings, phrase: one tier for all four -----------
+    tier, fallback, footer = _choose_build_tier(index_dir, config)
+    if tier == "local":
+        batch_rows = int(spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
+        n_docs, n_terms = _local_stages(footer.path, fp, config,
+                                        footer.n_rows, batch_rows)
+    else:
+        n_docs, n_terms = _spark_stages(spark, index_dir, fp, config,
+                                        num_partitions)
 
     # ---- stage: token_values boost side input ----------------------------
     # the side input's CONTENT is part of the stage fingerprint (the build
@@ -1195,15 +1432,19 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
             _mark_stage(index_dir, "token_values", tv_fp,
                         wall_sec=time.time() - t0)
     elif os.path.isdir(tv_path):
-        import shutil
-
         shutil.rmtree(tv_path, ignore_errors=True)
         marker = os.path.join(index_dir, "_stage_token_values.done")
         if os.path.exists(marker):
             os.remove(marker)
 
     # ---- manifest --------------------------------------------------------
+    segment_docs = config.segment_docs
     n_segments = int(n_docs // segment_docs) + 1
+    markers = {}
+    for fn in os.listdir(index_dir):
+        if fn.startswith("_stage_") and fn.endswith(".done"):
+            with open(os.path.join(index_dir, fn)) as f:
+                markers[fn[len("_stage_"):-len(".done")]] = json.load(f)
     manifest = {
         "version": LAYOUT_VERSION,
         "fingerprint": fp,
@@ -1224,10 +1465,11 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
         ],
         "build_wall_sec": time.time() - t_start,
         "docs_per_sec": n_docs / max(time.time() - t_start, 1e-9),
-        "stages": sorted(
-            fn[len("_stage_"):-len(".done")]
-            for fn in os.listdir(index_dir) if fn.startswith("_stage_")
-        ),
+        "stages": sorted(markers),
+        "build_tier": tier,
+        "build_fallback": fallback,
+        "stage_wall_s": {name: m.get("wall_sec")
+                         for name, m in sorted(markers.items())},
     }
     with open(os.path.join(index_dir, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=2)

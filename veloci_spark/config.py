@@ -67,14 +67,6 @@ class IndexConfig:
     #     at build time because the corpus is static (df, N, avgdl known),
     #     quantized ×100 to u32; block-max WAND works unchanged.
     scoring: str = "veloci"
-    # "arrow" (default): vectorized mapInPandas tokenize/pair kernels —
-    # measured 8× faster than the JVM higher-order-function path (numpy
-    # dict-grouping is O(runs) per doc; the HOF formulation pays
-    # O(distinct×runs) string compares, and the explode+groupBy variant
-    # pays a full shuffle). "sql": pure whole-stage-codegen expressions,
-    # zero Python workers — identical output (parity-tested), useful where
-    # Python worker processes are unavailable or expensive.
-    tokenizer_engine: str = "arrow"
     # NOTE: hot-term skew needs no config knob — the segment invariant
     # (doc_id // segment_docs partitions every posting list structurally)
     # bounds any single term's per-task row count by segment_docs.

@@ -14,7 +14,8 @@ Accepted per-field keys (fields_config.rs:62-71 ``FieldConfig``):
   value relations are always built for nested paths, so the flag only
   pins the field into the index set.
 * ``fulltext`` — ``tokenize`` (bool), ``tokenize_on_chars`` (list of
-  1-char strings → per-field separator set, metadata.rs:94-105),
+  1-char strings → per-field separator set, metadata.rs:94-105; longer
+  entries are an error),
   ``do_not_store_text_longer_than`` (bytes, default 64, metadata.rs:66-68),
   ``stopwords`` (accepted and ignored: the reference declares the key on
   ``FulltextIndexOptions`` (metadata.rs:54) but never consumes it on the
@@ -25,10 +26,11 @@ Accepted per-field keys (fields_config.rs:62-71 ``FieldConfig``):
   the reference's ``Features::invert`` (features.rs:23-39) filters for
   membership instead of against it, which makes ``disabled_features``
   behave identically to ``features`` there (an upstream quirk we do not
-  reproduce).
+  reproduce; a config using it gets a warning).
 * ``boost`` — ``{"boost_type": "int"}`` → the field doubles as a
   boost-by-indexed-data source (``boost_from_value``).
-* A trailing ``.textindex`` on a key is stripped (fields_config.rs:19-24).
+* A trailing ``.textindex`` on a key is stripped (fields_config.rs:19-24);
+  two keys naming one path after stripping are an error.
 * ``*GLOBAL*`` supplies defaults for every path not explicitly configured
   (fields_config.rs:14,26-29); absent, the reference default applies
   (features {Search, TokensToTextID}, tokenize on).
@@ -45,6 +47,7 @@ parquet layout does not materialize separately, so they have no lowering.
 from __future__ import annotations
 
 import json
+import warnings
 from typing import Iterable
 
 from veloci_spark.config import (
@@ -55,6 +58,8 @@ from veloci_spark.config import (
 )
 
 ALL_FIELD_CONFIG = "*GLOBAL*"
+# keys of the CreateIndexConfig wrapper shape (fields_config.rs:6-12)
+_WRAPPER_KEYS = frozenset({"fields_config", "do_not_store_document"})
 
 FEATURES = frozenset({
     "All", "TokensToTextID", "BoostTextLocality", "BoostingFieldData",
@@ -81,8 +86,10 @@ def parse_fields_config(text: str) -> dict:
         raise ValueError("fields config must be a map of field path -> options")
     # the CreateIndexConfig wrapper shape (fields_config.rs:6-12) carries
     # the map under fields_config plus do_not_store_document; accept it
-    # too (the doc store here IS the source table, so the flag is moot)
-    if isinstance(cfg.get("fields_config"), dict):
+    # too (the doc store here IS the source table, so the flag is moot).
+    # A map with any other key is a flat config, whose field paths may
+    # include one literally named fields_config.
+    if isinstance(cfg.get("fields_config"), dict) and set(cfg) <= _WRAPPER_KEYS:
         cfg = cfg["fields_config"]
     cfg.pop("do_not_store_document", None)
     bad = [k for k, v in cfg.items() if not isinstance(v, dict)]
@@ -109,6 +116,11 @@ def _effective_features(raw: dict, path: str) -> frozenset:
     if feats is not None:
         return frozenset(feats)
     if disabled is not None:
+        warnings.warn(
+            f"field {path!r}: disabled_features is lowered as the complement "
+            "of the feature set; the reference engine treats it like "
+            "features (Features::invert), so the same config builds a "
+            "different index set there", UserWarning, stacklevel=3)
         return FEATURES - frozenset(disabled) - {"All"}
     return DEFAULT_FEATURES
 
@@ -124,6 +136,12 @@ def field_from_config(path: str, raw: dict) -> FieldConfig | None:
     if not searchable and boost is None and not raw.get("facet"):
         return None
     chars = fulltext.get("tokenize_on_chars")
+    if chars is not None:
+        bad = [c for c in chars if not isinstance(c, str) or len(c) != 1]
+        if bad:
+            # the reference deserializes a Vec<char>, which rejects these
+            raise ValueError(f"tokenize_on_chars entries of field {path!r} "
+                             f"must be single characters; got {bad!r}")
     return FieldConfig(
         path,
         tokenize=bool(fulltext.get("tokenize", True)),
@@ -137,13 +155,9 @@ def field_from_config(path: str, raw: dict) -> FieldConfig | None:
 
 
 def _config_for(cfg: dict, path: str) -> dict:
-    # fields_config.rs:19-29 — exact key, then the key with .textindex
-    # stripped by the caller side (we accept both spellings as keys), then
-    # the *GLOBAL* defaults
-    for key in (path, path + ".textindex"):
-        if key in cfg:
-            return cfg[key]
-    return cfg.get(ALL_FIELD_CONFIG, {})
+    # fields_config.rs:19-29 — the path's entry (keys arrive with
+    # .textindex stripped), else the *GLOBAL* defaults
+    return cfg.get(path, cfg.get(ALL_FIELD_CONFIG, {}))
 
 
 def discover_paths(schema, skip_binary: bool = True) -> list[str]:
@@ -182,8 +196,13 @@ def index_config_from_string(text: str, paths: Iterable[str],
     paths absent from the input are ignored, as the reference ignores
     config entries no data path reaches."""
     cfg = parse_fields_config(text)
-    norm = {(k[:-len(".textindex")] if k.endswith(".textindex") else k): v
-            for k, v in cfg.items()}
+    norm: dict = {}
+    for k, v in cfg.items():
+        key = k[:-len(".textindex")] if k.endswith(".textindex") else k
+        if key in norm:
+            raise ValueError(f"fields config has two entries for {key!r} "
+                             "(with and without .textindex)")
+        norm[key] = v
     fields = []
     for path in paths:
         fc = field_from_config(path, _config_for(norm, path))

@@ -74,7 +74,6 @@ import os
 import threading
 import time
 from typing import NamedTuple
-from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
@@ -85,7 +84,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from veloci_spark.build import load_manifest
+from veloci_spark.build import _local_dir, load_manifest
 from veloci_spark.scoring import index_score_u32, levenshtein_batch, term_score
 from veloci_spark.vbyte import unpack_ids, unpack_postings, vbyte_decode
 from veloci_spark import pyref
@@ -135,19 +134,6 @@ LOCAL_TIER_MAX_POSTINGS = 1_000_000
 # The kernel's reads at 100k docs (postings 8-9 MiB, with phrase rows
 # 27-31 MiB) ran 2-38x faster locally than the request on Spark.
 LOCAL_TIER_MAX_SCAN_BYTES = 64 << 20
-
-
-def _local_dir(index_dir: str) -> "str | None":
-    """Filesystem path of an index dir on the local disk; None for remote
-    stores (hdfs://, s3a://, ...), which stay on the Spark tier."""
-    u = urlparse(index_dir)
-    if u.scheme == "file":
-        path = u.path
-    elif u.scheme == "":
-        path = index_dir
-    else:
-        return None
-    return path if os.path.isdir(path) else None
 
 
 def _tid_pushdown_pred(col, tids):
