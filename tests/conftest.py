@@ -64,6 +64,23 @@ def spark_build():
         yield
 
 
+def clone_root(src: str, dst: str) -> str:
+    """A copy of the streamed index root ``src`` at ``dst`` whose generation
+    records name the copy's own generation dirs, so tests can tombstone and
+    compact the copy of a root that a module-scoped fixture built once."""
+    import json
+
+    shutil.copytree(src, dst)
+    path = os.path.join(dst, "generations.json")
+    with open(path) as f:
+        gens = json.load(f)
+    for g in gens:
+        g["dir"] = os.path.join(dst, os.path.basename(g["dir"]))
+    with open(path, "w") as f:
+        json.dump(gens, f)
+    return dst
+
+
 @pytest.fixture(scope="session")
 def index_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("index")

@@ -10,16 +10,17 @@ clean twin — NOT a fresh single build — is the correct oracle here.
 Deterministic (seeded RNG, fixed step count); STREAM_FUZZ_STEPS deepens
 the sweep locally. Each step deletes a few more random live docs, then
 checks several random tree requests with random top/skip across the
-generation and segment boundaries (segment_docs=16 → many segments).
+generation and segment boundaries (segment_docs=16 → many segments). The
+battery runs on the default tier and, as its ``*_spark_tier`` twin, on
+Spark; each run tombstones its own copy of the module's root.
 """
 
 import os
-import shutil
 
 import numpy as np
 import pytest
 
-from tests.conftest import sorted_rows
+from tests.conftest import clone_root, sorted_rows
 
 N_STEPS = int(os.environ.get("STREAM_FUZZ_STEPS", "4"))
 REQS_PER_STEP = 3
@@ -41,7 +42,7 @@ def twin_roots(spark, tmp_path_factory):
     rows = sorted_rows(90)
     for r in rows:
         r.pop("doc_id", None)
-    root_a = str(tmp_path_factory.mktemp("streamfuzz") / "deleted")
+    root = str(tmp_path_factory.mktemp("streamfuzz") / "clean")
     # uneven generation sizes cross segment boundaries within and between
     # gens; the MIDDLE generation carries caller-supplied SPARSE batch-local
     # ids (holes between every doc), so every randomized assertion below
@@ -56,22 +57,20 @@ def twin_roots(spark, tmp_path_factory):
             sparse_cfg = dataclasses.replace(cfg, doc_id_col="my_id")
             batch = [dict(r, my_id=i * 2) for i, r in enumerate(batch)]
             rec = ingest_batch(spark, spark.createDataFrame(batch),
-                               sparse_cfg, root_a)
+                               sparse_cfg, root)
             all_ids += [base + i * 2 for i in range(len(batch))]
         else:
             rec = ingest_batch(spark, spark.createDataFrame(batch), cfg,
-                               root_a)
+                               root)
             all_ids += list(range(base, base + len(batch)))
         base = rec["id_hi"]
-    root_b = root_a + "_clean"
-    shutil.copytree(root_a, root_b)
-    return root_a, root_b, all_ids
+    return root, all_ids
 
 
-def _vocab(spark, root_b):
+def _vocab(spark, root):
     from veloci_spark.streaming import MultiIndex
 
-    mi = MultiIndex(spark, root_b)
+    mi = MultiIndex(spark, root)
     terms = sorted({
         r["term"]
         for _g, idx in mi.indexes
@@ -97,13 +96,23 @@ def _rand_tree(rng, vocab, depth=0):
                  for _ in range(rng.randint(2, 4))]}
 
 
-def test_deletes_are_a_pure_filter(spark, twin_roots):
+def test_deletes_are_a_pure_filter(spark, twin_roots, tmp_path):
+    _deletes_are_a_pure_filter(spark, twin_roots, str(tmp_path / "deleted"))
+
+
+def test_deletes_are_a_pure_filter_spark_tier(spark, twin_roots, tmp_path,
+                                              spark_tier):
+    _deletes_are_a_pure_filter(spark, twin_roots, str(tmp_path / "deleted"))
+
+
+def _deletes_are_a_pure_filter(spark, twin_roots, copy_dir):
     from veloci_spark.streaming import MultiIndex, delete_docs
 
-    root_a, root_b, all_ids = twin_roots
-    vocab = _vocab(spark, root_b)
+    clean, all_ids = twin_roots
+    deleted_root = clone_root(clean, copy_dir)
+    vocab = _vocab(spark, clean)
     assert len(vocab) >= 10
-    mi_clean = MultiIndex(spark, root_b)
+    mi_clean = MultiIndex(spark, clean)
     rng = np.random.RandomState(7)
     deleted: set[int] = set()
     try:
@@ -111,9 +120,9 @@ def test_deletes_are_a_pure_filter(spark, twin_roots):
             live = [d for d in all_ids if d not in deleted]
             kill = rng.choice(live, size=min(5, max(1, len(live) // 10)),
                               replace=False)
-            delete_docs(spark, root_a, [int(d) for d in kill])
+            delete_docs(spark, deleted_root, [int(d) for d in kill])
             deleted.update(int(d) for d in kill)
-            mi_del = MultiIndex(spark, root_a)
+            mi_del = MultiIndex(spark, deleted_root)
             try:
                 for _q in range(REQS_PER_STEP):
                     tree = _rand_tree(rng, vocab)

@@ -517,6 +517,31 @@ def test_paging_consistency(spark_index, ref_index):
     assert [d["doc_id"] for d in paged] == [d["doc_id"] for d in full]
 
 
+def test_request_cannot_set_tombstone_inputs(spark_index):
+    """A streamed generation's tombstones reach the planner as keyword
+    arguments, never through the request: a request (say, a server POST
+    body) naming every doc of every segment as deleted, with a huge top-k
+    widening, gets exactly the plain request's answer."""
+    from veloci_spark.search import search
+
+    seg_docs = int(spark_index.manifest["segment_docs"])
+    n_segs = -(-int(spark_index.manifest["n_docs"]) // seg_docs)
+    for req in ({"search": {"terms": ["die"], "path": "text"}, "top": 5},
+                {"or": [{"search": {"terms": ["greg"], "path": "text"}},
+                        {"search": {"terms": ["text"], "path": "text"}}],
+                 "top": 3, "facets": [{"field": "lang"}]}):
+        plain = search(spark_index, req)
+        keyed = search(spark_index, {
+            **req,
+            "_seg_deleted": {str(s): list(range(seg_docs))
+                             for s in range(n_segs)},
+            "_seg_top_extra": {str(s): 10**6 for s in range(n_segs)}})
+        assert plain["num_hits"] > 0
+        for res in (plain, keyed):
+            res.pop("execution_time_ms")
+        assert keyed == plain
+
+
 class TestResumeValidation:
     """Stale-index invalidation (round-1 red-row regression): a stage marker
     written by a different layout/config fingerprint must not be trusted."""

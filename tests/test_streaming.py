@@ -12,6 +12,8 @@ import os
 import numpy as np
 import pytest
 
+from tests.conftest import clone_root
+
 
 def _batch_rows(start, n, stamp):
     return [
@@ -22,8 +24,7 @@ def _batch_rows(start, n, stamp):
     ]
 
 
-@pytest.fixture()
-def stream_cfg():
+def _stream_cfg():
     from veloci_spark.config import FieldConfig, IndexConfig
 
     return IndexConfig(
@@ -32,6 +33,66 @@ def stream_cfg():
                             token_texts=False)),
         segment_docs=16,
     )
+
+
+@pytest.fixture()
+def stream_cfg():
+    return _stream_cfg()
+
+
+def _ingested(spark, root, *batches):
+    from veloci_spark.streaming import ingest_batch
+
+    for rows in batches:
+        ingest_batch(spark, spark.createDataFrame(rows), _stream_cfg(), root)
+    return root
+
+
+# roots built once per module; a test that tombstones or compacts works on
+# its own clone_root() copy
+
+
+@pytest.fixture(scope="module")
+def root_a20(spark, tmp_path_factory):
+    """One generation of 20 docs."""
+    return _ingested(spark, str(tmp_path_factory.mktemp("a20") / "root"),
+                     _batch_rows(0, 20, "a"))
+
+
+@pytest.fixture(scope="module")
+def root_ab40(spark, tmp_path_factory):
+    """Two generations of 20 docs: ids 0-19 ("a") and 20-39 ("b")."""
+    return _ingested(spark, str(tmp_path_factory.mktemp("ab40") / "root"),
+                     _batch_rows(0, 20, "a"), _batch_rows(0, 20, "b"))
+
+
+@pytest.fixture(scope="module")
+def facet_root(spark, tmp_path_factory):
+    """Two generations, 21 and 14 docs, with three ``lang`` values."""
+    return _ingested(spark, str(tmp_path_factory.mktemp("facets") / "root"),
+                     _facet_rows(0, 21, "a"), _facet_rows(0, 14, "b"))
+
+
+def _one_generation_matches_search(spark, root):
+    """A one-generation, tombstone-free MultiIndex answers exactly what
+    search() answers on that generation, post-processing included."""
+    from veloci_spark.search import search
+    from veloci_spark.streaming import MultiIndex
+
+    req = {"search": {"terms": ["spark"], "path": "text"}, "top": 5,
+           "skip": 1, "facets": [{"field": "lang"}],
+           "select": ["url", "lang"], "why_found": True,
+           "snippets": {"field": "text"}, "explain_hits": True}
+    mi = MultiIndex(spark, root)
+    got = mi.search(req)
+    want = search(mi.indexes[0][1], req)
+    for res in (got, want):
+        res.pop("execution_time_ms")
+    assert list(got) == list(want)
+    assert got == want
+    assert got["num_hits"] == 20 and len(got["data"]) == 5
+    assert all(d["doc"] and d["why_found"] and d["explain"]
+               and "<b>spark</b>" in d["snippet"] for d in got["data"])
 
 
 class TestGenerations:
@@ -60,25 +121,12 @@ class TestGenerations:
         pairs = [(np.float32(d["score"]), d["doc_id"]) for d in res["data"]]
         assert pairs == sorted(pairs, key=lambda p: (-p[0], -p[1]))
 
-    def test_multiindex_stays_on_spark(self, spark, stream_cfg, tmp_path,
-                                       monkeypatch):
-        from veloci_spark import search as S
-        from veloci_spark.streaming import MultiIndex, ingest_batch
+    def test_one_generation_matches_search(self, spark, root_a20):
+        _one_generation_matches_search(spark, root_a20)
 
-        root = str(tmp_path / "root")
-        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 12, "a")),
-                     stream_cfg, root)
-        req = {"search": {"terms": ["spark"], "path": "text"}, "top": 5}
-        mi = MultiIndex(spark, root)
-        want = S.search(mi.indexes[0][1], req)
-
-        def boom(*_a, **_k):
-            raise AssertionError("MultiIndex must not use the local tier")
-
-        monkeypatch.setattr(S, "_local_hits", boom)
-        got = mi.search(req)
-        assert got["num_hits"] == want["num_hits"] == 12
-        assert got["data"] == want["data"]
+    def test_one_generation_matches_search_spark_tier(self, spark, root_a20,
+                                                      spark_tier):
+        _one_generation_matches_search(spark, root_a20)
 
     def test_sparse_caller_ids_set_high_water_mark(self, spark, stream_cfg,
                                                    tmp_path):
@@ -207,31 +255,36 @@ class TestStructuredStreaming:
         assert len(MultiIndex(spark, root).gens) == 2
 
 
+def _delete_hides_doc_and_promotes_next(spark, root):
+    from veloci_spark.streaming import MultiIndex, delete_docs
+
+    req = {"search": {"terms": ["spark"], "path": "text"}, "top": 3}
+    before = MultiIndex(spark, root).search(req)
+    victim = before["data"][0]["doc_id"]
+    expect = [d["doc_id"] for d in MultiIndex(spark, root).search(
+        {**req, "top": 4})["data"] if d["doc_id"] != victim][:3]
+
+    delete_docs(spark, root, [victim])
+    mi = MultiIndex(spark, root)
+    after = mi.search(req)
+    ids = [d["doc_id"] for d in after["data"]]
+    assert victim not in ids
+    assert len(ids) == 3          # a live doc was promoted into the slot
+    assert ids == expect          # exactly the next-ranked live docs
+    assert mi.get_doc(victim) is None
+    assert mi.live_docs == 39 and mi.n_docs == 40
+
+
 class TestDeletes:
-    def test_delete_hides_doc_and_promotes_next(self, spark, stream_cfg,
+    def test_delete_hides_doc_and_promotes_next(self, spark, root_ab40,
                                                 tmp_path):
-        from veloci_spark.streaming import MultiIndex, delete_docs, ingest_batch
+        _delete_hides_doc_and_promotes_next(
+            spark, clone_root(root_ab40, str(tmp_path / "root")))
 
-        root = str(tmp_path / "root")
-        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 20, "a")),
-                     stream_cfg, root)
-        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 20, "b")),
-                     stream_cfg, root)
-        req = {"search": {"terms": ["spark"], "path": "text"}, "top": 3}
-        before = MultiIndex(spark, root).search(req)
-        victim = before["data"][0]["doc_id"]
-        expect = [d["doc_id"] for d in MultiIndex(spark, root).search(
-            {**req, "top": 4})["data"] if d["doc_id"] != victim][:3]
-
-        delete_docs(spark, root, [victim])
-        mi = MultiIndex(spark, root)
-        after = mi.search(req)
-        ids = [d["doc_id"] for d in after["data"]]
-        assert victim not in ids
-        assert len(ids) == 3          # a live doc was promoted into the slot
-        assert ids == expect          # exactly the next-ranked live docs
-        assert mi.get_doc(victim) is None
-        assert mi.live_docs == 39 and mi.n_docs == 40
+    def test_delete_hides_doc_and_promotes_next_spark_tier(
+            self, spark, root_ab40, tmp_path, spark_tier):
+        _delete_hides_doc_and_promotes_next(
+            spark, clone_root(root_ab40, str(tmp_path / "root")))
 
     def test_compact_applies_deletes_and_preserves_id_space(self, spark,
                                                             stream_cfg,
@@ -280,23 +333,83 @@ def _facet_rows(start, n, stamp):
     ]
 
 
-def _select_and_why_found_across_generations(spark, stream_cfg, tmp_path):
-    from veloci_spark.streaming import MultiIndex, ingest_batch
+def _select_and_why_found_across_generations(spark, root):
+    from veloci_spark.streaming import MultiIndex
 
-    root = str(tmp_path / "root")
-    ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 8, "a")),
-                 stream_cfg, root)
-    ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 8, "b")),
-                 stream_cfg, root)
     res = MultiIndex(spark, root).search(
         {"search": {"terms": ["spark"], "path": "text"},
-         "select": ["url", "lang"], "why_found": True, "top": 16})
-    assert len(res["data"]) == 16
+         "select": ["url", "lang"], "why_found": True,
+         "snippets": {"field": "text"}, "explain_hits": True, "top": 40})
+    assert len(res["data"]) == 40
     for d in res["data"]:
-        stamp = "a" if d["doc_id"] < 8 else "b"
+        stamp = "a" if d["doc_id"] < 20 else "b"
         assert f"/{stamp}/" in d["doc"]["url"]  # routed to its generation
         assert d["doc"]["lang"] == "en"
         assert "spark" in " ".join(d["why_found"].get("text", [])).lower()
+        assert "<b>spark</b>" in d["snippet"]
+        # the explain steps end at the hit's score
+        assert np.float32(d["explain"][-1]["score"]) == np.float32(d["score"])
+
+
+def _num_hits_with_deletes(spark, root):
+    from veloci_spark.streaming import MultiIndex, compact, delete_docs
+
+    req = {"search": {"terms": ["spark"], "path": "text"}, "top": 3}
+    assert MultiIndex(spark, root).search(req)["num_hits"] == 20
+    delete_docs(spark, root, [0, 1])
+    mi = MultiIndex(spark, root)
+    fast = mi.search(req)
+    # truncated path with tombstones: the kernel subtracts each
+    # segment's tombstoned hits (_seg_deleted), so the cheap path is
+    # already exact — no extra job, no estimate (VERDICT r4 #3)
+    assert fast["num_hits_exact"]
+    assert fast["num_hits"] == 18
+    exact = mi.search({**req, "exact_count": True})
+    assert exact["num_hits_exact"] and exact["num_hits"] == 18
+    # per-SEGMENT tombstone accounting (ADVICE r3): only the victims'
+    # segment is inflated (segment_docs=16 -> ids 0,1 live in segment 0)
+    assert mi._seg_extra == {0: {0: 2}}
+    assert {g: {s: list(v) for s, v in per.items()}
+            for g, per in mi._seg_deleted.items()} == {0: {0: [0, 1]}}
+    # all three kernel paths subtract tombstoned hits from their counts
+    # and drop them from their rows: single-leaf WAND (above), multi-leaf
+    # WAND (unboosted OR), and the plain kernel (filter disables WAND) —
+    # every doc has both terms
+    ror = mi.search({"or": [
+        {"search": {"terms": ["spark"], "path": "text"}},
+        {"search": {"terms": ["batch"], "path": "text"}}], "top": 3})
+    assert ror["num_hits_exact"] and ror["num_hits"] == 18
+    rf = mi.search({"search": {"terms": ["spark"], "path": "text"},
+                    "filter": {"search": {"terms": ["batch"],
+                                          "path": "text"}}, "top": 3})
+    assert rf["num_hits_exact"] and rf["num_hits"] == 18
+    assert not {d["doc_id"] for r in (fast, exact, ror, rf)
+                for d in r["data"]} & {0, 1}
+    # driver-side tombstone set routes get_doc without a Spark job
+    assert mi._del_set == frozenset({0, 1})
+    assert mi.get_doc(0) is None and mi.get_doc(2) is not None
+    mi.close()
+    # the exact count equals the compacted (tombstone-free) index's
+    compact(spark, root, _stream_cfg())
+    assert MultiIndex(spark, root).search(req)["num_hits"] == 18
+
+
+def _facets_match_compacted(spark, root):
+    from veloci_spark.search import FulltextIndex, search
+    from veloci_spark.streaming import MultiIndex, compact
+
+    req = {"search": {"terms": ["spark"], "path": "text"},
+           "facets": [{"field": "lang", "top": 5}], "top": 5}
+    multi = MultiIndex(spark, root).search(req)
+    compact(spark, root, _stream_cfg())
+    mi2 = MultiIndex(spark, root)
+    one = FulltextIndex(spark, mi2.gens[0]["dir"])
+    direct = search(one, req)
+    # facet counts over 2 generations == the compacted single index's
+    # (hit membership is statistics-independent)
+    assert multi["facets"] == direct["facets"]
+    assert multi["num_hits"] == direct["num_hits"] == 35
+    assert multi["num_hits_exact"]
 
 
 class TestMultiIndexResultShape:
@@ -304,35 +417,21 @@ class TestMultiIndexResultShape:
     reference result shape — facets, select, why_found, suggest, exact
     num_hits — merged across generations."""
 
-    def test_facets_match_compacted(self, spark, stream_cfg, tmp_path):
-        from veloci_spark.search import FulltextIndex, search
-        from veloci_spark.streaming import MultiIndex, compact, ingest_batch
+    def test_facets_match_compacted(self, spark, facet_root, tmp_path):
+        _facets_match_compacted(
+            spark, clone_root(facet_root, str(tmp_path / "root")))
 
-        root = str(tmp_path / "root")
-        ingest_batch(spark, spark.createDataFrame(_facet_rows(0, 21, "a")),
-                     stream_cfg, root)
-        ingest_batch(spark, spark.createDataFrame(_facet_rows(0, 14, "b")),
-                     stream_cfg, root)
-        req = {"search": {"terms": ["spark"], "path": "text"},
-               "facets": [{"field": "lang", "top": 5}], "top": 5}
-        multi = MultiIndex(spark, root).search(req)
-        compact(spark, root, stream_cfg)
-        mi2 = MultiIndex(spark, root)
-        one = FulltextIndex(spark, mi2.gens[0]["dir"])
-        direct = search(one, req)
-        # facet counts over 2 generations == the compacted single index's
-        # (hit membership is statistics-independent)
-        assert multi["facets"] == direct["facets"]
-        assert multi["num_hits"] == direct["num_hits"] == 35
-        assert multi["num_hits_exact"]
+    def test_facets_match_compacted_spark_tier(self, spark, facet_root,
+                                               tmp_path, spark_tier):
+        _facets_match_compacted(
+            spark, clone_root(facet_root, str(tmp_path / "root")))
 
-    def test_select_and_why_found_across_generations(self, spark, stream_cfg,
-                                                     tmp_path):
-        _select_and_why_found_across_generations(spark, stream_cfg, tmp_path)
+    def test_select_and_why_found_across_generations(self, spark, root_ab40):
+        _select_and_why_found_across_generations(spark, root_ab40)
 
     def test_select_and_why_found_across_generations_spark_tier(
-            self, spark, stream_cfg, tmp_path, spark_tier):
-        _select_and_why_found_across_generations(spark, stream_cfg, tmp_path)
+            self, spark, root_ab40, spark_tier):
+        _select_and_why_found_across_generations(spark, root_ab40)
 
     def test_suggest_across_generations(self, spark, stream_cfg, tmp_path):
         from veloci_spark.search import FulltextIndex, suggest
@@ -359,48 +458,14 @@ class TestMultiIndexResultShape:
             if t in d_one:
                 assert s == d_one[t]
 
-    def test_num_hits_with_deletes(self, spark, stream_cfg, tmp_path):
-        from veloci_spark.streaming import MultiIndex, delete_docs, ingest_batch
+    def test_num_hits_with_deletes(self, spark, root_a20, tmp_path):
+        _num_hits_with_deletes(spark,
+                               clone_root(root_a20, str(tmp_path / "root")))
 
-        root = str(tmp_path / "root")
-        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 20, "a")),
-                     stream_cfg, root)
-        req = {"search": {"terms": ["spark"], "path": "text"}, "top": 3}
-        assert MultiIndex(spark, root).search(req)["num_hits"] == 20
-        delete_docs(spark, root, [0, 1])
-        mi = MultiIndex(spark, root)
-        fast = mi.search(req)
-        # truncated path with tombstones: the kernel subtracts each
-        # segment's tombstoned hits (_seg_deleted), so the cheap path is
-        # already exact — no extra job, no estimate (VERDICT r4 #3)
-        assert fast["num_hits_exact"]
-        assert fast["num_hits"] == 18
-        exact = mi.search({**req, "exact_count": True})
-        assert exact["num_hits_exact"] and exact["num_hits"] == 18
-        # per-SEGMENT tombstone accounting (ADVICE r3): only the victims'
-        # segment is inflated (segment_docs=16 -> ids 0,1 live in segment 0)
-        assert mi._seg_extra == {0: {0: 2}}
-        assert {g: {s: list(v) for s, v in per.items()}
-                for g, per in mi._seg_deleted.items()} == {0: {0: [0, 1]}}
-        # all three kernel paths subtract tombstoned hits from their counts:
-        # single-leaf WAND (above), multi-leaf WAND (unboosted OR), and the
-        # plain kernel (filter disables WAND) — every doc has both terms
-        ror = mi.search({"or": [
-            {"search": {"terms": ["spark"], "path": "text"}},
-            {"search": {"terms": ["batch"], "path": "text"}}], "top": 3})
-        assert ror["num_hits_exact"] and ror["num_hits"] == 18
-        rf = mi.search({"search": {"terms": ["spark"], "path": "text"},
-                        "filter": {"search": {"terms": ["batch"],
-                                              "path": "text"}}, "top": 3})
-        assert rf["num_hits_exact"] and rf["num_hits"] == 18
-        # driver-side tombstone set routes get_doc without a Spark job
-        assert mi._del_set == frozenset({0, 1})
-        assert mi.get_doc(0) is None and mi.get_doc(2) is not None
-        mi.close()
-        # the exact count equals the compacted (tombstone-free) index's
-        from veloci_spark.streaming import compact
-        compact(spark, root, stream_cfg)
-        assert MultiIndex(spark, root).search(req)["num_hits"] == 18
+    def test_num_hits_with_deletes_spark_tier(self, spark, root_a20, tmp_path,
+                                              spark_tier):
+        _num_hits_with_deletes(spark,
+                               clone_root(root_a20, str(tmp_path / "root")))
 
     def test_num_hits_exact_distributed_tombstones(self, spark, stream_cfg,
                                                     tmp_path, monkeypatch):
@@ -434,3 +499,106 @@ class TestMultiIndexResultShape:
         assert MultiIndex(spark, root).should_compact()
         assert not MultiIndex(spark, root).should_compact(max_delete_ratio=0.5)
         assert MultiIndex(spark, root).should_compact(max_generations=0)
+
+
+class TestStreamedTiers:
+    """A streamed index runs on the search path's own tiers: the local one
+    for a cheap request, tombstones and facets included."""
+
+    REQ = {"search": {"terms": ["spark"], "path": "text"}, "top": 6,
+           "skip": 2, "facets": [{"field": "lang"}],
+           "select": ["url", "lang"], "why_found": True,
+           "snippets": {"field": "text"}, "explain_hits": True}
+
+    def test_tombstone_state_matches_aggregation(self, spark, facet_root,
+                                                 tmp_path, monkeypatch):
+        """The driver derives the per-segment tombstone counts from the
+        collected ids; they equal the aggregation job's, which only a set
+        past LOCAL_DELETES_MAX still runs. Id 99 was never ingested."""
+        from veloci_spark.streaming import MultiIndex, delete_docs
+
+        root = clone_root(facet_root, str(tmp_path / "root"))
+        delete_docs(spark, root, [0, 5, 17, 20, 21, 30, 34, 99])
+        local = MultiIndex(spark, root)
+        monkeypatch.setattr(MultiIndex, "LOCAL_DELETES_MAX", -1)
+        agg = MultiIndex(spark, root)
+        assert local._del_set is not None and agg._del_set is None
+        assert local._seg_extra == agg._seg_extra == {
+            0: {0: 2, 1: 2}, 1: {1: 2, 2: 1}}
+        assert local.n_deletes == agg.n_deletes == 7
+
+    def test_mixed_tiers_match_spark(self, spark, facet_root, tmp_path,
+                                     monkeypatch):
+        """With LOCAL_TIER_MAX_POSTINGS between the two generations'
+        posting estimates (21 and 14 "spark" postings) one generation runs
+        locally and one on Spark; the answer is the all-Spark answer."""
+        from veloci_spark import search as S
+        from veloci_spark.streaming import MultiIndex, delete_docs
+
+        root = clone_root(facet_root, str(tmp_path / "root"))
+        delete_docs(spark, root, [1, 4, 22, 33])
+        mi = MultiIndex(spark, root)
+        tiers = []
+        choose = S._choose_tier
+
+        def recorded(*a, **k):
+            tier = choose(*a, **k)
+            tiers.append(tier[:2])
+            return tier
+
+        monkeypatch.setattr(S, "_choose_tier", recorded)
+        monkeypatch.setattr(S, "LOCAL_TIER_MAX_POSTINGS", 17)
+        mixed = mi.search(self.REQ)
+        assert sorted(tiers) == [("local", 14), ("spark", 21)]
+        monkeypatch.setattr(S, "LOCAL_TIER_MAX_POSTINGS", 0)
+        monkeypatch.setattr(S, "LOCAL_TIER_MAX_SCAN_BYTES", -1)
+        on_spark = mi.search(self.REQ)
+        for res in (mixed, on_spark):
+            res.pop("execution_time_ms")
+        assert mixed == on_spark
+        assert mixed["num_hits"] == 31 and len(mixed["data"]) == 6
+        assert not {d["doc_id"] for d in mixed["data"]} & {1, 4, 22, 33}
+
+    def test_composed_path_drops_tombstones(self, spark, facet_root,
+                                            tmp_path):
+        """A per-leg boost takes the composed path (on Spark): its
+        scored-leg kernels drop the tombstoned docs, so the answer is the
+        clean root's ranking minus them."""
+        from veloci_spark.streaming import MultiIndex, delete_docs
+
+        leg = {"search": {"terms": ["spark"], "path": "text", "options": {
+            "boost": [{"path": "doc_id", "boost_fun": "Log10",
+                       "param": 1.0}]}}}
+        tree = {"or": [leg, {"search": {"terms": ["batch"], "path": "text"}}]}
+        full = MultiIndex(spark, facet_root).search({**tree, "top": 100})
+        victims = {full["data"][0]["doc_id"], full["data"][3]["doc_id"], 30}
+        root = clone_root(facet_root, str(tmp_path / "root"))
+        delete_docs(spark, root, sorted(victims))
+        got = MultiIndex(spark, root).search({**tree, "top": 5, "skip": 1})
+        want = [(d["doc_id"], d["score"]) for d in full["data"]
+                if d["doc_id"] not in victims]
+        assert [(d["doc_id"], d["score"]) for d in got["data"]] == want[1:6]
+        assert got["num_hits"] == len(want) == 32
+
+    def test_no_spark_job(self, spark, facet_root, tmp_path):
+        """A tombstoned streamed index with a facet request runs no Spark
+        job once its handles hold their driver-side dictionaries and facet
+        maps (filled by the first request)."""
+        from veloci_spark.streaming import MultiIndex, delete_docs
+
+        root = clone_root(facet_root, str(tmp_path / "root"))
+        delete_docs(spark, root, [2, 23])
+        mi = MultiIndex(spark, root)
+        want = mi.search(self.REQ)
+        sc = spark.sparkContext
+        sc.setJobGroup("streamed-no-job", "streamed search")
+        try:
+            got = mi.search(self.REQ)
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "streamed-no-job")) == []
+        for res in (want, got):
+            res.pop("execution_time_ms")
+        assert got == want and got["num_hits"] == 33
+        assert sum(c for _v, c in got["facets"]["lang"]) == 33

@@ -15,8 +15,9 @@ touching that invariant: **log-structured generations**.
   assigned before the build via ``doc_id_col``, so they are stable across
   compactions).
 * Queries fan out over generations (:class:`MultiIndex`) — each
-  generation evaluates segment-locally exactly like a single index, and
-  candidates merge by the global (score DESC, doc_id DESC) order.
+  generation is one part of :mod:`veloci_spark.search`'s own search path
+  (planned, tiered and run exactly like a single index), and the parts
+  merge by the global (score DESC, doc_id DESC) order.
 * ``compact()`` rebuilds one generation from the union of all docs —
   Lucene's segment merge, expressed as a plain batch rebuild. After
   compaction term statistics (num_occurences) are globally exact again;
@@ -25,13 +26,14 @@ touching that invariant: **log-structured generations**.
 * ``delete_docs()`` tombstones global doc ids in an append-only
   ``deletes/`` parquet (Lucene's liveDocs bitmap, kept relational).
   Tombstoned docs disappear from :class:`MultiIndex` results immediately —
-  each generation's top-k is inflated by ITS tombstone count so a deleted
-  doc can never evict a live one from the truncated per-segment top-k,
-  and the merge anti-joins the tombstone set (distributed, never a driver
-  id list). ``compact()`` drops tombstoned docs physically and clears the
-  tombstones; an *update* is delete + re-ingest (the new version gets a
-  fresh global id — ids are never reused, ``id_hi`` tracks the high-water
-  mark across compactions).
+  the segment kernel drops each segment's tombstoned docs from the
+  candidates it emits and from its hit count, and each segment's top-k is
+  inflated by ITS tombstone count so a deleted doc can never evict a live
+  one from the truncated per-segment top-k. (A tombstone set too large
+  for the driver is anti-joined on Spark instead.) ``compact()`` drops
+  tombstoned docs physically and clears the tombstones; an *update* is
+  delete + re-ingest (the new version gets a fresh global id — ids are
+  never reused, ``id_hi`` tracks the high-water mark across compactions).
 
 Structured Streaming enters via ``index_stream``: ``readStream`` source →
 ``writeStream.foreachBatch(ingest into a new generation)`` with a
@@ -191,7 +193,8 @@ class MultiIndex:
 
     # tombstone sets up to this size are collected ONCE into a driver-side
     # frozenset so get_doc routing is a dict lookup, not a Spark job per
-    # call (ADVICE r3); larger sets stay distributed
+    # call (ADVICE r3), and the segment kernel drops them; larger sets stay
+    # distributed
     LOCAL_DELETES_MAX = 1_000_000
 
     def __init__(self, spark: SparkSession, root_dir: str):
@@ -202,57 +205,48 @@ class MultiIndex:
         self.gens = _read_gens(root_dir)
         self.indexes = [(g, FulltextIndex(spark, g["dir"])) for g in self.gens]
         self.deletes = _deletes_df(spark, root_dir)
-        # per-(generation, SEGMENT) tombstone counts (one aggregation job,
-        # ranges broadcast): each segment's top-k is inflated by ITS OWN
-        # tombstone count — not the generation-wide total — so a
-        # heavily-deleted index never blows up every segment's k
-        # (ADVICE r3: generation-wide inflation effectively disabled WAND
+        # per-(generation, SEGMENT) tombstone counts: each segment's top-k
+        # is inflated by ITS OWN tombstone count — not the generation-wide
+        # total — so a heavily-deleted index never blows up every segment's
+        # k (ADVICE r3: generation-wide inflation effectively disabled WAND
         # past a few thousand deletes)
         self._seg_extra: dict[int, dict[int, int]] = {}
         self._seg_deleted: dict[int, dict[int, "np.ndarray"]] = {}
-        self._del_counts: dict[int, int] = {}
         self._del_set: frozenset | None = frozenset()
         self.n_deletes = 0
         if self.deletes is not None and self.gens:
-            # one-shot cache: it serves exactly the two __init__ jobs below
-            # and is released before __init__ returns, so throwaway handles
-            # (should_compact probes) can't accumulate cached tombstone
-            # DataFrames (ADVICE r4). Search-time anti-joins re-read the
-            # small deletes parquet instead.
-            self.deletes.cache()
-            try:
-                self._load_tombstone_state(spark)
-            finally:
-                # released even when a job above fails — a throwaway handle
-                # whose __init__ raised must not leave a cached DataFrame
-                # behind (ADVICE r4)
-                self.deletes.unpersist()
+            self._load_tombstone_state(spark)
 
     def _load_tombstone_state(self, spark):
-        ranges = spark.createDataFrame(
-            [(g["gen"], g["base"], _gen_hi(g),
-              int(idx.manifest["segment_docs"]))
-             for g, idx in self.indexes],
-            "gen int, lo long, hi long, segd long")
-        d = self.deletes
-        rows = (d.join(F.broadcast(ranges),
-                       (d["doc_id"] >= ranges["lo"])
-                       & (d["doc_id"] < ranges["hi"]))
-                .groupBy("gen", F.floor(d["doc_id"] / F.col("segd"))
-                         .cast("int").alias("seg"))
-                .count().collect())
-        for r in rows:
-            self._seg_extra.setdefault(int(r["gen"]), {})[int(r["seg"])] \
-                = int(r["count"])
-        self._del_counts = {g: sum(v.values())
-                            for g, v in self._seg_extra.items()}
-        self.n_deletes = sum(self._del_counts.values())
-        if self.n_deletes <= self.LOCAL_DELETES_MAX:
-            self._del_set = frozenset(
-                r["doc_id"] for r in self.deletes.collect())
+        """One job collects the tombstones when they fit on the driver;
+        their per-segment split and counts follow in numpy. Past
+        LOCAL_DELETES_MAX one aggregation job counts them per segment
+        instead."""
+        ids = self.deletes.limit(self.LOCAL_DELETES_MAX + 1).toPandas()
+        if len(ids) <= self.LOCAL_DELETES_MAX:
+            self._del_set = frozenset(ids["doc_id"].tolist())
             self._build_seg_deleted()
+            self._seg_extra = {g: {s: len(v) for s, v in per.items()}
+                               for g, per in self._seg_deleted.items()}
         else:
             self._del_set = None  # too large: stay distributed
+            ranges = spark.createDataFrame(
+                [(g["gen"], g["base"], _gen_hi(g),
+                  int(idx.manifest["segment_docs"]))
+                 for g, idx in self.indexes],
+                "gen int, lo long, hi long, segd long")
+            d = self.deletes
+            rows = (d.join(F.broadcast(ranges),
+                           (d["doc_id"] >= ranges["lo"])
+                           & (d["doc_id"] < ranges["hi"]))
+                    .groupBy("gen", F.floor(d["doc_id"] / F.col("segd"))
+                             .cast("int").alias("seg"))
+                    .count().collect())
+            for r in rows:
+                self._seg_extra.setdefault(int(r["gen"]), {})[int(r["seg"])] \
+                    = int(r["count"])
+        self.n_deletes = sum(sum(per.values())
+                             for per in self._seg_extra.values())
 
     def _build_seg_deleted(self):
         """Per-(generation, segment) SEGMENT-RELATIVE tombstone ids, the
@@ -277,8 +271,7 @@ class MultiIndex:
             self._seg_deleted[g["gen"]] = per
 
     def close(self):
-        """Kept for API compatibility: since the tombstone cache became
-        one-shot (released inside __init__), there is nothing to free."""
+        """Kept for API compatibility: the handle caches nothing."""
 
     @property
     def n_docs(self) -> int:
@@ -301,177 +294,37 @@ class MultiIndex:
         return len(self.gens) > max_generations
 
     def search(self, request: dict) -> dict:
-        """Ranked search across generations: per-generation evaluation
-        (segment-local, unchanged), global (score DESC, doc_id DESC) merge.
-        Returns the reference result shape — data, num_hits, and (when
-        requested) facets / select / why_found, all merged across
-        generations.
+        """Ranked search across generations, the result shape of
+        :func:`veloci_spark.search.search` (without its plan-level
+        ``explain``): each generation is one part, planned, tiered and run
+        by the search path itself, and the parts merge by the global
+        (score DESC, doc_id DESC) order with exact live ``num_hits``.
 
-        num_hits is exact on EVERY path (VERDICT r4 #3): with no tombstones
-        it is the sum of the generations' exact per-segment counts; a full
-        evaluation (facets / why_found / exact_count / boost) counts the
-        materialized live hit set; truncated top-k under tombstones passes
-        each segment its own tombstone set (``_seg_deleted``) so the kernel
-        reports LIVE per-segment counts. Only when the tombstone set is too
-        large to hold on the driver (> LOCAL_DELETES_MAX) does exactness
-        cost an extra job — one untruncated count-only pass with a
-        distributed anti-join.
-        """
-        from veloci_spark.search import (_apply_anchor_boosts,
-                                         _apply_post_locality, _search_hits)
+        Each generation's segment kernel drops its tombstoned docs and
+        widens each segment's top-k by that segment's tombstone count, so
+        every count, facet and post-processing step sees live docs only, on
+        either tier. Only a tombstone set too large to hold on the driver
+        (> LOCAL_DELETES_MAX) never reaches the kernel: every generation
+        then runs untruncated on Spark, and a left-anti join against the
+        deletes parquet filters its hits before the merge counts them."""
+        from veloci_spark.search import (_finish_parts, _fused_facets,
+                                         _search_part)
 
         t_start = time.monotonic()
-        top = request.get("top", 10)
-        skip = request.get("skip", 0)
-        need_all = (bool(request.get("facets"))
-                    or bool(request.get("exact_count"))
-                    or bool(request.get("why_found"))
-                    or bool(request.get("boost")))
-        merged = None
-        gen_ctx = []  # (gen record, index, leaves) for select/why_found
-        emitted_all = True
-        for _g, idx in self.indexes:
-            gen_req = request
-            extra = self._seg_extra.get(_g["gen"])
-            sdel = self._seg_deleted.get(_g["gen"])
-            if extra or sdel:
-                # widen each segment's candidate set by ITS tombstone
-                # count: at most that many of the segment's top-k slots can
-                # be occupied by deleted docs, so k live candidates always
-                # survive the kernel truncation. The tombstone ids
-                # themselves ride along so the kernel's per-segment counts
-                # are live-exact even when it truncates (VERDICT r4 #3).
-                gen_req = {**request}
-                if extra:
-                    gen_req["_seg_top_extra"] = extra
-                if sdel:
-                    gen_req["_seg_deleted"] = sdel
-            hits, plan, leaves = _search_hits(idx, gen_req,
-                                              need_all=need_all,
-                                              count_hits=True)
-            # mirror search(): nested fields disable kernel locality and
-            # expect this post-pass — without it streamed nested indexes
-            # silently dropped the text_locality boost.
-            if plan.get("post_locality"):
-                hits = _apply_post_locality(idx, hits, leaves,
-                                            plan["scored_leaf_ids"])
-            hits = _apply_anchor_boosts(idx, hits, request, leaves)
-            emitted_all = emitted_all and plan.get("top") is None
-            gen_ctx.append((_g, idx, leaves))
-            merged = hits if merged is None else merged.unionByName(hits)
-        if merged is None:
-            return {"num_hits": 0, "num_hits_exact": True,
-                    "execution_time_ms":
-                        (time.monotonic() - t_start) * 1000.0,
-                    "data": []}
-
-        has_deletes = self.deletes is not None and self.n_deletes > 0
-        # cache the PARENT of both views: every job below (counts, ranking,
-        # facets) recomputes at most the cheap tombstone filter on top of
-        # it. try/finally so a failing job can't leak the cache (ADVICE r4).
-        merged = merged.cache()
-        try:
-            return self._finish_search(request, merged, gen_ctx, top, skip,
-                                       emitted_all, has_deletes, t_start)
-        finally:
-            merged.unpersist()
-
-    def _finish_search(self, request, merged, gen_ctx, top, skip,
-                       emitted_all, has_deletes, t_start):
-        import numpy as np
-
-        from veloci_spark.search import _search_hits, select_docs
-
-        if has_deletes:
-            # candidate rows were emitted BEFORE tombstone filtering; tiny
-            # tombstone sets stay a codegen'd NOT-IN (no second scan), the
-            # rest a left-anti join against the deletes parquet
-            if self._del_set is not None and len(self._del_set) <= 1_000:
-                live = merged.where(
-                    ~F.col("doc_id").isin([int(i) for i in self._del_set]))
-            else:
-                live = merged.join(self.deletes, on="doc_id", how="left_anti")
-        else:
-            live = merged
-        if emitted_all:
-            num_hits = live.count()  # full live hit set: exact
-            exact = True
-        elif not has_deletes or self._del_set is not None:
-            # per-segment counts from the kernel — live-exact: either no
-            # tombstones at all, or the kernel subtracted each segment's
-            # tombstoned hits via _seg_deleted (VERDICT r4 #3)
-            num_hits = int(merged.agg(F.sum("seg_hits")).first()[0] or 0)
-            exact = True
-        else:
-            # > LOCAL_DELETES_MAX tombstones: the kernel never saw the set,
-            # so buy exactness with one untruncated count-only pass (doc
-            # ranges are disjoint across segments and generations — rows
-            # are distinct docs, a bare count suffices). An index this
-            # tombstone-heavy is already past should_compact().
-            full = None
-            for _g, idx, _l in gen_ctx:
-                h, _p, _ = _search_hits(idx, request, need_all=True)
-                full = h if full is None else full.unionByName(h)
-            num_hits = (full.join(self.deletes, on="doc_id", how="left_anti")
-                        .count())
-            exact = True
-        ranked = live.orderBy(F.desc("score"), F.desc("doc_id")) \
-            .limit(top + skip).collect()[skip:]
-        out = {
-            "num_hits": num_hits,
-            "num_hits_exact": exact,
-            "execution_time_ms": (time.monotonic() - t_start) * 1000.0,
-            "data": [{"doc_id": r["doc_id"],
-                      "score": float(np.float32(r["score"]))} for r in ranked],
-        }
-        facet_specs = request.get("facets") or []
-        if facet_specs:
-            # per-generation value sources unioned (doc ids are global), the
-            # live hit set broadcast when small — counts merge by SUM per
-            # value across generations, then global (count DESC, value ASC)
-            bhits = live.select("doc_id")
-            if num_hits <= 1_000_000:
-                bhits = F.broadcast(bhits)
-            facets = {}
-            for spec in facet_specs:
-                fld = spec["field"]
-                ftop = spec.get("top", 10)
-                src = None
-                for _g, idx, _l in gen_ctx:
-                    if fld in idx.values:
-                        part = idx.values[fld].select(
-                            "doc_id", F.col("value").alias("_fv"))
-                    else:
-                        part = idx.docs.select("doc_id",
-                                               F.col(fld).alias("_fv"))
-                    src = part if src is None else src.unionByName(part)
-                fc = (src.join(bhits, on="doc_id")
-                      .groupBy("_fv").count()
-                      .orderBy(F.desc("count"), F.asc("_fv"))
-                      .limit(ftop).collect())
-                facets[fld] = [(r["_fv"], r["count"]) for r in fc]
-            out["facets"] = facets
-        if request.get("select"):
-            ids = [d["doc_id"] for d in out["data"]]
-            by_id: dict[int, dict] = {}
-            for _g, idx, _l in gen_ctx:
-                ids_g = [i for i in ids if _g["base"] <= i < _gen_hi(_g)]
-                if ids_g:
-                    by_id.update(select_docs(idx, ids_g, request["select"]))
-            for d in out["data"]:
-                d["doc"] = by_id.get(d["doc_id"], {})
-        if request.get("why_found"):
-            from veloci_spark.highlight import why_found as _why
-
-            ids = [d["doc_id"] for d in out["data"]]
-            wf: dict[int, dict] = {}
-            for _g, idx, leaves in gen_ctx:
-                ids_g = [i for i in ids if _g["base"] <= i < _gen_hi(_g)]
-                if ids_g:
-                    wf.update(_why(idx, ids_g, leaves))
-            for d in out["data"]:
-                d["why_found"] = wf.get(d["doc_id"], {})
-        return out
+        fused = _fused_facets([idx for _g, idx in self.indexes], request)
+        distributed = self._del_set is None
+        parts = []
+        for g, idx in self.indexes:
+            part = _search_part(
+                idx, request, fused, g["base"], _gen_hi(g),
+                filtered=distributed,
+                seg_top_extra=self._seg_extra.get(g["gen"]),
+                seg_deleted=self._seg_deleted.get(g["gen"]))
+            if distributed:
+                part = part._replace(hits=part.hits.join(
+                    self.deletes, on="doc_id", how="left_anti"))
+            parts.append(part)
+        return _finish_parts(request, parts, fused, t_start)
 
     def suggest(self, field: str, prefix: str, *, top: int = 10,
                 levenshtein: int = 0) -> list:
@@ -485,10 +338,9 @@ class MultiIndex:
         term_id: term_ids are per-generation dictionary ranks and not
         comparable across generations, so a term_id tie-break would make
         the order depend on generation layout (ADVICE r4)."""
-        import numpy as np
         import pandas as pd
 
-        from veloci_spark.search import match_terms
+        from veloci_spark.search import _suggestions, match_terms
 
         frames = [match_terms(idx, field, prefix, levenshtein=levenshtein,
                               starts_with=True)
@@ -502,8 +354,7 @@ class MultiIndex:
                              kind="mergesort").drop_duplicates("lower")
         best = best.sort_values(["score", "lower"],
                                 ascending=[False, True], kind="mergesort")
-        return [(r["lower"], float(np.float32(r["score"])))
-                for _, r in best.head(top).iterrows()]
+        return _suggestions(best.head(top))
 
     def get_doc(self, doc_id: int, columns=None):
         """Route a global doc id to its generation; tombstoned ids resolve
