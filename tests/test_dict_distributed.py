@@ -65,7 +65,7 @@ class TestDistributedDict:
                               dist["score"].values.astype(np.float32))
 
     def test_hot_shapes_free_of_python_eval(self, dist_index):
-        from veloci_spark.search import _dict_candidates
+        from veloci_spark.search import _jvm_match_pred, _match_spec
 
         d = dist_index.dict_df.where(F.col("field") == "text")
         hot = [
@@ -84,9 +84,9 @@ class TestDistributedDict:
                  ("Majestat", None, 1, False, False),
                  ("Majes", None, 0, True, False)]]
         for term, lower, d_auto, sw, rx, *ic in hot:
-            cand = _dict_candidates(d, term, lower, max(len(lower), 1),
-                                    d_auto, sw, rx,
-                                    ic[0] if ic else True)
+            cand = d.where(_jvm_match_pred(F.col("term"), _match_spec(
+                term, levenshtein=d_auto, starts_with=sw, is_regex=rx,
+                ignore_case=ic[0] if ic else True)))
             plan = cand._jdf.queryExecution().executedPlan().toString()
             assert "EvalPython" not in plan and "pythonUDF" not in plan, \
                 (term, plan)
@@ -99,7 +99,7 @@ class TestDistributedDict:
         import random
 
         from veloci_spark import pyref
-        from veloci_spark.search import _jvm_match_pred
+        from veloci_spark.search import _jvm_match_pred, _match_spec
 
         rng = random.Random(7)
         vals = ["".join(rng.choice("abcx") for _ in range(rng.randint(0, 8)))
@@ -107,8 +107,8 @@ class TestDistributedDict:
         df = spark.createDataFrame([(v,) for v in vals], "term string")
         for q in ["abca", "xab", "abcabc"]:
             for d in (1, 2):
-                pred = _jvm_match_pred(F.col("term"), q, q, len(q), d,
-                                       True, False)
+                pred = _jvm_match_pred(F.col("term"), _match_spec(
+                    q, levenshtein=d, starts_with=True))
                 got = sorted(r["term"] for r in df.where(pred).collect())
                 want = sorted(v for v in vals
                               if pyref._prefix_lev(v.lower(), q) <= d)

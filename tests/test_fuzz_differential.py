@@ -125,9 +125,9 @@ def _tree_strategy(vocab):
         leaf,
         lambda children: st.one_of(
             st.builds(lambda kids: {"or": kids},
-                      st.lists(children, min_size=2, max_size=3)),
+                      st.lists(children, min_size=1, max_size=3)),
             st.builds(lambda kids: {"and": kids},
-                      st.lists(children, min_size=2, max_size=3)),
+                      st.lists(children, min_size=1, max_size=3)),
         ),
         max_leaves=4,
     )

@@ -478,7 +478,7 @@ def test_facet_path_ranking_matches_plain_path(spark_index):
 
 def test_facet_fused_matches_join_path(spark_index, monkeypatch):
     # the fused single-job facet kernel (driver-resident doc→value map,
-    # _partition_topk_facets_factory) and the Spark-join fallback must
+    # _partition_topk_factory's facet_maps) and the Spark-join fallback must
     # produce identical counts, ordering, truncation, ranking, and num_hits
     from veloci_spark import search as S
 
@@ -540,6 +540,37 @@ def test_request_cannot_set_tombstone_inputs(spark_index):
         for res in (plain, keyed):
             res.pop("execution_time_ms")
         assert keyed == plain
+
+
+# a one-child OR/AND scores as its child (eval_tree, pyref's union_score /
+# intersect_score); the planner gives it the single-leaf WAND path
+ONE_CHILD_LEAVES = [
+    {"terms": ["die"], "path": "text"},
+    {"terms": ["majes"], "path": "text", "starts_with": True},
+]
+
+
+def _check_one_child_nodes(index, ref_index):
+    from veloci_spark.search import search
+
+    for leaf in ONE_CHILD_LEAVES:
+        plain = search(index, {"search": leaf, "top": 3})
+        assert plain["num_hits"] > 0
+        for op in ("and", "or"):
+            req = {op: [{"search": leaf}], "top": 3}
+            got = search(index, req)
+            assert got["data"] == plain["data"], req
+            assert got["num_hits"] == plain["num_hits"], req
+            _check_request(index, ref_index, req)
+
+
+def test_one_child_node_scores_as_child(spark_index, ref_index):
+    _check_one_child_nodes(spark_index, ref_index)
+
+
+def test_one_child_node_scores_as_child_spark_tier(spark_index, ref_index,
+                                                   spark_tier):
+    _check_one_child_nodes(spark_index, ref_index)
 
 
 class TestResumeValidation:

@@ -368,7 +368,6 @@ def _num_hits_with_deletes(spark, root):
     assert exact["num_hits_exact"] and exact["num_hits"] == 18
     # per-SEGMENT tombstone accounting (ADVICE r3): only the victims'
     # segment is inflated (segment_docs=16 -> ids 0,1 live in segment 0)
-    assert mi._seg_extra == {0: {0: 2}}
     assert {g: {s: list(v) for s, v in per.items()}
             for g, per in mi._seg_deleted.items()} == {0: {0: [0, 1]}}
     # all three kernel paths subtract tombstoned hits from their counts
@@ -512,9 +511,9 @@ class TestStreamedTiers:
 
     def test_tombstone_state_matches_aggregation(self, spark, facet_root,
                                                  tmp_path, monkeypatch):
-        """The driver derives the per-segment tombstone counts from the
-        collected ids; they equal the aggregation job's, which only a set
-        past LOCAL_DELETES_MAX still runs. Id 99 was never ingested."""
+        """The driver splits the collected tombstone ids per segment; the
+        count job, which only a set past LOCAL_DELETES_MAX still runs,
+        counts as many. Id 99 was never ingested."""
         from veloci_spark.streaming import MultiIndex, delete_docs
 
         root = clone_root(facet_root, str(tmp_path / "root"))
@@ -523,8 +522,10 @@ class TestStreamedTiers:
         monkeypatch.setattr(MultiIndex, "LOCAL_DELETES_MAX", -1)
         agg = MultiIndex(spark, root)
         assert local._del_set is not None and agg._del_set is None
-        assert local._seg_extra == agg._seg_extra == {
-            0: {0: 2, 1: 2}, 1: {1: 2, 2: 1}}
+        assert {g: {s: list(v) for s, v in per.items()}
+                for g, per in local._seg_deleted.items()} == {
+            0: {0: [0, 5], 1: [1, 4]}, 1: {1: [5, 14], 2: [2]}}
+        assert agg._seg_deleted == {}
         assert local.n_deletes == agg.n_deletes == 7
 
     def test_mixed_tiers_match_spark(self, spark, facet_root, tmp_path,

@@ -57,7 +57,6 @@ class IndexConfig:
     fields: tuple[FieldConfig, ...] = (FieldConfig("text"),)
     doc_id_col: Optional[str] = None   # pre-existing doc id column, else derived
     order_col: str = "url"             # column whose global sort order defines doc_id
-    num_segments: int = 0              # 0 → derived from input partitions
     segment_docs: int = 1 << 20        # target docs per segment at scale
     posting_block_docs: int = 4096     # max docs per packed posting block
     # index-time score formula packed into the postings:

@@ -33,7 +33,7 @@ def _doc_leaf_entries(index, leaves, doc_ids):
     import pandas as pd
 
     from veloci_spark.search import (IDENTITY_STORED, _identity_scores,
-                                     _stored_to_f32)
+                                     _match_spec, _stored_to_f32)
     from veloci_spark.vbyte import unpack_postings
 
     # bm25 indexes skip the f16 read quantization in the kernel
@@ -82,25 +82,13 @@ def _doc_leaf_entries(index, leaves, doc_ids):
     for leaf in leaves:
         if leaf.matched is not None:
             continue
-        fc = index.fields[leaf.field]
         rows = index.read_docs(doc_ids, ["doc_id", leaf.field])
-        ignore_case = leaf.opts.get("ignore_case", True)
-        lower = leaf.term.lower() if ignore_case else leaf.term
-        n_chars = max(len(lower), 1)
-        d_auto = min(leaf.opts.get("levenshtein", 0), n_chars - 1, 4)
-        check_prefix = (leaf.opts.get("starts_with", False)
-                        or leaf.opts.get("levenshtein", 0) != 0)
-        vals = np.array([r[leaf.field] for r in rows], dtype=object)
-        fin = _identity_scores(vals, lower, leaf.term, n_chars,
-                               d_auto, check_prefix,
-                               leaf.opts.get("starts_with", False),
-                               leaf.opts.get("is_regex", False),
-                               ignore_case)
-        for d, v, s in zip([r["doc_id"] for r in rows], vals, fin):
-            if not np.isnan(s):
-                ts = float(s / (np.float16(IDENTITY_STORED).astype(_F32) / _F32(100.0)))
-                out.setdefault((int(d), leaf.leaf_id), []).append(
-                    (v, ts, IDENTITY_STORED, float(s)))
+        pos, fin = _identity_scores(_match_spec(leaf.term, **leaf.opts),
+                                    [r[leaf.field] for r in rows])
+        for i, s in zip(pos, fin):
+            ts = float(s / (np.float16(IDENTITY_STORED).astype(_F32) / _F32(100.0)))
+            out.setdefault((int(rows[i]["doc_id"]), leaf.leaf_id), []).append(
+                (rows[i][leaf.field], ts, IDENTITY_STORED, float(s)))
     return out
 
 

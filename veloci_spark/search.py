@@ -7,10 +7,15 @@ doc-partitioned segments, in four steps:
 
 1. *Plan* (:func:`_plan_search`, no Spark job) — the request tree is
    parsed, every leaf is matched against the sorted term dictionary
-   (exact filter / length-banded vectorized Levenshtein / prefix / regex;
-   driver-side for dictionaries up to LOCAL_DICT_MAX_TERMS), and the
-   whole tree (boolean ops, filters, boosts) plus the matched
-   (field, term_id, leaf_id, term_score) rows become a small plan dict.
+   (exact / length-banded vectorized Levenshtein / prefix / prefix-fuzzy
+   / regex) by one driver-side selection (:func:`_select`) and one
+   scoring tail (:func:`_matches`). Its values come from the driver-side
+   dictionary (up to LOCAL_DICT_MAX_TERMS terms) or, for the two
+   Spark-side sources — a larger dictionary and an identity column's doc
+   store — from a capped collect behind a whole-stage-codegen pre-filter
+   (:func:`_jvm_match_pred`). The whole tree (boolean ops, filters,
+   boosts) plus the matched (field, term_id, leaf_id, term_score) rows
+   become a small plan dict.
 2. *Segment kernel* (:func:`_segment_kernel_factory`) — postings rows for
    the matched term_ids (``field``/``term_id`` predicates) are grouped by
    segment and the **entire** request tree is evaluated per segment with
@@ -23,13 +28,12 @@ doc-partitioned segments, in four steps:
    Plain top-k plans prune posting rows WAND-style. Each segment emits
    its top (top+skip) hits plus its exact hit count (or its full hit set
    when facets / why-found / boosts need it).
-3. *Partition pre-merge* (:func:`_partition_topk_factory`,
-   :func:`_partition_topk_facets_factory`) — one narrow pass per
-   partition keeps its k best rows by (score DESC, doc_id DESC), the
-   required tie-break (reference src/search.rs:128-135), sums the
-   exact counts and, for fused facets, counts facet values from
-   driver-resident doc→value maps; the driver merges partitions × (k+1)
-   rows.
+3. *Partition pre-merge* (:func:`_partition_topk_factory`) — one
+   narrow pass per partition keeps its k best rows by (score DESC,
+   doc_id DESC), the required tie-break (reference
+   src/search.rs:128-135), sums the exact counts and, for fused facets,
+   counts facet values from driver-resident doc→value maps; the driver
+   merges partitions × (k+1) rows.
 4. *Post-processing* — select, snippets, why-found, explain: bounded
    reads of the result docs (:meth:`FulltextIndex.read_docs`) and of
    their segments' posting / phrase rows (``read_postings``,
@@ -80,6 +84,7 @@ parity with the reference formulas; the pure-Python model in
 from __future__ import annotations
 
 import os
+import re
 import threading
 import time
 from functools import reduce
@@ -417,6 +422,36 @@ def _arrow_rows(table, schema: T.StructType) -> list:
 # term matching (Q1–Q4) — semantics documented at pyref.RefIndex.match_terms
 
 
+class _MatchSpec(NamedTuple):
+    """One dictionary leaf, normalized once (:func:`_match_spec`).
+    ``lower`` is the query as compared: folded when ``ignore_case``, raw
+    otherwise (reference RequestSearchPart.ignore_case,
+    search_field.rs:75,87-88)."""
+
+    term: str
+    lower: str
+    n_chars: int
+    d_auto: int
+    check_prefix: bool
+    starts_with: bool
+    is_regex: bool
+    ignore_case: bool
+    top: "int | None"
+    skip: int
+
+
+def _match_spec(term: str, *, levenshtein: int = 0, starts_with: bool = False,
+                is_regex: bool = False, top: "int | None" = None,
+                skip: int = 0, ignore_case: bool = True) -> _MatchSpec:
+    """A leaf's match options (the keyword arguments of
+    :func:`match_terms`, a leaf's ``opts``), normalized once."""
+    lower = term.lower() if ignore_case else term
+    n_chars = max(len(lower), 1)
+    return _MatchSpec(term, lower, n_chars, min(levenshtein, n_chars - 1, 4),
+                      starts_with or levenshtein != 0, starts_with, is_regex,
+                      ignore_case, top, skip)
+
+
 def match_terms(index: FulltextIndex, field: str, term: str, *,
                 levenshtein: int = 0, starts_with: bool = False,
                 is_regex: bool = False, top: int | None = None,
@@ -428,60 +463,107 @@ def match_terms(index: FulltextIndex, field: str, term: str, *,
     (reference RequestSearchPart.ignore_case, search_field.rs:87-88)
     matches raw against raw; regex sensitivity is scoped in-pattern
     upstream, so the flag only affects plain/fuzzy/prefix shapes here.
+
+    Three sources, one selection (:func:`_select`) and one scoring tail
+    (:func:`_matches`): the driver-side dictionary (up to
+    LOCAL_DICT_MAX_TERMS terms), the distributed dictionary, and an
+    identity column, whose doc store is the dictionary (term_id ≡ doc_id).
+    On the two Spark-side sources :func:`_jvm_match_pred` is a
+    whole-stage-codegen pre-filter and the capped collect of its rows is
+    selected again in Python, so every source matches as the driver
+    dictionary does.
     """
-    lower = term.lower() if ignore_case else term
-    n_chars = max(len(lower), 1)
-    d_auto = min(levenshtein, n_chars - 1, 4)
-    check_prefix = starts_with or levenshtein != 0
+    spec = _match_spec(term, levenshtein=levenshtein, starts_with=starts_with,
+                       is_regex=is_regex, top=top, skip=skip,
+                       ignore_case=ignore_case)
+    identity = index.fields.get(field, {}).get("identity")
+    rows = None if identity else index.local_dict(field)
+    if rows is not None:
+        # the precomputed lower column: no query folds the whole dictionary
+        folded = rows["lower" if ignore_case else "term"].values
+    else:
+        if identity:
+            cand = _identity_candidates(index, field, spec).toDF("term_id",
+                                                                 "term")
+        else:
+            cand = index.dict_df.where((F.col("field") == field)
+                                       & _jvm_match_pred(F.col("term"), spec))
+        # cap the driver collect: a match-everything regex over a
+        # >2M-term dictionary (or a corpus-sized identity column) must not
+        # stream it to the driver. Past the cap, the LOWEST term_ids win
+        # (orderBy before limit → TakeOrderedAndProject, a bounded
+        # per-partition top-N): deterministic across runs and cluster
+        # layouts, unlike a bare limit() whose surviving subset is
+        # Spark-placement-dependent. Documented approximation; the per-leaf
+        # `top` truncation keeps at most top+skip anyway.
+        rows = (cand.select("term", "term_id").orderBy("term_id")
+                .limit(100_000).toPandas())
+        folded = None
+    pos, dist, prefix = _select(spec, rows["term"].values, folded)
+    return _matches(spec, rows["term"].values[pos],
+                    rows["term_id"].values[pos], dist, prefix)
 
-    if index.fields.get(field, {}).get("identity"):
-        return _match_identity(index, field, term, lower, n_chars, d_auto,
-                               check_prefix, starts_with, is_regex, levenshtein,
-                               top, skip, ignore_case=ignore_case)
 
-    local = index.local_dict(field)
-    if local is not None:
-        return _match_terms_local(local, lower, n_chars, d_auto, check_prefix,
-                                  term, starts_with, is_regex, top, skip,
-                                  ignore_case)
+def _select(spec: _MatchSpec, raw, folded=None):
+    """The driver-side term selection, for every match source: the
+    positions of the ``raw`` values that ``spec`` selects, with their edit
+    distances and prefix flags. ``folded`` holds the values as compared
+    (lower-cased when the match ignores case): the driver dictionary
+    passes its precomputed column, whose terms are never None; without it
+    the values are folded here and a None value never matches. A regex
+    runs on the raw values, IGNORECASE (a case-sensitive one carries
+    ``(?-i:…)``)."""
+    raw = np.asarray(raw, dtype=object)
+    if folded is None:
+        pos = np.flatnonzero(np.not_equal(raw, None))
+        raw = raw[pos]
+        folded = (np.array([v.lower() for v in raw], dtype=object)
+                  if spec.ignore_case else raw)
+    else:
+        pos = np.arange(len(raw))
+        folded = np.asarray(folded, dtype=object)
+    q, d, n = spec.lower, spec.d_auto, len(raw)
+    if spec.is_regex:
+        rx = re.compile(spec.term, re.IGNORECASE)
+        fn = rx.match if spec.starts_with else rx.fullmatch
+        sel = np.fromiter((fn(v) is not None for v in raw), bool, n)
+    elif spec.starts_with and d:
+        sel = np.fromiter((pyref._prefix_lev(s, q) <= d for s in folded),
+                          bool, n)
+    elif spec.starts_with:
+        sel = np.fromiter((s.startswith(q) for s in folded), bool, n)
+    elif d == 0:
+        sel = folded == q
+    else:
+        lens = np.fromiter(map(len, folded), np.int64, n)
+        band = np.flatnonzero(np.abs(lens - spec.n_chars) <= d)
+        sel = np.zeros(n, dtype=bool)
+        sel[band] = levenshtein_batch(list(folded[band]), q, d) <= d
+    hit = folded[sel]
+    dist = np.where(hit == q, 0,
+                    levenshtein_batch(list(hit), q, 254)).astype(np.int64)
+    prefix = np.fromiter((spec.check_prefix and s.startswith(q) for s in hit),
+                         bool, len(hit))
+    return pos[sel], dist, prefix
 
-    cand = _dict_candidates(index.dict_df.where(F.col("field") == field),
-                            term, lower, n_chars, d_auto, starts_with,
-                            is_regex, ignore_case)
 
-    # cap the driver collect (same 100k bound as the identity path): a
-    # match-everything regex over a >2M-term dictionary must not stream the
-    # whole dictionary to the driver. Past the cap, matched terms with the
-    # LOWEST term_ids win (orderBy before limit → TakeOrderedAndProject, a
-    # bounded per-partition top-N): deterministic across runs and cluster
-    # layouts, unlike a bare limit() whose surviving subset is
-    # Spark-placement-dependent. Documented approximation; the per-leaf
-    # `top` truncation below keeps at most top+skip anyway.
-    dict_match_cap = 100_000
-    rows = (cand.select("term", "term_id").orderBy("term_id")
-            .limit(dict_match_cap).toPandas())
-    if rows.empty:
-        return pd.DataFrame(columns=["term", "term_id", "distance", "prefix", "score"])
-    tl = rows["term"].str.lower() if ignore_case else rows["term"]
-    dist = np.where(tl.values == lower, 0,
-                    levenshtein_batch(list(tl.values), lower, 254)).astype(np.int64)
-    prefix = np.array([check_prefix and s.startswith(lower) for s in tl.values], dtype=bool)
-    score = term_score(dist, prefix)
-    out = pd.DataFrame({"term": rows["term"].values, "term_id": rows["term_id"].values,
-                        "distance": dist, "prefix": prefix, "score": score})
-    if top is not None:
-        # matched-term truncation (search_field.rs:292-331,373-376)
+def _matches(spec: _MatchSpec, terms, term_ids, dist, prefix) -> pd.DataFrame:
+    """The scoring tail of every match source: each selected term's
+    term_score, then the leaf's matched-term ``top`` cut by (score,
+    term_id) DESC (search_field.rs:292-331,373-376)."""
+    out = pd.DataFrame({"term": terms, "term_id": term_ids, "distance": dist,
+                        "prefix": prefix, "score": term_score(dist, prefix)})
+    if spec.top is not None:
         out = out.sort_values(["score", "term_id"], ascending=[False, False],
-                              kind="mergesort").head(top + skip)
+                              kind="mergesort").head(spec.top + spec.skip)
     return out.reset_index(drop=True)
 
 
-def _jvm_match_pred(col, term: str, lower: str, n_chars: int, d_auto: int,
-                    starts_with: bool, is_regex: bool,
-                    ignore_case: bool = True):
-    """Whole-stage-codegen selection predicate implementing the dictionary
-    match semantics over a string Column. Covers EVERY match shape — no
-    interpreted per-key fallback remains (VERDICT r4 "what's missing" #2).
+def _jvm_match_pred(col, spec: _MatchSpec):
+    """Whole-stage-codegen pre-filter of the dictionary match over a string
+    Column, on EVERY match shape — no interpreted per-key evaluation (the
+    reference intersects an automaton with its FST, search_field.rs:68-99).
+    The rows it passes are selected again by :func:`_select`, which decides.
 
     * regex → anchored ``rlike``: ``(?iu)`` reproduces the Python-path
       ``re.IGNORECASE`` (Unicode) compile; ``^(?:…)`` ≡ ``re.match``,
@@ -501,16 +583,16 @@ def _jvm_match_pred(col, term: str, lower: str, n_chars: int, d_auto: int,
       its own prefixes — no false positives possible, every conjunct tests
       a genuine prefix).
 
-    ``ignore_case=False`` (reference ignore_case=Some(false),
-    search_field.rs:75,87-88: the automaton folds case only when asked)
-    compares the raw column against the raw query — ``lower`` is then the
-    UNFOLDED query term.
+    ``ignore_case=False`` compares the raw column against the raw query
+    (``spec.lower`` is then the unfolded term).
     """
-    if is_regex:
-        jpat = "(?iu)^(?:" + term + ")" + ("" if starts_with else "\\z")
+    lower, n_chars, d_auto = spec.lower, spec.n_chars, spec.d_auto
+    if spec.is_regex:
+        jpat = ("(?iu)^(?:" + spec.term + ")"
+                + ("" if spec.starts_with else "\\z"))
         return col.rlike(jpat)
-    low = F.lower(col) if ignore_case else col
-    if starts_with:
+    low = F.lower(col) if spec.ignore_case else col
+    if spec.starts_with:
         if d_auto == 0:
             return low.startswith(F.lit(lower))
         pred = None
@@ -528,180 +610,27 @@ def _jvm_match_pred(col, term: str, lower: str, n_chars: int, d_auto: int,
     )
 
 
-def _dict_candidates(d: DataFrame, term: str, lower: str, n_chars: int,
-                     d_auto: int, starts_with: bool, is_regex: bool,
-                     ignore_case: bool = True) -> DataFrame:
-    """Candidate selection on the DISTRIBUTED dictionary — JVM built-ins
-    on EVERY shape (VERDICT r3 #2 / r4 missing #2: the reference's
-    automaton∩FST, search_field.rs:68-99, never runs per-key interpreted
-    code; neither do we). Exact/fuzzy/prefix/prefix-fuzzy/regex all stay
-    inside whole-stage codegen (:func:`_jvm_match_pred`).
-
-    Score-side distances are recomputed on the ≤100k collected matches with
-    the same numpy DP the local path uses, so ranks are path-identical.
-    """
-    return d.where(_jvm_match_pred(F.col("term"), term, lower, n_chars,
-                                   d_auto, starts_with, is_regex, ignore_case))
+def _identity_candidates(index: FulltextIndex, field: str,
+                         spec: _MatchSpec) -> DataFrame:
+    """(doc_id, value) rows of an identity column that can match ``spec``:
+    non-null values within the field's store cutoff that pass
+    :func:`_jvm_match_pred`. The doc store is the dictionary here, so the
+    scan runs distributed and only the pre-filtered rows reach Python (the
+    reference's identity shortcut, search_field.rs:471-479)."""
+    return (index.docs.select("doc_id", F.col(field).alias("value"))
+            .where(F.col("value").isNotNull()
+                   & (F.octet_length("value")
+                      <= index.fields[field]["max_text_store_bytes"])
+                   & _jvm_match_pred(F.col("value"), spec)))
 
 
-def _identity_selection(values, lower: str, term: str, n_chars: int,
-                        d_auto: int, check_prefix: bool, starts_with: bool,
-                        is_regex: bool, ignore_case: bool = True):
-    """Selection mask + distances + prefix flags for identity-field values —
-    the exact dictionary-match semantics of pyref.RefIndex.match_terms,
-    applied to the raw column values (which ARE the dictionary terms).
-    ``ignore_case=False`` compares raw values against the raw query
-    (``lower`` is then unfolded)."""
-    import re as _re
-
-    vals = np.asarray(values, dtype=object)
-    if ignore_case:
-        low = np.array([v.lower() if v is not None else "" for v in vals],
-                       dtype=object)
-    else:
-        low = np.array([v if v is not None else "" for v in vals], dtype=object)
-    if is_regex:
-        rx = _re.compile(term, _re.IGNORECASE)
-        if starts_with:
-            sel = np.array([v is not None and rx.match(v) is not None
-                            for v in vals], dtype=bool)
-        else:
-            sel = np.array([v is not None and rx.fullmatch(v) is not None
-                            for v in vals], dtype=bool)
-    elif starts_with:
-        if d_auto == 0:
-            sel = np.array([s.startswith(lower) for s in low], dtype=bool)
-        else:
-            sel = np.array([pyref._prefix_lev(s, lower) <= d_auto for s in low],
-                           dtype=bool)
-    elif d_auto == 0:
-        sel = np.array([s == lower for s in low], dtype=bool)
-    else:
-        lens = np.array([len(s) for s in low])
-        sel = np.abs(lens - n_chars) <= d_auto
-        if sel.any():
-            c = np.flatnonzero(sel)
-            d = levenshtein_batch([low[i] for i in c], lower, d_auto)
-            sel[c] = d <= d_auto
-    dist = np.zeros(len(vals), dtype=np.int64)
-    prefix = np.zeros(len(vals), dtype=bool)
-    if sel.any():
-        c = np.flatnonzero(sel)
-        sub = [low[i] for i in c]
-        dist[c] = np.where(np.array([s == lower for s in sub]), 0,
-                           levenshtein_batch(sub, lower, 254))
-        prefix[c] = [check_prefix and s.startswith(lower) for s in sub]
-    return sel, dist, prefix
-
-
-def _identity_scores(values, lower, term, n_chars, d_auto, check_prefix,
-                     starts_with, is_regex, ignore_case=True) -> np.ndarray:
-    """Per-value final f32 score (NaN = not selected): term_score ×
-    f16(IDENTITY_STORED)/100."""
-    sel, dist, prefix = _identity_selection(values, lower, term, n_chars,
-                                            d_auto, check_prefix, starts_with,
-                                            is_regex, ignore_case)
+def _identity_scores(spec: _MatchSpec, values):
+    """Positions of the identity ``values`` that ``spec`` selects and their
+    f32 final scores: term_score × f16(IDENTITY_STORED)/100."""
+    pos, dist, prefix = _select(spec, values)
     ts = term_score(dist, prefix)
-    fin = (ts * (np.float16(IDENTITY_STORED).astype(_F32) / _F32(100.0))).astype(_F32)
-    return np.where(sel, fin, np.float32("nan")).astype(_F32)
-
-
-def _match_identity(index: FulltextIndex, field: str, term: str, lower: str,
-                    n_chars: int, d_auto: int, check_prefix: bool,
-                    starts_with: bool, is_regex: bool, levenshtein: int,
-                    top: int | None, skip: int,
-                    cap: int = 100_000, ignore_case: bool = True) -> pd.DataFrame:
-    """Dictionary-style match against an identity column: the doc store is
-    scanned (selection runs distributed), matches are collected capped.
-    term_id ≡ doc_id for the order column (the identity).
-
-    Selection is the whole-stage-codegen predicate of :func:`_jvm_match_pred`
-    on EVERY shape (VERDICT r4 #1: the reference's identity shortcut,
-    /root/reference/src/search/search_field.rs:471-479, avoids work — a
-    per-value Python scan over the doc store paid a corpus-wide interpreted
-    pass per query leaf). Python re-scores the ≤cap collected matches only.
-    Past the cap, the LOWEST doc_ids win (TakeOrderedAndProject) —
-    deterministic across runs, mirroring the dictionary path's
-    lowest-term_id-wins rule."""
-    fc = index.fields[field]
-    sel = _jvm_match_pred(F.col("value"), term, lower, n_chars, d_auto,
-                          starts_with, is_regex, ignore_case)
-    rows = (
-        index.docs.select("doc_id", F.col(field).alias("value"))
-        .where(F.col("value").isNotNull())
-        .where(F.octet_length("value") <= fc["max_text_store_bytes"])
-        .where(sel)
-        .orderBy("doc_id")
-        .limit(cap)
-        .toPandas()
-    )
-    if rows.empty:
-        return pd.DataFrame(columns=["term", "term_id", "distance", "prefix", "score"])
-    sel_py, dist, prefix = _identity_selection(rows["value"].values, lower,
-                                               term, n_chars, d_auto,
-                                               check_prefix, starts_with,
-                                               is_regex, ignore_case)
-    if not sel_py.all():
-        # JVM/Python semantics can diverge on exotic patterns (e.g. Java
-        # character-class intersection) — the Python selection stays the
-        # source of truth for what counts as a match
-        rows = rows[sel_py].reset_index(drop=True)
-        dist, prefix = dist[sel_py], prefix[sel_py]
-    score = term_score(dist, prefix)
-    out = pd.DataFrame({"term": rows["value"].values,
-                        "term_id": rows["doc_id"].values,
-                        "distance": dist, "prefix": prefix, "score": score})
-    if top is not None:
-        out = out.sort_values(["score", "term_id"], ascending=[False, False],
-                              kind="mergesort").head(top + skip)
-    return out.reset_index(drop=True)
-
-
-def _match_terms_local(local: pd.DataFrame, lower: str, n_chars: int,
-                       d_auto: int, check_prefix: bool, term: str,
-                       starts_with: bool, is_regex: bool,
-                       top: int | None, skip: int,
-                       ignore_case: bool = True) -> pd.DataFrame:
-    """Driver-side dictionary match (vectorized over the sorted local dict);
-    selection semantics identical to the distributed path."""
-    import re as _re
-
-    tl = local["lower"] if ignore_case else local["term"]
-    if is_regex:
-        rx = _re.compile(term, _re.IGNORECASE)
-        if starts_with:
-            sel = local["term"].map(lambda s: rx.match(s) is not None).values
-        else:
-            sel = local["term"].map(lambda s: rx.fullmatch(s) is not None).values
-    elif starts_with:
-        if d_auto == 0:
-            sel = tl.str.startswith(lower).values
-        else:
-            sel = np.array([pyref._prefix_lev(s, lower) <= d_auto
-                            for s in tl.values], dtype=bool)
-    elif d_auto == 0:
-        sel = (tl == lower).values
-    else:
-        lens = tl.str.len().values
-        band = (np.abs(lens - n_chars) <= d_auto)
-        sel = np.zeros(len(local), dtype=bool)
-        if band.any():
-            cand = tl.values[band]
-            sel[np.flatnonzero(band)] = levenshtein_batch(list(cand), lower, d_auto) <= d_auto
-    hit = local[sel]
-    if hit.empty:
-        return pd.DataFrame(columns=["term", "term_id", "distance", "prefix", "score"])
-    tlh = hit["lower"].values if ignore_case else hit["term"].values
-    dist = np.where(tlh == lower, 0,
-                    levenshtein_batch(list(tlh), lower, 254)).astype(np.int64)
-    prefix = np.array([check_prefix and s.startswith(lower) for s in tlh], dtype=bool)
-    score = term_score(dist, prefix)
-    out = pd.DataFrame({"term": hit["term"].values, "term_id": hit["term_id"].values,
-                        "distance": dist, "prefix": prefix, "score": score})
-    if top is not None:
-        out = out.sort_values(["score", "term_id"], ascending=[False, False],
-                              kind="mergesort").head(top + skip)
-    return out.reset_index(drop=True)
+    return pos, (ts * (np.float16(IDENTITY_STORED).astype(_F32)
+                       / _F32(100.0))).astype(_F32)
 
 
 # ---------------------------------------------------------------------------
@@ -1546,7 +1475,7 @@ class _SearchPlan(NamedTuple):
 
 
 def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
-                 count_hits: bool = False, *, seg_top_extra=None,
+                 count_hits: bool = False, *,
                  seg_deleted=None) -> _SearchPlan:
     """Parse the request, match every leaf against the dictionary and
     build the kernel plan — no Spark job and no DataFrame.
@@ -1556,11 +1485,11 @@ def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
     WAND paths — skipped posting rows then pay an ids-only decode. The
     DataFrame-only callers (:func:`search_df`) leave it off.
 
-    ``seg_top_extra`` ({segment: n}) and ``seg_deleted`` ({segment:
-    segment-relative ids}) carry a streamed generation's tombstones; only
-    ``MultiIndex`` passes them, never a request. The kernel drops the
-    tombstoned docs and widens each segment's top-k by its tombstone
-    count (:func:`_segment_kernel_factory`)."""
+    ``seg_deleted`` ({segment: segment-relative ids}) carries a streamed
+    generation's tombstones; only ``MultiIndex`` passes it, never a
+    request. The kernel drops the tombstoned docs and widens each
+    segment's top-k by its tombstone count
+    (:func:`_segment_kernel_factory`)."""
     (tree, filter_tree, leaves, scored_ids, phrase_specs,
      term_boost_leaves) = _collect_leaves(index, request)
     # kernel input keys: postings rows of the matched terms, tagged with
@@ -1633,7 +1562,6 @@ def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
         # row to carry its exact hit count
         "top": None if emit_all else max(top + skip, 1),
         "count_hits": count_hits and not emit_all,
-        "top_extra": seg_top_extra or {},
         "seg_deleted": seg_deleted or {},
         "segment_docs": segment_docs,
         "quantize_f16": quantize_f16,
@@ -1642,13 +1570,20 @@ def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
     # are processed in descending max-possible-score order and skipped —
     # without decoding — once they cannot reach the running kth score.
     # Sound because a leaf's doc score is the MAX over its term rows
-    # (search_field.rs:449-463) and the threshold only grows.
+    # (search_field.rs:449-463) and the threshold only grows. An unboosted
+    # one-child OR/AND scores as its child (eval_tree), so a lone leaf
+    # under it prunes the same way.
+    if (tree["op"] != "leaf" and len(tree["children"]) == 1
+            and tree.get("boost") is None):
+        wtree = tree["children"][0]
+    else:
+        wtree = tree
     if (not emit_all and filter_tree is None and not term_boost_leaves
             and not plan["locality"] and not phrase_specs
-            and tree["op"] == "leaf" and tree.get("boost") is None
+            and wtree["op"] == "leaf" and wtree.get("boost") is None
             and plan["top"]
-            and leaves[tree["leaf_id"]].matched is not None):
-        plan["wand_leaf"] = tree["leaf_id"]
+            and leaves[wtree["leaf_id"]].matched is not None):
+        plan["wand_leaf"] = wtree["leaf_id"]
     # multi-leaf WAND: unboosted OR/AND of plain leaves (_wand_tree_segment)
     elif (not emit_all and filter_tree is None and not term_boost_leaves
           and not plan["locality"] and not phrase_specs
@@ -2118,8 +2053,10 @@ def _wand_tree_segment(g: pd.DataFrame, leg_by_leaf: dict, n_legs: int,
     children = [{"op": "leaf", "leaf_id": t, "tag": f"{t:09d}", "boost": None}
                 for t in range(n_legs)]
     if len(children) == 1:
-        # two same-leg children keep eval_tree on the OR formula (a single
-        # kid would be passed through without the n² factor)
+        # one leg here is an OR of several same-tag leaves (the planner
+        # sends a one-child node to _wand_segment): two same-leg children
+        # keep eval_tree on the OR formula (a single kid would be passed
+        # through without the n² factor)
         children = children * 2
     ids_out, sc = eval_tree({"op": op, "children": children}, leaf_hits)
     gids = ids_out + base
@@ -2158,56 +2095,32 @@ def phrase_doc_rows(index: FulltextIndex, a_set: list, b_set: list) -> DataFrame
 
 
 def _identity_leaf_rows(index: FulltextIndex, leaf) -> DataFrame:
-    """Kernel-input rows for an identity-field leaf: the doc store is
-    scanned distributed with SELECTION as a whole-stage-codegen predicate
-    (:func:`_jvm_match_pred` — VERDICT r4 #1: the Python-predicate scan paid
-    a corpus-wide interpreted pass; now only the matched rows reach Python),
-    per-doc f32 final scores computed in a vectorized UDF over those
-    matches, docs grouped by (segment, score) — few distinct scores (one
-    per matched distance) so the grouped rows are compact doc-id arrays.
+    """Kernel-input rows for an identity-field leaf: the doc-store scan of
+    :func:`_identity_candidates`, the pre-filtered rows selected and scored
+    in a vectorized UDF (:func:`_identity_scores`), docs grouped by
+    (segment, score) — few distinct scores (one per matched distance) so
+    the grouped rows are compact doc-id arrays.
 
     Per-leaf ``top`` truncates the matched VALUES to the best top+skip by
     (term score DESC, term_id DESC) — and on an identity field term_id ≡
-    doc_id, so the order matches :func:`_match_identity` exactly. The
+    doc_id, so the order matches :func:`match_terms` exactly. The
     truncation is a distributed TakeOrderedAndProject (bounded collect)."""
-    fc = index.fields[leaf.field]
-    ignore_case = leaf.opts.get("ignore_case", True)
-    lower = leaf.term.lower() if ignore_case else leaf.term
-    n_chars = max(len(lower), 1)
-    d_auto = min(leaf.opts.get("levenshtein", 0), n_chars - 1, 4)
-    check_prefix = leaf.opts.get("starts_with", False) or leaf.opts.get("levenshtein", 0) != 0
-    starts_with = leaf.opts.get("starts_with", False)
-    is_regex = leaf.opts.get("is_regex", False)
-    term = leaf.term
+    spec = _match_spec(leaf.term, **leaf.opts)
     segment_docs = index.manifest["segment_docs"]
 
     def score_filter(iterator):
-        # ONE Arrow pass scores the JVM-selected rows AND drops the rare
-        # rows where Java and Python match semantics diverge (exotic regex
-        # constructs score NaN = "not selected") — a withColumn + isnan
-        # filter would make Catalyst evaluate the Python UDF twice
+        # ONE Arrow pass selects and scores the pre-filtered rows — a
+        # withColumn + isnan filter would make Catalyst evaluate the Python
+        # UDF twice
         for pdf in iterator:
-            s = _identity_scores(pdf["value"].values, lower, term, n_chars,
-                                 d_auto, check_prefix, starts_with, is_regex,
-                                 ignore_case)
-            keep = ~np.isnan(s)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].values[keep],
-                "s": s[keep].astype(np.float32)})
+            pos, s = _identity_scores(spec, pdf["value"].values)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"].values[pos], "s": s})
 
-    base_rows = (
-        index.docs.select("doc_id", F.col(leaf.field).alias("value"))
-        .where(F.col("value").isNotNull())
-        .where(F.octet_length("value") <= fc["max_text_store_bytes"])
-    )
-    sel = _jvm_match_pred(F.col("value"), term, lower, n_chars, d_auto,
-                          starts_with, is_regex, ignore_case)
-    scored = base_rows.where(sel).mapInPandas(score_filter,
-                                              schema="doc_id long, s float")
-    leaf_top = leaf.opts.get("top")
-    if leaf_top is not None:
-        keep = int(leaf_top) + int(leaf.opts.get("skip", 0))
-        scored = scored.orderBy(F.desc("s"), F.desc("doc_id")).limit(keep)
+    scored = _identity_candidates(index, leaf.field, spec).mapInPandas(
+        score_filter, schema="doc_id long, s float")
+    if spec.top is not None:
+        scored = (scored.orderBy(F.desc("s"), F.desc("doc_id"))
+                  .limit(int(spec.top) + int(spec.skip)))
     return (
         scored
         .withColumn("segment", (F.col("doc_id") / F.lit(segment_docs)).cast("int"))
@@ -2233,7 +2146,8 @@ def _hits_pdf(ids: np.ndarray, scores: np.ndarray, n_hits: int) -> pd.DataFrame:
                          "seg_hits": seg_hits})
 
 
-def _partition_topk_factory(k: int, count_col: str | None = None):
+def _partition_topk_factory(k: int, count_col: str | None = None,
+                            facet_maps=()):
     """mapInPandas kernel: one output group per partition carrying the
     partition's exact row count (``cnt`` on the first row, seg_hits-style)
     plus its k best rows by (score DESC, doc_id DESC). Running it over a
@@ -2248,18 +2162,41 @@ def _partition_topk_factory(k: int, count_col: str | None = None):
     driver collect from segments × (k+1) rows to partitions × (k+1)
     (VERDICT r4 #2: at 2²⁰-doc segments and 10¹² docs the per-segment
     collect was ~10⁷ rows for a top-10 query). A narrow map chained onto
-    the kernel stage — no extra job, no shuffle."""
+    the kernel stage — no extra job, no shuffle.
+
+    ``facet_maps`` ([(field, doc_ids_sorted, values)] from
+    :meth:`FulltextIndex.facet_map`, one row per (doc, value), repeats for
+    1:n fields) also counts facet values of every input row, so a faceted
+    request is ONE Spark job — kernel stage → this narrow map → driver
+    merge — instead of a top-k job plus per-facet join jobs (q11 was
+    q01+69% even with the jobs running concurrently). The reference counts
+    facets from a local doc_id→value-id store during hit collection
+    (facet/mod.rs:75-94) rather than joining a second relation. Rows then
+    carry (ff, fv, fcnt): NULL ``ff`` on hit rows, partial counts the
+    driver sums on facet rows."""
     k = max(k, 1)
 
     def fn(iterator):
         ids_parts, sc_parts, n = [], [], 0
         pending = 0
+        fcounts: list[dict] = [dict() for _ in facet_maps]
         for pdf in iterator:
             n += int(pdf[count_col].sum()) if count_col else len(pdf)
             if not len(pdf):
                 continue
             ids_parts.append(pdf["doc_id"].to_numpy(np.int64))
             sc_parts.append(pdf["score"].to_numpy(_F32))
+            for d, (_fld, mids, mvals) in zip(fcounts, facet_maps):
+                lo = np.searchsorted(mids, ids_parts[-1], side="left")
+                hi = np.searchsorted(mids, ids_parts[-1], side="right")
+                sel = np.flatnonzero(hi > lo)
+                if not len(sel):
+                    continue
+                gath = np.concatenate([np.arange(lo[i], hi[i]) for i in sel])
+                vc = pd.Series(mvals[gath]).value_counts(dropna=False)
+                for v, c in vc.items():
+                    key = None if pd.isna(v) else v
+                    d[key] = d.get(key, 0) + int(c)
             pending += len(pdf)
             if pending > 4 * k and len(ids_parts) > 1:
                 # compact the running state so memory stays O(k + batch)
@@ -2275,72 +2212,10 @@ def _partition_topk_factory(k: int, count_col: str | None = None):
         order = np.lexsort((-ids, -sc.astype(np.float64)))[:k]
         cnt = np.zeros(len(order), dtype=np.int64)
         cnt[0] = n
+        tag = {"ff": None, "fv": None, "fcnt": np.int64(0)} if facet_maps else {}
         yield pd.DataFrame({"doc_id": ids[order], "score": sc[order],
-                            "cnt": cnt})
-
-    return fn
-
-
-def _partition_topk_facets_factory(k: int, facet_maps: list):
-    """Fused mapInPandas kernel: :func:`_partition_topk_factory` PLUS
-    per-partition facet counting against driver-resident doc→value maps
-    (:meth:`FulltextIndex.facet_map`), so a faceted request is ONE Spark
-    job — kernel stage → this narrow map → driver merge — instead of a
-    top-k job plus per-facet join jobs (each paying its own multi-stage
-    scheduling floor; q11 was q01+69% even with the jobs running
-    concurrently). Mirrors the reference, which counts facets from a local
-    doc_id→value-id store during hit collection (facet/mod.rs:75-94) rather
-    than joining a second relation.
-
-    ``facet_maps``: [(field, doc_ids_sorted, values)] — one row per
-    (doc, value), repeats for 1:n fields. Output rows are tagged: hit rows
-    carry ``ff`` NULL; facet rows carry (ff, fv, fcnt) partial counts the
-    driver sums. Only used when every requested facet has a local map
-    (≤1M-doc corpus); past that the Spark-join path runs instead."""
-    k = max(k, 1)
-
-    def fn(iterator):
-        ids_parts, sc_parts, n = [], [], 0
-        pending = 0
-        fcounts: list[dict] = [dict() for _ in facet_maps]
-        for pdf in iterator:
-            n += len(pdf)
-            if not len(pdf):
-                continue
-            bids = pdf["doc_id"].to_numpy(np.int64)
-            for slot, (_fld, mids, mvals) in enumerate(facet_maps):
-                lo = np.searchsorted(mids, bids, side="left")
-                hi = np.searchsorted(mids, bids, side="right")
-                sel = np.flatnonzero(hi > lo)
-                if not len(sel):
-                    continue
-                gath = np.concatenate(
-                    [np.arange(lo[i], hi[i]) for i in sel])
-                d = fcounts[slot]
-                vc = pd.Series(mvals[gath]).value_counts(dropna=False)
-                for v, c in vc.items():
-                    key = None if pd.isna(v) else v
-                    d[key] = d.get(key, 0) + int(c)
-            ids_parts.append(bids)
-            sc_parts.append(pdf["score"].to_numpy(_F32))
-            pending += len(pdf)
-            if pending > 4 * k and len(ids_parts) > 1:
-                ids = np.concatenate(ids_parts)
-                sc = np.concatenate(sc_parts)
-                order = np.lexsort((-ids, -sc.astype(np.float64)))[:k]
-                ids_parts, sc_parts = [ids[order]], [sc[order]]
-                pending = len(order)
-        if ids_parts:
-            ids = np.concatenate(ids_parts)
-            sc = np.concatenate(sc_parts)
-            order = np.lexsort((-ids, -sc.astype(np.float64)))[:k]
-            cnt = np.zeros(len(order), dtype=np.int64)
-            cnt[0] = n
-            yield pd.DataFrame({"doc_id": ids[order], "score": sc[order],
-                                "cnt": cnt, "ff": None, "fv": None,
-                                "fcnt": np.int64(0)})
-        for slot, (fld, _m, _v) in enumerate(facet_maps):
-            d = fcounts[slot]
+                            "cnt": cnt, **tag})
+        for (fld, _m, _v), d in zip(facet_maps, fcounts):
             if d:
                 yield pd.DataFrame({
                     "doc_id": np.int64(0), "score": _F32(0.0),
@@ -2353,12 +2228,11 @@ def _partition_topk_facets_factory(k: int, facet_maps: list):
 
 def _segment_kernel_factory(plan: dict, scored_leaf_ids: set):
     count_hits = bool(plan.get("count_hits"))
-    top_extra = {int(s): int(n) for s, n in (plan.get("top_extra") or {}).items()}
     # per-segment tombstoned ids (segment-relative, streamed indexes): each
     # path subtracts them from the segment's reported hit count, and the
     # one filter below drops them from the emitted candidates, so seg_hits
-    # and every row are live (VERDICT r4 #3). top_extra widens a segment's
-    # top-k by its tombstone count: WAND's θ stays a sound bound and at
+    # and every row are live (VERDICT r4 #3). A segment's top-k widens by
+    # its tombstone count: WAND's θ stays a sound bound and at
     # least k live rows survive the drop. So when every candidate of a
     # segment is tombstoned, the segment has no live hit at all — its live
     # count is 0 and no first-row count is lost with the rows.
@@ -2375,9 +2249,9 @@ def _segment_kernel_factory(plan: dict, scored_leaf_ids: set):
         for _seg, g in data.groupby("segment", sort=False):
             seg_base = int(_seg) * plan["segment_docs"]
             k = plan.get("top")
-            if k is not None:
-                k += top_extra.get(int(_seg), 0)
             dl = seg_deleted.get(int(_seg))
+            if k is not None and dl is not None:
+                k += len(dl)
             if wand_leaf is not None:
                 ids, scores, n_hits = _wand_segment(
                     g[g["leaf_id"] == wand_leaf], k, seg_base,
@@ -2482,18 +2356,18 @@ def _fused_facets(indexes, request: dict) -> bool:
 
 def _search_part(index: FulltextIndex, request: dict, fused_facets: bool,
                  lo: int = 0, hi: int = 1 << 63, *, filtered: bool = False,
-                 seg_top_extra=None, seg_deleted=None) -> _Part:
+                 seg_deleted=None) -> _Part:
     """Plan ``request`` on one index, choose its tier and run its kernel;
     on Spark, the post-kernel nested locality and anchor boosts are
     chained on. ``filtered``: the caller filters the hits afterwards (a
     Spark join), so the part runs on Spark and emits every hit, and the
-    merge counts the rows that survive. See :func:`_plan_search` for the
-    tombstone arguments."""
+    merge counts the rows that survive. See :func:`_plan_search` for
+    ``seg_deleted``."""
     need_all = (filtered or bool(request.get("facets"))
                 or bool(request.get("exact_count"))
                 or bool(request.get("why_found")) or bool(request.get("boost")))
     sp = _plan_search(index, request, need_all, count_hits=True,
-                      seg_top_extra=seg_top_extra, seg_deleted=seg_deleted)
+                      seg_deleted=seg_deleted)
     tier, est, scan = (("spark", None, None) if filtered else
                        _choose_tier(index, request, sp, fused_facets))
     if tier == "local":
@@ -2588,25 +2462,28 @@ def _finish_parts(request: dict, parts: list, fused_facets: bool,
         src = p.hits if kernel_cols else p.hits.select("doc_id", "score")
         return src.mapInPandas(fn, schema=schema).collect()
 
+    # fused facet counts ride on the merge rows as (ff, fv, fcnt)
+    schema = "doc_id long, score float, cnt long" + (
+        ", ff string, fv string, fcnt long" if fused_facets else "")
+
     def _collect_rows():
         rows = []
         for p in parts:
-            if p.sp.plan.get("top") is None:
-                # full hit set: ONE job returns each partition's exact row
-                # count + its (top+skip) best rows — the separate count()
-                # pass and the TakeOrdered ranking pass collapse into it (r4)
-                rows += _merge_pass(p, _partition_topk_factory(top + skip),
-                                    "doc_id long, score float, cnt long")
-                continue
-            # plain top-k: a partition-level pre-merge (narrow map chained
-            # onto the kernel stage — same job, no shuffle) reduces each
-            # partition's kernel output (≤ k hits + exact count per
-            # SEGMENT) to its k best rows + summed count, so the driver
-            # collects partitions × (k+1) rows instead of segments × (k+1)
-            # (VERDICT r4 #2: ~10⁶ segments at 10¹² docs).
+            full = p.sp.plan.get("top") is None
+            # full hit set (every faceted part): ONE job returns each
+            # partition's exact row count + its (top+skip) best rows and
+            # facet counts — the separate count() pass and the TakeOrdered ranking pass
+            # collapse into it (r4). Plain top-k: a partition-level
+            # pre-merge (narrow map chained onto the kernel stage — same
+            # job, no shuffle) reduces each partition's kernel output
+            # (≤ k hits + exact count per SEGMENT) to its k best rows +
+            # summed count, so the driver collects partitions × (k+1) rows
+            # instead of segments × (k+1) (VERDICT r4 #2: ~10⁶ segments at
+            # 10¹² docs).
             rows += _merge_pass(p, _partition_topk_factory(
-                top + skip, count_col="seg_hits"),
-                "doc_id long, score float, cnt long", kernel_cols=True)
+                top + skip, None if full else "seg_hits",
+                [(f, *p.index.facet_map(f)) for f in ufields]
+                if fused_facets else ()), schema, kernel_cols=not full)
         return rows
 
     def _ranked(rows):
@@ -2621,29 +2498,7 @@ def _finish_parts(request: dict, parts: list, fused_facets: bool,
     # try/finally so a failing collect/facet job can't leak the cached hit
     # sets (ADVICE r4)
     try:
-        if fused_facets:
-            out_rows = []
-            for p in parts:
-                out_rows += _merge_pass(p, _partition_topk_facets_factory(
-                    top + skip, [(f, *p.index.facet_map(f)) for f in ufields]),
-                    "doc_id long, score float, cnt long, "
-                    "ff string, fv string, fcnt long")
-            rows = [r for r in out_rows if r["ff"] is None]
-            num_hits = int(sum(r["cnt"] for r in rows))
-            ranked = _ranked(rows)
-            agg: dict = {}
-            for r in out_rows:
-                if r["ff"] is not None:
-                    key = (r["ff"], r["fv"])
-                    agg[key] = agg.get(key, 0) + r["fcnt"]
-            for spec in facet_specs:
-                fld = spec["field"]
-                vals = [(v, c) for (f2, v), c in agg.items() if f2 == fld]
-                # (count DESC, value ASC nulls-first) — byte-identical to
-                # the Spark-join path's orderBy
-                vals.sort(key=lambda t: (-t[1], t[0] is not None, t[0] or ""))
-                facets[fld] = vals[:spec.get("top", 10)]
-        elif facet_specs:
+        if facet_specs and not fused_facets:
             # facet counting = hits⋈(doc→value) join + count, over the
             # union of the parts' hits and value sources (doc ids are
             # disjoint). The broadcast decision keys on the CORPUS size,
@@ -2714,6 +2569,21 @@ def _finish_parts(request: dict, parts: list, fused_facets: bool,
                     facets[fld] = vals
         else:
             rows = _collect_rows()
+            if fused_facets:
+                agg: dict = {}
+                for r in rows:
+                    if r["ff"] is not None:
+                        key = (r["ff"], r["fv"])
+                        agg[key] = agg.get(key, 0) + r["fcnt"]
+                rows = [r for r in rows if r["ff"] is None]
+                for spec in facet_specs:
+                    fld = spec["field"]
+                    vals = [(v, c) for (f2, v), c in agg.items() if f2 == fld]
+                    # (count DESC, value ASC nulls-first) — byte-identical
+                    # to the Spark-join path's orderBy
+                    vals.sort(key=lambda t: (-t[1], t[0] is not None,
+                                             t[0] or ""))
+                    facets[fld] = vals[:spec.get("top", 10)]
             num_hits = int(sum(r["cnt"] for r in rows))
             ranked = _ranked(rows)
     finally:

@@ -149,7 +149,7 @@ def ingest_batch(spark: SparkSession, df: DataFrame, config: IndexConfig,
     else:
         local = assign_doc_ids(df, config.order_col)
         with_ids = local.withColumn("doc_id", F.col("doc_id") + F.lit(base))
-    # replace() carries EVERY config field (scoring, num_segments,
+    # replace() carries EVERY config field (scoring, segment_docs,
     # future additions) — re-enumerating the constructor
     # silently dropped scoring, so bm25-configured streams built
     # veloci-scored generations.
@@ -205,12 +205,11 @@ class MultiIndex:
         self.gens = _read_gens(root_dir)
         self.indexes = [(g, FulltextIndex(spark, g["dir"])) for g in self.gens]
         self.deletes = _deletes_df(spark, root_dir)
-        # per-(generation, SEGMENT) tombstone counts: each segment's top-k
-        # is inflated by ITS OWN tombstone count — not the generation-wide
+        # per-(generation, SEGMENT) tombstoned ids: each segment's top-k is
+        # inflated by ITS OWN tombstone count — not the generation-wide
         # total — so a heavily-deleted index never blows up every segment's
         # k (ADVICE r3: generation-wide inflation effectively disabled WAND
         # past a few thousand deletes)
-        self._seg_extra: dict[int, dict[int, int]] = {}
         self._seg_deleted: dict[int, dict[int, "np.ndarray"]] = {}
         self._del_set: frozenset | None = frozenset()
         self.n_deletes = 0
@@ -219,41 +218,31 @@ class MultiIndex:
 
     def _load_tombstone_state(self, spark):
         """One job collects the tombstones when they fit on the driver;
-        their per-segment split and counts follow in numpy. Past
-        LOCAL_DELETES_MAX one aggregation job counts them per segment
-        instead."""
+        their per-segment split follows in numpy. Past LOCAL_DELETES_MAX
+        the kernel never sees them, and one job counts those that fall in
+        a generation."""
         ids = self.deletes.limit(self.LOCAL_DELETES_MAX + 1).toPandas()
         if len(ids) <= self.LOCAL_DELETES_MAX:
             self._del_set = frozenset(ids["doc_id"].tolist())
             self._build_seg_deleted()
-            self._seg_extra = {g: {s: len(v) for s, v in per.items()}
-                               for g, per in self._seg_deleted.items()}
+            self.n_deletes = sum(len(v) for per in self._seg_deleted.values()
+                                 for v in per.values())
         else:
             self._del_set = None  # too large: stay distributed
             ranges = spark.createDataFrame(
-                [(g["gen"], g["base"], _gen_hi(g),
-                  int(idx.manifest["segment_docs"]))
-                 for g, idx in self.indexes],
-                "gen int, lo long, hi long, segd long")
+                [(g["base"], _gen_hi(g)) for g in self.gens],
+                "lo long, hi long")
             d = self.deletes
-            rows = (d.join(F.broadcast(ranges),
-                           (d["doc_id"] >= ranges["lo"])
-                           & (d["doc_id"] < ranges["hi"]))
-                    .groupBy("gen", F.floor(d["doc_id"] / F.col("segd"))
-                             .cast("int").alias("seg"))
-                    .count().collect())
-            for r in rows:
-                self._seg_extra.setdefault(int(r["gen"]), {})[int(r["seg"])] \
-                    = int(r["count"])
-        self.n_deletes = sum(sum(per.values())
-                             for per in self._seg_extra.values())
+            self.n_deletes = d.join(F.broadcast(ranges),
+                                    (d["doc_id"] >= ranges["lo"])
+                                    & (d["doc_id"] < ranges["hi"])).count()
 
     def _build_seg_deleted(self):
-        """Per-(generation, segment) SEGMENT-RELATIVE tombstone ids, the
-        kernel-side form of ``_seg_extra``: shipped to the segment kernel so
-        its per-segment hit counts are live-exact under top-k truncation
-        (VERDICT r4 #3). Sorted-array range slicing, not a per-id Python
-        loop — O(n log n) once on the driver at ≤ LOCAL_DELETES_MAX ids."""
+        """Per-(generation, segment) SEGMENT-RELATIVE tombstone ids,
+        shipped to the segment kernel so its per-segment hit counts are
+        live-exact under top-k truncation (VERDICT r4 #3). Sorted-array
+        range slicing, not a per-id Python loop — O(n log n) once on the
+        driver at ≤ LOCAL_DELETES_MAX ids."""
         import numpy as np
 
         dels = np.fromiter(self._del_set, np.int64, len(self._del_set))
@@ -318,7 +307,6 @@ class MultiIndex:
             part = _search_part(
                 idx, request, fused, g["base"], _gen_hi(g),
                 filtered=distributed,
-                seg_top_extra=self._seg_extra.get(g["gen"]),
                 seg_deleted=self._seg_deleted.get(g["gen"]))
             if distributed:
                 part = part._replace(hits=part.hits.join(
