@@ -57,7 +57,7 @@ def test_explain(spark_index):
         "explain": True, "top": 5})
     ex = res["explain"]
     assert ex["tree"]["op"] == "or"
-    assert ex["wand"]  # unboosted OR of plain leaves engages multi-leaf WAND
+    assert ex["wand"]  # unboosted OR of plain leaves engages WAND
     matched = {l["term"]: l["matched"] for l in ex["leaves"]}
     assert any(t == "urge" for t, _ in matched["urge"])
 

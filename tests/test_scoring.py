@@ -91,3 +91,23 @@ def test_levenshtein():
 
 def test_levenshtein_cap():
     assert int(levenshtein_batch(["abcdef"], "zzzzzz", 1)[0]) == 255
+
+
+def test_prefix_levenshtein_matches_oracle():
+    """Prefix mode (the ``.starts_with()`` automaton): the best prefix's
+    distance, equal to pyref's independent DP whenever it is within the
+    cap, 255 past it."""
+    import random
+
+    from veloci_spark.pyref import _prefix_lev
+
+    rnd = random.Random(5)
+    for _ in range(400):
+        q = "".join(rnd.choice("abcé") for _ in range(rnd.randint(1, 7)))
+        terms = ["".join(rnd.choice("abcdé") for _ in range(rnd.randint(0, 12)))
+                 for _ in range(12)]
+        for d in range(1, 5):
+            got = levenshtein_batch(terms, q, d, prefix=True)
+            for t, g in zip(terms, got):
+                want = _prefix_lev(t, q)
+                assert g == (want if want <= d else 255), (t, q, d)

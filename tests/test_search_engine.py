@@ -249,6 +249,25 @@ class TestIdentityField:
                 == sorted((d["doc_id"] for d in want), reverse=True))
 
 
+    def test_explain_fuzzy_identity_term_score(self, spark_index, corpus):
+        """A distance-1 identity leaf's explain step reports the selection's
+        term score itself (final / (f16(stored)/100) is one f32 ulp off)."""
+        from veloci_spark.scoring import term_score
+        from veloci_spark.search import search
+
+        url = corpus[10]["url"]
+        typo = url[:-1] + ("x" if url[-1] != "x" else "y")
+        res = search(spark_index, {
+            "search": {"terms": [typo], "path": "url",
+                       "levenshtein_distance": 1},
+            "top": 5, "explain_hits": True})
+        steps = [s for d in res["data"] if d["doc_id"] == 10
+                 for s in d["explain"] if s["step"] == "term_to_anchor"]
+        assert steps
+        for s in steps:
+            assert s["term_score"] == float(term_score([1], [False])[0])
+
+
 class TestIdentityJvmSelection:
     """VERDICT r4 #1: identity-field SELECTION runs as whole-stage-codegen
     predicates (exact / prefix / regex / fuzzy), never a per-value Python
@@ -543,7 +562,7 @@ def test_request_cannot_set_tombstone_inputs(spark_index):
 
 
 # a one-child OR/AND scores as its child (eval_tree, pyref's union_score /
-# intersect_score); the planner gives it the single-leaf WAND path
+# intersect_score); the WAND kernel prunes it as one leg
 ONE_CHILD_LEAVES = [
     {"terms": ["die"], "path": "text"},
     {"terms": ["majes"], "path": "text", "starts_with": True},
@@ -571,6 +590,36 @@ def test_one_child_node_scores_as_child(spark_index, ref_index):
 def test_one_child_node_scores_as_child_spark_tier(spark_index, ref_index,
                                                    spark_tier):
     _check_one_child_nodes(spark_index, ref_index)
+
+
+def test_why_found_request_prunes_on_both_tiers(spark_index, ref_index,
+                                                monkeypatch):
+    """why_found reads postings for the result ids only, so it no longer
+    forces the full hit set: its plan prunes (WAND top-k), and hits, count
+    and why_found are equal on the local and the Spark tier and match the
+    plain request and the oracle."""
+    from veloci_spark import search as S
+
+    req = {"or": [{"search": {"terms": ["die"], "path": "text"}},
+                  {"search": {"terms": ["der"], "path": "text"}}], "top": 5}
+    wf = {**req, "why_found": True, "explain": True}
+    plan = S._plan_search(spark_index, wf).plan
+    assert plan["wand"] and plan["top"] == 5
+    local = S.search(spark_index, wf)
+    monkeypatch.setattr(S, "LOCAL_TIER_MAX_POSTINGS", 0)
+    monkeypatch.setattr(S, "LOCAL_TIER_MAX_SCAN_BYTES", -1)
+    spark = S.search(spark_index, wf)
+    assert (local["explain"]["tier"], spark["explain"]["tier"]) == ("local",
+                                                                    "spark")
+    assert local["explain"]["wand"] and spark["explain"]["wand"]
+    plain = S.search(spark_index, req)
+    for res in (local, spark):
+        assert res["data"] == local["data"]
+        assert res["num_hits"] == plain["num_hits"]
+        assert ([(d["doc_id"], d["score"]) for d in res["data"]]
+                == [(d["doc_id"], d["score"]) for d in plain["data"]])
+    assert all(d["why_found"] for d in local["data"])
+    _check_request(spark_index, ref_index, req)
 
 
 class TestResumeValidation:
@@ -639,8 +688,9 @@ class TestResumeValidation:
 
 
 class TestWandOr:
-    """Multi-leaf OR/AND WAND (_wand_tree_segment): exact vs eval_tree, and rows
-    whose upper bound cannot reach the kth score are never decoded."""
+    """The WAND kernel (_wand_tree_segment) over a lone leaf or an OR/AND
+    of leaves: exact vs eval_tree, and rows whose upper bound cannot reach
+    the kth score are never decoded."""
 
     @staticmethod
     def _row(leaf_id, term_score, ids, stored):
@@ -654,9 +704,15 @@ class TestWandOr:
                 "scores_bin": scores_bin}
 
     @staticmethod
-    def _brute_topk(g, tag_of_leaf, k, op="or"):
-        import pandas as pd
+    def _node(op, tag_of_leaf):
+        """The planner's WAND node: a lone leaf, or an OR/AND of leaves."""
+        children = [{"op": "leaf", "leaf_id": l, "tag": t, "boost": None}
+                    for l, t in sorted(tag_of_leaf.items())]
+        return children[0] if op == "leaf" else {"op": op,
+                                                 "children": children}
 
+    @classmethod
+    def _brute_topk(cls, g, tag_of_leaf, k, op="or"):
         from veloci_spark import search as S
 
         leaf_hits = {}
@@ -669,9 +725,7 @@ class TestWandOr:
                               * S._stored_to_f32(stored, True)).astype(np.float32))
             leaf_hits[leaf_id] = S._dedup_max(np.concatenate(all_i),
                                               np.concatenate(all_s))
-        children = [{"op": "leaf", "leaf_id": l, "tag": t, "boost": None}
-                    for l, t in sorted(tag_of_leaf.items())]
-        ids, sc = S.eval_tree({"op": op, "children": children}, leaf_hits)
+        ids, sc = S.eval_tree(cls._node(op, tag_of_leaf), leaf_hits)
         order = np.lexsort((-ids, -sc.astype(np.float64)))[:k]
         return list(zip(ids[order].tolist(), sc[order].tolist()))
 
@@ -689,7 +743,8 @@ class TestWandOr:
                 self._row(0, 1.0, range(100, 140), [1] * 40),
                 self._row(1, 1.0, range(150, 190), [2] * 40)]
         g = pd.DataFrame(rows)
-        want = self._brute_topk(g, {0: "a", 1: "b"}, 5)
+        tags = {0: "a", 1: "b"}
+        want = self._brute_topk(g, tags, 5)
 
         calls = {"n": 0}
         real = S.unpack_postings
@@ -699,34 +754,74 @@ class TestWandOr:
             return real(a, b)
 
         monkeypatch.setattr(S, "unpack_postings", counting)
-        gi, gs, _n = S._wand_tree_segment(g, {0: 0, 1: 1}, 2, "or", 5, 0, 256)
+        gi, gs, n = S._wand_tree_segment(g, self._node("or", tags), 5, 0, 256)
         assert list(zip(gi.tolist(), gs.tolist())) == want
         assert calls["n"] == 4  # the two low rows were never decoded
+        assert n == 100  # ... but their ids still count
 
     def test_randomized_equality(self):
+        """1-4 legs over a lone leaf, OR and AND, with and without
+        tombstones: the top k + |tombstones| (the kernel's widened k; the
+        caller drops the tombstoned rows) and the exact live count."""
         import pandas as pd
 
         from veloci_spark import search as S
 
-        for seed in range(6):
+        for seed in range(36):
             rng = np.random.RandomState(seed)
-            rows = []
-            n_leaves = int(rng.randint(2, 5))
+            op = ("leaf", "or", "and")[seed % 3]
+            n_leaves = 1 if op == "leaf" else int(rng.randint(1, 5))
+            rows, leg_ids = [], []
             for leaf in range(n_leaves):
+                ids_l = []
                 for _ in range(int(rng.randint(1, 7))):
-                    n = int(rng.randint(3, 60))
+                    n = int(rng.randint(3, 120))
                     ids = np.sort(rng.choice(256, size=n, replace=False))
                     stored = rng.randint(1, 5000, size=n)
                     rows.append(self._row(leaf, rng.uniform(0.1, 1.0),
                                           ids, stored))
+                    ids_l.append(ids)
+                leg_ids.append(np.unique(np.concatenate(ids_l)))
             g = pd.DataFrame(rows)
-            tag_of_leaf = {l: chr(ord("a") + l) for l in range(n_leaves)}
+            deleted = (np.sort(rng.choice(256, size=int(rng.randint(1, 30)),
+                                          replace=False))
+                       if seed % 2 else None)
             k = int(rng.randint(1, 12))
-            want = self._brute_topk(g, tag_of_leaf, k)
-            gi, gs, _n = S._wand_tree_segment(
-                g, {l: i for i, l in enumerate(sorted(tag_of_leaf))},
-                n_leaves, "or", k, 0, 256)
+            k += 0 if deleted is None else len(deleted)
+            tags = {l: chr(ord("a") + l) for l in range(n_leaves)}
+            hits = leg_ids[0]
+            for ids in leg_ids[1:]:
+                hits = (hits[np.isin(hits, ids)] if op == "and"
+                        else np.union1d(hits, ids))
+            if deleted is not None:
+                hits = hits[~np.isin(hits, deleted)]
+            want = self._brute_topk(g, tags, k, op)
+            gi, gs, n_hits = S._wand_tree_segment(
+                g, self._node(op, tags), k, 0, 256, deleted=deleted)
             assert list(zip(gi.tolist(), gs.tolist())) == want, seed
+            assert n_hits == len(hits), seed
+
+    def test_one_tag_or_keeps_or_floor(self):
+        """A one-tag OR of two leaves is one leg but keeps the OR formula:
+        a leg max below 1e-5 counts no tag, so every score is 0 — where a
+        lone leaf passes its max through."""
+        import pandas as pd
+
+        from veloci_spark import search as S
+
+        rng = np.random.RandomState(11)
+        rows = [self._row(l, 1e-4, np.sort(rng.choice(256, 30, replace=False)),
+                          rng.randint(1, 6, size=30)) for l in (0, 1, 0)]
+        g = pd.DataFrame(rows)
+        tags = {0: "a", 1: "a"}
+        want = self._brute_topk(g, tags, 5)
+        gi, gs, n = S._wand_tree_segment(g, self._node("or", tags), 5, 0, 256)
+        assert list(zip(gi.tolist(), gs.tolist())) == want
+        assert gs.max() == 0.0 and n == len(set(np.concatenate(
+            [S.unpack_ids(b) for b in g["docs_bin"]])))
+        _i, leaf_scores, _n = S._wand_tree_segment(
+            g[g["leaf_id"] == 0], self._node("leaf", {0: "a"}), 5, 0, 256)
+        assert 0.0 < leaf_scores.max() < 1e-5
 
     def test_engine_or_fast_path_matches_emit_all(self, spark_index):
         import pyspark.sql.functions as F
@@ -739,10 +834,10 @@ class TestWandOr:
                "top": 5}
         fast = search(spark_index, req)
         hits, plan, _l = _search_hits(spark_index, req, need_all=True)
-        assert plan.get("wand_tree") is None  # need_all disables pruning
+        assert not plan.get("wand")  # need_all disables pruning
         slow = hits.orderBy(F.desc("score"), F.desc("doc_id")).limit(5).collect()
-        _f, plan_fast, _ = _search_hits(spark_index, req, need_all=False)
-        assert plan_fast.get("wand_tree") is not None
+        _f, plan_fast, _ = _search_hits(spark_index, req)
+        assert plan_fast["wand"]
         assert [(d["doc_id"], d["score"]) for d in fast["data"]] == \
             [(r["doc_id"], r["score"]) for r in slow]
 
@@ -767,8 +862,7 @@ class TestWandOr:
             k = int(rng.randint(1, 12))
             want = self._brute_topk(g, tag_of_leaf, k, op="and")
             gi, gs, _n = S._wand_tree_segment(
-                g, {l: l for l in range(n_leaves)}, n_leaves, "and",
-                k, 0, 256)
+                g, self._node("and", tag_of_leaf), k, 0, 256)
             assert list(zip(gi.tolist(), gs.tolist())) == want, seed
 
     def test_engine_and_fast_path_matches_emit_all(self, spark_index):
@@ -782,14 +876,13 @@ class TestWandOr:
         fast = search(spark_index, req)
         hits, _p, _l = _search_hits(spark_index, req, need_all=True)
         slow = hits.orderBy(F.desc("score"), F.desc("doc_id")).limit(5).collect()
-        _f, plan_fast, _ = _search_hits(spark_index, req, need_all=False)
-        assert plan_fast.get("wand_tree") is not None
-        assert plan_fast.get("wand_op") == "and"
+        _f, plan_fast, _ = _search_hits(spark_index, req)
+        assert plan_fast["wand"] and plan_fast["tree"]["op"] == "and"
         assert [(d["doc_id"], d["score"]) for d in fast["data"]] == \
             [(r["doc_id"], r["score"]) for r in slow]
 
     def test_count_hits_exact_randomized(self):
-        """count_hits=True returns the brute distinct-hit count even though
+        """The kernel returns the brute distinct-hit count even though
         the skipped rows were never score-decoded."""
         import pandas as pd
 
@@ -819,32 +912,12 @@ class TestWandOr:
                     for l in legs[1:]:
                         inter = inter[np.isin(inter, l)]
                     want_n = len(inter)
-                want = self._brute_topk(
-                    g, {l: chr(ord("a") + l) for l in range(n_leaves)}, k, op)
+                tags = {l: chr(ord("a") + l) for l in range(n_leaves)}
+                want = self._brute_topk(g, tags, k, op)
                 gi, gs, n_hits = S._wand_tree_segment(
-                    g, {l: l for l in range(n_leaves)}, n_leaves, op,
-                    k, 0, 256, count_hits=True)
+                    g, self._node(op, tags), k, 0, 256)
                 assert n_hits == want_n, (seed, op)
                 assert list(zip(gi.tolist(), gs.tolist())) == want, (seed, op)
-
-    def test_single_leaf_count_hits_exact(self):
-        import pandas as pd
-
-        from veloci_spark import search as S
-
-        rng = np.random.RandomState(7)
-        rows, all_ids = [], []
-        for _ in range(8):
-            n = int(rng.randint(5, 100))
-            ids = np.sort(rng.choice(512, size=n, replace=False))
-            rows.append(self._row(0, rng.uniform(0.1, 1.0), ids,
-                                  rng.randint(1, 5000, size=n)))
-            all_ids.append(ids)
-        g = pd.DataFrame(rows)
-        gi, gs, n_hits = S._wand_segment(g, 3, 0, 512, count_hits=True)
-        assert n_hits == len(np.unique(np.concatenate(all_ids)))
-        want = self._brute_topk(g, {0: "a"}, 3)
-        assert list(zip(gi.tolist(), gs.tolist())) == want
 
     def test_many_leg_randomized_equality(self):
         """VERDICT r4 #4 companion: the kernel stays exact at a wide leg
@@ -865,16 +938,15 @@ class TestWandOr:
         g = pd.DataFrame(rows)
         tag_of_leaf = {l: f"{l:03d}" for l in range(n_leaves)}
         want = self._brute_topk(g, tag_of_leaf, 10)
-        gi, gs, n = S._wand_tree_segment(g, {l: l for l in range(n_leaves)},
-                                         n_leaves, "or", 10, 0, 256,
-                                         count_hits=True)
+        gi, gs, n = S._wand_tree_segment(g, self._node("or", tag_of_leaf),
+                                         10, 0, 256)
         assert list(zip(gi.tolist(), gs.tolist())) == want
         assert n == 256  # 64 legs x up to 40 ids saturate the tiny segment
 
     def test_wide_or_dense_budget_falls_back_to_plain(self, spark_index,
                                                       monkeypatch):
         """VERDICT r4 #4: past the dense-state budget the planner drops the
-        multi-leaf WAND (scatter state is n_legs x segment_docs cells) and
+        WAND kernel (scatter state is ~5 B x legs x segment_docs) and
         the plain kernel — whose state is hit-proportional — answers
         identically, exact count included."""
         from veloci_spark import search as S
@@ -882,12 +954,12 @@ class TestWandOr:
         req = {"or": [{"search": {"terms": ["die"], "path": "text"}},
                       {"search": {"terms": ["der"], "path": "text"}}],
                "top": 5}
-        _f, plan, _ = S._search_hits(spark_index, req, need_all=False)
-        assert plan.get("wand_tree") is not None
+        _f, plan, _ = S._search_hits(spark_index, req)
+        assert plan["wand"]
         want = S.search(spark_index, req)
         monkeypatch.setattr(S, "_WAND_DENSE_BUDGET_BYTES", 0)
-        _f, plan, _ = S._search_hits(spark_index, req, need_all=False)
-        assert plan.get("wand_tree") is None
+        _f, plan, _ = S._search_hits(spark_index, req)
+        assert not plan["wand"]
         got = S.search(spark_index, req)
         for res in (got, want):  # wall time legitimately differs per run
             res.pop("execution_time_ms", None)
@@ -918,7 +990,7 @@ class TestWandOr:
                 stored = rng.randint(1, 5000, size=len(ids))
                 rows.append(self._row(leaf, rng.uniform(0.5, 1.0), ids, stored))
         g = pd.DataFrame(rows)
-        leg_map = {0: 0, 1: 1, 2: 2}
+        node = self._node("or", {0: "0", 1: "1", 2: "2"})
 
         def plain():
             # the non-WAND kernel's work for this segment: decode every row,
@@ -948,7 +1020,7 @@ class TestWandOr:
             return real_part(a, kth, *args, **kw)
 
         monkeypatch.setattr(S.np, "partition", counting_partition)
-        gi, gs, _n = S._wand_tree_segment(g, leg_map, 3, "or", 10, 0, seg_docs)
+        gi, gs, _n = S._wand_tree_segment(g, node, 10, 0, seg_docs)
         monkeypatch.undo()
         assert list(zip(gi.tolist(), gs.tolist())) == want
         # 180 rows x 5000 entries = 900k decoded entries over ~195k

@@ -370,10 +370,10 @@ def _num_hits_with_deletes(spark, root):
     # segment is inflated (segment_docs=16 -> ids 0,1 live in segment 0)
     assert {g: {s: list(v) for s, v in per.items()}
             for g, per in mi._seg_deleted.items()} == {0: {0: [0, 1]}}
-    # all three kernel paths subtract tombstoned hits from their counts
-    # and drop them from their rows: single-leaf WAND (above), multi-leaf
-    # WAND (unboosted OR), and the plain kernel (filter disables WAND) —
-    # every doc has both terms
+    # both kernel paths subtract tombstoned hits from their counts and
+    # drop them from their rows: WAND (a lone leaf above, an unboosted OR
+    # here) and the plain kernel (filter disables WAND) — every doc has
+    # both terms
     ror = mi.search({"or": [
         {"search": {"terms": ["spark"], "path": "text"}},
         {"search": {"terms": ["batch"], "path": "text"}}], "top": 3})

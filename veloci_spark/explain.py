@@ -83,12 +83,11 @@ def _doc_leaf_entries(index, leaves, doc_ids):
         if leaf.matched is not None:
             continue
         rows = index.read_docs(doc_ids, ["doc_id", leaf.field])
-        pos, fin = _identity_scores(_match_spec(leaf.term, **leaf.opts),
-                                    [r[leaf.field] for r in rows])
-        for i, s in zip(pos, fin):
-            ts = float(s / (np.float16(IDENTITY_STORED).astype(_F32) / _F32(100.0)))
+        pos, ts, fin = _identity_scores(_match_spec(leaf.term, **leaf.opts),
+                                        [r[leaf.field] for r in rows])
+        for i, t, s in zip(pos, ts, fin):
             out.setdefault((int(rows[i]["doc_id"]), leaf.leaf_id), []).append(
-                (rows[i][leaf.field], ts, IDENTITY_STORED, float(s)))
+                (rows[i][leaf.field], float(t), IDENTITY_STORED, float(s)))
     return out
 
 

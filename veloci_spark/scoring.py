@@ -195,7 +195,8 @@ def eval_boost_expression(expression: str, scores, values) -> np.ndarray:
     return np.where(np.isnan(v), s, out).astype(_F32)
 
 
-def levenshtein_batch(terms, query: str, max_d: int) -> np.ndarray:
+def levenshtein_batch(terms, query: str, max_d: int,
+                      prefix: bool = False) -> np.ndarray:
     """Classic char-level Levenshtein distance of each term vs ``query``
     (the reference's fallback DP — /root/reference/src/search/search_field.rs:702-733
     — is also classic Levenshtein). Vectorized over the candidate list with a
@@ -203,6 +204,12 @@ def levenshtein_batch(terms, query: str, max_d: int) -> np.ndarray:
 
     Candidates should be pre-banded by length (|len-len(query)| ≤ max_d)
     before calling; this keeps the DP matrix small.
+
+    ``prefix``: the distance of the best PREFIX of each term instead — the
+    minimum over DP rows (prefixes, the empty one included) of the last
+    column, the reference's ``.starts_with()`` automaton
+    (search_field.rs:80,91-94). No length band applies then; the row-min
+    abort keeps the best prefix seen, since every later row is worse.
     """
     q = query
     nq = len(q)
@@ -210,10 +217,11 @@ def levenshtein_batch(terms, query: str, max_d: int) -> np.ndarray:
     rng = list(range(1, nq + 1))
     for i, t in enumerate(terms):
         ns = len(t)
-        if abs(ns - nq) > max_d:
+        if not prefix and abs(ns - nq) > max_d:
             out[i] = 255
             continue
         prev = list(range(nq + 1))
+        low = nq  # best last column so far (prefix mode)
         for j, cs in enumerate(t):
             cur = [j + 1]
             append = cur.append
@@ -233,7 +241,11 @@ def levenshtein_batch(terms, query: str, max_d: int) -> np.ndarray:
                 prev = None
                 break
             prev = cur
-        if prev is None:
+            if cur[nq] < low:
+                low = cur[nq]
+        if prefix:
+            out[i] = low if low <= max_d else 255
+        elif prev is None:
             out[i] = 255
         else:
             d = prev[nq]

@@ -25,9 +25,12 @@ doc-partitioned segments, in four steps:
    (set_op.rs:166-186), AND = sum of leg scores (set_op.rs:414-417),
    ids-only filter (set_op.rs:311-326), phrase ×5.0
    (plan_steps.rs:267), term boost, text-locality 2n² (boost.rs:70-80).
-   Plain top-k plans prune posting rows WAND-style. Each segment emits
-   its top (top+skip) hits plus its exact hit count (or its full hit set
-   when facets / why-found / boosts need it).
+   A plain top-k plan over a lone leaf or an unboosted OR/AND of leaves
+   prunes posting rows WAND-style in one kernel
+   (:func:`_wand_tree_segment`; the lone leaf is its one-leg case). Each
+   segment emits its top (top+skip) hits plus its exact hit count, or its
+   full hit set when facets, anchor boosts, nested post-locality or a
+   caller that filters the hits need it (one rule, :func:`_plan_search`).
 3. *Partition pre-merge* (:func:`_partition_topk_factory`) — one
    narrow pass per partition keeps its k best rows by (score DESC,
    doc_id DESC), the required tie-break (reference
@@ -102,7 +105,6 @@ from pyspark.sql import types as T
 from veloci_spark.build import _local_dir, load_manifest
 from veloci_spark.scoring import index_score_u32, levenshtein_batch, term_score
 from veloci_spark.vbyte import unpack_ids, unpack_postings, vbyte_decode
-from veloci_spark import pyref
 
 _F32 = np.float32
 
@@ -528,8 +530,7 @@ def _select(spec: _MatchSpec, raw, folded=None):
         fn = rx.match if spec.starts_with else rx.fullmatch
         sel = np.fromiter((fn(v) is not None for v in raw), bool, n)
     elif spec.starts_with and d:
-        sel = np.fromiter((pyref._prefix_lev(s, q) <= d for s in folded),
-                          bool, n)
+        sel = levenshtein_batch(list(folded), q, d, prefix=True) <= d
     elif spec.starts_with:
         sel = np.fromiter((s.startswith(q) for s in folded), bool, n)
     elif d == 0:
@@ -625,12 +626,13 @@ def _identity_candidates(index: FulltextIndex, field: str,
 
 
 def _identity_scores(spec: _MatchSpec, values):
-    """Positions of the identity ``values`` that ``spec`` selects and their
-    f32 final scores: term_score × f16(IDENTITY_STORED)/100."""
+    """Positions of the identity ``values`` that ``spec`` selects, their
+    term scores and their f32 final scores: term_score ×
+    f16(IDENTITY_STORED)/100."""
     pos, dist, prefix = _select(spec, values)
     ts = term_score(dist, prefix)
-    return pos, (ts * (np.float16(IDENTITY_STORED).astype(_F32)
-                       / _F32(100.0))).astype(_F32)
+    return pos, ts, (ts * (np.float16(IDENTITY_STORED).astype(_F32)
+                           / _F32(100.0))).astype(_F32)
 
 
 # ---------------------------------------------------------------------------
@@ -883,16 +885,7 @@ def _collect_leaves(index: FulltextIndex, request: dict):
     filter_tree = None
     if request.get("filter") is not None:
         filter_tree = _parse_tree(request["filter"], leaves, dedup)
-    scored_leaf_ids = set()
-
-    def mark(node):
-        if node["op"] == "leaf":
-            scored_leaf_ids.add(node["leaf_id"])
-        else:
-            for c in node["children"]:
-                mark(c)
-
-    mark(tree)
+    scored_leaf_ids = _id_tree_leaf_ids(tree)
 
     phrase_specs = []
     for pb in request.get("phrase_boosts", []):
@@ -937,9 +930,10 @@ def _collect_leaves(index: FulltextIndex, request: dict):
 # count carried on its first row (0 on the rest) — summing seg_hits over
 # all rows gives the reference-true num_hits (search_result.rs:8-26)
 # without materializing the full hit set
-# per-task budget for the multi-leaf WAND kernel's dense scatter state
-# (n_legs × segment_docs cells, ≤6 B each); wider trees use the plain
-# kernel whose state is hit-proportional (VERDICT r4 #4)
+# per-task budget for the WAND kernel's dense scatter state: 5 B per
+# (leg, segment doc) cell (f32 max + presence) plus the 1 B touched mask
+# per segment doc; wider trees use the plain kernel whose state is
+# hit-proportional (VERDICT r4 #4)
 _WAND_DENSE_BUDGET_BYTES = 64 << 20
 
 _HITS_SCHEMA = T.StructType([
@@ -1208,7 +1202,7 @@ def _apply_post_locality(index: FulltextIndex, hits: DataFrame,
 def search_df(index: FulltextIndex, request: dict) -> DataFrame:
     """Evaluate a request; returns ranked DataFrame (doc_id, score) — already
     sorted (score DESC, doc_id DESC) with top/skip applied."""
-    hits, _plan, _leaves = _search_hits(index, request, need_all=False)
+    hits, _plan, _leaves = _search_hits(index, request)
     if _plan.get("post_locality"):
         hits = _apply_post_locality(index, hits, _leaves,
                                     _plan["scored_leaf_ids"])
@@ -1388,7 +1382,7 @@ def _composed_search_hits(index: FulltextIndex, cplan: dict, leaves,
         need_ids |= _id_tree_leaf_ids(cplan["filter"])
     for lid, _factor in cplan.get("term_boost_leaves", ()):
         need_ids.add(lid)
-    segment_docs = int(index.manifest["segment_docs"])
+    segment_docs = cplan["segment_docs"]
     legs = []
     for leaf in leaves:
         if leaf.leaf_id not in scored and leaf.leaf_id not in need_ids:
@@ -1402,16 +1396,9 @@ def _composed_search_hits(index: FulltextIndex, cplan: dict, leaves,
             legs.append(rows.mapInPandas(
                 _leg_ids_kernel_factory(segment_docs), schema=_LEG_SCHEMA))
             continue
-        plan = {"tree": {"op": "leaf", "leaf_id": leaf.leaf_id,
-                         "tag": leaf.tag, "boost": leaf.boost},
-                "filter": None, "phrase_leaves": [], "term_boost_leaves": [],
-                "locality": False, "post_locality": False,
-                "scored_leaf_ids": {leaf.leaf_id},
-                "locality_leaves": [], "top": None, "count_hits": False,
-                "seg_deleted": cplan["seg_deleted"],
-                "segment_docs": segment_docs,
-                "quantize_f16":
-                    index.manifest.get("scoring", "veloci") == "veloci"}
+        plan = _kernel_plan(index, {"op": "leaf", "leaf_id": leaf.leaf_id,
+                                    "tag": leaf.tag, "boost": leaf.boost},
+                            cplan["seg_deleted"])
         kernel = _segment_kernel_factory(plan, {leaf.leaf_id})
         h = rows.repartition("segment").mapInPandas(kernel, schema=_HITS_SCHEMA)
         if leaf.field_boosts:
@@ -1474,30 +1461,44 @@ class _SearchPlan(NamedTuple):
     tree: dict                 # the request tree, leaf boosts intact
 
 
-def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
-                 count_hits: bool = False, *,
-                 seg_deleted=None) -> _SearchPlan:
+def _kernel_plan(index: FulltextIndex, tree: dict, seg_deleted=None,
+                 **steps) -> dict:
+    """The segment kernel's plan: the scored ``tree``, the post-tree
+    ``steps`` of :func:`eval_segment` (``filter``, ``phrase_leaves``,
+    ``term_boost_leaves``, ``locality`` and its ``locality_leaves``;
+    ``post_locality`` moves it after the kernel), the per-segment ``top``
+    (None: every hit), ``wand`` (:func:`_wand_tree_segment`) and the
+    index's segment layout. ``seg_deleted`` ({segment: segment-relative
+    ids}) carries a streamed generation's tombstones: the kernel drops
+    those docs and widens each segment's top-k by their count."""
+    return {"tree": tree, "filter": None, "phrase_leaves": [],
+            "term_boost_leaves": [], "locality": False,
+            "locality_leaves": [], "post_locality": False, "top": None,
+            "scored_leaf_ids": _id_tree_leaf_ids(tree),
+            "seg_deleted": seg_deleted or {},
+            "segment_docs": int(index.manifest["segment_docs"]),
+            # veloci mode quantizes stored scores through f16 on read
+            # (reference parity); bm25 scores skip the lossy round-trip
+            "quantize_f16":
+                index.manifest.get("scoring", "veloci") == "veloci",
+            **steps}
+
+
+def _plan_search(index: FulltextIndex, request: dict, need_all: bool = False,
+                 *, seg_deleted=None) -> _SearchPlan:
     """Parse the request, match every leaf against the dictionary and
-    build the kernel plan — no Spark job and no DataFrame.
+    build the kernel plan (:func:`_kernel_plan`) — no Spark job and no
+    DataFrame.
 
-    ``count_hits``: make the kernel report each segment's EXACT hit count in
-    the ``seg_hits`` column (first row per segment) even on the truncating
-    WAND paths — skipped posting rows then pay an ids-only decode. The
-    DataFrame-only callers (:func:`search_df`) leave it off.
-
-    ``seg_deleted`` ({segment: segment-relative ids}) carries a streamed
-    generation's tombstones; only ``MultiIndex`` passes it, never a
-    request. The kernel drops the tombstoned docs and widens each
-    segment's top-k by its tombstone count
-    (:func:`_segment_kernel_factory`)."""
+    The one rule for emitting every hit instead of a per-segment top-k:
+    the caller needs them all (``need_all``: it filters or joins the hits
+    afterwards), or a step after the kernel does — facets, anchor
+    ``boost`` (it reorders scores) and nested post-locality. Counts are
+    exact either way, and ``why_found`` reads postings for the result ids
+    only. ``seg_deleted`` is only ever passed by ``MultiIndex``, never
+    taken from a request."""
     (tree, filter_tree, leaves, scored_ids, phrase_specs,
      term_boost_leaves) = _collect_leaves(index, request)
-    # kernel input keys: postings rows of the matched terms, tagged with
-    # leaf_id; identity-field leaves read the doc store instead
-    matched = _matched_rows(leaves)
-    identity_leaves = [l for l in leaves if l.matched is None]
-    # phrase legs carry synthetic leaf ids after the real leaves
-    phrase_leaf_ids = list(range(len(leaves), len(leaves) + len(phrase_specs)))
     # text locality over any NESTED leaf needs per-VALUE grouping, which the
     # segment kernel cannot see (postings are doc-level) → move the whole
     # locality boost post-kernel (reference boost_text_locality_all merges
@@ -1505,125 +1506,59 @@ def _plan_search(index: FulltextIndex, request: dict, need_all: bool,
     post_locality = bool(request.get("text_locality")) and any(
         index.fields.get(l.field, {}).get("is_nested")
         for l in leaves if l.leaf_id in scored_ids)
-    segment_docs = int(index.manifest["segment_docs"])
-    # veloci mode quantizes stored scores through f16 on read (reference
-    # parity); bm25 scores skip the lossy round-trip
-    quantize_f16 = index.manifest.get("scoring", "veloci") == "veloci"
-
+    locality = bool(request.get("text_locality")) and not post_locality
+    plan = _kernel_plan(
+        index, tree, seg_deleted, filter=filter_tree,
+        # phrase legs carry synthetic leaf ids after the real leaves
+        phrase_leaves=list(range(len(leaves), len(leaves) + len(phrase_specs))),
+        term_boost_leaves=term_boost_leaves, locality=locality,
+        locality_leaves=[(l.leaf_id, l.tag) for l in leaves
+                         if l.leaf_id in scored_ids],
+        post_locality=post_locality)
+    # kernel input keys: postings rows of the matched terms, tagged with
+    # leaf_id; identity-field leaves read the doc store instead
+    sp = _SearchPlan(plan, leaves, _matched_rows(leaves), phrase_specs,
+                     [l for l in leaves if l.matched is None],
+                     composed=False, tree=tree)
     if any(l.field_boosts for l in leaves):
         # per-leg boost-by-field (reference options.boost inside a search
         # part, tests.rs:843-871): each leg's hits must be boosted BEFORE
         # the tree combine, which the in-kernel combined evaluation cannot
         # express — switch to the composed path (one kernel pass per leaf,
         # boost per leg, then a distributed eval_segment combine running
-        # the same post-tree pipeline: filter ∩ → phrase ×5 → term boost →
-        # locality; nested locality moves post-combine exactly as the main
-        # path moves it post-kernel)
-        cplan = {
-            # scalar leaf boosts are applied in the LEG kernels (leaf-level,
-            # before the per-leg field boosts — reference order); strip them
-            # so the combine doesn't re-apply
-            "tree": _strip_leaf_boosts(tree),
-            "filter": filter_tree,
-            "phrase_leaves": phrase_leaf_ids,
-            "term_boost_leaves": term_boost_leaves,
-            "locality": bool(request.get("text_locality")) and not post_locality,
-            "post_locality": post_locality,
-            "scored_leaf_ids": set(scored_ids),
-            "locality_leaves": [(l.leaf_id, l.tag) for l in leaves
-                                if l.leaf_id in scored_ids],
-            "top": None,
-            # the scored legs' kernels drop the tombstoned docs
-            "seg_deleted": seg_deleted or {},
-            "segment_docs": segment_docs,
-            "quantize_f16": quantize_f16,
-        }
-        return _SearchPlan(cplan, leaves, matched, phrase_specs,
-                           identity_leaves, composed=True, tree=tree)
-
-    top = request.get("top", 10)
-    skip = request.get("skip", 0)
-    # anchor boosts (Q13) reorder scores post-kernel → per-segment top-k
-    # truncation would be unsound; emit full hit sets in that case
-    emit_all = (need_all or bool(request.get("facets"))
-                or bool(request.get("why_found")) or bool(request.get("boost"))
-                or post_locality)
-    plan = {
-        "tree": tree,
-        "filter": filter_tree,
-        "phrase_leaves": phrase_leaf_ids,
-        "term_boost_leaves": term_boost_leaves,
-        "locality": bool(request.get("text_locality")) and not post_locality,
-        "post_locality": post_locality,
-        "scored_leaf_ids": set(scored_ids),
-        "locality_leaves": [(l.leaf_id, l.tag) for l in leaves
-                            if l.leaf_id in scored_ids],
-        # top+skip == 0 still keeps k=1 so every non-empty segment emits a
-        # row to carry its exact hit count
-        "top": None if emit_all else max(top + skip, 1),
-        "count_hits": count_hits and not emit_all,
-        "seg_deleted": seg_deleted or {},
-        "segment_docs": segment_docs,
-        "quantize_f16": quantize_f16,
-    }
-    # WAND-style pruning (single unboosted leaf, plain top-k): posting rows
-    # are processed in descending max-possible-score order and skipped —
-    # without decoding — once they cannot reach the running kth score.
-    # Sound because a leaf's doc score is the MAX over its term rows
-    # (search_field.rs:449-463) and the threshold only grows. An unboosted
-    # one-child OR/AND scores as its child (eval_tree), so a lone leaf
-    # under it prunes the same way.
-    if (tree["op"] != "leaf" and len(tree["children"]) == 1
-            and tree.get("boost") is None):
-        wtree = tree["children"][0]
-    else:
-        wtree = tree
-    if (not emit_all and filter_tree is None and not term_boost_leaves
-            and not plan["locality"] and not phrase_specs
-            and wtree["op"] == "leaf" and wtree.get("boost") is None
-            and plan["top"]
-            and leaves[wtree["leaf_id"]].matched is not None):
-        plan["wand_leaf"] = wtree["leaf_id"]
-    # multi-leaf WAND: unboosted OR/AND of plain leaves (_wand_tree_segment)
-    elif (not emit_all and filter_tree is None and not term_boost_leaves
-          and not plan["locality"] and not phrase_specs
-          and tree["op"] in ("or", "and") and tree.get("boost") is None
-          and plan["top"]
-          and all(c["op"] == "leaf" and c.get("boost") is None
-                  for c in tree["children"])
-          and all(leaves[c["leaf_id"]].matched is not None
-                  for c in tree["children"])):
-        if tree["op"] == "or":
-            # OR merges legs by TAG (same-tag leaves max together)
-            or_tags = sorted({_tree_tag(c) for c in tree["children"]})
-            tag_ix = {t: i for i, t in enumerate(or_tags)}
-            plan["wand_tree"] = {c["leaf_id"]: tag_ix[_tree_tag(c)]
-                                 for c in tree["children"]}
-            plan["wand_ntags"] = len(or_tags)
-            plan["wand_op"] = "or"
-        else:
-            # AND legs are the child positions (score = Σ in child order);
-            # duplicate children would double-count — leave those to the
-            # full path
-            ids_ = [c["leaf_id"] for c in tree["children"]]
-            if len(set(ids_)) == len(ids_):
-                plan["wand_tree"] = {l: i for i, l in enumerate(ids_)}
-                plan["wand_ntags"] = len(ids_)
-                plan["wand_op"] = "and"
-        # dense-state budget (VERDICT r4 #4): _wand_tree_segment scatter
-        # state is (n_legs × segment_docs) cells at ≤6 B each (f32 maxes +
-        # present + count-only sk_present bools). A wide fuzzy OR expanding
-        # to dozens of tags would allocate hundreds of MB per task at the
-        # default 2²⁰-doc segment — fall back to the plain kernel, whose
-        # per-leaf state is hit-proportional, past the budget.
-        if (plan.get("wand_tree") is not None
-                and plan["wand_ntags"] * plan["segment_docs"] * 6
-                > _WAND_DENSE_BUDGET_BYTES):
-            plan.pop("wand_tree")
-            plan.pop("wand_ntags")
-            plan.pop("wand_op")
-    return _SearchPlan(plan, leaves, matched, phrase_specs, identity_leaves,
-                       composed=False, tree=tree)
+        # the same post-tree pipeline). Scalar leaf boosts are applied in
+        # the LEG kernels (leaf-level, before the per-leg field boosts —
+        # reference order); strip them so the combine doesn't re-apply.
+        return sp._replace(plan={**plan, "tree": _strip_leaf_boosts(tree)},
+                           composed=True)
+    if (need_all or request.get("facets") or request.get("boost")
+            or post_locality):
+        return sp
+    # top+skip == 0 still keeps k=1 so every non-empty segment emits a
+    # row to carry its exact hit count
+    plan["top"] = max(request.get("top", 10) + request.get("skip", 0), 1)
+    # WAND-style pruning (_wand_tree_segment): a lone unboosted leaf, or an
+    # unboosted OR/AND of unboosted dictionary leaves, with no post-tree
+    # step. AND legs are its children: a repeated child would count one
+    # leg twice in the score but once in the bound — left to the plain
+    # kernel. Dense-state budget (VERDICT r4 #4): the scatter state is
+    # (5 × legs + 1) B per segment doc (f32 max and presence per leg, the
+    # touched mask); a wide fuzzy OR expanding to dozens of tags would
+    # allocate hundreds of MB per task at the default 2²⁰-doc segment, so
+    # past the budget the plain kernel, whose state is hit-proportional,
+    # runs instead.
+    kids = [tree] if tree["op"] == "leaf" else tree["children"]
+    legs = (_wand_legs(tree) if all(
+        c["op"] == "leaf" and c.get("boost") is None
+        and leaves[c["leaf_id"]].matched is not None for c in kids) else {})
+    n_legs = len(set(legs.values()))
+    plan["wand"] = bool(
+        legs and filter_tree is None and not term_boost_leaves
+        and not locality and not phrase_specs
+        and (tree["op"] != "and" or n_legs == len(kids))
+        and (5 * n_legs + 1) * plan["segment_docs"]
+        <= _WAND_DENSE_BUDGET_BYTES)
+    return sp
 
 
 def _spark_hits(index: FulltextIndex, sp: _SearchPlan):
@@ -1652,12 +1587,10 @@ def _spark_hits(index: FulltextIndex, sp: _SearchPlan):
     return hits, plan, leaves
 
 
-def _search_hits(index: FulltextIndex, request: dict, need_all: bool,
-                 count_hits: bool = False):
+def _search_hits(index: FulltextIndex, request: dict, need_all: bool = False):
     """Plan + Spark executor. Returns (hits DataFrame, plan, leaves); see
-    :func:`_plan_search` for ``count_hits``."""
-    return _spark_hits(index, _plan_search(index, request, need_all,
-                                           count_hits))
+    :func:`_plan_search` for ``need_all``."""
+    return _spark_hits(index, _plan_search(index, request, need_all))
 
 
 # ---------------------------------------------------------------------------
@@ -1815,149 +1748,68 @@ def _stored_to_f32(stored: np.ndarray, quantize_f16: bool) -> np.ndarray:
     return stored.astype(_F32) / _F32(100.0)
 
 
-def _wand_segment(g: pd.DataFrame, k: int, base: int, seg_docs: int,
-                  quantize_f16: bool = True, count_hits: bool = False,
-                  deleted: np.ndarray | None = None):
-    """Single-leaf top-k with max-score row pruning: rows sorted by upper
-    bound (term_score × f16(max_score)/100) descending; once k distinct docs
-    exist and the next row's upper bound is below the running kth deduped
-    score, the remaining rows are never score-decoded.
-
-    State is scatter arrays over the segment's doc-id space (maxv/touched),
-    updated incrementally per decoded row; the kth-score threshold is
-    refreshed lazily — only when a row survives the stale threshold AND a
-    decode happened since the last refresh (θ only grows, so a stale θ is
-    always a sound, merely weaker, bound). With ``count_hits`` the rows the
-    threshold skips still get an ids-only delta+VByte decode (no score
-    decode, no f32 math) so the segment's EXACT distinct-hit count is
-    returned; pass False (the DataFrame paths that don't report num_hits)
-    and skipped rows are never touched at all.
-
-    ``deleted`` (segment-relative tombstoned ids, streamed indexes) is
-    subtracted from the reported count — n_hits is then the exact LIVE hit
-    count (VERDICT r4 #3). The returned candidates still hold them: the
-    calling kernel drops them in one place for all paths, and its
-    per-segment k inflation leaves k live survivors.
-
-    Returns (ids, scores, n_hits) — n_hits is -1 when not counted."""
-    ts = g["term_score"].values.astype(_F32)
-    upper = (ts * _stored_to_f32(
-        g["max_score"].values.astype(np.uint32), quantize_f16)).astype(_F32)
-    order = np.argsort(-upper.astype(np.float64), kind="stable")
-    maxv = np.zeros(seg_docs, dtype=_F32)
-    touched = np.zeros(seg_docs, dtype=bool)
-    cand: list = []  # newly-touched id chunks (segment-relative)
-    n_cand = 0
-    thresh = None
-    dirty = False
-    entries = 1 << 62  # posting entries decoded since the last refresh
-    sk_touched = None  # ids seen only in skipped rows (count only)
-    docs_col = g.columns.get_loc("docs_bin")
-    scores_col = g.columns.get_loc("scores_bin")
-
-    def refresh():
-        nonlocal thresh, dirty, cand, entries
-        docs = cand[0] if len(cand) == 1 else np.concatenate(cand)
-        cand = [docs]
-        vals = maxv[docs]
-        thresh = np.partition(vals, len(vals) - k)[len(vals) - k]
-        dirty = False
-        entries = 0
-
-    n_decoded = 0
-    for i in order:
-        if thresh is None or upper[i] >= thresh:
-            # amortized lazy refresh: O(candidates), allowed only once the
-            # decode work since the last refresh covers it
-            if dirty and n_cand >= k and 2 * entries >= n_cand:
-                refresh()
-        if thresh is not None and upper[i] < thresh:
-            break  # rows are upper-sorted: everything left is skippable
-        ids, stored = unpack_postings(g.iat[i, docs_col], g.iat[i, scores_col])
-        fin = (_F32(g["term_score"].values[i])
-               * _stored_to_f32(stored, quantize_f16)).astype(_F32)
-        np.maximum.at(maxv, ids, fin)
-        nt = ids[~touched[ids]]
-        touched[ids] = True
-        if len(nt):
-            cand.append(nt)
-            n_cand += len(nt)
-        dirty = True
-        entries += len(ids)
-        n_decoded += 1
-    n_hits = -1
-    if count_hits:
-        if n_decoded < len(order):  # skipped tail: ids-only count decode
-            sk_touched = np.zeros(seg_docs, dtype=bool)
-            for i in order[n_decoded:]:
-                sk_touched[unpack_ids(g.iat[i, docs_col])] = True
-        hit = touched | sk_touched if sk_touched is not None else touched
-        n_hits = int(hit.sum())
-        if deleted is not None and len(deleted):
-            n_hits -= int(hit[deleted].sum())
-    docs = np.flatnonzero(touched)
-    vals = maxv[docs]
-    sel = np.lexsort((-docs, -vals.astype(np.float64)))[:k]
-    return docs[sel] + base, vals[sel], n_hits
+def _wand_legs(node: dict) -> dict:
+    """leaf_id → leg of a WAND node (:func:`_wand_tree_segment`). An OR
+    leg is one distinct tag of its children (eval_tree maxes same-tag
+    children together); an AND leg is one child; a lone leaf is one leg."""
+    kids = [node] if node["op"] == "leaf" else node["children"]
+    keys = [_tree_tag(c) if node["op"] == "or" else c["leaf_id"] for c in kids]
+    legs = list(dict.fromkeys(keys))
+    return {c["leaf_id"]: legs.index(key) for c, key in zip(kids, keys)}
 
 
-def _wand_tree_segment(g: pd.DataFrame, leg_by_leaf: dict, n_legs: int,
-                       op: str, k: int, base: int, seg_docs: int,
-                       quantize_f16: bool = True, count_hits: bool = False,
-                       deleted: np.ndarray | None = None):
-    """Multi-leaf OR/AND top-k with block-max row pruning (VERDICT r2 #6).
+def _wand_tree_segment(g: pd.DataFrame, node: dict, k: int, base: int,
+                       seg_docs: int, quantize_f16: bool = True,
+                       deleted: "np.ndarray | None" = None):
+    """Top-k of one segment for a WAND node — a lone unboosted leaf, or an
+    unboosted OR/AND of unboosted leaves — with block-max row pruning.
 
-    OR scoring is ``(Σ per-leg max) × n²`` (eval_tree / set_op.rs:87-220),
-    AND scoring ``Σ per-leg max`` over docs present in EVERY leg
-    (set_op.rs:368-446); both are MONOTONE in adding contributions, so the
-    running kth partial score θ is a valid lower bound on the kth final
-    score. Rows are processed in descending upper-bound order
-    (upper = term_score × f16(max_score)/100); a row of leg t is skipped —
-    never decoded — when even combined with the best possible contribution
-    of every OTHER leg it cannot reach θ:
+    A leaf's doc score is the max over its term rows (search_field.rs:
+    449-463); OR scores ``(Σ per-leg max) × n²`` (set_op.rs:87-220), AND
+    ``Σ per-leg max`` over docs present in every leg (set_op.rs:368-446).
+    All are MONOTONE in adding contributions, so the running kth partial
+    score θ is a valid lower bound on the kth final score. Rows are
+    processed in descending upper-bound order (upper = term_score ×
+    f16(max_score)/100); a row of leg t is skipped — never score-decoded —
+    when even with the best possible contribution of every OTHER leg it
+    cannot reach θ:
 
-        (upper_row + Σ_{t'≠t} U_{t'}) × factor < θ     (factor = L² | 1)
+        (upper_row + Σ_{t'≠t} U_{t'}) × factor × 1.0001 < θ   (factor = L² | 1)
 
-    where U_t is the segment's max upper of leg t and L the global leg
-    count (≥ any doc's n). Soundness of the OUTPUT: a doc whose leg-t max
-    lives in a skipped row has final score < θ ≤ kth, so every true top-k
-    doc has all of its per-leg maxima in decoded rows — its final score is
-    exact. Docs below θ may be under-scored (or, for AND, dropped when a
-    skipped row held their only evidence for a leg) but cannot displace an
-    exact-scored doc. Final scores are replayed through :func:`eval_tree`
-    itself (one synthetic leaf per leg; a presence mask distinguishes a
-    stored score of exactly 0.0 from absence) so they are bit-identical to
-    the non-WAND path; the θ partials are only a lower-bound estimate, and
-    the bound check carries a 1e-4 relative slack that dwarfs the ≤ L·2⁻²⁴
-    f32/f64 summation noise between the estimate and the exact replay.
+    where U_t is the segment's max upper of leg t and L the leg count
+    (≥ any doc's n). A doc whose leg-t max lives in a skipped row scores
+    below θ ≤ kth, so every true top-k doc is scored from decoded rows
+    only. The final scores are replayed through :func:`eval_tree` on
+    ``node`` itself, each leaf reading its leg's (ids, max) — bit-identical
+    to the plain kernel; the 1e-4 slack dwarfs the f32/f64 summation noise
+    between the θ estimate and the replay.
 
-    Cost discipline (VERDICT r3 #1 — no dense per-row rescans):
+    Per decoded row the kernel only scatters the leg's max and presence
+    and the ``touched`` mask, and keeps the newly touched ids as a chunk.
+    θ is refreshed LAZILY and AMORTIZED: only when a row survives the
+    stale θ, a decode happened since the last refresh and the posting
+    entries decoded since then cover its O(touched × legs) cost (entries ≥
+    touched/2). The θ partials are computed there, over the touched docs:
+    the sum over legs, × (legs ≥ 1e-5)² for OR, and for AND only the docs
+    present in every leg. θ only grows, so a stale θ is a sound, merely
+    weaker, bound. Skipped rows get an ids-only decode for the count.
 
-    * per-doc partials are maintained INCREMENTALLY: ``sumv`` (f64 Σ of
-      per-leg maxima) and ``cntv`` (legs with max ≥ 1e-5) are scatter-updated
-      only at the ids a decoded row actually improves; candidate docs are
-      tracked as appended chunks — no ``flatnonzero`` / ``present.all`` over
-      the 2²⁰-doc segment space per row.
-    * θ refreshes LAZILY and AMORTIZED: a refresh is O(candidates) (not
-      O(legs × segment_docs)) and runs only when (a) a row survives the
-      stale θ, (b) a decode happened since the last refresh, and (c) the
-      posting entries decoded since the last refresh cover its cost
-      (entries ≥ candidates/2). θ only grows, so a stale θ is a sound,
-      merely weaker, bound; the amortization caps ALL pruning bookkeeping
-      at a small constant factor of the plain decode work — a stopword-
-      dense OR where pruning cannot win degrades to ≈ the emit-all cost
-      instead of O(rows × legs × segment_docs).
+    The finish costs O(hits): the sorted touched ids feed the replay, and
+    the exact hit count is taken over the union of decoded and skipped
+    ids (per leg, intersected for AND), minus the ``deleted``
+    (segment-relative tombstoned ids) among them. The returned top-k
+    still holds tombstoned docs: the calling kernel drops them, and its
+    per-segment k widening leaves k live survivors.
 
-    With ``count_hits`` the skipped rows still get an ids-only decode into
-    separate count bitmaps so the EXACT segment hit count (OR: docs in any
-    leg; AND: docs present in every leg) is returned alongside the top-k;
-    n_hits is -1 when not counted. ``deleted`` is subtracted from that count
-    and, as in :func:`_wand_segment`, left in the candidates for the
-    calling kernel to drop."""
+    Returns (ids, scores, n_hits)."""
+    leg_of = _wand_legs(node)
+    n_legs = len(set(leg_of.values()))
+    # a one-child node passes its child through (eval_tree)
+    op = node["op"] if len(node.get("children", ())) > 1 else "leaf"
     ts = g["term_score"].values.astype(_F32)
     upper = (ts * _stored_to_f32(
         g["max_score"].values.astype(np.uint32), quantize_f16)).astype(np.float64)
-    leg_arr = np.array([leg_by_leaf[int(l)] for l in g["leaf_id"].values],
+    leg_arr = np.array([leg_of[int(l)] for l in g["leaf_id"].values],
                        dtype=np.int64)
     seg_u = np.zeros(n_legs, dtype=np.float64)
     np.maximum.at(seg_u, leg_arr, upper)
@@ -1968,15 +1820,12 @@ def _wand_tree_segment(g: pd.DataFrame, leg_by_leaf: dict, n_legs: int,
     maxes = np.zeros((n_legs, seg_docs), dtype=_F32)
     present = np.zeros((n_legs, seg_docs), dtype=bool)
     touched = np.zeros(seg_docs, dtype=bool)
-    sumv = np.zeros(seg_docs, dtype=np.float64)  # Σ_t maxes[t] (exact f64)
-    cntv = np.zeros(seg_docs, dtype=np.int32)    # legs with max ≥ 1e-5
-    npres = np.zeros(seg_docs, dtype=np.int32)   # legs present (AND cands)
-    cand: list = []  # candidate doc-id chunks (OR: touched; AND: all-legs)
+    cand: list = []  # newly touched id chunks
     n_cand = 0
+    skipped: list = [[] for _ in range(n_legs)]  # ids of skipped rows
     thresh = None
     dirty = False
     entries = 1 << 62  # posting entries decoded since the last refresh
-    sk_present = None  # (n_legs, seg_docs) presence from SKIPPED rows
     docs_col = g.columns.get_loc("docs_bin")
     scores_col = g.columns.get_loc("scores_bin")
 
@@ -1984,11 +1833,15 @@ def _wand_tree_segment(g: pd.DataFrame, leg_by_leaf: dict, n_legs: int,
         nonlocal thresh, dirty, cand, entries
         docs = cand[0] if len(cand) == 1 else np.concatenate(cand)
         cand = [docs]
-        vals = sumv[docs]
+        m = maxes[:, docs]
+        vals = m.sum(axis=0, dtype=np.float64)
         if op == "or":
-            c = cntv[docs].astype(np.float64)
-            vals = vals * c * c
-        thresh = float(np.partition(vals, len(vals) - k)[len(vals) - k])
+            c = (m >= _F32(1e-5)).sum(axis=0)
+            vals = vals * (c * c)
+        elif op == "and":
+            vals = vals[present[:, docs].all(axis=0)]
+        if len(vals) >= k:
+            thresh = float(np.partition(vals, len(vals) - k)[len(vals) - k])
         dirty = False
         entries = 0
 
@@ -2003,63 +1856,34 @@ def _wand_tree_segment(g: pd.DataFrame, leg_by_leaf: dict, n_legs: int,
         else:
             skip = False
         if skip:
-            if count_hits:  # ids-only decode — the exact count still needs
-                if sk_present is None:  # these docs' presence, not scores
-                    sk_present = np.zeros((n_legs, seg_docs), dtype=bool)
-                sk_present[t, unpack_ids(g.iat[i, docs_col])] = True
+            skipped[t].append(unpack_ids(g.iat[i, docs_col]))
             continue
         ids, stored = unpack_postings(g.iat[i, docs_col], g.iat[i, scores_col])
-        fin = (_F32(g["term_score"].values[i])
-               * _stored_to_f32(stored, quantize_f16)).astype(_F32)
-        old = maxes[t, ids]
-        imp = fin > old
-        if imp.any():
-            u, nv, ov = ids[imp], fin[imp], old[imp]
-            maxes[t, u] = nv
-            sumv[u] += nv.astype(np.float64) - ov.astype(np.float64)
-            cntv[u[(nv >= _F32(1e-5)) & (ov < _F32(1e-5))]] += 1
-        newp = ids[~present[t, ids]]  # first presence in THIS leg
-        nt = ids[~touched[ids]]       # first presence in ANY leg
+        fin = (ts[i] * _stored_to_f32(stored, quantize_f16)).astype(_F32)
+        # a posting row holds each doc once: a plain scatter keeps the max
+        row = maxes[t]
+        row[ids] = np.maximum(row[ids], fin)
         present[t, ids] = True
+        nt = ids[~touched[ids]]
         touched[ids] = True
-        if len(newp):
-            npres[newp] += 1
-        # candidates must stay duplicate-free (θ = kth over the candidate
-        # SET; a duplicated high doc would overstate θ → unsound skips):
-        # OR appends newly-touched docs, AND docs whose presence just
-        # became all-legs — each doc enters exactly once
-        nc = nt if op == "or" else newp[npres[newp] == n_legs]
-        if len(nc):
-            cand.append(nc)
-            n_cand += len(nc)
+        if len(nt):
+            cand.append(nt)
+            n_cand += len(nt)
         dirty = True
         entries += len(ids)
-    n_hits = -1
-    if count_hits:
-        if sk_present is not None:
-            allp = present | sk_present
-        else:
-            allp = present
-        hitm = allp.all(axis=0) if op == "and" else allp.any(axis=0)
-        n_hits = int(hitm.sum())
-        if deleted is not None and len(deleted):
-            # exact LIVE count: tombstoned hits subtracted (VERDICT r4 #3)
-            n_hits -= int(hitm[deleted].sum())
-    docs = np.flatnonzero(touched)
-    leaf_hits = {}
-    for t in range(n_legs):
-        on = present[t, docs]
-        leaf_hits[t] = (docs[on].astype(np.int64), maxes[t, docs][on])
-    children = [{"op": "leaf", "leaf_id": t, "tag": f"{t:09d}", "boost": None}
-                for t in range(n_legs)]
-    if len(children) == 1:
-        # one leg here is an OR of several same-tag leaves (the planner
-        # sends a one-child node to _wand_segment): two same-leg children
-        # keep eval_tree on the OR formula (a single kid would be passed
-        # through without the n² factor)
-        children = children * 2
-    ids_out, sc = eval_tree({"op": op, "children": children}, leaf_hits)
-    gids = ids_out + base
+    docs = np.sort(np.concatenate(cand)) if cand else np.empty(0, np.int64)
+    leg_ids = [docs[present[t, docs]] for t in range(n_legs)]
+    ids, sc = eval_tree(node, {l: (leg_ids[t], maxes[t, leg_ids[t]])
+                               for l, t in leg_of.items()})
+    hit = ids
+    if any(skipped):
+        hit = reduce(np.intersect1d if op == "and" else np.union1d,
+                     [np.union1d(d, np.concatenate(s)) if s else d
+                      for d, s in zip(leg_ids, skipped)])
+    n_hits = len(hit)
+    if deleted is not None and len(deleted):
+        n_hits -= int(np.isin(hit, deleted).sum())
+    gids = ids + base
     sel = np.lexsort((-gids, -sc.astype(np.float64)))[:k]
     return gids[sel], sc[sel], n_hits
 
@@ -2113,7 +1937,7 @@ def _identity_leaf_rows(index: FulltextIndex, leaf) -> DataFrame:
         # withColumn + isnan filter would make Catalyst evaluate the Python
         # UDF twice
         for pdf in iterator:
-            pos, s = _identity_scores(spec, pdf["value"].values)
+            pos, _ts, s = _identity_scores(spec, pdf["value"].values)
             yield pd.DataFrame({"doc_id": pdf["doc_id"].values[pos], "s": s})
 
     scored = _identity_candidates(index, leaf.field, spec).mapInPandas(
@@ -2227,7 +2051,6 @@ def _partition_topk_factory(k: int, count_col: str | None = None,
 
 
 def _segment_kernel_factory(plan: dict, scored_leaf_ids: set):
-    count_hits = bool(plan.get("count_hits"))
     # per-segment tombstoned ids (segment-relative, streamed indexes): each
     # path subtracts them from the segment's reported hit count, and the
     # one filter below drops them from the emitted candidates, so seg_hits
@@ -2245,24 +2068,16 @@ def _segment_kernel_factory(plan: dict, scored_leaf_ids: set):
         if not pdfs:
             return
         data = pd.concat(pdfs, ignore_index=True)
-        wand_leaf = plan.get("wand_leaf")
         for _seg, g in data.groupby("segment", sort=False):
             seg_base = int(_seg) * plan["segment_docs"]
             k = plan.get("top")
             dl = seg_deleted.get(int(_seg))
             if k is not None and dl is not None:
                 k += len(dl)
-            if wand_leaf is not None:
-                ids, scores, n_hits = _wand_segment(
-                    g[g["leaf_id"] == wand_leaf], k, seg_base,
-                    plan["segment_docs"], plan.get("quantize_f16", True),
-                    count_hits, deleted=dl)
-            elif plan.get("wand_tree") is not None:
+            if plan.get("wand"):
                 ids, scores, n_hits = _wand_tree_segment(
-                    g, plan["wand_tree"], plan["wand_ntags"],
-                    plan["wand_op"], k, seg_base,
-                    plan["segment_docs"], plan.get("quantize_f16", True),
-                    count_hits, deleted=dl)
+                    g, plan["tree"], k, seg_base, plan["segment_docs"],
+                    plan.get("quantize_f16", True), dl)
             else:
                 ids, scores, n_hits = _plain_segment(
                     g, plan, scored_leaf_ids, k, seg_base, dl)
@@ -2363,11 +2178,7 @@ def _search_part(index: FulltextIndex, request: dict, fused_facets: bool,
     Spark join), so the part runs on Spark and emits every hit, and the
     merge counts the rows that survive. See :func:`_plan_search` for
     ``seg_deleted``."""
-    need_all = (filtered or bool(request.get("facets"))
-                or bool(request.get("exact_count"))
-                or bool(request.get("why_found")) or bool(request.get("boost")))
-    sp = _plan_search(index, request, need_all, count_hits=True,
-                      seg_deleted=seg_deleted)
+    sp = _plan_search(index, request, filtered, seg_deleted=seg_deleted)
     tier, est, scan = (("spark", None, None) if filtered else
                        _choose_tier(index, request, sp, fused_facets))
     if tier == "local":
@@ -2390,8 +2201,7 @@ def search(index: FulltextIndex, request: dict) -> dict:
     (search_result.rs:8-26): the segment kernel emits each segment's exact
     count alongside its truncated top-k (skipped WAND rows pay an ids-only
     decode), so no path needs a full materialization for the count.
-    ``exact_count`` is still accepted (it forces the untruncated evaluation)
-    but no longer changes the reported numbers.
+    ``exact_count`` is accepted and ignored.
     """
     t_start = time.monotonic()
     fused = _fused_facets([index], request)
@@ -2407,8 +2217,7 @@ def search(index: FulltextIndex, request: dict) -> dict:
             # request-level boost specs belong in the plan dump (the
             # reference's dot plan includes its boost steps, tests.rs:1153)
             "boost": request.get("boost") or [],
-            "wand": (plan.get("wand_leaf") is not None
-                     or plan.get("wand_tree") is not None),
+            "wand": bool(plan.get("wand")),
             # execution tier and the estimates behind it
             "tier": part.tier,
             "posting_estimate": part.posting_estimate,
@@ -2746,12 +2555,7 @@ def suggest(index: FulltextIndex, field: str, prefix: str, *, top: int = 10,
                 m["score"].values, vals, token_value.get("boost_fun", "Log10"),
                 float(token_value.get("param", 0.0)))
             m = m.assign(score=boosted)
-    m = m.assign(lower=m["term"].str.lower())
-    # dedup same lowercased text keep max score, sort by score desc
-    best = m.sort_values(["score", "term_id"], ascending=[False, False], kind="mergesort") \
-            .drop_duplicates("lower")
-    best = best.sort_values(["score", "term_id"], ascending=[False, False], kind="mergesort")
-    return _suggestions(best.head(top))
+    return _suggestions([m], top)
 
 
 def suggest_multi(index: FulltextIndex, fields: list[str], prefix: str, *,
@@ -2760,23 +2564,24 @@ def suggest_multi(index: FulltextIndex, fields: list[str], prefix: str, *,
     (/root/reference/src/search/search_field.rs:194-230 suggest_multi:
     per-field dictionary matches, same lowercased text deduped keep-max,
     global score-descending order)."""
-    frames = [match_terms(index, f, prefix, levenshtein=levenshtein,
-                          starts_with=True)
-              for f in fields]
+    return _suggestions([match_terms(index, f, prefix, levenshtein=levenshtein,
+                                     starts_with=True) for f in fields], top)
+
+
+def _suggestions(frames, top: int, tie: str = "term_id") -> list:
+    """The suggest tail: the match frames' terms, same lower-cased text
+    deduped keep-max, ranked by (score DESC, ``tie``) — ``term_id`` DESC
+    within one index, the text ``lower`` ASC across generations (term ids
+    are per-generation dictionary ranks) — as the top (lower-cased text,
+    f32 score) pairs."""
     frames = [f for f in frames if not f.empty]
     if not frames:
         return []
     m = pd.concat(frames, ignore_index=True)
     m = m.assign(lower=m["term"].str.lower())
-    best = m.sort_values(["score", "term_id"], ascending=[False, False],
-                         kind="mergesort").drop_duplicates("lower")
-    best = best.sort_values(["score", "term_id"], ascending=[False, False],
-                            kind="mergesort")
-    return _suggestions(best.head(top))
-
-
-def _suggestions(best: pd.DataFrame) -> list[tuple[str, float]]:
-    """(lowercased text, f32 score) pairs of ranked suggestion rows."""
+    best = (m.sort_values(["score", tie], ascending=[False, tie == "lower"],
+                          kind="mergesort")
+            .drop_duplicates("lower").head(top))
     return [(t, float(np.float32(s)))
             for t, s in zip(best["lower"].tolist(), best["score"].tolist())]
 

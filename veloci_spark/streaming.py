@@ -326,23 +326,12 @@ class MultiIndex:
         term_id: term_ids are per-generation dictionary ranks and not
         comparable across generations, so a term_id tie-break would make
         the order depend on generation layout (ADVICE r4)."""
-        import pandas as pd
-
         from veloci_spark.search import _suggestions, match_terms
 
-        frames = [match_terms(idx, field, prefix, levenshtein=levenshtein,
-                              starts_with=True)
-                  for _g, idx in self.indexes]
-        frames = [f for f in frames if not f.empty]
-        if not frames:
-            return []
-        m = pd.concat(frames, ignore_index=True)
-        m = m.assign(lower=m["term"].str.lower())
-        best = m.sort_values(["score", "lower"], ascending=[False, True],
-                             kind="mergesort").drop_duplicates("lower")
-        best = best.sort_values(["score", "lower"],
-                                ascending=[False, True], kind="mergesort")
-        return _suggestions(best.head(top))
+        return _suggestions([match_terms(idx, field, prefix,
+                                         levenshtein=levenshtein,
+                                         starts_with=True)
+                             for _g, idx in self.indexes], top, tie="lower")
 
     def get_doc(self, doc_id: int, columns=None):
         """Route a global doc id to its generation; tombstoned ids resolve
