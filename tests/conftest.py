@@ -41,13 +41,32 @@ def spark_tier(monkeypatch):
 
 @contextlib.contextmanager
 def forced_spark_build():
-    """Builds inside this block take the Spark build tier
-    (LOCAL_BUILD_MAX_TEXT_BYTES = -1: no batch is small enough)."""
+    """Builds inside this block take the Spark build tier for every stage:
+    the docs stage (build.LOCAL_TIER_MAX_SCAN_BYTES = -1: no input plan is
+    small enough to collect) and stages 2-5 (LOCAL_BUILD_MAX_TEXT_BYTES =
+    -1: no batch is small enough)."""
     from veloci_spark import build
 
     with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(build, "LOCAL_TIER_MAX_SCAN_BYTES", -1)
         mp.setattr(build, "LOCAL_BUILD_MAX_TEXT_BYTES", -1)
         yield
+
+
+def sized_df(spark, rows, schema):
+    """A DataFrame of ``rows`` (dicts or tuples) under ``schema`` (a
+    StructType or a DDL string) whose plan Spark can size: a local
+    relation from pandas, not an RDD of Python rows, whose size Spark does
+    not know. The build's docs stage runs in the driver only for a plan
+    Spark sizes within its bound, so the default-tier builds of the parity
+    batteries start from these."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=schema.names), schema=schema)
 
 
 @pytest.fixture
@@ -124,17 +143,15 @@ def _build_golden(spark, corpus, index_dir):
     from veloci_spark.synth import WEBTEXT_SCHEMA
 
     cfg = webtext_config(segment_docs=SEGMENT_DOCS)
-    df = spark.createDataFrame(
-        [{k: r[k] for k in ("url", "warc_ts", "html", "text", "lang")} for r in corpus],
-        schema=WEBTEXT_SCHEMA,
-    ).repartition(4)
+    df = sized_df(spark, corpus, WEBTEXT_SCHEMA).repartition(4)
     build_index(spark, df, cfg, index_dir)
     return FulltextIndex(spark, index_dir).cache()
 
 
 @pytest.fixture(scope="session")
 def spark_index(spark, corpus, index_dir):
-    """The golden corpus built under the default cost rule (local tier)."""
+    """The golden corpus built under the default cost rule (local tier,
+    doc store included)."""
     return _build_golden(spark, corpus, index_dir)
 
 

@@ -244,43 +244,47 @@ def test_concurrent_requests_on_fresh_handle(spark, spark_index, ref_index):
 
 
 class TestLocalBuild:
-    """The local build tier runs no Spark job after the doc store, and
+    """A local build's only Spark jobs are the doc store's collect, and
     its stages resume on the Spark tier and back."""
 
     def _df(self, spark, corpus):
+        from tests.conftest import sized_df
         from veloci_spark.synth import WEBTEXT_SCHEMA
 
-        return spark.createDataFrame(
-            [{k: r[k] for k in ("url", "warc_ts", "html", "text", "lang")}
-             for r in corpus], schema=WEBTEXT_SCHEMA).repartition(2)
+        return sized_df(spark, corpus, WEBTEXT_SCHEMA).repartition(2)
 
     def test_only_docs_stage_runs_jobs(self, spark, corpus, tmp_path,
                                        monkeypatch):
+        """No job before the driver docs stage's collect (the tier rule
+        reads plan statistics only) and none after it."""
         from veloci_spark import build as B
         from veloci_spark.config import webtext_config
 
         sc = spark.sparkContext
-        mark = B._mark_stage
+        driver_docs = B._driver_docs
 
-        def mark_then_switch_group(index_dir, name, *a, **k):
-            mark(index_dir, name, *a, **k)
-            if name == "docs":
-                sc.setJobGroup("build-after-docs", "after the doc store")
+        def grouped_collect(*a, **k):
+            sc.setJobGroup("build-collect", "the doc store's collect")
+            try:
+                return driver_docs(*a, **k)
+            finally:
+                sc.setJobGroup("build-after-collect", "after the collect")
 
-        monkeypatch.setattr(B, "_mark_stage", mark_then_switch_group)
-        sc.setJobGroup("build-docs", "doc store")
+        monkeypatch.setattr(B, "_driver_docs", grouped_collect)
+        df = self._df(spark, corpus)
+        sc.setJobGroup("build-before-collect", "before the collect")
         try:
-            m = B.build_index(spark, self._df(spark, corpus),
-                              webtext_config(segment_docs=32),
+            m = B.build_index(spark, df, webtext_config(segment_docs=32),
                               str(tmp_path / "idx"))
         finally:
             sc.setJobGroup("", "")
-        assert m["build_tier"] == "local"
+        assert (m["docs_tier"], m["build_tier"]) == ("local", "local")
         assert set(m["stages"]) == {"docs", "tokens", "dict", "postings",
                                     "phrase"}
         st = sc.statusTracker()
-        assert list(st.getJobIdsForGroup("build-docs"))
-        assert list(st.getJobIdsForGroup("build-after-docs")) == []
+        assert list(st.getJobIdsForGroup("build-before-collect")) == []
+        assert list(st.getJobIdsForGroup("build-collect"))
+        assert list(st.getJobIdsForGroup("build-after-collect")) == []
 
     def test_resume_across_tiers(self, spark, corpus, tmp_path):
         from tests.conftest import forced_spark_build

@@ -175,6 +175,36 @@ class TestGenerations:
                            "top": 10})
         assert {d["doc_id"] for d in res2["data"]} == {0, 5, 9, 10, 11, 12, 13}
 
+    def test_ingest_persists_nothing(self, spark, stream_cfg, tmp_path):
+        """Each docs tier assigns base + rank once, inside the build, and
+        leaves no persisted RDD behind: an RDD of Python rows takes the
+        Spark tier (its size is unknown), a pandas frame the driver."""
+        import pyarrow.parquet as pq
+
+        from tests.conftest import sized_df
+        from veloci_spark.build import load_manifest
+        from veloci_spark.streaming import ingest_batch
+
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        root = str(tmp_path / "root")
+        a, b = _batch_rows(0, 12, "a")[::-1], _batch_rows(0, 9, "b")[::-1]
+        recs = [ingest_batch(spark, spark.createDataFrame(a), stream_cfg,
+                             root),
+                ingest_batch(spark, sized_df(
+                    spark, b, "url string, text string, lang string"),
+                    stream_cfg, root)]
+        assert jsc.getPersistentRDDs().size() == before
+        assert [load_manifest(r["dir"])["docs_tier"] for r in recs] == \
+            ["spark", "local"]
+        for rec, rows in zip(recs, (a, b)):
+            docs = pq.read_table(os.path.join(rec["dir"], "docs"),
+                                 columns=["doc_id", "url"]).to_pydict()
+            got = sorted(zip(docs["doc_id"], docs["url"]))
+            assert got == list(enumerate(sorted(r["url"] for r in rows),
+                                         start=rec["base"]))
+        assert [r["base"] for r in recs] == [0, 12]
+
     def test_doc_routing(self, spark, stream_cfg, tmp_path):
         from veloci_spark.streaming import MultiIndex, ingest_batch
 
@@ -285,6 +315,35 @@ class TestDeletes:
             self, spark, root_ab40, tmp_path, spark_tier):
         _delete_hides_doc_and_promotes_next(
             spark, clone_root(root_ab40, str(tmp_path / "root")))
+
+    def test_delete_appends_one_file_without_spark(self, spark, root_a20,
+                                                   tmp_path, monkeypatch):
+        """On a local root each call appends one parquet file from the
+        driver, with no Spark job and no hidden temp file left; a remote
+        root appends through Spark. Readers see every call's ids."""
+        from veloci_spark import build as B
+        from veloci_spark.streaming import MultiIndex, delete_docs
+
+        root = clone_root(root_a20, str(tmp_path / "root"))
+        sc = spark.sparkContext
+        sc.setJobGroup("delete-local", "delete_docs on a local root")
+        try:
+            assert delete_docs(spark, root, [3, 4]) == 2
+            assert delete_docs(spark, root, [4, 7]) == 2
+            assert delete_docs(spark, root, []) == 0
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup("delete-local")) == []
+        files = os.listdir(os.path.join(root, "deletes"))
+        assert len(files) == 2
+        assert all(f.startswith("part-") and f.endswith(".parquet")
+                   for f in files)
+        with monkeypatch.context() as mp:
+            mp.setattr(B, "_local_dir", lambda _d: None)
+            assert delete_docs(spark, root, [9]) == 1
+        mi = MultiIndex(spark, root)
+        assert mi._del_set == frozenset({3, 4, 7, 9})
+        assert mi.live_docs == 16
 
     def test_compact_applies_deletes_and_preserves_id_space(self, spark,
                                                             stream_cfg,

@@ -10,7 +10,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -44,6 +45,10 @@ def main():
 
     import __spark_entry__ as entrymod
 
+    # the Spark workers import the engine too (the UDF-backed queries): they
+    # inherit PYTHONPATH from the session's environment, not sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("oracle-check")

@@ -3,14 +3,17 @@
 Reproduces the reference build dataflow (SURVEY.md §2.2, B1–B12). Stage map
 (reference citations are for *semantics*):
 
-1. ``docs`` — the doc store: deterministic global doc ids = rank of ``url``
-   in the global sort order (veloci anchor_id ≈ insertion order,
-   reference json_converter/src/lib.rs:152-168), or a caller-supplied
-   id column. ``assign_doc_ids`` is shuffle-once and JVM-side:
-   ``repartitionByRange(order_col)`` + per-partition counts → driver-side
-   prefix sum → partition offset + local rank. No single-node
-   ``Window.orderBy`` — this is the piece that must survive 10^12 rows.
-   Always a Spark stage.
+1. ``docs`` — the doc store: deterministic global doc ids = ``id_base``
+   + rank of ``url`` in the global sort order (veloci anchor_id ≈
+   insertion order, reference json_converter/src/lib.rs:152-168), or a
+   caller-supplied id column. Ties on ``url`` break on a content hash of
+   the row (``_tb``). Two tiers (:func:`_choose_docs_tier`): the driver
+   (:func:`_driver_docs`) collects a small input once as Arrow, sorts it
+   and writes the store with pyarrow; Spark (:func:`assign_doc_ids`) is
+   shuffle-once and JVM-side: ``repartitionByRange(order_col)`` +
+   per-partition counts → driver-side prefix sum → partition offset +
+   local rank. No single-node ``Window.orderBy`` — this is the piece
+   that must survive 10^12 rows.
 2. ``tokens`` — one tokenize kernel (grouped-separator semantics,
    veloci_spark.tokenizer) emitting per-(text, token) aggregated entries
    (first position, in-text count, text length): the per-doc grouping is
@@ -39,24 +42,35 @@ Reproduces the reference build dataflow (SURVEY.md §2.2, B1–B12). Stage map
 7. per-task checkpoint metrics (docs/sec, postings/sec, bytes) + stage
    markers → resumable build with lineage (north_rule).
 
-Two tiers run stages 2-5, chosen once per build right after ``docs``:
+Each stage runs on one of two tiers:
 
-* **spark** (:func:`_spark_stages`) — each stage is Spark jobs: the kernels
-  run in ``mapInPandas``, term ids come from a range partition + prefix
-  sums, packing from a hash ``repartition`` + ``sortWithinPartitions``.
-* **local** (:func:`_local_stages`) — the driver reads ``docs/`` with
-  pyarrow, calls the same kernels (:func:`_tokenize_texts`, the pack
-  kernel, :func:`_pack_pairs`) on one frame, does the relational glue
-  (union, sums, term-id rank, dictionary join, sort) in pandas, and
-  writes the same files with pyarrow. No Spark job after ``docs``.
+* **spark** — ``docs`` is :func:`assign_doc_ids` or a Spark write; stages
+  2-5 (:func:`_spark_stages`) are Spark jobs: the kernels run in
+  ``mapInPandas``, term ids come from a range partition + prefix sums,
+  packing from a hash ``repartition`` + ``sortWithinPartitions``.
+* **local** — ``docs`` (:func:`_driver_docs`) is one Arrow collect of the
+  input, with the ``_tb`` tie-break computed in that same Spark job; the
+  driver sorts it, numbers it (or offsets the caller's integer ids) and
+  writes ``docs/`` with pyarrow. Stages 2-5 (:func:`_local_stages`) call
+  the same kernels (:func:`_tokenize_texts`, the pack kernel,
+  :func:`_pack_pairs`) on that table, or on a pyarrow read of ``docs/``,
+  do the relational glue (union, sums, term-id rank, dictionary join,
+  sort) in pyarrow and pandas, and write the same files with pyarrow. A
+  small build runs one Spark job: the collect.
 
 The index files do not depend on the tier, so readers, compaction and
-resume cannot tell which one built them (``manifest.json`` records it in
-``build_tier``, with ``build_fallback`` and ``stage_wall_s``). The cost
-rule (:func:`_choose_build_tier`) picks local iff the index dir is on the
-local disk, no field is nested, every indexed column is a string column of
-the doc store, and the indexed columns' chunks in the doc store's parquet
-footers hold at most ``LOCAL_BUILD_MAX_TEXT_BYTES`` uncompressed bytes.
+resume cannot tell which one built them (``manifest.json`` records
+``docs_tier`` and ``docs_fallback`` for the docs stage, ``build_tier`` and
+``build_fallback`` for stages 2-5, and ``stage_wall_s``). The docs rule
+(:func:`_choose_docs_tier`) is decided before the collect from the plan
+alone: local iff the index dir is on the local disk, no field is nested,
+``order_col`` sorts the same in Arrow (or the caller's id column is an
+integer column), every column round-trips through a pyarrow write, and the optimized plan's ``sizeInBytes`` is at most
+``LOCAL_TIER_MAX_SCAN_BYTES``. The stages 2-5 rule
+(:func:`_choose_build_tier`) then picks local iff, in addition, every
+indexed column is a string column and the indexed columns hold at most
+``LOCAL_BUILD_MAX_TEXT_BYTES`` bytes: of the collected table, or of the
+chunks in the doc store's parquet footers when Spark wrote it.
 
 Layout under ``index_dir``::
 
@@ -122,10 +136,12 @@ LAYOUT_VERSION = 6
 # stage bookkeeping
 
 
-def index_fingerprint(config: IndexConfig, input_fingerprint: str = "") -> str:
+def index_fingerprint(config: IndexConfig, input_fingerprint: str = "",
+                      id_base: int = 0) -> str:
     """Stable hash of everything that invalidates on-disk stage outputs:
-    layout version + the full field/segment config + (optionally) an input
-    data fingerprint supplied by the caller (e.g. source parquet mtimes)."""
+    layout version + the full field/segment config + the doc-id offset +
+    (optionally) an input data fingerprint supplied by the caller (e.g.
+    source parquet mtimes)."""
     import hashlib
 
     payload = json.dumps({
@@ -143,6 +159,8 @@ def index_fingerprint(config: IndexConfig, input_fingerprint: str = "") -> str:
         "posting_block_docs": config.posting_block_docs,
         "scoring": config.scoring,
         "input": input_fingerprint,
+        # only when set: an unoffset index keeps its earlier fingerprint
+        **({"id_base": id_base} if id_base else {}),
     }, sort_keys=True)
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
@@ -181,20 +199,22 @@ def _write_checkpoint(index_dir: str, stage: str, task_id: int, metrics: dict) -
 # 1. deterministic doc ids (scalable zip-with-index)
 
 
-def assign_doc_ids(df: DataFrame, order_col: str = "url",
-                   num_partitions: int | None = None,
-                   out_path: str | None = None) -> DataFrame | None:
-    """Add ``doc_id`` = 0-based rank of ``order_col`` in the global sort.
+def assign_doc_ids(df: DataFrame, out_path: str, order_col: str = "url",
+                   num_partitions: int | None = None, id_base: int = 0) -> None:
+    """The Spark tier of the ``docs`` stage: write ``df`` to ``out_path``
+    with ``doc_id`` = ``id_base`` + the 0-based rank of ``order_col`` in
+    the global ascending sort (nulls first).
 
     Range-partition on the order column (one shuffle), count rows per
     partition, prefix-sum the counts on the driver (tiny), then assign
-    ``offset[pid] + local_rank`` inside each sorted partition. Equivalent to
-    ``row_number() over (orderBy url)`` but with no single-reducer window, so
-    it holds at 10^12 rows.
+    ``id_base + offset[pid] + local_rank`` inside each sorted partition.
+    Equivalent to ``row_number() over (orderBy url)`` but with no
+    single-reducer window, so it holds at 10^12 rows.
 
     Rows that tie on ``order_col`` are ordered by a content hash of the whole
     row (``_tb``), so the assignment is deterministic across runs and cluster
-    sizes even for corpora with duplicate urls.
+    sizes even for corpora with duplicate urls; :func:`_driver_docs`
+    assigns the same ids.
 
     Fully JVM-side: one range shuffle + partition-local sort, then
     ``monotonically_increasing_id`` yields (partition_id << 33 | local_rank)
@@ -217,33 +237,26 @@ def assign_doc_ids(df: DataFrame, order_col: str = "url",
         .withColumn("_mid", F.monotonically_increasing_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    counts = (
-        parts.groupBy(F.shiftright("_mid", 33).alias("pid")).count().collect()
-    )
-    by_pid = {int(r["pid"]): r["count"] for r in counts}
-    offsets = []
-    acc = 0
-    for pid in sorted(by_pid):
-        offsets.append((pid, acc))
-        acc += by_pid[pid]
-    offdf = spark.createDataFrame(offsets or [(0, 0)], "pid long, _base long")
-    out = (
-        parts.withColumn("pid", F.shiftright("_mid", 33))
-        .join(F.broadcast(offdf), on="pid", how="inner")
-        .withColumn("doc_id",
-                    F.col("_base") + F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)))
-        .drop("pid", "_base", "_mid", "_tb")
-    )
-    if out_path is not None:
-        out.write.mode("overwrite").parquet(out_path)
+    try:
+        counts = (
+            parts.groupBy(F.shiftright("_mid", 33).alias("pid")).count().collect()
+        )
+        by_pid = {int(r["pid"]): r["count"] for r in counts}
+        offsets = []
+        acc = id_base
+        for pid in sorted(by_pid):
+            offsets.append((pid, acc))
+            acc += by_pid[pid]
+        offdf = spark.createDataFrame(offsets or [(0, id_base)],
+                                      "pid long, _base long")
+        (parts.withColumn("pid", F.shiftright("_mid", 33))
+         .join(F.broadcast(offdf), on="pid", how="inner")
+         .withColumn("doc_id",
+                     F.col("_base") + F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)))
+         .drop("pid", "_base", "_mid", "_tb")
+         .write.mode("overwrite").parquet(out_path))
+    finally:
         parts.unpersist()
-        return None
-    # DataFrame-returning branch (tests / composition): materialize the
-    # result before dropping the shuffle cache so `parts` never re-executes.
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    parts.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1031,8 +1044,9 @@ def _spark_stages(spark: SparkSession, index_dir: str, fp: str,
 
 # Largest batch the local tier builds: the uncompressed bytes of the
 # indexed columns' chunks in the doc store's parquet footers (~227 B per
-# synthetic webtext doc, text + lang). Measured on a 4-core VM, local[4],
-# default shuffle partitions; tokens+dict+postings+phrase wall local vs
+# synthetic webtext doc, text + lang), or their Arrow buffers when the
+# driver collected the batch (~232 B per doc). Measured on a 4-core VM,
+# local[4], default shuffle partitions; tokens+dict+postings+phrase wall local vs
 # Spark, the local build's rise in driver VmHWM, and the peak of driver +
 # JVM local vs Spark: 3k docs (0.7 MB) 0.9 vs 16.6 s, +86 MB, 999 vs
 # 1,455 MB; 30k (6.8 MB) 5.2 vs 23.4 s, +300 MB, 1,657 MB both; 100k
@@ -1055,53 +1069,202 @@ def _local_dir(index_dir: str) -> "str | None":
     return path if os.path.isdir(path) else None
 
 
+# The driver-read bound of both tiers: the largest input the docs stage
+# collects into the driver (the optimized plan's ``sizeInBytes``,
+# :func:`_choose_docs_tier`), and, in veloci_spark.search, the most bytes a
+# request's pyarrow reads may decode: the uncompressed chunks of the
+# columns they read, in the row groups their predicates cannot skip
+# (``search._scan_bytes``). The post-processing reads
+# (FulltextIndex.read_docs / read_postings / read_phrase) follow the same
+# bound. Set by the widest rows, the doc store; 4-core VM, local[4], a
+# 10-id url+text fetch took, locally vs on Spark: 13 MiB 50 vs 184 ms, 29
+# MiB 102 vs 185, 53 MiB (one 200k-row row group) 147 vs 251, 59 MiB (one
+# 250k-row group) 221 vs 245, 133 MiB 144 vs 192, 209 MiB 241 vs 176, 651
+# MiB 634 vs 165. The kernel's reads at 100k docs (postings 8-9 MiB, with
+# phrase rows 27-31 MiB) ran 2-38x faster locally than the request on
+# Spark.
+LOCAL_TIER_MAX_SCAN_BYTES = 64 << 20
+
+# Spark types (``simpleString``) whose Arrow collect, written with pyarrow,
+# reads back through ``spark.read.parquet`` as the same type and values as
+# Spark's own write; timestamps are written as Spark's INT96. Excluded:
+# nested and map types, decimals, timestamp_ntz (INT96 would read back as
+# timestamp), intervals, collated strings.
+_DRIVER_DOCS_TYPES = frozenset({
+    "string", "binary", "boolean", "tinyint", "smallint", "int", "bigint",
+    "float", "double", "date", "timestamp"})
+# caller-supplied id column types whose ``cast("long")`` Arrow reproduces
+# exactly
+_ID_TYPES = frozenset({"tinyint", "smallint", "int", "bigint"})
+# order_col types Arrow sorts as Spark does: strings in UTF-8 byte order,
+# integers, dates and timestamps by value, nulls first either way
+_ORDER_TYPES = _ID_TYPES | {"string", "date", "timestamp"}
+
+
 def _indexed_columns(config: IndexConfig) -> list[str]:
     """Doc-store columns the tokens and dict stages read: tokenized fields
     and the exact texts of non-identity fields."""
     return [fc.name for fc in config.fields if fc.tokenize or not fc.identity]
 
 
-class _DocsFooter(NamedTuple):
+def _docs_frame(df: DataFrame, config: IndexConfig
+                ) -> "tuple[DataFrame, bool]":
+    """(frame the driver docs stage collects, whether it assigns ids): the
+    input as it is when it has the caller-supplied id column, else the
+    input plus the ``_tb`` tie-break that orders rows tied on
+    ``order_col``."""
+    if config.doc_id_col and config.doc_id_col in df.columns:
+        return df, False
+    return df.withColumn("_tb", F.xxhash64(*df.columns)), True
+
+
+def _plan_bytes(frame: DataFrame) -> int:
+    """Spark's estimate of ``frame``'s size: its optimized plan's
+    ``sizeInBytes``, with no Spark job."""
+    return int(str(frame._jdf.queryExecution().optimizedPlan().stats()
+                   .sizeInBytes()))
+
+
+def _choose_docs_tier(frame: DataFrame, index_dir: str, config: IndexConfig,
+                      assign: bool) -> "tuple[str, str | None]":
+    """(tier of the docs stage, reason the rule fell back or None), from
+    the plan alone, with no Spark job. Local iff the index dir is on the
+    local disk, no field is nested, ``order_col`` (when ids are assigned)
+    is a string, integer, date or timestamp column, or else the
+    caller-supplied id column an integer one, every column's type is
+    one a pyarrow write stores as Spark's does, and the optimized plan's
+    ``sizeInBytes`` is at most ``LOCAL_TIER_MAX_SCAN_BYTES`` — the rule
+    Spark itself uses to decide whether to collect a broadcast side.
+
+    Like that rule, it trusts Spark's estimate: exact for a cached frame,
+    the compressed file size for a parquet scan, a per-type guess for
+    local rows and for ``mapInPandas`` output (24,000 B for an uncached
+    3,000-doc synthetic corpus whose Arrow collect is 1.6 MB), and
+    unknown (Long.MaxValue, so Spark) for an RDD of Python rows. Spark's
+    ``spark.driver.maxResultSize`` stays the backstop."""
+    if _local_dir(index_dir) is None:
+        return "spark", "remote dir"
+    for fc in config.fields:
+        if fc.is_nested:
+            return "spark", f"nested field {fc.name}"
+    types = dict(frame.dtypes)
+    if assign and types.get(config.order_col) not in _ORDER_TYPES:
+        return ("spark", f"order column {config.order_col}: "
+                f"{types.get(config.order_col)}")
+    if not assign and types[config.doc_id_col] not in _ID_TYPES:
+        return ("spark", f"doc id column {config.doc_id_col}: "
+                f"{types[config.doc_id_col]}")
+    for name, t in frame.dtypes:
+        if t not in _DRIVER_DOCS_TYPES:
+            return "spark", f"column {name}: {t}"
+    size = _plan_bytes(frame)
+    if size > LOCAL_TIER_MAX_SCAN_BYTES:
+        return "spark", f"plan bytes {size} > {LOCAL_TIER_MAX_SCAN_BYTES}"
+    return "local", None
+
+
+def _driver_docs(frame: DataFrame, path: str, config: IndexConfig,
+                 assign: bool, id_base: int) -> pa.Table:
+    """The local tier of the docs stage: one ``toArrow()`` collect of
+    ``frame`` (:func:`_docs_frame`), doc ids — ``id_base`` + the rank in
+    (``order_col``, ``_tb``) ascending order with nulls first, Spark's
+    order, so they equal :func:`assign_doc_ids`'; or ``id_base`` + the
+    caller's integer ids, Spark's ``cast("long") + id_base`` — and one
+    parquet file at ``path``, sorted by ``doc_id``, in row groups of
+    ``segment_docs`` rows, timestamps as Spark's INT96. Returns the
+    written table (timestamps in Arrow microseconds)."""
+    table = frame.toArrow()
+    fields = [f for f in frame.schema.fields if not (assign and
+                                                      f.name == "_tb")]
+    if assign:
+        table = table.take(pc.sort_indices(
+            table, sort_keys=[(config.order_col, "ascending"),
+                              ("_tb", "ascending")],
+            null_placement="at_start")).drop_columns(["_tb"])
+        ids = pa.array(np.arange(id_base, id_base + table.num_rows,
+                                 dtype=np.int64))
+        doc_id = T.StructField("doc_id", T.LongType())
+    else:
+        ids = pc.add_checked(table[config.doc_id_col].cast(pa.int64()),
+                             id_base)
+        order = pc.sort_indices(ids, null_placement="at_start")
+        table, ids = table.take(order), ids.take(order)
+        nullable = frame.schema[config.doc_id_col].nullable
+        doc_id = T.StructField("doc_id", T.LongType(), nullable)
+    # the Spark tier's withColumn("doc_id"): a payload column of that name
+    # is replaced in place, otherwise doc_id is appended
+    names = table.column_names
+    if "doc_id" in names:
+        i = names.index("doc_id")
+        table = table.set_column(i, "doc_id", ids)
+        fields[i] = doc_id
+    else:
+        table = table.append_column("doc_id", ids)
+        fields.append(doc_id)
+    table = table.cast(to_arrow_schema(T.StructType(fields)))
+    # dictionary-encode only columns with repeats, as Spark's writer falls
+    # back to plain for (nearly) unique ones; no stored Arrow schema, so
+    # pyarrow reads the file as it reads Spark's (INT96 → timestamp[ns])
+    repeats = [c for c in table.column_names
+               if 2 * pc.count_distinct(table[c]).as_py() <= table.num_rows]
+    _write_local(table, path, dictionary=repeats,
+                 row_group_size=config.segment_docs,
+                 use_deprecated_int96_timestamps=True, store_schema=False)
+    return table
+
+
+class _DocStore(NamedTuple):
     path: str           # local index dir
     n_rows: int
-    text_bytes: int     # uncompressed bytes of the indexed columns' chunks
+    text_bytes: int     # bytes of the indexed columns
 
 
-def _choose_build_tier(index_dir: str, config: IndexConfig
-                       ) -> "tuple[str, str | None, _DocsFooter | None]":
-    """(tier, reason the rule fell back or None, doc-store footer). Local
-    iff the index dir is on the local disk, no field is nested, every
-    indexed column is a string column of the doc store (so the Spark
-    tier's ``cast("string")`` has nothing to reproduce) and the indexed
-    columns' chunks hold at most ``LOCAL_BUILD_MAX_TEXT_BYTES``
-    uncompressed bytes."""
+def _choose_build_tier(index_dir: str, config: IndexConfig,
+                       docs: "pa.Table | None" = None
+                       ) -> "tuple[str, str | None, _DocStore | None]":
+    """(tier of stages 2-5, reason the rule fell back or None, doc-store
+    stats). Local iff the index dir is on the local disk, no field is
+    nested, every indexed column is a string column of the doc store (so
+    the Spark tier's ``cast("string")`` has nothing to reproduce) and the
+    indexed columns hold at most ``LOCAL_BUILD_MAX_TEXT_BYTES`` bytes:
+    the Arrow buffers of ``docs``, the table the driver docs stage
+    collected, or else the uncompressed chunks in the doc store's parquet
+    footers."""
     path = _local_dir(index_dir)
     if path is None:
         return "spark", "remote dir", None
     for fc in config.fields:
         if fc.is_nested:
             return "spark", f"nested field {fc.name}", None
-    dataset = ds.dataset(os.path.join(path, "docs"), format="parquet")
+    if docs is None:
+        dataset = ds.dataset(os.path.join(path, "docs"), format="parquet")
+        schema = dataset.schema
+    else:
+        schema = docs.schema
     cols = _indexed_columns(config)
     for name in cols:
-        i = dataset.schema.get_field_index(name)
-        if i < 0 or not pa.types.is_string(dataset.schema.field(i).type):
+        i = schema.get_field_index(name)
+        if i < 0 or not pa.types.is_string(schema.field(i).type):
             return "spark", f"non-string column {name}", None
-    n_rows = text_bytes = 0
-    wanted = set(cols)
-    for frag in dataset.get_fragments():
-        md = frag.metadata
-        n_rows += md.num_rows
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            for c in range(rg.num_columns):
-                chunk = rg.column(c)
-                if chunk.path_in_schema in wanted:
-                    text_bytes += chunk.total_uncompressed_size
+    if docs is not None:
+        n_rows = docs.num_rows
+        text_bytes = sum(docs.column(name).nbytes for name in cols)
+    else:
+        n_rows = text_bytes = 0
+        wanted = set(cols)
+        for frag in dataset.get_fragments():
+            md = frag.metadata
+            n_rows += md.num_rows
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                for c in range(rg.num_columns):
+                    chunk = rg.column(c)
+                    if chunk.path_in_schema in wanted:
+                        text_bytes += chunk.total_uncompressed_size
     if text_bytes > LOCAL_BUILD_MAX_TEXT_BYTES:
         return ("spark", f"text bytes {text_bytes} > "
                 f"{LOCAL_BUILD_MAX_TEXT_BYTES}", None)
-    return "local", None, _DocsFooter(path, n_rows, text_bytes)
+    return "local", None, _DocStore(path, n_rows, text_bytes)
 
 
 def _arrow(frames: list, schema: T.StructType) -> pa.Table:
@@ -1114,15 +1277,17 @@ def _arrow(frames: list, schema: T.StructType) -> pa.Table:
            .replace_schema_metadata(None) for f in frames])
 
 
-def _write_local(table: pa.Table, path: str, dictionary=True) -> None:
+def _write_local(table: pa.Table, path: str, dictionary=True, **options
+                 ) -> None:
     """Replace ``path`` with one parquet file of ``table``. ``dictionary``
     lists the dictionary-encoded columns: unique-valued columns are
     written plain, as Spark's writer falls back to, which keeps the files
-    within 1% of Spark's size."""
+    within 1% of Spark's size. ``options`` go to ``pq.write_table``."""
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
     pq.write_table(table, os.path.join(path, "part-00000.parquet"),
-                   use_dictionary=dictionary, compression="snappy")
+                   use_dictionary=dictionary, compression="snappy",
+                   **options)
 
 
 # the Spark tier's ``withColumn(lit)`` columns are not nullable
@@ -1154,9 +1319,11 @@ def _group_batches(frame: pd.DataFrame, keys: list, size: int):
 
 
 def _local_stages(index_dir: str, fp: str, config: IndexConfig,
-                  n_docs: int, batch_rows: int) -> tuple[int, int]:
+                  n_docs: int, batch_rows: int,
+                  docs: "pa.Table | None" = None) -> tuple[int, int]:
     """The local build tier: the tokens, dict, postings and phrase stages
-    in the driver over a pyarrow read of ``docs/``, through the Spark
+    in the driver over ``docs``, the doc store the driver docs stage
+    collected, or else a pyarrow read of ``docs/``, through the Spark
     tier's kernels (:func:`_tokenize_texts`, the pack kernel,
     :func:`_pack_pairs`); only the relational glue is new: pyarrow for
     the reads, unions, sums and the dictionary lookup, which keep strings
@@ -1164,16 +1331,17 @@ def _local_stages(index_dir: str, fp: str, config: IndexConfig,
     the kernels need.
     Writes the same files, schemas, markers and checkpoints as the Spark
     tier, so a build resumed on either tier reuses the other's stages.
-    Returns (n_docs, n_terms); ``n_docs`` comes from the doc store's
-    footers. The kernels take batches of about ``batch_rows`` rows, Spark's
+    Returns (n_docs, n_terms); ``n_docs`` is the doc store's row count.
+    The kernels take batches of about ``batch_rows`` rows, Spark's
     Arrow batch size, so their temporaries stay as small as on Spark; a
     packed group is never split across batches."""
     todo = {s for s in ("tokens", "dict", "postings", "phrase")
             if not _stage_done(index_dir, s, fp)}
     tokens_path = os.path.join(index_dir, "_tokens")
     dict_path = os.path.join(index_dir, "dict")
-    docs = pq.read_table(os.path.join(index_dir, "docs"),
-                         columns=["doc_id", *_indexed_columns(config)])
+    columns = ["doc_id", *_indexed_columns(config)]
+    docs = docs.select(columns) if docs is not None else pq.read_table(
+        os.path.join(index_dir, "docs"), columns=columns)
     phrase_fields = [fc for fc in config.fields
                      if fc.tokenize and fc.phrase_pairs]
 
@@ -1369,7 +1537,7 @@ def _local_stages(index_dir: str, fp: str, config: IndexConfig,
 def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
                 index_dir: str, num_partitions: int | None = None,
                 input_fingerprint: str = "",
-                token_values: dict | None = None) -> dict:
+                token_values: dict | None = None, id_base: int = 0) -> dict:
     """Build the full index; returns the manifest dict. Resumable: completed
     stages (marker files) are skipped on re-run — but ONLY when their marker
     carries the current layout/config/input fingerprint. A fingerprint
@@ -1381,31 +1549,43 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
     tests.rs:39-41; search_field.rs suggest ``token_value`` boost). Stored
     as parquet (field, text, value); suggest-time boosting joins matched
     candidates against it, so the mapping may be dictionary-sized.
+
+    ``id_base`` offsets every doc id: assigned ids are ``id_base`` + rank,
+    caller-supplied ones (``config.doc_id_col``) the column + ``id_base``.
     """
     os.makedirs(index_dir, exist_ok=True)
     t_start = time.time()
-    fp = index_fingerprint(config, input_fingerprint)
+    fp = index_fingerprint(config, input_fingerprint, id_base)
     if num_partitions is None:
         num_partitions = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
 
     # ---- stage: docs (doc ids + doc store) -------------------------------
     docs_path = os.path.join(index_dir, "docs")
+    docs = None   # the doc store, when the driver collected it
     if not _stage_done(index_dir, "docs", fp):
         t0 = time.time()
-        if config.doc_id_col and config.doc_id_col in df.columns:
-            df.withColumn("doc_id", F.col(config.doc_id_col).cast("long")) \
-                .write.mode("overwrite").parquet(docs_path)
+        frame, assign = _docs_frame(df, config)
+        docs_tier, docs_fallback = _choose_docs_tier(frame, index_dir,
+                                                     config, assign)
+        if docs_tier == "local":
+            docs = _driver_docs(frame, docs_path, config, assign, id_base)
+        elif assign:
+            assign_doc_ids(df, docs_path, config.order_col, num_partitions,
+                           id_base)
         else:
-            assign_doc_ids(df, config.order_col, num_partitions, out_path=docs_path)
-        _mark_stage(index_dir, "docs", fp, wall_sec=time.time() - t0)
+            df.withColumn("doc_id", F.col(config.doc_id_col).cast("long")
+                          + F.lit(id_base)) \
+                .write.mode("overwrite").parquet(docs_path)
+        _mark_stage(index_dir, "docs", fp, wall_sec=time.time() - t0,
+                    tier=docs_tier, fallback=docs_fallback)
 
     # ---- tokens, dict, postings, phrase: one tier for all four -----------
-    tier, fallback, footer = _choose_build_tier(index_dir, config)
+    tier, fallback, store = _choose_build_tier(index_dir, config, docs)
     if tier == "local":
         batch_rows = int(spark.conf.get(
             "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"))
-        n_docs, n_terms = _local_stages(footer.path, fp, config,
-                                        footer.n_rows, batch_rows)
+        n_docs, n_terms = _local_stages(store.path, fp, config,
+                                        store.n_rows, batch_rows, docs)
     else:
         n_docs, n_terms = _spark_stages(spark, index_dir, fp, config,
                                         num_partitions)
@@ -1466,6 +1646,8 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
         "build_wall_sec": time.time() - t_start,
         "docs_per_sec": n_docs / max(time.time() - t_start, 1e-9),
         "stages": sorted(markers),
+        "docs_tier": markers["docs"].get("tier"),
+        "docs_fallback": markers["docs"].get("fallback"),
         "build_tier": tier,
         "build_fallback": fallback,
         "stage_wall_s": {name: m.get("wall_sec")

@@ -102,7 +102,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from veloci_spark.build import _local_dir, load_manifest
+from veloci_spark.build import (LOCAL_TIER_MAX_SCAN_BYTES, _local_dir,
+                                 load_manifest)
 from veloci_spark.scoring import index_score_u32, levenshtein_batch, term_score
 from veloci_spark.vbyte import unpack_ids, unpack_postings, vbyte_decode
 
@@ -140,17 +141,12 @@ TID_PUSHDOWN_MAX_IN = 1_000
 # facet request took 2.05 s local vs 2.38 s on Spark, the top-k one 0.91 s
 # vs 1.81 s; with more executors the parallel decode wins sooner.
 LOCAL_TIER_MAX_POSTINGS = 1_000_000
-# ... and when its pyarrow reads decode at most this many bytes: the
-# uncompressed chunks of the columns they read, in the row groups their
+# ... and when its pyarrow reads decode at most LOCAL_TIER_MAX_SCAN_BYTES
+# (veloci_spark.build, the driver-read bound the build's docs stage shares):
+# the uncompressed chunks of the columns they read, in the row groups their
 # predicates cannot skip (:func:`_scan_bytes`). The post-processing reads
 # (FulltextIndex.read_docs / read_postings / read_phrase) follow the same
-# bound. Set by the widest rows, the doc store; same VM, a 10-id url+text
-# fetch took, locally vs on Spark: 13 MiB 50 vs 184 ms, 29 MiB 102 vs 185,
-# 53 MiB (one 200k-row row group) 147 vs 251, 59 MiB (one 250k-row group)
-# 221 vs 245, 133 MiB 144 vs 192, 209 MiB 241 vs 176, 651 MiB 634 vs 165.
-# The kernel's reads at 100k docs (postings 8-9 MiB, with phrase rows
-# 27-31 MiB) ran 2-38x faster locally than the request on Spark.
-LOCAL_TIER_MAX_SCAN_BYTES = 64 << 20
+# bound.
 
 
 def _tid_pushdown_pred(col, tids):

@@ -11,9 +11,9 @@ touching that invariant: **log-structured generations**.
   rewritten in place, so every generation keeps the reference's
   immutability story and the per-stage resume/fingerprint machinery.
 * Each generation's docs get GLOBAL doc ids: ``base + local`` where
-  ``base`` is the running total from ``generations.json`` (ids are
-  assigned before the build via ``doc_id_col``, so they are stable across
-  compactions).
+  ``base`` is the id high-water mark from ``generations.json`` (the build's
+  docs stage assigns them, ``id_base=base``; compaction keeps them via
+  ``doc_id_col``, so they are stable across compactions).
 * Queries fan out over generations (:class:`MultiIndex`) — each
   generation is one part of :mod:`veloci_spark.search`'s own search path
   (planned, tiered and run exactly like a single index), and the parts
@@ -48,7 +48,10 @@ import dataclasses
 import json
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,14 +71,31 @@ def delete_docs(spark: SparkSession, root_dir: str, doc_ids) -> int:
     """Tombstone global doc ids: append-only ``deletes/`` parquet, visible
     to every subsequently-constructed :class:`MultiIndex` immediately and
     removed physically at :func:`compact`. Deleting an id twice (or an id
-    that was never ingested) is harmless — the set is deduped on read."""
-    rows = [(int(i),) for i in doc_ids]
-    if not rows:
+    that was never ingested) is harmless — the set is deduped on read.
+
+    On a local root the driver appends one uniquely named file with
+    pyarrow, written under a dot-prefixed name that readers skip and then
+    renamed, so no reader sees it half-written; a remote root appends
+    through Spark."""
+    from veloci_spark.build import _local_dir
+
+    ids = [int(i) for i in doc_ids]
+    if not ids:
         return 0
-    (spark.createDataFrame(rows, "doc_id long")
-     .coalesce(1)
-     .write.mode("append").parquet(os.path.join(root_dir, _DELETES_DIR)))
-    return len(rows)
+    root = _local_dir(root_dir)
+    if root is None:
+        (spark.createDataFrame([(i,) for i in ids], "doc_id long")
+         .coalesce(1)
+         .write.mode("append").parquet(os.path.join(root_dir, _DELETES_DIR)))
+        return len(ids)
+    out = os.path.join(root, _DELETES_DIR)
+    os.makedirs(out, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+    tmp = os.path.join(out, "." + name)
+    pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64())}), tmp,
+                   compression="snappy")
+    os.replace(tmp, os.path.join(out, name))
+    return len(ids)
 
 
 def _deletes_df(spark: SparkSession, root_dir: str):
@@ -120,10 +140,8 @@ def ingest_batch(spark: SparkSession, df: DataFrame, config: IndexConfig,
     base = max((_gen_hi(g) for g in gens), default=0)
     d = gen_dir(root_dir, gen_id)
 
-    # global ids: assign 0-based local ids via the normal machinery, offset
-    # by the running base, then build with doc_id_col (no second assignment)
-    from veloci_spark.build import assign_doc_ids
-
+    # global ids = base + the batch-local ids the build's docs stage assigns
+    # (or reads from doc_id_col)
     id_span = None  # dense-by-construction unless the caller supplies ids
     if config.doc_id_col and config.doc_id_col in df.columns:
         # caller-supplied ids are batch-LOCAL; they need not be dense, but
@@ -140,21 +158,7 @@ def ingest_batch(spark: SparkSession, df: DataFrame, config: IndexConfig,
                 f"ingest_batch: negative {config.doc_id_col} ({lo}) — "
                 "batch-local doc ids must be >= 0")
         id_span = 0 if hi is None else int(hi) + 1
-        # name the global id doc_id DIRECTLY (overwriting any payload column
-        # of that name): routing an internal "_gid" through doc_id_col
-        # persisted a duplicate long per doc in every generation's doc store
-        # and leaked the internal name into get_doc/select output
-        with_ids = df.withColumn(
-            "doc_id", (F.col(config.doc_id_col).cast("long") + F.lit(base)))
-    else:
-        local = assign_doc_ids(df, config.order_col)
-        with_ids = local.withColumn("doc_id", F.col("doc_id") + F.lit(base))
-    # replace() carries EVERY config field (scoring, segment_docs,
-    # future additions) — re-enumerating the constructor
-    # silently dropped scoring, so bm25-configured streams built
-    # veloci-scored generations.
-    gen_config = dataclasses.replace(config, doc_id_col="doc_id")
-    manifest = build_index(spark, with_ids, gen_config, d)
+    manifest = build_index(spark, df, config, d, id_base=base)
     rec = {"gen": gen_id, "base": base, "n_docs": manifest["n_docs"],
            "id_hi": base + (manifest["n_docs"] if id_span is None else id_span),
            "dir": d, "ts": time.time()}
