@@ -5,7 +5,8 @@ Reads ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1), runs on
 ``local[$SPARK_GRAFT_CPUS]`` (default 32), and prints ONE JSON line::
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"build": s, "q01_exact": s, ...}, "sf": <sf>, ...}
+     "queries": {"build": s, "q01_exact": s, ...}, "sf": <sf>,
+     "docs_tier": ..., "build_tier": ..., "stage_wall_s": {...}, ...}
 
 Query timings are MIN over N_RUNS repetitions after warmup (r4 policy: the
 sandbox host is multi-tenant with minute-scale CPU-steal bursts — VERDICT
@@ -212,6 +213,9 @@ def main_bench():
             build_sec, index_dir = retry_sec, retry_dir
     q = run_queries(spark, index_dir)
     total = time.time() - t_total
+    from veloci_spark.build import load_manifest
+
+    manifest = load_manifest(index_dir)
     out = {
         "metric": "index-build + top-10 ranked-search wall time (webtext fulltext engine)",
         "value": round(total, 3),
@@ -222,6 +226,11 @@ def main_bench():
         "n_docs": n_docs,
         "build_docs_per_sec": round(n_docs / build_sec, 1),
         "build_samples": build_samples,
+        # the tiers and stage walls of the build that was kept
+        "docs_tier": manifest["docs_tier"],
+        "build_tier": manifest["build_tier"],
+        "stage_wall_s": {k: round(v, 3)
+                         for k, v in manifest["stage_wall_s"].items()},
         "cpus": CPUS,
         # per-query stat is min-of-N (r4 policy); p50 here is the median
         # ACROSS query shapes of those per-query minima

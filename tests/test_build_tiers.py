@@ -27,7 +27,9 @@ from veloci_spark.synth import WEBTEXT_SCHEMA
 from veloci_spark.vbyte import unpack_ids, vbyte_decode
 from tests.conftest import SEGMENT_DOCS, forced_spark_build, sized_df
 
-TABLES = ("dict", "postings", "phrase", "_tokens")
+TABLES = ("dict", "postings", "phrase")
+# the tokens stage's output and the Spark dict stage's counts
+TRANSIENT = ("_tokens", "_occ")
 FACET = dict(tokenize=False, phrase_pairs=False, token_texts=False)
 TEXT_LANG = (FieldConfig("text"), FieldConfig("lang", **FACET))
 
@@ -110,8 +112,10 @@ def _case(spark, corpus, name):
                 for i in range(len(corpus))]
         return _webtext_df(spark, _renamed(corpus, urls)), webtext, 0
     if name == "doc_id_col":
-        # caller-supplied, sparse, in no particular order
-        rows = [dict(r, my_id=(i * 37) % 1000) for i, r in enumerate(corpus)]
+        # caller-supplied, sparse, in no particular order; every tenth row
+        # repeats the id of the row before it
+        rows = [dict(r, my_id=((i - (i % 10 == 9)) * 37) % 1000)
+                for i, r in enumerate(corpus)]
         schema = T.StructType.fromDDL(WEBTEXT_SCHEMA + ", my_id int")
         return (sized_df(spark, rows, schema).repartition(3),
                 webtext_config(segment_docs=SEGMENT_DOCS,
@@ -240,6 +244,9 @@ def _same_index(spark, corpus, tmp_path, name):
             .remove_metadata() == \
             pq.ParquetDataset(os.path.join(remote, table)).schema \
             .remove_metadata(), table
+    for table in TRANSIENT:
+        assert not os.path.exists(os.path.join(local, table)), table
+        assert not os.path.exists(os.path.join(remote, table)), table
     got = _decoded(local, config.segment_docs)
     want = _decoded(remote, config.segment_docs)
     assert got[0] == want[0]   # dict rows, term ids included

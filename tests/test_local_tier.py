@@ -80,7 +80,6 @@ class TestCostRule:
 
     def test_local_tier_runs_no_spark_job(self, spark, spark_index):
         req = {**EXACT, "facets": [{"field": "lang", "top": 5}]}
-        # warm the driver-side dictionary and facet map (one job each)
         spark_index.local_dict("text")
         spark_index.facet_map("lang")
         sc = spark.sparkContext
@@ -92,6 +91,42 @@ class TestCostRule:
         assert res["explain"]["tier"] == "local"
         assert res["num_hits"] > 0
         assert list(sc.statusTracker().getJobIdsForGroup("local-tier-no-job")) == []
+
+
+def _fills(index, fields):
+    """The driver-side dictionaries and facet maps of ``fields``."""
+    return ({f: index.local_dict(f) for f in fields},
+            {f: index.facet_map(f) for f in fields})
+
+
+def test_driver_fills_read_without_spark(spark, spark_index, monkeypatch):
+    """On a local index dir the driver-side dictionary and facet maps are
+    pyarrow reads, with no Spark job; they equal the frames and arrays of
+    Spark's ``toPandas()`` fills: columns, dtypes, doc-id order, and None
+    for a non-string facet column."""
+    import pandas as pd
+
+    fields = ["text", "lang", "url", "warc_ts"]
+    fresh = S.FulltextIndex(spark, spark_index.index_dir)
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-fills", "driver-side fills")
+    try:
+        dicts, maps = _fills(fresh, fields)
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("driver-fills")) == []
+    on_spark = S.FulltextIndex(spark, spark_index.index_dir)
+    monkeypatch.setattr(on_spark, "local_path", None)
+    want_dicts, want_maps = _fills(on_spark, fields)
+    for f in fields:
+        pd.testing.assert_frame_equal(dicts[f], want_dicts[f])
+    assert maps["warc_ts"] is None and want_maps["warc_ts"] is None
+    for f in ("text", "lang", "url"):
+        (ids, vals), (want_ids, want_vals) = maps[f], want_maps[f]
+        assert ids.dtype == want_ids.dtype == np.int64
+        assert vals.dtype == want_vals.dtype == object
+        assert ids.tolist() == want_ids.tolist()
+        assert vals.tolist() == want_vals.tolist()
 
 
 class TestPostProcessing:
@@ -286,47 +321,97 @@ class TestLocalBuild:
         assert list(st.getJobIdsForGroup("build-collect"))
         assert list(st.getJobIdsForGroup("build-after-collect")) == []
 
-    def test_resume_across_tiers(self, spark, corpus, tmp_path):
+    REQS = [PHRASE, {**EXACT, "facets": [{"field": "lang", "top": 5}]},
+            {"search": {"terms": ["majes"], "path": "text",
+                        "starts_with": True}, "top": 10}]
+    STAGES = ("docs", "tokens", "dict", "postings", "phrase")
+
+    def _build(self, spark, corpus, d, spark_tier):
         from tests.conftest import forced_spark_build
         from veloci_spark.build import build_index
         from veloci_spark.config import webtext_config
 
-        d = str(tmp_path / "idx")
-        df, cfg = self._df(spark, corpus), webtext_config(segment_docs=32)
-        reqs = [PHRASE, {**EXACT, "facets": [{"field": "lang", "top": 5}]},
-                {"search": {"terms": ["majes"], "path": "text",
-                            "starts_with": True}, "top": 10}]
+        args = (spark, self._df(spark, corpus),
+                webtext_config(segment_docs=32), d)
+        if not spark_tier:
+            return build_index(*args)
+        with forced_spark_build():
+            return build_index(*args)
 
-        def markers():
-            out = {}
-            for s in ("docs", "tokens", "dict", "postings", "phrase"):
+    def _markers(self, d):
+        """{stage: marker ts} of the stages marked done."""
+        out = {}
+        for s in self.STAGES:
+            if os.path.exists(f"{d}/_stage_{s}.done"):
                 with open(f"{d}/_stage_{s}.done") as f:
                     out[s] = json.load(f)["ts"]
-            return out
+        return out
 
-        def results():
-            idx = S.FulltextIndex(spark, d)
-            return [_result(S.search(idx, r)) for r in reqs]
+    def _results(self, spark, d):
+        idx = S.FulltextIndex(spark, d)
+        return [_result(S.search(idx, r)) for r in self.REQS]
 
-        def resume(drop, spark_tier):
-            before = markers()
-            for s in drop:
-                os.remove(f"{d}/_stage_{s}.done")
-            if spark_tier:
-                with forced_spark_build():
-                    m = build_index(spark, df, cfg, d)
-            else:
-                m = build_index(spark, df, cfg, d)
-            after = markers()
-            assert m["build_tier"] == ("spark" if spark_tier else "local")
-            # exactly the dropped stages ran again
-            assert {s for s in after if after[s] != before.get(s)} == set(drop)
-            assert results() == want
+    @staticmethod
+    def _no_transient(d):
+        for name in ("_tokens", "_occ"):
+            assert not os.path.exists(f"{d}/{name}"), name
 
-        assert build_index(spark, df, cfg, d)["build_tier"] == "local"
-        want = results()
-        # the Spark tier resumes on the local tier's tokens and dict ...
-        resume(["postings", "phrase"], spark_tier=True)
-        # ... and the local tier on the Spark tier's (multi-file) ones
-        resume(["tokens", "dict", "postings", "phrase"], spark_tier=True)
-        resume(["postings", "phrase"], spark_tier=False)
+    def test_resume_across_tiers(self, spark, corpus, tmp_path, monkeypatch):
+        """A build that stops at a stage resumes on the other tier from the
+        stopped build's _tokens/ (term entries and phrase pairs): the
+        stages marked done, tokens included, do not run again."""
+        import pytest
+
+        from veloci_spark import build as B
+
+        want_dir = str(tmp_path / "want")
+        assert self._build(spark, corpus, want_dir, False)["build_tier"] == \
+            "local"
+        want = self._results(spark, want_dir)
+        mark = B._mark_stage
+        # the local tier stops before marking postings, the Spark tier
+        # before marking dict (its _occ/ written)
+        for first_on_spark, stop in ((False, "postings"), (True, "dict")):
+            d = str(tmp_path / stop)
+
+            def stopping(index_dir, name, *a, **k):
+                if name == stop:
+                    raise RuntimeError(f"stopped at {name}")
+                return mark(index_dir, name, *a, **k)
+
+            with monkeypatch.context() as mp:
+                mp.setattr(B, "_mark_stage", stopping)
+                with pytest.raises(RuntimeError, match="stopped at"):
+                    self._build(spark, corpus, d, first_on_spark)
+            before = self._markers(d)
+            assert "tokens" in before and stop not in before
+            assert os.path.isdir(f"{d}/_tokens")
+            m = self._build(spark, corpus, d, not first_on_spark)
+            assert m["build_tier"] == ("local" if first_on_spark else "spark")
+            after = self._markers(d)
+            assert set(after) == set(self.STAGES)
+            assert {s: after[s] for s in before} == before
+            self._no_transient(d)
+            assert self._results(spark, d) == want
+
+    def test_resume_reruns_tokens_for_a_removed_output(self, spark, corpus,
+                                                        tmp_path):
+        """A completed build keeps no _tokens/: a stage run again reruns
+        the tokens stage first, and nothing else."""
+        d = str(tmp_path / "idx")
+        self._build(spark, corpus, d, False)
+        self._no_transient(d)
+        want = self._results(spark, d)
+        before = self._markers(d)
+        assert set(before) == set(self.STAGES)
+        self._build(spark, corpus, d, False)
+        assert self._markers(d) == before
+        for stage, spark_tier in (("phrase", False), ("postings", True)):
+            os.remove(f"{d}/_stage_{stage}.done")
+            before = self._markers(d)
+            self._build(spark, corpus, d, spark_tier)
+            after = self._markers(d)
+            assert {s for s in self.STAGES if after[s] != before.get(s)} == \
+                {"tokens", stage}
+            self._no_transient(d)
+            assert self._results(spark, d) == want

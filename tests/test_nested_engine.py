@@ -79,6 +79,31 @@ class TestNestedBuild:
                              (2, "having a long torso")]
         assert 2 not in by_doc and 4 not in by_doc
 
+    def test_facet_map_reads_values_without_spark(self, spark, nested_index,
+                                                  monkeypatch):
+        """A 1:n field's driver-side facet map is a pyarrow read of its
+        value relation with no Spark job, equal to Spark's fill: one
+        (doc, value) per value, in doc-id order."""
+        from veloci_spark.search import FulltextIndex
+
+        fresh = FulltextIndex(spark, nested_index.index_dir)
+        sc = spark.sparkContext
+        sc.setJobGroup("nested-facet-map", "driver-side facet map")
+        try:
+            ids, vals = fresh.facet_map("tags[]")
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "nested-facet-map")) == []
+        on_spark = FulltextIndex(spark, nested_index.index_dir)
+        monkeypatch.setattr(on_spark, "local_path", None)
+        want_ids, want_vals = on_spark.facet_map("tags[]")
+        assert ids.tolist() == want_ids.tolist()
+        assert ids.tolist() == sorted(ids.tolist())
+        # values of one doc come in no fixed order from Spark's sort
+        assert sorted(zip(ids.tolist(), vals.tolist())) == \
+            sorted(zip(want_ids.tolist(), want_vals.tolist()))
+
     def test_dictionary_has_value_tokens_and_texts(self, nested_index):
         d = nested_index.dict_df.where("field = 'meanings.eng[]'").toPandas()
         terms = set(d["term"])

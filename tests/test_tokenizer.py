@@ -107,73 +107,77 @@ def _rows(pdf, cols):
 
 
 class TestBuildTokenizeKernel:
-    """Expected rows of the build's tokenize kernel, on the Spark stages
-    (``mapInPandas`` wrappers) and on the local tier's direct call."""
+    """Expected rows of the build's one tokenize kernel
+    (``build._tokenize_batch``): in the Spark tokens pass
+    (``build._spark_tokenize``) and called in the driver, as the local
+    tier does, over a doc store and over a nested field's value
+    relation."""
 
-    def _docs(self, spark):
-        return spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+    @staticmethod
+    def _kernel(spark, rows, ddl, fields):
+        """[(entries, pairs)] pandas frames of the Spark pass and of the
+        driver call over the same rows; pairs as the two phrase stages
+        read them from the entries."""
+        import pyarrow as pa
+        from pyspark.sql import functions as F
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-    def test_token_entries(self, spark):
-        from veloci_spark.build import _tokenize_texts, token_entry_rows
-        from veloci_spark.config import DEFAULT_SEPARATORS
+        from veloci_spark.build import _pairs, _spark_tokenize, _tokenize_batch
 
-        cols = ["doc_id", "token", "best_pos", "n_tokens", "cnt"]
-        got = token_entry_rows(self._docs(spark), "text",
-                               DEFAULT_SEPARATORS).toPandas()
-        assert _rows(got, cols) == sorted(EDGE_ENTRIES)
-        ent, _ = _tokenize_texts([d for d, _ in EDGE_DOCS],
-                                 [t for _, t in EDGE_DOCS], DEFAULT_SEPARATORS,
-                                 pairs=False)
-        assert _rows(ent, cols) == sorted(EDGE_ENTRIES)
-        assert set(ent["pos"]) == {0}
+        df = spark.createDataFrame(rows, ddl)
+        ent = _spark_tokenize(df, fields)
+        prs = ent.select("field", "doc_id", F.col("token").alias("tok_a"),
+                         F.explode("next_toks").alias("tok_b"))
+        batch = pa.RecordBatch.from_pylist(
+            [dict(zip(df.columns, r)) for r in rows],
+            schema=to_arrow_schema(df.schema))
+        table = _tokenize_batch(batch, fields)
+        return [(ent.toPandas(), prs.toPandas()),
+                (table.to_pandas(), _pairs(table).to_pandas())]
 
-    def test_pair_rows(self, spark):
-        from veloci_spark.build import _tokenize_texts, pair_rows
-        from veloci_spark.config import DEFAULT_SEPARATORS
+    def test_doc_store(self, spark):
+        from veloci_spark.config import FieldConfig
 
-        cols = ["doc_id", "tok_a", "tok_b"]
-        got = pair_rows(self._docs(spark), "text", DEFAULT_SEPARATORS).toPandas()
-        assert _rows(got, cols) == sorted(EDGE_PAIRS)
-        _, prs = _tokenize_texts([d for d, _ in EDGE_DOCS],
-                                 [t for _, t in EDGE_DOCS], DEFAULT_SEPARATORS,
-                                 entries=False)
-        assert _rows(prs, cols) == sorted(EDGE_PAIRS)
+        # "lang" has no phrase pairs: entries only
+        rows = [(d, t, t) for d, t in EDGE_DOCS]
+        fields = [FieldConfig("text"), FieldConfig("lang", phrase_pairs=False)]
+        for ent, prs in self._kernel(spark, rows, "doc_id long, text string, "
+                                     "lang string", fields):
+            for fld in ("text", "lang"):
+                got = ent[ent["field"] == fld]
+                assert _rows(got, ["doc_id", "token", "best_pos", "n_tokens",
+                                   "cnt"]) == sorted(EDGE_ENTRIES)
+                assert set(got["pos"]) == {0}
+            assert set(prs["field"]) == {"text"}
+            assert _rows(prs, ["doc_id", "tok_a", "tok_b"]) == \
+                sorted(EDGE_PAIRS)
 
-    def test_value_pair_rows(self, spark):
-        # dedup is per VALUE: the same pair in N sibling values yields N
-        # rows, a repeat within one value yields one
-        from veloci_spark.build import value_pair_rows
-        from veloci_spark.config import DEFAULT_SEPARATORS
+    def test_value_relation(self, spark):
+        # n_tokens and best_pos are per value; pos is the value's position.
+        # Pair dedup is per VALUE: the same pair in N sibling values yields
+        # N rows, a repeat within one value yields one
+        from veloci_spark.config import FieldConfig
 
-        vals = spark.createDataFrame(
-            [(0, 0, "alpha beta gamma"), (0, 1, "alpha beta delta"),
-             (0, 2, "alpha beta"),  # pair (alpha,beta) in 3 sibling values
-             (1, 0, "one two one two"),  # repeated within one value → 1 row
-             (1, 1, "one two"),
-             (2, 0, "solo")],
-            "doc_id long, pos int, value string")
-        got = value_pair_rows(vals, DEFAULT_SEPARATORS).toPandas()
-        assert _rows(got, ["doc_id", "tok_a", "tok_b"]) == sorted(
-            [(0, "alpha", "beta")] * 3
-            + [(0, "beta", "gamma"), (0, "beta", "delta")]
-            + [(1, "one", "two")] * 2 + [(1, "two", "one")])
-
-    def test_value_entries(self, spark):
-        from veloci_spark.build import value_token_entry_rows
-        from veloci_spark.config import DEFAULT_SEPARATORS
-
-        vals = spark.createDataFrame(
-            [(0, 0, "alpha beta alpha"), (0, 1, "gamma (delta)"),
-             (1, 0, "one"), (1, 1, "two three")],
-            "doc_id long, pos int, value string")
-        got = value_token_entry_rows(vals, DEFAULT_SEPARATORS).toPandas()
-        # n_tokens and best_pos are per value; pos is the value's position
-        assert _rows(got, ["doc_id", "pos", "token", "best_pos", "n_tokens",
-                           "cnt"]) == sorted([
-            (0, 0, "alpha", 0, 5, 2), (0, 0, SEP, 1, 5, 2),
-            (0, 0, "beta", 2, 5, 1),
-            (0, 1, "gamma", 0, 4, 1), (0, 1, " (", 1, 4, 1),
-            (0, 1, "delta", 2, 4, 1), (0, 1, ")", 3, 4, 1),
-            (1, 1, "two", 0, 3, 1), (1, 1, SEP, 1, 3, 1),
-            (1, 1, "three", 2, 3, 1),
-        ])
+        rows = [(0, 0, "alpha beta alpha"), (0, 1, "gamma (delta)"),
+                (0, 2, "alpha beta gamma"), (1, 0, "one"),
+                (1, 1, "two three"), (1, 2, "one two one two"),
+                (1, 3, "one two")]
+        for ent, prs in self._kernel(spark, rows, "doc_id long, pos long, "
+                                     "value string", [FieldConfig("tags[]")]):
+            assert set(ent["field"]) == set(prs["field"]) == {"tags[]"}
+            assert _rows(ent[ent["pos"] < 2], [
+                "doc_id", "pos", "token", "best_pos", "n_tokens", "cnt"
+            ]) == sorted([
+                (0, 0, "alpha", 0, 5, 2), (0, 0, SEP, 1, 5, 2),
+                (0, 0, "beta", 2, 5, 1),
+                (0, 1, "gamma", 0, 4, 1), (0, 1, " (", 1, 4, 1),
+                (0, 1, "delta", 2, 4, 1), (0, 1, ")", 3, 4, 1),
+                (1, 1, "two", 0, 3, 1), (1, 1, SEP, 1, 3, 1),
+                (1, 1, "three", 2, 3, 1),
+            ])
+            assert _rows(prs, ["doc_id", "tok_a", "tok_b"]) == sorted(
+                [(0, "alpha", "beta")] * 2
+                + [(0, "beta", "alpha"), (0, "beta", "gamma"),
+                   (0, "gamma", "delta")]
+                + [(1, "two", "three")]
+                + [(1, "one", "two")] * 2 + [(1, "two", "one")])

@@ -14,10 +14,12 @@ Reproduces the reference build dataflow (SURVEY.md §2.2, B1–B12). Stage map
    per-partition counts → driver-side prefix sum → partition offset +
    local rank. No single-node ``Window.orderBy`` — this is the piece
    that must survive 10^12 rows.
-2. ``tokens`` — one tokenize kernel (grouped-separator semantics,
-   veloci_spark.tokenizer) emitting per-(text, token) aggregated entries
-   (first position, in-text count, text length): the per-doc grouping is
-   text-local, so no shuffle of raw occurrences.
+2. ``tokens`` — one tokenize pass per text (:func:`_tokenize_batch`,
+   grouped-separator semantics, veloci_spark.tokenizer) emitting the
+   per-(text, token) aggregated entries (first position, in-text count,
+   text length), each with the distinct tokens that follow it in the text
+   (the text's phrase pairs): the per-doc grouping is text-local, so no
+   shuffle of raw occurrences.
 3. ``dict`` — term stats (B2): token counts ∪ storable full-text counts
    summed per (field, term); term ids (B3) = lexicographic rank per field
    (reference src/create/create_fulltext.rs:68-77); per-field text
@@ -34,7 +36,7 @@ Reproduces the reference build dataflow (SURVEY.md §2.2, B1–B12). Stage map
    scores for block-max WAND pruning; one row per group, the table sorted
    by (field, term_id, segment) so row-group statistics prune term lookups.
 5. ``phrase`` — the phrase-pair index (B9): the distinct adjacent
-   non-separator token pairs of each text, emitted by the tokenize kernel
+   non-separator token pairs of each text, which the tokens stage emitted
    (reference src/create.rs:251-263 semantics), packed per (field,
    pair, segment) into a delta+VByte ``docs_bin`` like the postings.
 6. nested (1:n) fields add ``values`` (per-value relations) and
@@ -46,13 +48,14 @@ Each stage runs on one of two tiers:
 
 * **spark** — ``docs`` is :func:`assign_doc_ids` or a Spark write; stages
   2-5 (:func:`_spark_stages`) are Spark jobs: the kernels run in
-  ``mapInPandas``, term ids come from a range partition + prefix sums,
-  packing from a hash ``repartition`` + ``sortWithinPartitions``.
+  ``mapInArrow`` / ``mapInPandas``, term ids come from a range partition
+  + prefix sums, packing from a hash ``repartition`` +
+  ``sortWithinPartitions``.
 * **local** — ``docs`` (:func:`_driver_docs`) is one Arrow collect of the
   input, with the ``_tb`` tie-break computed in that same Spark job; the
   driver sorts it, numbers it (or offsets the caller's integer ids) and
   writes ``docs/`` with pyarrow. Stages 2-5 (:func:`_local_stages`) call
-  the same kernels (:func:`_tokenize_texts`, the pack kernel,
+  the same kernels (:func:`_tokenize_batch`, the pack kernel,
   :func:`_pack_pairs`) on that table, or on a pyarrow read of ``docs/``,
   do the relational glue (union, sums, term-id rank, dictionary join,
   sort) in pyarrow and pandas, and write the same files with pyarrow. A
@@ -81,7 +84,10 @@ Layout under ``index_dir``::
                              docs_bin, scores_bin, block_max)
     phrase/                  parquet (field, tok_a, tok_b, segment, docs_bin)
     docs/                    parquet doc store (doc_id + source columns)
-    _tokens/                 the tokens stage's entries (resume input)
+    _tokens/                 transient: the tokens stage's entries and
+                             phrase pairs (next_toks), the input of stages
+                             3-5 and of a resume; removed once the build
+                             is done
     _field_stats.json        per-field n_texts + avgdl
     checkpoints/             per-task JSON metrics (lineage)
     _stage_<name>.done       stage completion markers (resume skips them)
@@ -93,7 +99,6 @@ import json
 import os
 import shutil
 import time
-from itertools import repeat
 from urllib.parse import urlparse
 
 from typing import NamedTuple
@@ -183,6 +188,22 @@ def _mark_stage(index_dir: str, name: str, fingerprint: str, **info) -> None:
     with open(os.path.join(index_dir, f"_stage_{name}.done"), "w") as f:
         json.dump({"stage": name, "ts": time.time(),
                    "fingerprint": fingerprint, **info}, f)
+
+
+# the stages that read the tokens stage's _tokens/, which build_index
+# removes once the build is done
+_TOKENS_READERS = ("dict", "postings", "tokentexts", "phrase")
+
+
+def _pending_stages(index_dir: str, fingerprint: str, stages) -> set:
+    """The stages of ``stages`` to run: those without a current marker,
+    plus ``tokens`` when a pending stage reads ``_tokens/`` and it is
+    gone."""
+    todo = {s for s in stages if not _stage_done(index_dir, s, fingerprint)}
+    if todo.intersection(_TOKENS_READERS) and not os.path.isdir(
+            os.path.join(index_dir, "_tokens")):
+        todo.add("tokens")
+    return todo
 
 
 def _write_checkpoint(index_dir: str, stage: str, task_id: int, metrics: dict) -> None:
@@ -310,34 +331,28 @@ def token_rows(docs: DataFrame, field: str, separators: str) -> DataFrame:
     return docs.select("doc_id", F.col(field).cast("string").alias(field)).mapInPandas(explode_tokens, schema=_TOKEN_SCHEMA)
 
 
-_ENTRY_SCHEMA = T.StructType([
+# the tokens stage's output on both tiers, ``_tokens/``: one row per
+# (text, token) entry; ``next_toks`` lists the distinct non-separator tokens
+# that follow a non-separator token in the text — the text's phrase pairs
+# (token, next) — and is null for a field without phrase pairs
+_TOKENS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("token", T.StringType()),
     T.StructField("best_pos", T.IntegerType()),
     T.StructField("n_tokens", T.IntegerType()),
     T.StructField("cnt", T.IntegerType()),
-])
-
-_VALUE_ENTRY_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
     T.StructField("pos", T.LongType()),
-    T.StructField("token", T.StringType()),
-    T.StructField("best_pos", T.IntegerType()),
-    T.StructField("n_tokens", T.IntegerType()),
-    T.StructField("cnt", T.IntegerType()),
+    T.StructField("field", T.StringType()),
+    T.StructField("next_toks", T.ArrayType(T.StringType())),
 ])
-
-_PAIR_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("tok_a", T.StringType()),
-    T.StructField("tok_b", T.StringType()),
-])
+_TOKENS_ARROW = to_arrow_schema(_TOKENS_SCHEMA)
 
 
-def _tokenize_texts(doc_ids, texts, separators: str, vpos=None,
-                    entries: bool = True, pairs: bool = True):
-    """The per-text tokenize loop of both build tiers: one ``findall`` per
-    text feeds its term entries and its phrase pairs.
+def _tokenize_texts(field: str, doc_ids: np.ndarray, texts: list,
+                    separators: str, vpos: "np.ndarray | None" = None,
+                    pairs: bool = True) -> pa.Table:
+    """The per-text tokenize loop: one ``findall`` per text feeds its term
+    entries and its phrase pairs.
 
     Entries are per-(text, token) aggregates — doc-local grouping inside the
     kernel instead of a cluster-wide ``groupBy(doc_id, token)`` shuffle of
@@ -346,123 +361,97 @@ def _tokenize_texts(doc_ids, texts, separators: str, vpos=None,
     reference src/create/calculate_score.rs:13-29), ``cnt`` its
     in-text count (summed into ``num_occurences``), ``n_tokens`` the text's
     run count. ``pos`` is the text's value position (``vpos``; 0 for a flat
-    field's single text). Pairs are the distinct adjacent non-separator
-    token pairs of each text (reference src/create.rs:251-263), so a
-    pair repeated in two sibling values of one doc yields two rows. Texts
-    that are a single run emit nothing — the reference gates the token loop
-    on ``has_tokens`` (reference src/create.rs:225-280).
-
-    Returns ``(entries frame | None, pairs frame | None)``."""
+    field's single text). Pairs (when ``pairs``) are the distinct adjacent
+    non-separator token pairs of each text (reference src/create.rs:251-263),
+    carried as each entry's ``next_toks``, so a pair repeated in two sibling
+    values of one doc is two pairs. Texts that are a single run emit
+    nothing — the reference gates the token loop on ``has_tokens``
+    (reference src/create.rs:225-280)."""
     findall = _runs_re(separators).findall
     seps = _sep_set(separators)
-    e_ids, e_pos, e_tok, e_best, e_ntok, e_cnt = [], [], [], [], [], []
-    p_ids, p_a, p_b = [], [], []
-    for doc_id, vp, text in zip(doc_ids, repeat(0) if vpos is None else vpos,
-                                texts):
+    e_row, e_k, e_n = [], [], []   # per text: its row, distinct tokens, runs
+    e_tok, e_best, e_cnt, e_next = [], [], [], []
+    for i, text in enumerate(texts):
         if not text:
             continue
         runs = findall(text)
         n = len(runs)
         if n < 2:
             continue
-        if entries:
-            best: dict[str, int] = {}
-            cnt: dict[str, int] = {}
-            for p, tok in enumerate(runs):
-                if tok not in best:
-                    best[tok] = p
-                    cnt[tok] = 1
-                else:
-                    cnt[tok] += 1
-            k = len(best)
-            e_ids.extend([doc_id] * k)
-            e_pos.extend([vp] * k)
-            e_tok.extend(best.keys())
-            e_best.extend(best.values())
-            e_ntok.extend([n] * k)
-            e_cnt.extend(cnt.values())
-        if pairs:
-            seen = set()
-            prev = None
-            for tok in runs:
-                if tok[0] in seps:
-                    continue
-                if prev is not None and (prev, tok) not in seen:
-                    seen.add((prev, tok))
-                    p_ids.append(doc_id)
-                    p_a.append(prev)
-                    p_b.append(tok)
+        best: dict[str, int] = {}
+        cnt: dict[str, int] = {}
+        nxt: dict[str, dict] = {}   # token → its followers, in order
+        prev = None
+        for p, tok in enumerate(runs):
+            if tok not in best:
+                best[tok] = p
+                cnt[tok] = 1
+                nxt[tok] = {}
+            else:
+                cnt[tok] += 1
+            if pairs and tok[0] not in seps:
+                if prev is not None:
+                    nxt[prev][tok] = None
                 prev = tok
-    ent = pd.DataFrame({
-        "doc_id": pd.Series(e_ids, dtype="int64"),
-        "pos": pd.Series(e_pos, dtype="int64"),
-        "token": pd.Series(e_tok, dtype="object"),
-        "best_pos": pd.Series(e_best, dtype="int32"),
-        "n_tokens": pd.Series(e_ntok, dtype="int32"),
-        "cnt": pd.Series(e_cnt, dtype="int32"),
-    }) if entries else None
-    prs = pd.DataFrame({
-        "doc_id": pd.Series(p_ids, dtype="int64"),
-        "tok_a": pd.Series(p_a, dtype="object"),
-        "tok_b": pd.Series(p_b, dtype="object"),
-    }) if pairs else None
-    return ent, prs
+        e_row.append(i)
+        e_k.append(len(best))
+        e_n.append(n)
+        e_tok.extend(best.keys())
+        e_best.extend(best.values())
+        e_cnt.extend(cnt.values())
+        if pairs:
+            e_next.extend(map(list, nxt.values()))
+    rows = np.repeat(np.asarray(e_row, np.int64), e_k)
+    return pa.table({
+        "doc_id": doc_ids[rows],
+        "token": pa.array(e_tok, pa.string()),
+        "best_pos": pa.array(e_best, pa.int32()),
+        "n_tokens": np.repeat(np.asarray(e_n, np.int32), e_k),
+        "cnt": pa.array(e_cnt, pa.int32()),
+        "pos": np.zeros(len(rows), np.int64) if vpos is None else vpos[rows],
+        "field": pa.repeat(pa.scalar(field), len(rows)),
+        "next_toks": (pa.array(e_next, pa.list_(pa.string())) if pairs
+                      else pa.nulls(len(rows), pa.list_(pa.string()))),
+    }, schema=_TOKENS_ARROW)
 
 
-def _text_kernel(text_col: str, separators: str, emit: str):
-    """``mapInPandas`` wrapper of :func:`_tokenize_texts`; ``emit`` is
-    ``"entries"`` (flat field), ``"value_entries"`` (nested, with ``pos``)
-    or ``"pairs"``."""
-    nested = emit == "value_entries"
-
-    def kernel(iterator):
-        for pdf in iterator:
-            ent, prs = _tokenize_texts(
-                pdf["doc_id"].values, pdf[text_col].values, separators,
-                vpos=pdf["pos"].values if nested else None,
-                entries=emit != "pairs", pairs=emit == "pairs")
-            yield prs if prs is not None else (
-                ent if nested else ent.drop(columns="pos"))
-
-    return kernel
-
-
-def token_entry_rows(docs: DataFrame, field: str, separators: str) -> DataFrame:
-    """Per-(doc, token) aggregated token entries in ONE pass:
-    (doc_id, token, best_pos, n_tokens, cnt)."""
-    return docs.select("doc_id", F.col(field).cast("string").alias(field)) \
-        .mapInPandas(_text_kernel(field, separators, "entries"),
-                     schema=_ENTRY_SCHEMA)
+def _tokenize_batch(batch: pa.RecordBatch, fields: list) -> pa.Table:
+    """The tokens stage's kernel on both tiers: the term entries, with
+    their phrase pairs, of one record batch of an input relation, one
+    tokenize pass per text. The relation is the doc store, with ``doc_id``
+    and a string column per flat field of ``fields``, or a nested field's
+    ``values/<path>`` (``doc_id``, ``pos``, ``value``). Only fields with
+    ``phrase_pairs`` emit pairs."""
+    ids = batch.column("doc_id").to_numpy()
+    return pa.concat_tables([_TOKENS_ARROW.empty_table()] + [
+        _tokenize_texts(
+            fc.name, ids,
+            batch.column("value" if fc.is_nested else fc.name).to_pylist(),
+            fc.separators,
+            vpos=batch.column("pos").to_numpy() if fc.is_nested else None,
+            pairs=fc.phrase_pairs)
+        for fc in fields])
 
 
-def value_token_entry_rows(values: DataFrame, separators: str) -> DataFrame:
-    """Per-(value, token) aggregated entries over a (doc_id, pos, value)
-    relation — the nested-field twin of :func:`token_entry_rows`: n_tokens
-    and best_pos are PER VALUE (the reference scores each 1:n value as its
-    own text, create.rs:225-280), and the (doc_id, pos) pair rides along as
-    the value's text identity."""
-    return values.select("doc_id", "pos", "value").mapInPandas(
-        _text_kernel("value", separators, "value_entries"),
-        schema=_VALUE_ENTRY_SCHEMA)
+def _spark_tokenize(relation: DataFrame, fields: list) -> DataFrame:
+    """:func:`_tokenize_batch` over a Spark relation (``mapInArrow``)."""
+
+    def kernel(batches):
+        for batch in batches:
+            yield from _tokenize_batch(batch, fields).to_batches()
+
+    return relation.mapInArrow(kernel, _TOKENS_SCHEMA)
 
 
-def pair_rows(docs: DataFrame, field: str, separators: str) -> DataFrame:
-    """Distinct adjacent non-separator token pairs per doc, emitted directly
-    from the tokenize kernel (doc-local — no window ``lag`` shuffle over
-    every token occurrence)."""
-    return docs.select("doc_id", F.col(field).cast("string").alias(field)) \
-        .mapInPandas(_text_kernel(field, separators, "pairs"),
-                     schema=_PAIR_SCHEMA)
-
-
-def value_pair_rows(values: DataFrame, separators: str) -> DataFrame:
-    """Adjacent-pair rows over a (doc_id, pos, value) relation: pairs are
-    formed WITHIN each value (never across sibling values — the reference's
-    token stream resets per text) and deduped per VALUE. Query-side phrase
-    matching is set-semantics (np.isin), so cross-sibling duplicates never
-    change results, and no doc-level ``.distinct()`` shuffle is paid."""
-    return values.select("doc_id", "value").mapInPandas(
-        _text_kernel("value", separators, "pairs"), schema=_PAIR_SCHEMA)
+def _pairs(tokens: pa.Table) -> pa.Table:
+    """The phrase pairs (field, doc_id, tok_a, tok_b) of ``_tokens/``
+    entries; the Spark phrase stage explodes ``next_toks`` alike."""
+    nxt = tokens["next_toks"].combine_chunks()
+    rows = pc.list_parent_indices(nxt)
+    return pa.table({"field": tokens["field"].take(rows),
+                     "doc_id": tokens["doc_id"].take(rows),
+                     "tok_a": tokens["token"].take(rows),
+                     "tok_b": pc.list_flatten(nxt)})
 
 
 # ---------------------------------------------------------------------------
@@ -772,41 +761,37 @@ def _spark_stages(spark: SparkSession, index_dir: str, fp: str,
         return spark.read.parquet(os.path.join(values_root, safe_path_name(fc.name)))
 
     # ---- stage: tokens ---------------------------------------------------
-    # one tokenize pass emitting per-(doc, token) aggregated entries
-    # (doc-local grouping inside the kernel — no shuffle of raw occurrences);
-    # materialized once, reused by the dict and postings stages. Flat fields
-    # carry pos = 0 (the doc's single text); nested fields one pos per value.
+    # one tokenize pass per input relation (the doc store for every flat
+    # field, values/<path> per nested field) emitting per-(text, token)
+    # aggregated entries with their phrase pairs: doc-local grouping inside
+    # the kernel, no shuffle of raw occurrences. Written as the kernel
+    # emits it, one file per tokenize task: a round-robin repartition of
+    # every entry to num_partitions files took 6.6 of this stage's 16.7 s
+    # (200k synthetic docs, local[4], 4-core VM), and Spark sizes the
+    # readers' splits at bytes / default parallelism anyway. Flat fields
+    # carry pos = 0 (the doc's single text); nested fields one pos per
+    # value.
     tokens_path = os.path.join(index_dir, "_tokens")
-    tokenized_fields = [fc for fc in config.fields if fc.tokenize]
-    if not _stage_done(index_dir, "tokens", fp):
+    todo = _pending_stages(index_dir, fp, (
+        "tokens", "dict", "postings", "phrase",
+        *(("tokentexts",) if nested_fields else ())))
+    if "tokens" in todo:
         t0 = time.time()
-        parts = []
-        for fc in tokenized_fields:
+        tokenized = [fc for fc in config.fields if fc.tokenize]
+        flat = [fc for fc in tokenized if not fc.is_nested]
+        rows = _spark_tokenize(docs.select("doc_id", *(
+            F.col(fc.name).cast("string").alias(fc.name) for fc in flat)), flat)
+        for fc in tokenized:
             if fc.is_nested:
-                parts.append(value_token_entry_rows(field_values(fc), fc.separators)
-                             .withColumn("field", F.lit(fc.name)))
-            else:
-                parts.append(token_entry_rows(docs, fc.name, fc.separators)
-                             .withColumn("pos", F.lit(0).cast("long"))
-                             .withColumn("field", F.lit(fc.name)))
-        if parts:
-            all_tokens = parts[0]
-            for p in parts[1:]:
-                all_tokens = all_tokens.unionByName(p)
-            # spread across num_partitions files: token parquet compresses
-            # ~4:1, so file-size-driven splits would give the downstream
-            # scoring/count stages a fraction of the cluster's parallelism
-            all_tokens.repartition(num_partitions) \
-                .write.mode("overwrite").parquet(tokens_path)
-        else:
-            spark.createDataFrame([], schema=T.StructType(
-                _VALUE_ENTRY_SCHEMA.fields + [T.StructField("field", T.StringType())]
-            )).write.mode("overwrite").parquet(tokens_path)
+                rows = rows.unionByName(_spark_tokenize(
+                    field_values(fc).select("doc_id", "pos", "value"), [fc]))
+        rows.write.mode("overwrite").parquet(tokens_path)
         dt = time.time() - t0
         _write_checkpoint(index_dir, "tokenize", 0, {
             "docs": n_docs, "docs_per_sec": n_docs / max(dt, 1e-9), "wall_sec": dt})
         _mark_stage(index_dir, "tokens", fp, wall_sec=dt)
-    tokens = spark.read.parquet(tokens_path)
+    tokens = (spark.read.parquet(tokens_path)
+              if todo.intersection(_TOKENS_READERS) else None)
 
     # exact-text entries: full texts within the dictionary byte cutoff
     # (/root/reference/src/metadata.rs:66-68 — longer texts are token-only).
@@ -834,7 +819,7 @@ def _spark_stages(spark: SparkSession, index_dir: str, fp: str,
     # ---- stage: dict (term stats + ids) ----------------------------------
     dict_path = os.path.join(index_dir, "dict")
     occ_path = os.path.join(index_dir, "_occ")
-    if not _stage_done(index_dir, "dict", fp):
+    if "dict" in todo:
         t0 = time.time()
         # num_occurences = corpus-wide frequency: once per token occurrence
         # + once per storable full-text occurrence (create_fulltext.rs:81-111);
@@ -857,9 +842,10 @@ def _spark_stages(spark: SparkSession, index_dir: str, fp: str,
             F.sum("doc_freq").alias("doc_freq")) \
             .write.mode("overwrite").parquet(occ_path)
         # per-field text stats (BM25 N + avgdl): one tiny aggregation over
-        # per-text lengths (n_tokens repeats per entry → first() per text)
+        # per-text lengths (n_tokens repeats per entry; min() per text, as
+        # the local tier, when caller-supplied doc ids repeat)
         text_lens = tokens.groupBy("field", "doc_id", "pos").agg(
-            F.first("n_tokens").alias("dl"))
+            F.min("n_tokens").alias("dl"))
         stats_rows = text_lens.groupBy("field").agg(
             F.count("*").alias("n_texts"), F.avg("dl").alias("avgdl")).collect()
         field_stats = {r["field"]: {"n_texts": int(r["n_texts"]),
@@ -884,7 +870,7 @@ def _spark_stages(spark: SparkSession, index_dir: str, fp: str,
 
     # ---- stage: postings -------------------------------------------------
     postings_path = os.path.join(index_dir, "postings")
-    if not _stage_done(index_dir, "postings", fp):
+    if "postings" in todo:
         t0 = time.time()
         # token entries are already per-(value, token) aggregated in the
         # tokenize kernel (best/first position per token)
@@ -965,7 +951,7 @@ def _spark_stages(spark: SparkSession, index_dir: str, fp: str,
     # per-value locality boosts, nested why-found, and value-level facet
     # resolution. Flat fields need none (postings are already doc≡text).
     tokentexts_path = os.path.join(index_dir, "tokentexts")
-    if nested_fields and not _stage_done(index_dir, "tokentexts", fp):
+    if "tokentexts" in todo:
         t0 = time.time()
         nested_tok = (
             tokens.where(F.col("field").isin(list(nested_names)))
@@ -994,46 +980,29 @@ def _spark_stages(spark: SparkSession, index_dir: str, fp: str,
 
     # ---- stage: phrase pairs --------------------------------------------
     phrase_path = os.path.join(index_dir, "phrase")
-    phrase_fields = [fc.name for fc in config.fields if fc.tokenize and fc.phrase_pairs]
-    if not _stage_done(index_dir, "phrase", fp):
+    if "phrase" in todo:
         t0 = time.time()
-        if phrase_fields:
-            parts = []
-            for fc in config.fields:
-                if fc.name in phrase_fields:
-                    pair_fn = value_pair_rows if fc.is_nested else pair_rows
-                    args = ((field_values(fc),) if fc.is_nested
-                            else (docs, fc.name))
-                    parts.append(pair_fn(*args, fc.separators)
-                                 .withColumn("field", F.lit(fc.name)))
-            pairs_raw = parts[0]
-            for p in parts[1:]:
-                pairs_raw = pairs_raw.unionByName(p)
-            # PACKED storage, sorted by pair (v6): one row per
-            # (field, pair, segment) holding the delta+VByte doc-id list
-            # (segment-relative, like postings). Row-group min/max stats on
-            # (tok_a, tok_b) still prune pair lookups; the pack removes the
-            # query-side collect_list shuffle entirely — packed rows feed
-            # the segment kernel directly — and shrinks the table vs flat
-            # longs. A (pair, segment) group split across Arrow batches
-            # yields two rows; every reader treats the id lists as sets, so
-            # splits are benign.
-            def pack_pairs(iterator):
-                for pdf in iterator:
-                    if not pdf.empty:
-                        yield _pack_pairs(pdf, segment_docs)
+        # PACKED storage, sorted by pair (v6): one row per
+        # (field, pair, segment) holding the delta+VByte doc-id list
+        # (segment-relative, like postings). Row-group min/max stats on
+        # (tok_a, tok_b) still prune pair lookups; the pack removes the
+        # query-side collect_list shuffle entirely — packed rows feed
+        # the segment kernel directly — and shrinks the table vs flat
+        # longs. A (pair, segment) group split across Arrow batches
+        # yields two rows; every reader treats the id lists as sets, so
+        # splits are benign.
+        def pack_pairs(iterator):
+            for pdf in iterator:
+                if not pdf.empty:
+                    yield _pack_pairs(pdf, segment_docs)
 
-            pairs = (
-                pairs_raw
-                .withColumn("segment", (F.col("doc_id") / F.lit(segment_docs)).cast("int"))
-                .repartition(num_partitions, "tok_a", "tok_b")
-                .sortWithinPartitions("field", "tok_a", "tok_b", "segment", "doc_id")
-                .mapInPandas(pack_pairs, schema=_PHRASE_SCHEMA)
-            )
-            pairs.write.mode("overwrite").parquet(phrase_path)
-        else:
-            spark.createDataFrame([], schema=_PHRASE_SCHEMA) \
-                .write.mode("overwrite").parquet(phrase_path)
+        (tokens.select("field", "doc_id", F.col("token").alias("tok_a"),
+                       F.explode("next_toks").alias("tok_b"))
+         .withColumn("segment", (F.col("doc_id") / F.lit(segment_docs)).cast("int"))
+         .repartition(num_partitions, "tok_a", "tok_b")
+         .sortWithinPartitions("field", "tok_a", "tok_b", "segment", "doc_id")
+         .mapInPandas(pack_pairs, schema=_PHRASE_SCHEMA)
+         .write.mode("overwrite").parquet(phrase_path))
         _mark_stage(index_dir, "phrase", fp, wall_sec=time.time() - t0)
 
     return n_docs, n_terms
@@ -1290,14 +1259,6 @@ def _write_local(table: pa.Table, path: str, dictionary=True, **options
                    **options)
 
 
-# the Spark tier's ``withColumn(lit)`` columns are not nullable
-_TOKENS_SCHEMA = T.StructType(
-    _ENTRY_SCHEMA.fields + [T.StructField("pos", T.LongType(), False),
-                            T.StructField("field", T.StringType(), False)])
-_PAIRS_SCHEMA = T.StructType(
-    _PAIR_SCHEMA.fields + [T.StructField("field", T.StringType(), False)])
-
-
 def _group_batches(frame: pd.DataFrame, keys: list, size: int):
     """Slices of ``frame`` (sorted by ``keys`` first) of about ``size``
     rows, cut only where a key changes, so no group of equal keys is
@@ -1324,7 +1285,7 @@ def _local_stages(index_dir: str, fp: str, config: IndexConfig,
     """The local build tier: the tokens, dict, postings and phrase stages
     in the driver over ``docs``, the doc store the driver docs stage
     collected, or else a pyarrow read of ``docs/``, through the Spark
-    tier's kernels (:func:`_tokenize_texts`, the pack kernel,
+    tier's kernels (:func:`_tokenize_batch`, the pack kernel,
     :func:`_pack_pairs`); only the relational glue is new: pyarrow for
     the reads, unions, sums and the dictionary lookup, which keep strings
     in Arrow buffers rather than Python objects, and pandas for the sorts
@@ -1335,53 +1296,33 @@ def _local_stages(index_dir: str, fp: str, config: IndexConfig,
     The kernels take batches of about ``batch_rows`` rows, Spark's
     Arrow batch size, so their temporaries stay as small as on Spark; a
     packed group is never split across batches."""
-    todo = {s for s in ("tokens", "dict", "postings", "phrase")
-            if not _stage_done(index_dir, s, fp)}
+    todo = _pending_stages(index_dir, fp,
+                           ("tokens", "dict", "postings", "phrase"))
     tokens_path = os.path.join(index_dir, "_tokens")
     dict_path = os.path.join(index_dir, "dict")
     columns = ["doc_id", *_indexed_columns(config)]
     docs = docs.select(columns) if docs is not None else pq.read_table(
         os.path.join(index_dir, "docs"), columns=columns)
-    phrase_fields = [fc for fc in config.fields
-                     if fc.tokenize and fc.phrase_pairs]
-
-    def tokenize(entries: bool, pairs: bool):
-        """Entry and pair tables of every tokenized field: one tokenize
-        pass per text, one kernel call per doc-store record batch, as the
-        Spark stages call the kernel per Arrow batch."""
-        ents, prs = [_arrow([], _TOKENS_SCHEMA)], [_arrow([], _PAIRS_SCHEMA)]
-        for batch in docs.to_batches(max_chunksize=batch_rows):
-            ids = batch.column("doc_id").to_numpy()
-            e_frames, p_frames = [], []
-            for fc in config.fields:
-                if not fc.tokenize:
-                    continue
-                ent, pr = _tokenize_texts(
-                    ids, batch.column(fc.name).to_pylist(), fc.separators,
-                    entries=entries, pairs=pairs and fc in phrase_fields)
-                if ent is not None:
-                    e_frames.append(ent.assign(field=fc.name))
-                if pr is not None:
-                    p_frames.append(pr.assign(field=fc.name))
-            # to Arrow per batch: the kernel's Python strings live for one
-            # batch only
-            ents.append(_arrow(e_frames, _TOKENS_SCHEMA))
-            prs.append(_arrow(p_frames, _PAIRS_SCHEMA))
-        return pa.concat_tables(ents), pa.concat_tables(prs)
 
     # ---- tokens ----------------------------------------------------------
-    pairs = None
+    # one kernel call per doc-store record batch, as the Spark stage calls
+    # it per Arrow batch; its Python strings live for one batch only
     if "tokens" in todo:
         t0 = time.time()
-        tokens, pairs = tokenize(True, "phrase" in todo)
+        fields = [fc for fc in config.fields if fc.tokenize]
+        tokens = pa.concat_tables([_TOKENS_ARROW.empty_table()] + [
+            _tokenize_batch(batch, fields)
+            for batch in docs.to_batches(max_chunksize=batch_rows)])
         _write_local(tokens, tokens_path)
         dt = time.time() - t0
         _write_checkpoint(index_dir, "tokenize", 0, {
             "docs": n_docs, "docs_per_sec": n_docs / max(dt, 1e-9),
             "wall_sec": dt})
         _mark_stage(index_dir, "tokens", fp, wall_sec=dt)
-    elif todo & {"dict", "postings"}:
+    elif todo.intersection(_TOKENS_READERS):
         tokens = pq.read_table(tokens_path)
+    if "phrase" in todo:
+        pairs = _pairs(tokens)
 
     # exact-text entries: non-null texts within the dictionary byte cutoff
     # of the non-identity fields, as (field, doc_id, term)
@@ -1512,8 +1453,6 @@ def _local_stages(index_dir: str, fp: str, config: IndexConfig,
     # ---- phrase ----------------------------------------------------------
     if "phrase" in todo:
         t0 = time.time()
-        if pairs is None:
-            _, pairs = tokenize(False, True)
         keys = ["field", "tok_a", "tok_b", "segment", "doc_id"]
         # pandas, not Arrow, sorts the string keys: measured 3x faster here;
         # to_pandas shares one Python str per distinct value
@@ -1589,6 +1528,11 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
     else:
         n_docs, n_terms = _spark_stages(spark, index_dir, fp, config,
                                         num_partitions)
+    # every stage that reads _tokens/ (or the Spark dict stage's _occ/) is
+    # marked done: a resume that needs _tokens/ again reruns the tokens
+    # stage (_pending_stages)
+    for name in ("_tokens", "_occ"):
+        shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
 
     # ---- stage: token_values boost side input ----------------------------
     # the side input's CONTENT is part of the stage fingerprint (the build

@@ -12,7 +12,6 @@ top-k docs are ever highlighted, so this is driver-adjacent small work).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from veloci_spark.config import DEFAULT_SEPARATORS
 from veloci_spark.tokenizer import tokenize
@@ -78,12 +77,6 @@ def highlight_text(text: str, terms, separators: str = DEFAULT_SEPARATORS,
     if hits[-1] < len(runs) - around:
         out = out + connector
     return out
-
-
-def highlight_series(texts: pd.Series, terms, separators: str = DEFAULT_SEPARATORS,
-                     **kw) -> pd.Series:
-    """Vectorized batch highlight (for pandas UDF use)."""
-    return texts.map(lambda t: highlight_text(t, terms, separators, **kw))
 
 
 def why_found_terms(index, doc_ids: list[int], leaves) -> dict[int, dict[str, list[str]]]:

@@ -217,8 +217,10 @@ class FulltextIndex:
         self._datasets: dict[str, object] = {}
         # guards the lazy driver-side fills above: a fill is built into a
         # local and published whole, so a concurrent request under the
-        # threaded server never sees a half-built dictionary or map
-        self._lazy_lock = threading.Lock()
+        # threaded server never sees a half-built dictionary or map.
+        # Reentrant: the dictionary and facet-map fills open their pyarrow
+        # dataset under it
+        self._lazy_lock = threading.RLock()
 
     def cache(self):
         """Pin the dictionary + postings (the reference's LoadingType=InMemory)."""
@@ -245,17 +247,24 @@ class FulltextIndex:
             return self._facet_maps[fld]
 
     def _build_facet_map(self, fld: str):
+        from veloci_spark.nested import safe_path_name
+
         if fld in self.values:
-            src = self.values[fld].select("doc_id", F.col("value").alias("_fv"))
+            sdf, col = self.values[fld], "value"
+            table = f"values/{safe_path_name(fld)}"
         elif fld in self.docs.columns:
-            src = self.docs.select("doc_id", F.col(fld).alias("_fv"))
+            sdf, col, table = self.docs, fld, "docs"
         else:
             return None
-        if dict(src.dtypes)["_fv"] != "string":
+        if dict(sdf.dtypes)[col] != "string":
             return None
-        pdf = src.orderBy("doc_id").toPandas()
+        if self.local_path is not None:
+            t = self.arrow_dataset(table).to_table(columns=["doc_id", col])
+            t = t.take(pc.sort_indices(t["doc_id"]))
+            return t["doc_id"].to_numpy(), t[col].to_numpy()
+        pdf = sdf.select("doc_id", col).orderBy("doc_id").toPandas()
         return (pdf["doc_id"].to_numpy(np.int64),
-                pdf["_fv"].to_numpy(dtype=object))
+                pdf[col].to_numpy(dtype=object))
 
     def local_dict(self, field: str) -> "pd.DataFrame | None":
         """Per-field driver-side dictionary (term, term_id, lower) sorted by
@@ -266,7 +275,9 @@ class FulltextIndex:
         if local is None:
             with self._lazy_lock:
                 if self._local_dict is None:
-                    full = self.dict_df.toPandas()
+                    full = (self.arrow_dataset("dict").to_table().to_pandas()
+                            if self.local_path is not None
+                            else self.dict_df.toPandas())
                     built = {}
                     for fld, g in full.groupby("field"):
                         g = g.sort_values("term_id", kind="mergesort") \
@@ -1260,7 +1271,6 @@ def _posting_kernel_rows(index: FulltextIndex, matched: pd.DataFrame) -> DataFra
         .select("segment", "leaf_id", "term_score", "max_score",
                 "docs_bin", "scores_bin")
         .withColumn("doc_ids", F.lit(None).cast("array<long>"))
-        .withColumn("phrase_leaf", F.lit(-1))
     )
 
 
@@ -1424,21 +1434,19 @@ def _phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int):
     spark = index.spark
     specs_df = spark.createDataFrame(
         [(f, a, b, next_leaf_id + i) for i, (f, a, b) in enumerate(phrase_specs)],
-        "field string, tok_a string, tok_b string, phrase_leaf int")
+        "field string, tok_a string, tok_b string, leaf_id int")
     a_set = list({a for _f, a, _b in phrase_specs})
     b_set = list({b for _f, _a, b in phrase_specs})
     prows = (
         index.phrase
         .where(F.col("tok_a").isin(a_set) & F.col("tok_b").isin(b_set))
         .join(F.broadcast(specs_df), on=["field", "tok_a", "tok_b"])
-        .select("segment",
-                F.col("phrase_leaf").alias("leaf_id"),
+        .select("segment", "leaf_id",
                 F.lit(0.0).cast("float").alias("term_score"),
                 F.lit(0).cast("long").alias("max_score"),
                 "docs_bin",
                 F.lit(None).cast("binary").alias("scores_bin"),
-                F.lit(None).cast("array<long>").alias("doc_ids"),
-                "phrase_leaf")
+                F.lit(None).cast("array<long>").alias("doc_ids"))
     )
     return prows
 
@@ -1952,8 +1960,7 @@ def _identity_leaf_rows(index: FulltextIndex, leaf) -> DataFrame:
                 F.lit(0).cast("long").alias("max_score"),
                 F.lit(None).cast("binary").alias("docs_bin"),
                 F.lit(None).cast("binary").alias("scores_bin"),
-                "doc_ids",
-                F.lit(-1).alias("phrase_leaf"))
+                "doc_ids")
     )
 
 

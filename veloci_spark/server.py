@@ -240,10 +240,8 @@ def make_handler(indices: dict):
                         return
                     fld, doc_id = parts[2], int(parts[3])
                     if fld in idx.values:
-                        from pyspark.sql import functions as F
-                        rows = (idx.values[fld]
-                                .where(F.col("doc_id") == doc_id)
-                                .orderBy("pos").select("value").collect())
+                        rows = sorted(idx.read_docs([doc_id], path=fld),
+                                      key=lambda r: r["pos"])
                         self._send(200, [r["value"] for r in rows])
                     else:
                         doc = get_doc(idx, doc_id) or {}

@@ -168,20 +168,3 @@ def generate_df(spark, n_docs: int, seed: int = 42, num_partitions: int | None =
     if num_partitions:
         df = df.repartition(num_partitions)
     return df
-
-
-def docs_table_as_webtext(spark, sf_dir: str):
-    """Adapt the driver's documents.parquet (doc_id, text, lang, source,
-    n_chars) into the webtext shape, deriving a stable url from doc_id."""
-    from pyspark.sql import functions as F
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return d.select(
-        F.concat(F.lit("https://example.org/doc/"),
-                 F.lpad(F.col("doc_id").cast("string"), 10, "0")).alias("url"),
-        F.lit(_EPOCH).alias("warc_ts"),
-        F.col("text").cast("binary").alias("html"),
-        "text",
-        "lang",
-        F.col("doc_id").alias("doc_id"),
-    )
