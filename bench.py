@@ -253,7 +253,8 @@ def materialize_synth_corpus(n_docs: int, parts: int = 64) -> str:
     path = f"{root}/veloci_scale_corpus_{n_docs}"
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    spark = make_spark(CPUS)
+    # the write is untimed: no more task slots than the host has cores
+    spark = make_spark(min(CPUS, os.cpu_count() or 1))
     spark.sparkContext.setLogLevel("ERROR")
     from veloci_spark.synth import generate_df, generate_df_distributed
 

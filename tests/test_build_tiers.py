@@ -11,6 +11,7 @@ batches is written as two rows there and as one row by the local tier.
 """
 
 import contextlib
+import dataclasses
 import datetime as dt
 import json
 import os
@@ -227,6 +228,14 @@ def _same_index(spark, corpus, tmp_path, name):
         spark.conf.set(key, batch)
     with forced_spark_build():
         m_spark = B.build_index(spark, df, config, remote, id_base=id_base)
+    _assert_same_index(spark, local, remote, m_local, m_spark, config,
+                       id_base)
+
+
+def _assert_same_index(spark, local, remote, m_local, m_spark, config,
+                       id_base=0):
+    """The index dirs ``local`` (built on the local tiers) and ``remote``
+    (on the Spark tiers) hold the same index."""
     assert (m_local["docs_tier"], m_spark["docs_tier"]) == ("local", "spark")
     assert (m_local["build_tier"], m_spark["build_tier"]) == ("local", "spark")
     for key in ("n_docs", "n_terms", "n_segments", "field_stats", "stages"):
@@ -254,6 +263,93 @@ def _same_index(spark, corpus, tmp_path, name):
     assert got[2] == want[2]   # postings
     assert got[3] == want[3]   # phrase
     assert got[2] and got[3]   # not vacuous
+
+
+def _stream_root(spark, corpus, root, name):
+    """(streamed root of two generations, IndexConfig) of a compaction
+    parity case. The first generation's doc store is written by the
+    driver, the second's by Spark (an RDD of Python rows has no size
+    estimate), so the Arrow route reads both writers' files."""
+    from pyspark.sql import types as T
+
+    from veloci_spark.streaming import delete_docs, ingest_batch
+
+    config = webtext_config(segment_docs=SEGMENT_DOCS)
+    schema = T.StructType.fromDDL(WEBTEXT_SCHEMA)
+    rows = [dict(r) for r in corpus]
+    if name == "berlin_timestamps":
+        utc = dt.timezone.utc
+        spring = dt.datetime(2024, 3, 31, 0, 30, tzinfo=utc)
+        autumn = dt.datetime(2024, 10, 27, 0, 15, tzinfo=utc)
+        blobs = [b"", None, b"\x00", b"\xff\xfe", bytes(range(256))]
+        for i, r in enumerate(rows):
+            r["warc_ts"] = None if i % 11 == 0 else (
+                (spring if i % 2 else autumn)
+                + dt.timedelta(minutes=13 * (i % 9)))
+            r["html"] = blobs[i % len(blobs)]
+    first_cfg = config
+    if name == "payload_schemas":
+        # the first generation carries a sparse caller id column the
+        # second lacks: the union null-fills it
+        schema = T.StructType.fromDDL(WEBTEXT_SCHEMA + ", my_id int")
+        rows = [dict(r, my_id=i * 3) for i, r in enumerate(rows)]
+        first_cfg = webtext_config(segment_docs=SEGMENT_DOCS,
+                                   doc_id_col="my_id")
+    half = len(rows) // 2
+    ingest_batch(spark, sized_df(spark, rows[:half], schema), first_cfg,
+                 root)
+    second = schema if name != "payload_schemas" else T.StructType(
+        [f for f in schema.fields if f.name != "my_id"])
+    ingest_batch(spark, spark.createDataFrame(
+        [tuple(r[c] for c in second.names) for r in rows[half:]], second),
+        config, root)
+    if name == "tombstones":
+        # across both generations, one id twice, one never ingested
+        delete_docs(spark, root, [0, 7, 61, 100])
+        delete_docs(spark, root, [7, 119, 5000])
+    return root, config
+
+
+@pytest.mark.parametrize("name", [
+    "tombstones", "payload_schemas", "berlin_timestamps"])
+def test_compaction_routes_build_the_same_index(spark, corpus, tmp_path,
+                                                name):
+    """Compaction on Arrow (the default for a local root whose doc stores
+    the driver docs stage would collect) and on Spark (forced) write the
+    same index; the Arrow route, and opening the tombstoned root before
+    it, run no Spark job."""
+    from tests.conftest import clone_root
+    from veloci_spark.streaming import MultiIndex, compact
+
+    zone = _time_zone(spark, "Europe/Berlin") \
+        if name == "berlin_timestamps" else contextlib.nullcontext()
+    with zone:
+        root, config = _stream_root(spark, corpus, str(tmp_path / "root"),
+                                    name)
+        arrow = clone_root(root, str(tmp_path / "arrow"))
+        on_spark = clone_root(root, str(tmp_path / "on_spark"))
+        sc = spark.sparkContext
+        sc.setJobGroup("compact-no-job", "open and compact a local root")
+        try:
+            mi = MultiIndex(spark, arrow)
+            rec = compact(spark, arrow, config)
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup(
+            "compact-no-job")) == []
+        with forced_spark_build():
+            rec_spark = compact(spark, on_spark, config)
+        assert rec["n_docs"] == rec_spark["n_docs"] == mi.live_docs
+        assert rec["id_hi"] == rec_spark["id_hi"]
+        cfg = dataclasses.replace(config, doc_id_col="doc_id")
+        _assert_same_index(spark, rec["dir"], rec_spark["dir"],
+                           B.load_manifest(rec["dir"]),
+                           B.load_manifest(rec_spark["dir"]), cfg)
+    if name == "tombstones":
+        assert mi.n_deletes == 5 and rec["n_docs"] == len(corpus) - 5
+    if name == "payload_schemas":
+        my_id = pq.read_table(os.path.join(rec["dir"], "docs"))["my_id"]
+        assert my_id.null_count == len(corpus) - len(corpus) // 2
 
 
 class TestCostRule:
@@ -350,6 +446,25 @@ class TestCostRule:
         tier, reason = self._docs_tier(spark, corpus, d, cfg, rows)
         assert tier == "spark" and reason.endswith(f" > {n - 1}")
         assert int(reason.split()[2]) >= 2 ** 63 - 1
+
+    def test_arrow_input(self, spark, spark_index, tmp_path):
+        """An Arrow table input has no Spark tier to fall back to: one the
+        driver docs stage cannot write fails and names the reason."""
+        import decimal
+
+        import pyarrow as pa
+
+        table = pq.read_table(os.path.join(spark_index.index_dir, "docs"))
+        cfg = webtext_config(segment_docs=SEGMENT_DOCS)
+        with pytest.raises(ValueError, match="doc id column None: None"):
+            B.build_index(spark, table, cfg, str(tmp_path / "no_ids"))
+        cfg = dataclasses.replace(cfg, doc_id_col="doc_id")
+        money = pa.array([decimal.Decimal("1.50")] * table.num_rows,
+                         pa.decimal128(10, 2))
+        with pytest.raises(ValueError,
+                           match=r"column price: decimal128\(10, 2\)"):
+            B.build_index(spark, table.append_column("price", money), cfg,
+                          str(tmp_path / "decimal"))
 
     def test_non_string_column(self, spark_index):
         cfg = IndexConfig(fields=(FieldConfig("text"),

@@ -317,11 +317,11 @@ class TestDeletes:
             spark, clone_root(root_ab40, str(tmp_path / "root")))
 
     def test_delete_appends_one_file_without_spark(self, spark, root_a20,
-                                                   tmp_path, monkeypatch):
-        """On a local root each call appends one parquet file from the
-        driver, with no Spark job and no hidden temp file left; a remote
-        root appends through Spark. Readers see every call's ids."""
-        from veloci_spark import build as B
+                                                   tmp_path):
+        """Each call appends one parquet file from the driver, with no
+        Spark job and no hidden temp file left, and a MultiIndex opened on
+        the root reads them with none either. Readers see every call's
+        ids, each once."""
         from veloci_spark.streaming import MultiIndex, delete_docs
 
         root = clone_root(root_a20, str(tmp_path / "root"))
@@ -331,6 +331,7 @@ class TestDeletes:
             assert delete_docs(spark, root, [3, 4]) == 2
             assert delete_docs(spark, root, [4, 7]) == 2
             assert delete_docs(spark, root, []) == 0
+            mi = MultiIndex(spark, root)
         finally:
             sc.setJobGroup("", "")
         assert list(sc.statusTracker().getJobIdsForGroup("delete-local")) == []
@@ -338,12 +339,44 @@ class TestDeletes:
         assert len(files) == 2
         assert all(f.startswith("part-") and f.endswith(".parquet")
                    for f in files)
-        with monkeypatch.context() as mp:
-            mp.setattr(B, "_local_dir", lambda _d: None)
-            assert delete_docs(spark, root, [9]) == 1
-        mi = MultiIndex(spark, root)
-        assert mi._del_set == frozenset({3, 4, 7, 9})
-        assert mi.live_docs == 16
+        assert mi._del_set == frozenset({3, 4, 7}) and mi.deletes is None
+        assert mi.live_docs == 17
+
+    def test_uri_roots(self, spark, stream_cfg, tmp_path, monkeypatch):
+        """A file:// root is its path: ingest, delete, open and compact all
+        see the same files, and nothing is made under a literal
+        ``file:`` directory. Any other scheme fails before anything is
+        written."""
+        from veloci_spark.streaming import (MultiIndex, compact, delete_docs,
+                                            index_stream, ingest_batch)
+
+        monkeypatch.chdir(tmp_path)
+        path = tmp_path / "root dir"
+        uri = "file://" + str(path).replace(" ", "%20")
+        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 6, "a")),
+                     stream_cfg, uri)
+        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 4, "b")),
+                     stream_cfg, uri)
+        delete_docs(spark, uri, [1, 7])
+        assert sorted(os.listdir(path)) == [
+            "deletes", "gen=000000", "gen=000001", "generations.json"]
+        mi = MultiIndex(spark, uri)
+        assert (mi.n_docs, mi.live_docs) == (10, 8)
+        assert MultiIndex(spark, str(path)).live_docs == 8
+        assert compact(spark, uri, stream_cfg)["n_docs"] == 8
+        assert MultiIndex(spark, str(path)).live_docs == 8
+        assert not os.path.exists(tmp_path / "file:")
+        df = spark.createDataFrame(_batch_rows(0, 2, "c"))
+        for bad in ("hdfs://nn/root", "s3a://bucket/root"):
+            scheme = bad.split(":")[0]
+            for call in (lambda: ingest_batch(spark, df, stream_cfg, bad),
+                         lambda: delete_docs(spark, bad, [1]),
+                         lambda: MultiIndex(spark, bad),
+                         lambda: compact(spark, bad, stream_cfg),
+                         lambda: index_stream(None, stream_cfg, bad, "ckpt")):
+                with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
+                    call()
+        assert sorted(os.listdir(tmp_path)) == ["root dir"]
 
     def test_compact_applies_deletes_and_preserves_id_space(self, spark,
                                                             stream_cfg,

@@ -54,22 +54,25 @@ Each stage runs on one of two tiers:
 * **local** — ``docs`` (:func:`_driver_docs`) is one Arrow collect of the
   input, with the ``_tb`` tie-break computed in that same Spark job; the
   driver sorts it, numbers it (or offsets the caller's integer ids) and
-  writes ``docs/`` with pyarrow. Stages 2-5 (:func:`_local_stages`) call
-  the same kernels (:func:`_tokenize_batch`, the pack kernel,
-  :func:`_pack_pairs`) on that table, or on a pyarrow read of ``docs/``,
-  do the relational glue (union, sums, term-id rank, dictionary join,
-  sort) in pyarrow and pandas, and write the same files with pyarrow. A
-  small build runs one Spark job: the collect.
+  writes ``docs/`` with pyarrow (:func:`_write_doc_store`, which also
+  writes an input that is an Arrow table already). Stages 2-5
+  (:func:`_local_stages`) call the same kernels (:func:`_tokenize_batch`,
+  the pack kernel, :func:`_pack_pairs`) on that table, or on a pyarrow
+  read of ``docs/``, do the relational glue (union, sums, term-id rank,
+  dictionary join, sort) in pyarrow and pandas, and write the same files
+  with pyarrow. A small build runs one Spark job: the collect; a build
+  from an Arrow table runs none.
 
 The index files do not depend on the tier, so readers, compaction and
 resume cannot tell which one built them (``manifest.json`` records
 ``docs_tier`` and ``docs_fallback`` for the docs stage, ``build_tier`` and
 ``build_fallback`` for stages 2-5, and ``stage_wall_s``). The docs rule
-(:func:`_choose_docs_tier`) is decided before the collect from the plan
-alone: local iff the index dir is on the local disk, no field is nested,
-``order_col`` sorts the same in Arrow (or the caller's id column is an
-integer column), every column round-trips through a pyarrow write, and the optimized plan's ``sizeInBytes`` is at most
-``LOCAL_TIER_MAX_SCAN_BYTES``. The stages 2-5 rule
+(:func:`_docs_rule`; :func:`_choose_docs_tier` for a Spark input) is
+decided before the collect from the plan alone: local iff the index dir
+is on the local disk, no field is nested, ``order_col`` sorts the same in
+Arrow (or the caller's id column is an integer column), every column
+round-trips through a pyarrow write, and the optimized plan's
+``sizeInBytes`` is at most ``LOCAL_TIER_MAX_SCAN_BYTES``. The stages 2-5 rule
 (:func:`_choose_build_tier`) then picks local iff, in addition, every
 indexed column is a string column and the indexed columns hold at most
 ``LOCAL_BUILD_MAX_TEXT_BYTES`` bytes: of the collected table, or of the
@@ -112,7 +115,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from veloci_spark.config import IndexConfig
 from veloci_spark.scoring import index_score_u32
@@ -1059,9 +1062,16 @@ LOCAL_TIER_MAX_SCAN_BYTES = 64 << 20
 # Spark's own write; timestamps are written as Spark's INT96. Excluded:
 # nested and map types, decimals, timestamp_ntz (INT96 would read back as
 # timestamp), intervals, collated strings.
-_DRIVER_DOCS_TYPES = frozenset({
-    "string", "binary", "boolean", "tinyint", "smallint", "int", "bigint",
-    "float", "double", "date", "timestamp"})
+_DRIVER_DOCS_TYPES = {t.simpleString(): t for t in (
+    T.StringType(), T.BinaryType(), T.BooleanType(), T.ByteType(),
+    T.ShortType(), T.IntegerType(), T.LongType(), T.FloatType(),
+    T.DoubleType(), T.DateType(), T.TimestampType())}
+# the type name of each Arrow type pyarrow reads a doc-store column of
+# those types as, from either tier's files: Spark's Arrow type, and naive
+# nanoseconds for an INT96 timestamp
+_ARROW_DOCS_TYPES = {to_arrow_type(t): name
+                     for name, t in _DRIVER_DOCS_TYPES.items()}
+_ARROW_DOCS_TYPES[pa.timestamp("ns")] = "timestamp"
 # caller-supplied id column types whose ``cast("long")`` Arrow reproduces
 # exactly
 _ID_TYPES = frozenset({"tinyint", "smallint", "int", "bigint"})
@@ -1096,14 +1106,11 @@ def _plan_bytes(frame: DataFrame) -> int:
 
 def _choose_docs_tier(frame: DataFrame, index_dir: str, config: IndexConfig,
                       assign: bool) -> "tuple[str, str | None]":
-    """(tier of the docs stage, reason the rule fell back or None), from
-    the plan alone, with no Spark job. Local iff the index dir is on the
-    local disk, no field is nested, ``order_col`` (when ids are assigned)
-    is a string, integer, date or timestamp column, or else the
-    caller-supplied id column an integer one, every column's type is
-    one a pyarrow write stores as Spark's does, and the optimized plan's
-    ``sizeInBytes`` is at most ``LOCAL_TIER_MAX_SCAN_BYTES`` — the rule
-    Spark itself uses to decide whether to collect a broadcast side.
+    """(tier of the docs stage, reason the rule fell back or None) for a
+    Spark input, from the plan alone, with no Spark job:
+    :func:`_docs_rule` over the frame's column types and its optimized
+    plan's ``sizeInBytes`` — the rule Spark itself uses to decide whether
+    to collect a broadcast side.
 
     Like that rule, it trusts Spark's estimate: exact for a cached frame,
     the compressed file size for a parquet scan, a per-type guess for
@@ -1111,55 +1118,100 @@ def _choose_docs_tier(frame: DataFrame, index_dir: str, config: IndexConfig,
     3,000-doc synthetic corpus whose Arrow collect is 1.6 MB), and
     unknown (Long.MaxValue, so Spark) for an RDD of Python rows. Spark's
     ``spark.driver.maxResultSize`` stays the backstop."""
+    return _docs_rule(frame.dtypes, lambda: _plan_bytes(frame), index_dir,
+                      config, assign)
+
+
+def _docs_rule(dtypes: list, plan_bytes, index_dir: str, config: IndexConfig,
+               assign: bool) -> "tuple[str, str | None]":
+    """(tier of the docs stage, reason the rule fell back or None) for an
+    input of columns ``dtypes`` — (name, Spark type name) pairs — whose
+    size ``plan_bytes()`` gives, or which is in the driver already when
+    ``plan_bytes`` is None. Local iff the index dir is on the local
+    disk, no field is nested, ``order_col`` (when ids are assigned) is a
+    string, integer, date or timestamp column, or else the caller-supplied
+    id column an integer one, every column's type is one a pyarrow write
+    stores as Spark's does, and the size, if any, is at most
+    ``LOCAL_TIER_MAX_SCAN_BYTES``."""
     if _local_dir(index_dir) is None:
         return "spark", "remote dir"
     for fc in config.fields:
         if fc.is_nested:
             return "spark", f"nested field {fc.name}"
-    types = dict(frame.dtypes)
+    types = dict(dtypes)
     if assign and types.get(config.order_col) not in _ORDER_TYPES:
         return ("spark", f"order column {config.order_col}: "
                 f"{types.get(config.order_col)}")
-    if not assign and types[config.doc_id_col] not in _ID_TYPES:
+    if not assign and types.get(config.doc_id_col) not in _ID_TYPES:
         return ("spark", f"doc id column {config.doc_id_col}: "
-                f"{types[config.doc_id_col]}")
-    for name, t in frame.dtypes:
+                f"{types.get(config.doc_id_col)}")
+    for name, t in dtypes:
         if t not in _DRIVER_DOCS_TYPES:
             return "spark", f"column {name}: {t}"
-    size = _plan_bytes(frame)
-    if size > LOCAL_TIER_MAX_SCAN_BYTES:
+    size = None if plan_bytes is None else plan_bytes()
+    if size is not None and size > LOCAL_TIER_MAX_SCAN_BYTES:
         return "spark", f"plan bytes {size} > {LOCAL_TIER_MAX_SCAN_BYTES}"
     return "local", None
 
 
+def _arrow_dtypes(schema: pa.Schema) -> list:
+    """(name, Spark type name) of each column of a doc store that pyarrow
+    reads as ``schema``: the type ``spark.read.parquet`` gives it, or the
+    Arrow type's own name for a type outside ``_DRIVER_DOCS_TYPES``."""
+    return [(f.name, _ARROW_DOCS_TYPES.get(f.type, str(f.type)))
+            for f in schema]
+
+
+def _spark_schema(schema: pa.Schema) -> T.StructType:
+    """The Spark schema ``spark.read.parquet`` gives a doc store that
+    pyarrow reads as ``schema`` (its types all in ``_DRIVER_DOCS_TYPES``):
+    every column nullable, as Spark reads them."""
+    return T.StructType([T.StructField(name, _DRIVER_DOCS_TYPES[t])
+                         for name, t in _arrow_dtypes(schema)])
+
+
 def _driver_docs(frame: DataFrame, path: str, config: IndexConfig,
                  assign: bool, id_base: int) -> pa.Table:
-    """The local tier of the docs stage: one ``toArrow()`` collect of
-    ``frame`` (:func:`_docs_frame`), doc ids — ``id_base`` + the rank in
-    (``order_col``, ``_tb``) ascending order with nulls first, Spark's
-    order, so they equal :func:`assign_doc_ids`'; or ``id_base`` + the
-    caller's integer ids, Spark's ``cast("long") + id_base`` — and one
-    parquet file at ``path``, sorted by ``doc_id``, in row groups of
-    ``segment_docs`` rows, timestamps as Spark's INT96. Returns the
-    written table (timestamps in Arrow microseconds)."""
+    """The local tier of the docs stage for a Spark input: one
+    ``toArrow()`` collect of ``frame`` (:func:`_docs_frame`), numbered
+    when ids are assigned — ``id_base`` + the rank in (``order_col``,
+    ``_tb``) ascending order with nulls first, Spark's order, so they
+    equal those of :func:`assign_doc_ids` — and written by
+    :func:`_write_doc_store`."""
     table = frame.toArrow()
-    fields = [f for f in frame.schema.fields if not (assign and
-                                                      f.name == "_tb")]
-    if assign:
-        table = table.take(pc.sort_indices(
-            table, sort_keys=[(config.order_col, "ascending"),
-                              ("_tb", "ascending")],
-            null_placement="at_start")).drop_columns(["_tb"])
-        ids = pa.array(np.arange(id_base, id_base + table.num_rows,
-                                 dtype=np.int64))
-        doc_id = T.StructField("doc_id", T.LongType())
-    else:
+    if not assign:
+        return _write_doc_store(table, frame.schema, path, config, id_base)
+    table = table.take(pc.sort_indices(
+        table, sort_keys=[(config.order_col, "ascending"),
+                          ("_tb", "ascending")],
+        null_placement="at_start")).drop_columns(["_tb"])
+    schema = T.StructType([f for f in frame.schema.fields
+                           if f.name != "_tb"])
+    ids = pa.array(np.arange(id_base, id_base + table.num_rows,
+                             dtype=np.int64))
+    return _write_doc_store(table, schema, path, config, id_base, ids)
+
+
+def _write_doc_store(table: pa.Table, schema: T.StructType, path: str,
+                     config: IndexConfig, id_base: int,
+                     ids: "pa.Array | None" = None) -> pa.Table:
+    """The driver's doc-store writer: ``table``, whose Spark schema is
+    ``schema``, with its doc ids — ``ids`` in row order, or else
+    ``id_base`` + the caller's integer ``doc_id_col``, Spark's
+    ``cast("long") + id_base``, with the rows sorted by them — as one
+    parquet file at ``path`` in row groups of ``segment_docs`` rows,
+    typed as Spark's Arrow types and timestamps written as Spark's INT96.
+    Returns the written table (timestamps in Arrow microseconds)."""
+    fields = list(schema.fields)
+    if ids is None:
         ids = pc.add_checked(table[config.doc_id_col].cast(pa.int64()),
                              id_base)
         order = pc.sort_indices(ids, null_placement="at_start")
         table, ids = table.take(order), ids.take(order)
-        nullable = frame.schema[config.doc_id_col].nullable
-        doc_id = T.StructField("doc_id", T.LongType(), nullable)
+        doc_id = T.StructField("doc_id", T.LongType(),
+                               schema[config.doc_id_col].nullable)
+    else:
+        doc_id = T.StructField("doc_id", T.LongType())
     # the Spark tier's withColumn("doc_id"): a payload column of that name
     # is replaced in place, otherwise doc_id is appended
     names = table.column_names
@@ -1473,8 +1525,9 @@ def _local_stages(index_dir: str, fp: str, config: IndexConfig,
 # the build driver
 
 
-def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
-                index_dir: str, num_partitions: int | None = None,
+def build_index(spark: SparkSession, df: "DataFrame | pa.Table",
+                config: IndexConfig, index_dir: str,
+                num_partitions: int | None = None,
                 input_fingerprint: str = "",
                 token_values: dict | None = None, id_base: int = 0) -> dict:
     """Build the full index; returns the manifest dict. Resumable: completed
@@ -1491,6 +1544,13 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
 
     ``id_base`` offsets every doc id: assigned ids are ``id_base`` + rank,
     caller-supplied ones (``config.doc_id_col``) the column + ``id_base``.
+
+    ``df`` is a Spark DataFrame, or a pyarrow Table with the caller's
+    ``doc_id_col`` — a doc store already in the driver, as compaction
+    reads it — which the driver docs stage writes as it writes its own
+    collect; a table that stage cannot write (a remote ``index_dir``, a
+    nested field, no integer id column, a column type outside
+    ``_DRIVER_DOCS_TYPES``) raises ``ValueError``.
     """
     os.makedirs(index_dir, exist_ok=True)
     t_start = time.time()
@@ -1503,18 +1563,28 @@ def build_index(spark: SparkSession, df: DataFrame, config: IndexConfig,
     docs = None   # the doc store, when the driver collected it
     if not _stage_done(index_dir, "docs", fp):
         t0 = time.time()
-        frame, assign = _docs_frame(df, config)
-        docs_tier, docs_fallback = _choose_docs_tier(frame, index_dir,
-                                                     config, assign)
-        if docs_tier == "local":
-            docs = _driver_docs(frame, docs_path, config, assign, id_base)
-        elif assign:
-            assign_doc_ids(df, docs_path, config.order_col, num_partitions,
-                           id_base)
+        if isinstance(df, pa.Table):
+            docs_tier, docs_fallback = _docs_rule(
+                _arrow_dtypes(df.schema), None, index_dir, config, False)
+            if docs_tier != "local":
+                raise ValueError("build_index: the driver docs stage cannot "
+                                 f"write this Arrow input: {docs_fallback}")
+            docs = _write_doc_store(df, _spark_schema(df.schema), docs_path,
+                                    config, id_base)
         else:
-            df.withColumn("doc_id", F.col(config.doc_id_col).cast("long")
-                          + F.lit(id_base)) \
-                .write.mode("overwrite").parquet(docs_path)
+            frame, assign = _docs_frame(df, config)
+            docs_tier, docs_fallback = _choose_docs_tier(frame, index_dir,
+                                                         config, assign)
+            if docs_tier == "local":
+                docs = _driver_docs(frame, docs_path, config, assign,
+                                    id_base)
+            elif assign:
+                assign_doc_ids(df, docs_path, config.order_col,
+                               num_partitions, id_base)
+            else:
+                df.withColumn("doc_id", F.col(config.doc_id_col).cast("long")
+                              + F.lit(id_base)) \
+                    .write.mode("overwrite").parquet(docs_path)
         _mark_stage(index_dir, "docs", fp, wall_sec=time.time() - t0,
                     tier=docs_tier, fallback=docs_fallback)
 

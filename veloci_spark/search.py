@@ -90,7 +90,7 @@ import os
 import re
 import threading
 import time
-from functools import reduce
+from functools import cached_property, reduce
 from typing import NamedTuple
 
 import numpy as np
@@ -185,10 +185,6 @@ class FulltextIndex:
                 f"{self.manifest.get('version')}, engine expects {LAYOUT_VERSION}; "
                 "rebuild the index (build_index invalidates stale stages "
                 "automatically when re-run)")
-        self.dict_df = spark.read.parquet(f"{index_dir}/dict")
-        self.postings = spark.read.parquet(f"{index_dir}/postings")
-        self.phrase = spark.read.parquet(f"{index_dir}/phrase")
-        self.docs = spark.read.parquet(f"{index_dir}/docs")
         self.fields = {f["name"]: f for f in self.manifest["fields"]}
         # nested (1:n) fields: per-value relations + term→value index
         from veloci_spark.nested import safe_path_name
@@ -201,11 +197,6 @@ class FulltextIndex:
         self.tokentexts = (
             spark.read.parquet(f"{index_dir}/tokentexts")
             if self.values else None
-        )
-        # optional token_values boost side input (reference tests.rs:39-41)
-        tv_path = f"{index_dir}/token_values"
-        self.token_values = (
-            spark.read.parquet(tv_path) if os.path.isdir(tv_path) else None
         )
         self._local_dict_max_terms = local_dict_max_terms
         self._local_dict: dict[str, pd.DataFrame] | None = None
@@ -221,6 +212,34 @@ class FulltextIndex:
         # Reentrant: the dictionary and facet-map fills open their pyarrow
         # dataset under it
         self._lazy_lock = threading.RLock()
+
+    # Spark handles on the index tables, each made on first use: opening
+    # one infers its schema in a Spark job, which a request the local tier
+    # answers never needs
+
+    @cached_property
+    def dict_df(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.index_dir}/dict")
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.index_dir}/postings")
+
+    @cached_property
+    def phrase(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.index_dir}/phrase")
+
+    @cached_property
+    def docs(self) -> DataFrame:
+        return self.spark.read.parquet(f"{self.index_dir}/docs")
+
+    @cached_property
+    def token_values(self) -> "DataFrame | None":
+        """The optional token_values boost side input (reference
+        tests.rs:39-41)."""
+        tv_path = f"{self.index_dir}/token_values"
+        return (self.spark.read.parquet(tv_path) if os.path.isdir(tv_path)
+                else None)
 
     def cache(self):
         """Pin the dictionary + postings (the reference's LoadingType=InMemory)."""
@@ -250,18 +269,20 @@ class FulltextIndex:
         from veloci_spark.nested import safe_path_name
 
         if fld in self.values:
-            sdf, col = self.values[fld], "value"
-            table = f"values/{safe_path_name(fld)}"
-        elif fld in self.docs.columns:
-            sdf, col, table = self.docs, fld, "docs"
+            col, table = "value", f"values/{safe_path_name(fld)}"
         else:
-            return None
-        if dict(sdf.dtypes)[col] != "string":
-            return None
+            col, table = fld, "docs"
         if self.local_path is not None:
-            t = self.arrow_dataset(table).to_table(columns=["doc_id", col])
+            dset = self.arrow_dataset(table)
+            i = dset.schema.get_field_index(col)
+            if i < 0 or not pa.types.is_string(dset.schema.field(i).type):
+                return None
+            t = dset.to_table(columns=["doc_id", col])
             t = t.take(pc.sort_indices(t["doc_id"]))
             return t["doc_id"].to_numpy(), t[col].to_numpy()
+        sdf = self.values[fld] if fld in self.values else self.docs
+        if dict(sdf.dtypes).get(col) != "string":
+            return None
         pdf = sdf.select("doc_id", col).orderBy("doc_id").toPandas()
         return (pdf["doc_id"].to_numpy(np.int64),
                 pdf[col].to_numpy(dtype=object))

@@ -35,6 +35,29 @@ touching that invariant: **log-structured generations**.
   delete + re-ingest (the new version gets a fresh global id — ids are
   never reused, ``id_hi`` tracks the high-water mark across compactions).
 
+Compaction takes one of two routes, picked by the build's own docs-stage
+rule (``build._docs_rule``), with no setting of its own:
+
+* **Arrow** — every generation's ``docs/`` is read with pyarrow, the
+  tables are concatenated as Spark's ``unionByName(allowMissingColumns=
+  True)`` would (first generation's columns first, later ones' new columns
+  after them, null-filled), tombstoned ids are dropped with ``pc.is_in``,
+  and the table goes straight to ``build_index``'s driver docs stage: no
+  Spark job at all. Taken when the root is local, no field is nested,
+  every column type is one the driver docs stage writes as Spark does,
+  the generations' schemas unify without widening a type, the doc stores'
+  uncompressed bytes in their parquet footers are at most
+  ``build.LOCAL_TIER_MAX_SCAN_BYTES``, and the tombstone files hold at
+  most ``MultiIndex.LOCAL_DELETES_MAX`` rows.
+* **Spark** — otherwise: ``spark.read.parquet`` of every doc store,
+  ``unionByName`` and a left-anti join against the distinct tombstones,
+  then ``build_index`` on that DataFrame.
+
+Both routes write the same index. A streaming root is a local path (or a
+``file://`` URI, read as its path): the generation list, the tombstones
+and compaction's swap are driver-side file operations, so a root under
+any other scheme raises ``ValueError``.
+
 Structured Streaming enters via ``index_stream``: ``readStream`` source →
 ``writeStream.foreachBatch(ingest into a new generation)`` with a
 checkpoint location, so a restarted stream resumes at the right batch and
@@ -49,8 +72,11 @@ import json
 import os
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +85,21 @@ from veloci_spark.config import IndexConfig
 
 _GENS_FILE = "generations.json"
 _DELETES_DIR = "deletes"
+
+
+def _root_path(root_dir: str) -> str:
+    """The filesystem path of a streaming root: ``root_dir`` itself, or
+    the path of a ``file://`` URI. Any other scheme raises ``ValueError``
+    — every reader and writer of the root uses the driver's file calls,
+    which would take the URI for a relative path."""
+    u = urlparse(root_dir)
+    if u.scheme == "":
+        return root_dir
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        return unquote(u.path)
+    raise ValueError(
+        f"streaming root {root_dir!r}: scheme {u.scheme!r} is not "
+        "supported; give a local path or a file:// URI")
 
 
 def _gen_hi(g: dict) -> int:
@@ -73,22 +114,13 @@ def delete_docs(spark: SparkSession, root_dir: str, doc_ids) -> int:
     removed physically at :func:`compact`. Deleting an id twice (or an id
     that was never ingested) is harmless — the set is deduped on read.
 
-    On a local root the driver appends one uniquely named file with
-    pyarrow, written under a dot-prefixed name that readers skip and then
-    renamed, so no reader sees it half-written; a remote root appends
-    through Spark."""
-    from veloci_spark.build import _local_dir
-
+    The driver appends one uniquely named file with pyarrow, written under
+    a dot-prefixed name that readers skip and then renamed, so no reader
+    sees it half-written."""
+    out = os.path.join(_root_path(root_dir), _DELETES_DIR)
     ids = [int(i) for i in doc_ids]
     if not ids:
         return 0
-    root = _local_dir(root_dir)
-    if root is None:
-        (spark.createDataFrame([(i,) for i in ids], "doc_id long")
-         .coalesce(1)
-         .write.mode("append").parquet(os.path.join(root_dir, _DELETES_DIR)))
-        return len(ids)
-    out = os.path.join(root, _DELETES_DIR)
     os.makedirs(out, exist_ok=True)
     name = f"part-{uuid.uuid4().hex}.snappy.parquet"
     tmp = os.path.join(out, "." + name)
@@ -98,11 +130,25 @@ def delete_docs(spark: SparkSession, root_dir: str, doc_ids) -> int:
     return len(ids)
 
 
-def _deletes_df(spark: SparkSession, root_dir: str):
-    p = os.path.join(root_dir, _DELETES_DIR)
+def _deletes_df(spark: SparkSession, root: str):
+    p = os.path.join(root, _DELETES_DIR)
     if not os.path.exists(p):
         return None
     return spark.read.parquet(p).select("doc_id").distinct()
+
+
+def _tombstones(root: str, max_rows: int) -> "pa.Array | None":
+    """The distinct tombstoned ids of ``root``, one pyarrow read of
+    ``deletes/`` (empty when there are none); None when the files'
+    footers hold more than ``max_rows`` rows, which Spark reads
+    (:func:`_deletes_df`)."""
+    p = os.path.join(root, _DELETES_DIR)
+    if not os.path.isdir(p):
+        return pa.array([], pa.int64())
+    dset = ds.dataset(p, format="parquet")
+    if dset.count_rows() > max_rows:
+        return None
+    return pc.unique(dset.to_table(columns=["doc_id"])["doc_id"]).drop_null()
 
 
 def _read_gens(root_dir: str) -> list[dict]:
@@ -131,6 +177,7 @@ def ingest_batch(spark: SparkSession, df: DataFrame, config: IndexConfig,
     generation record {gen, base, n_docs, dir}."""
     from veloci_spark.build import build_index
 
+    root_dir = _root_path(root_dir)
     os.makedirs(root_dir, exist_ok=True)
     gens = _read_gens(root_dir)
     gen_id = (max(g["gen"] for g in gens) + 1) if gens else 0
@@ -175,6 +222,7 @@ def index_stream(stream_df: DataFrame, config: IndexConfig, root_dir: str,
     default ``availableNow=True`` (drain the source, then stop), use
     ``processingTime='30 seconds'`` for continuous tailing.
     """
+    root_dir = _root_path(root_dir)
     if not trigger_kw:
         trigger_kw = {"availableNow": True}
 
@@ -205,10 +253,11 @@ class MultiIndex:
         from veloci_spark.search import FulltextIndex
 
         self.spark = spark
-        self.root_dir = root_dir
-        self.gens = _read_gens(root_dir)
+        self.root_dir = _root_path(root_dir)
+        self.gens = _read_gens(self.root_dir)
         self.indexes = [(g, FulltextIndex(spark, g["dir"])) for g in self.gens]
-        self.deletes = _deletes_df(spark, root_dir)
+        # the tombstones as a Spark frame: only when Spark reads them
+        self.deletes = None
         # per-(generation, SEGMENT) tombstoned ids: each segment's top-k is
         # inflated by ITS OWN tombstone count — not the generation-wide
         # total — so a heavily-deleted index never blows up every segment's
@@ -217,29 +266,34 @@ class MultiIndex:
         self._seg_deleted: dict[int, dict[int, "np.ndarray"]] = {}
         self._del_set: frozenset | None = frozenset()
         self.n_deletes = 0
-        if self.deletes is not None and self.gens:
+        if self.gens:
             self._load_tombstone_state(spark)
 
     def _load_tombstone_state(self, spark):
-        """One job collects the tombstones when they fit on the driver;
-        their per-segment split follows in numpy. Past LOCAL_DELETES_MAX
-        the kernel never sees them, and one job counts those that fall in
-        a generation."""
-        ids = self.deletes.limit(self.LOCAL_DELETES_MAX + 1).toPandas()
-        if len(ids) <= self.LOCAL_DELETES_MAX:
-            self._del_set = frozenset(ids["doc_id"].tolist())
-            self._build_seg_deleted()
-            self.n_deletes = sum(len(v) for per in self._seg_deleted.values()
-                                 for v in per.values())
-        else:
-            self._del_set = None  # too large: stay distributed
-            ranges = spark.createDataFrame(
-                [(g["base"], _gen_hi(g)) for g in self.gens],
-                "lo long, hi long")
-            d = self.deletes
-            self.n_deletes = d.join(F.broadcast(ranges),
-                                    (d["doc_id"] >= ranges["lo"])
-                                    & (d["doc_id"] < ranges["hi"])).count()
+        """Tombstone files of at most LOCAL_DELETES_MAX rows are one
+        pyarrow read; the per-segment split follows in numpy. Past that
+        Spark reads them: one job collects them when their distinct ids
+        still fit on the driver; otherwise the kernel never sees them, and
+        one job counts those that fall in a generation."""
+        ids = _tombstones(self.root_dir, self.LOCAL_DELETES_MAX)
+        if ids is None:
+            self.deletes = _deletes_df(spark, self.root_dir)
+            ids = self.deletes.limit(self.LOCAL_DELETES_MAX + 1) \
+                .toPandas()["doc_id"]
+            if len(ids) > self.LOCAL_DELETES_MAX:
+                self._del_set = None  # too large: stay distributed
+                ranges = spark.createDataFrame(
+                    [(g["base"], _gen_hi(g)) for g in self.gens],
+                    "lo long, hi long")
+                d = self.deletes
+                self.n_deletes = d.join(F.broadcast(ranges),
+                                        (d["doc_id"] >= ranges["lo"])
+                                        & (d["doc_id"] < ranges["hi"])).count()
+                return
+        self._del_set = frozenset(ids.to_numpy().tolist())
+        self._build_seg_deleted()
+        self.n_deletes = sum(len(v) for per in self._seg_deleted.values()
+                             for v in per.values())
 
     def _build_seg_deleted(self):
         """Per-(generation, segment) SEGMENT-RELATIVE tombstone ids,
@@ -356,6 +410,50 @@ class MultiIndex:
         return None
 
 
+def _arrow_docs(root: str, gens: list, config: IndexConfig
+                ) -> "pa.Table | None":
+    """Compaction's Arrow route: the live docs of every generation as one
+    table, as Spark's ``unionByName(allowMissingColumns=True)`` and the
+    left-anti join with the tombstones would give them; None when the
+    route does not apply (module docstring), which leaves compaction on
+    Spark."""
+    from veloci_spark import build as B
+
+    dsets = [ds.dataset(os.path.join(g["dir"], "docs"), format="parquet")
+             for g in gens]
+    types: dict[str, pa.DataType] = {}
+    for dset in dsets:
+        for f in dset.schema:
+            if types.setdefault(f.name, f.type) != f.type:
+                return None   # Spark would widen the type
+    # Spark's union matches names case-insensitively
+    if len({name.lower() for name in types}) < len(types):
+        return None
+    schema = pa.schema(list(types.items()))
+    size = sum(frag.metadata.row_group(i).total_byte_size
+               for dset in dsets for frag in dset.get_fragments()
+               for i in range(frag.metadata.num_row_groups))
+    tier, _reason = B._docs_rule(B._arrow_dtypes(schema), lambda: size, root,
+                                 config, False)
+    if tier != "local":
+        return None
+    dels = _tombstones(root, MultiIndex.LOCAL_DELETES_MAX)
+    if dels is None:
+        return None
+    tables = []
+    for dset in dsets:
+        t = dset.to_table()
+        tables.append(pa.table(
+            [t[name] if name in t.column_names else pa.nulls(len(t), typ)
+             for name, typ in types.items()], schema=schema))
+    docs = pa.concat_tables(tables)
+    if not os.path.isdir(os.path.join(root, _DELETES_DIR)):
+        return docs
+    # the Spark route's join on "doc_id" puts that column first
+    docs = docs.select(["doc_id"] + [n for n in types if n != "doc_id"])
+    return docs.filter(pc.invert(pc.is_in(docs["doc_id"], value_set=dels)))
+
+
 def compact(spark: SparkSession, root_dir: str, config: IndexConfig) -> dict:
     """Merge all generations into one (the segment-merge of this design):
     re-read every generation's doc store (global ids preserved), drop
@@ -363,29 +461,42 @@ def compact(spark: SparkSession, root_dir: str, config: IndexConfig) -> dict:
     the generation list, then delete the old generation dirs and the
     tombstone set. Term statistics become globally exact; the surviving
     generation records ``id_hi`` (high-water mark + 1) so later ingests
-    never reuse a deleted or surviving id."""
+    never reuse a deleted or surviving id.
+
+    The union and the tombstone filter run in the driver on Arrow, with no
+    Spark job, when the build's docs-stage rule would collect the union
+    (a local root, no nested field, column types the driver writes as
+    Spark does, at most ``build.LOCAL_TIER_MAX_SCAN_BYTES`` uncompressed
+    footer bytes), the generations' schemas unify without widening a type
+    and the tombstone files hold at most ``MultiIndex.LOCAL_DELETES_MAX``
+    rows; otherwise on Spark, as ``unionByName`` and a left-anti join.
+    Both routes write the same index."""
     import shutil
 
     from veloci_spark.build import build_index
 
+    root_dir = _root_path(root_dir)
     gens = _read_gens(root_dir)
-    dels = _deletes_df(spark, root_dir)
-    if len(gens) <= 1 and dels is None:
+    has_deletes = os.path.isdir(os.path.join(root_dir, _DELETES_DIR))
+    if len(gens) <= 1 and not has_deletes:
         return gens[0] if gens else {}
     if not gens:
         return {}
-    docs = None
-    for g in gens:
-        d = spark.read.parquet(os.path.join(g["dir"], "docs"))
-        # batches may legitimately differ in payload schema (a crawl adds a
-        # column mid-stream); missing columns null-fill rather than failing
-        docs = d if docs is None else docs.unionByName(
-            d, allowMissingColumns=True)
-    if dels is not None:
-        docs = docs.join(dels, on="doc_id", how="left_anti")
+    cfg = dataclasses.replace(config, doc_id_col="doc_id")
+    docs = _arrow_docs(root_dir, gens, cfg)
+    if docs is None:
+        for g in gens:
+            d = spark.read.parquet(os.path.join(g["dir"], "docs"))
+            # batches may legitimately differ in payload schema (a crawl
+            # adds a column mid-stream); missing columns null-fill rather
+            # than failing
+            docs = d if docs is None else docs.unionByName(
+                d, allowMissingColumns=True)
+        dels = _deletes_df(spark, root_dir)
+        if dels is not None:
+            docs = docs.join(dels, on="doc_id", how="left_anti")
     new_id = max(g["gen"] for g in gens) + 1
     d = gen_dir(root_dir, new_id)
-    cfg = dataclasses.replace(config, doc_id_col="doc_id")
     manifest = build_index(spark, docs, cfg, d)
     rec = {"gen": new_id, "base": 0, "n_docs": manifest["n_docs"],
            "id_hi": max(_gen_hi(g) for g in gens), "dir": d,
