@@ -148,6 +148,23 @@ class TestPostProcessing:
             and d["explain"] for d in res["data"])
         assert list(sc.statusTracker().getJobIdsForGroup("post-no-job")) == []
 
+    def test_fresh_handle_runs_no_spark_job(self, spark, spark_index):
+        """A fresh handle's first select and snippets request and its
+        ``get_doc`` run no Spark job: the doc store's Spark schema comes
+        from its pyarrow schema, and equals the one Spark infers."""
+        fresh = S.FulltextIndex(spark, spark_index.index_dir)
+        sc = spark.sparkContext
+        sc.setJobGroup("fresh-post", "post-processing on a fresh handle")
+        try:
+            res = S.search(fresh, {**PHRASE, **POST})
+            doc = S.get_doc(fresh, res["data"][0]["doc_id"])
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup("fresh-post")) == []
+        assert res["data"][0]["doc"]["url"] and doc["url"]
+        assert "docs" not in vars(fresh)
+        assert fresh.docs_schema == fresh.docs.schema
+
     def test_scan_guard(self, spark, spark_index, monkeypatch):
         req = {**PHRASE, **POST}
         want = S.search(spark_index, req)

@@ -366,6 +366,15 @@ class TestDeletes:
         assert compact(spark, uri, stream_cfg)["n_docs"] == 8
         assert MultiIndex(spark, str(path)).live_docs == 8
         assert not os.path.exists(tmp_path / "file:")
+        # a relative path whose first component holds a colon is a path
+        colon = "runs:2024/root"
+        ingest_batch(spark, spark.createDataFrame(_batch_rows(0, 3, "a")),
+                     stream_cfg, colon)
+        delete_docs(spark, colon, [0])
+        assert MultiIndex(spark, colon).live_docs == 2
+        assert compact(spark, colon, stream_cfg)["n_docs"] == 2
+        assert sorted(os.listdir(tmp_path / colon)) == [
+            "gen=000001", "generations.json"]
         df = spark.createDataFrame(_batch_rows(0, 2, "c"))
         for bad in ("hdfs://nn/root", "s3a://bucket/root"):
             scheme = bad.split(":")[0]
@@ -376,7 +385,7 @@ class TestDeletes:
                          lambda: index_stream(None, stream_cfg, bad, "ckpt")):
                 with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
                     call()
-        assert sorted(os.listdir(tmp_path)) == ["root dir"]
+        assert sorted(os.listdir(tmp_path)) == ["root dir", "runs:2024"]
 
     def test_compact_applies_deletes_and_preserves_id_space(self, spark,
                                                             stream_cfg,

@@ -102,8 +102,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from veloci_spark.build import (LOCAL_TIER_MAX_SCAN_BYTES, _local_dir,
-                                 load_manifest)
+from veloci_spark.build import (_DRIVER_DOCS_TYPES,
+                                 LOCAL_TIER_MAX_SCAN_BYTES, _arrow_dtypes,
+                                 _local_dir, _spark_schema, load_manifest)
 from veloci_spark.scoring import index_score_u32, levenshtein_batch, term_score
 from veloci_spark.vbyte import unpack_ids, unpack_postings, vbyte_decode
 
@@ -234,6 +235,18 @@ class FulltextIndex:
         return self.spark.read.parquet(f"{self.index_dir}/docs")
 
     @cached_property
+    def docs_schema(self) -> T.StructType:
+        """The doc store's Spark schema: on a local dir whose columns all
+        have ``build._DRIVER_DOCS_TYPES`` types, the one Spark infers,
+        derived from the pyarrow schema with no Spark job; otherwise the
+        ``docs`` handle's."""
+        if self.local_path is not None:
+            schema = self.arrow_dataset("docs").schema
+            if all(t in _DRIVER_DOCS_TYPES for _n, t in _arrow_dtypes(schema)):
+                return _spark_schema(schema)
+        return self.docs.schema
+
+    @cached_property
     def token_values(self) -> "DataFrame | None":
         """The optional token_values boost side input (reference
         tests.rs:39-41)."""
@@ -344,7 +357,7 @@ class FulltextIndex:
         from veloci_spark.nested import safe_path_name
 
         ids = sorted({int(d) for d in doc_ids})
-        sdf = self.docs if path is None else self.values[path]
+        full = self.docs_schema if path is None else self.values[path].schema
         if columns is not None:
             columns = list(dict.fromkeys(columns))
         if not ids:
@@ -352,13 +365,14 @@ class FulltextIndex:
         table = "docs" if path is None else f"values/{safe_path_name(path)}"
         flt = _doc_id_filter(ids)
         # an unknown column keeps Spark's AnalysisException
-        if ((columns is None or set(columns) <= set(sdf.columns))
+        if ((columns is None or set(columns) <= set(full.names))
                 and self._reads_locally(table, flt,
-                                        ["doc_id", *(columns or sdf.columns)])):
-            schema = (sdf.schema if columns is None else
-                      T.StructType([sdf.schema[c] for c in columns]))
+                                        ["doc_id", *(columns or full.names)])):
+            schema = (full if columns is None else
+                      T.StructType([full[c] for c in columns]))
             return _arrow_rows(self.arrow_dataset(table).to_table(
                 columns=schema.names, filter=flt), schema)
+        sdf = self.docs if path is None else self.values[path]
         if columns is not None:
             sdf = sdf.select(*columns)
         return sdf.where(F.col("doc_id").isin(ids)).collect()
@@ -2620,7 +2634,8 @@ def read_data(index: FulltextIndex, doc_id: int,
     from a nested corpus (each path column holds the flattened values)."""
     if fields is None:
         fields = [f["name"] for f in index.manifest["fields"]]
-    flat = [f for f in fields if f not in index.values and f in index.docs.columns]
+    flat = [f for f in fields
+            if f not in index.values and f in index.docs_schema.names]
     row = get_doc(index, doc_id, flat) if flat else {"doc_id": doc_id}
     # fields the document does not carry are SKIPPED, not emitted as null
     # (reference read_document.rs none-value behavior, tests.rs:1290-1296)

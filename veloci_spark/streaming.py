@@ -53,8 +53,9 @@ rule (``build._docs_rule``), with no setting of its own:
   ``unionByName`` and a left-anti join against the distinct tombstones,
   then ``build_index`` on that DataFrame.
 
-Both routes write the same index. A streaming root is a local path (or a
-``file://`` URI, read as its path): the generation list, the tombstones
+Both routes write the same index, with the union's column order. A
+streaming root is a local path (or a ``file://`` URI, read as its path),
+resolved once to an absolute path: the generation list, the tombstones
 and compaction's swap are driver-side file operations, so a root under
 any other scheme raises ``ValueError``.
 
@@ -88,13 +89,18 @@ _DELETES_DIR = "deletes"
 
 
 def _root_path(root_dir: str) -> str:
-    """The filesystem path of a streaming root: ``root_dir`` itself, or
-    the path of a ``file://`` URI. Any other scheme raises ``ValueError``
-    — every reader and writer of the root uses the driver's file calls,
-    which would take the URI for a relative path."""
+    """The absolute filesystem path of a streaming root: ``root_dir``
+    itself, or the path of a ``file://`` URI. Any other scheme raises
+    ``ValueError`` — every reader and writer of the root uses the driver's
+    file calls, which would take the URI for a relative path. Only a root
+    with ``://`` is a URI, so a relative path may hold a colon
+    (``runs:2024/root``). Absolute, because Spark resolves a relative path
+    against the JVM's working directory, which need not be the driver
+    process's, and because no URI parser reads a scheme into a path that
+    starts with ``/``."""
+    if "://" not in root_dir:
+        return os.path.abspath(root_dir)
     u = urlparse(root_dir)
-    if u.scheme == "":
-        return root_dir
     if u.scheme == "file" and u.netloc in ("", "localhost"):
         return unquote(u.path)
     raise ValueError(
@@ -410,6 +416,32 @@ class MultiIndex:
         return None
 
 
+# read as pyarrow's default nanoseconds, an INT96 timestamp outside
+# 1677-2262 overflows without an error; Spark's unit is microseconds
+_INT96_US = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(
+    coerce_int96_timestamp_unit="us"))
+
+
+def _docs_dataset(gen_dir: str) -> ds.Dataset:
+    """pyarrow dataset over a generation's doc store whose INT96 columns —
+    Spark's ``timestamp``, written so by both tiers, holding UTC instants —
+    read as ``timestamp[us, UTC]``, the Arrow type of that Spark type.
+    Which columns are INT96 the footers say: by its Arrow type alone such
+    a column, naive microseconds, would pass for a TimestampNTZ one."""
+    path = os.path.join(gen_dir, "docs")
+    dset = ds.dataset(path, format=_INT96_US)
+    int96 = set()
+    for frag in dset.get_fragments():
+        schema = frag.metadata.schema
+        int96.update(schema.column(i).path for i in range(len(schema))
+                     if schema.column(i).physical_type == "INT96")
+    if not int96:
+        return dset
+    return ds.dataset(path, format=_INT96_US, schema=pa.schema(
+        [f.with_type(pa.timestamp("us", tz="UTC")) if f.name in int96 else f
+         for f in dset.schema]))
+
+
 def _arrow_docs(root: str, gens: list, config: IndexConfig
                 ) -> "pa.Table | None":
     """Compaction's Arrow route: the live docs of every generation as one
@@ -419,8 +451,7 @@ def _arrow_docs(root: str, gens: list, config: IndexConfig
     Spark."""
     from veloci_spark import build as B
 
-    dsets = [ds.dataset(os.path.join(g["dir"], "docs"), format="parquet")
-             for g in gens]
+    dsets = [_docs_dataset(g["dir"]) for g in gens]
     types: dict[str, pa.DataType] = {}
     for dset in dsets:
         for f in dset.schema:
@@ -447,10 +478,6 @@ def _arrow_docs(root: str, gens: list, config: IndexConfig
             [t[name] if name in t.column_names else pa.nulls(len(t), typ)
              for name, typ in types.items()], schema=schema))
     docs = pa.concat_tables(tables)
-    if not os.path.isdir(os.path.join(root, _DELETES_DIR)):
-        return docs
-    # the Spark route's join on "doc_id" puts that column first
-    docs = docs.select(["doc_id"] + [n for n in types if n != "doc_id"])
     return docs.filter(pc.invert(pc.is_in(docs["doc_id"], value_set=dels)))
 
 
@@ -494,7 +521,9 @@ def compact(spark: SparkSession, root_dir: str, config: IndexConfig) -> dict:
                 d, allowMissingColumns=True)
         dels = _deletes_df(spark, root_dir)
         if dels is not None:
-            docs = docs.join(dels, on="doc_id", how="left_anti")
+            # the join puts its key first: keep the union's column order
+            docs = docs.join(dels, on="doc_id", how="left_anti") \
+                .select(*docs.columns)
     new_id = max(g["gen"] for g in gens) + 1
     d = gen_dir(root_dir, new_id)
     manifest = build_index(spark, docs, cfg, d)
