@@ -240,11 +240,17 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _token_rows(spark, sf_dir):
-    from veloci_spark.build import token_rows
+def _token_entries(spark, sf_dir):
+    """documents.text's term entries from the build's tokens-stage kernel
+    (``build._tokenize_batch``): one row per (doc, token) with the token's
+    first position ``best_pos``, the text's run count ``n_tokens`` and the
+    token's count in the text ``cnt``."""
+    from veloci_spark.build import _spark_tokenize
 
-    return token_rows(_documents(spark, sf_dir).select("doc_id", "text"),
-                      "text", DEFAULT_SEPARATORS)
+    docs = _documents(spark, sf_dir).select(
+        F.col("doc_id").cast("long"), F.col("text").cast("string"))
+    return (_spark_tokenize(docs, [FieldConfig("text", phrase_pairs=False)])
+            .select("doc_id", "token", "best_pos", "n_tokens", "cnt"))
 
 
 def _runs_cte() -> str:
@@ -308,10 +314,11 @@ def _f64_scored_entries(spark, sf_dir) -> DataFrame:
     from veloci_spark.scoring import index_score_u64_f64
 
     docs = _documents(spark, sf_dir)
-    tokens = _token_rows(spark, sf_dir)
+    tokens = _token_entries(spark, sf_dir)
     token_entries = (
         tokens.groupBy("doc_id", "token")
-        .agg(F.min("pos").alias("best_pos"), F.max("n_tokens").alias("n_tokens"))
+        .agg(F.min("best_pos").alias("best_pos"),
+             F.max("n_tokens").alias("n_tokens"))
         .withColumnRenamed("token", "term")
         .withColumn("is_exact", F.lit(False))
     )
@@ -321,7 +328,7 @@ def _f64_scored_entries(spark, sf_dir) -> DataFrame:
         F.lit(True).alias("is_exact"))
     entries = token_entries.unionByName(text_entries)
 
-    token_counts = tokens.groupBy("token").agg(F.count("*").alias("c")) \
+    token_counts = tokens.groupBy("token").agg(F.sum("cnt").alias("c")) \
         .withColumnRenamed("token", "term")
     text_counts = docs.where(F.octet_length("text") <= 64) \
         .groupBy(F.col("text").alias("term")).agg(F.count("*").alias("c"))
@@ -373,8 +380,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def ft_tokenize_counts(spark, sf_dir):
         # B1/B2: grouped-separator token runs + corpus term frequencies
         return (
-            _token_rows(spark, sf_dir)
-            .groupBy("token").agg(F.count("*").cast("long").alias("cnt"))
+            _token_entries(spark, sf_dir)
+            .groupBy("token").agg(F.sum("cnt").cast("long").alias("cnt"))
             .orderBy(F.desc("cnt"), F.asc("token")).limit(200)
             .withColumnRenamed("token", "term")
         )
@@ -392,10 +399,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def ft_postings(spark, sf_dir):
         # B5: token posting entries (best position, doc length)
         return (
-            _token_rows(spark, sf_dir)
+            _token_entries(spark, sf_dir)
             .where(F.col("token").isin(TERMS))
             .groupBy("token", "doc_id")
-            .agg(F.min("pos").cast("long").alias("best_pos"),
+            .agg(F.min("best_pos").cast("long").alias("best_pos"),
                  F.max("n_tokens").cast("long").alias("n_tokens"))
             .withColumnRenamed("token", "term")
             .orderBy("term", "doc_id")

@@ -39,6 +39,21 @@ def spark_tier(monkeypatch):
     monkeypatch.setattr(search, "LOCAL_TIER_MAX_SCAN_BYTES", -1)
 
 
+def pruned_handle(index):
+    """A fresh handle on ``index``'s dir whose posting and phrase tables are
+    not resident: they load while LOCAL_TIER_MAX_SCAN_BYTES is -1, so,
+    under the default bound again, its local tier reads the pruned rows of
+    each request instead (``search.FulltextIndex.resident``)."""
+    from veloci_spark import search
+
+    fresh = search.FulltextIndex(index.spark, index.index_dir)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(search, "LOCAL_TIER_MAX_SCAN_BYTES", -1)
+        assert fresh.resident("postings") is None
+        assert fresh.resident("phrase") is None
+    return fresh
+
+
 @contextlib.contextmanager
 def forced_spark_build():
     """Builds inside this block take the Spark build tier for every stage:
@@ -153,6 +168,13 @@ def spark_index(spark, corpus, index_dir):
     """The golden corpus built under the default cost rule (local tier,
     doc store included)."""
     return _build_golden(spark, corpus, index_dir)
+
+
+@pytest.fixture(scope="session")
+def pruned_index(spark_index):
+    """The golden index through a handle with no resident tables
+    (:func:`pruned_handle`)."""
+    return pruned_handle(spark_index)
 
 
 @pytest.fixture(scope="session")

@@ -288,11 +288,15 @@ def _stream_root(spark, corpus, root, name):
                 (spring if i % 2 else autumn)
                 + dt.timedelta(minutes=13 * (i % 9)))
             r["html"] = blobs[i % len(blobs)]
-        # instants outside the nanosecond range (1677-2262) in both
-        # generations, so in both writers' INT96 files
+        # instants outside the nanosecond range (1677-2262), and one
+        # before 1970 off midnight, whose INT96 nanosecond-of-day
+        # pyarrow's writer stores negative, in both generations, so in
+        # both writers' INT96 files
         for i in (1, len(rows) // 2 + 1):
             rows[i]["warc_ts"] = dt.datetime(9999, 12, 31, tzinfo=utc)
             rows[i + 1]["warc_ts"] = dt.datetime(1700, 1, 1, tzinfo=utc)
+            rows[i + 2]["warc_ts"] = dt.datetime(1969, 6, 1, 12, 30,
+                                                 tzinfo=utc)
     first_cfg = config
     if name == "payload_schemas":
         # the first generation carries a sparse caller id column the
@@ -357,10 +361,11 @@ def test_compaction_routes_build_the_same_index(spark, corpus, tmp_path,
         my_id = pq.read_table(os.path.join(rec["dir"], "docs"))["my_id"]
         assert my_id.null_count == len(corpus) - len(corpus) // 2
     if name == "berlin_timestamps":
-        ts = pq.read_table(os.path.join(rec["dir"], "docs"),
-                           coerce_int96_timestamp_unit="us")["warc_ts"]
+        ts = B.doc_store_table(B.doc_store_dataset(
+            os.path.join(rec["dir"], "docs")))["warc_ts"]
         years = pc.year(ts).to_pylist()
         assert years.count(9999) == years.count(1700) == 2
+        assert years.count(1969) == 2
 
 
 class TestCostRule:

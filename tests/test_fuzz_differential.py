@@ -23,6 +23,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from tests.conftest import pruned_handle
 from veloci_spark import pyref
 
 N_EXAMPLES = int(os.environ.get("FUZZ_EXAMPLES", "15"))
@@ -200,6 +201,9 @@ class TestFuzzDifferential:
     def test_random_trees_match_oracle_spark_tier(self, spark_tier):
         self._random_trees()
 
+    def test_random_trees_match_oracle_pruned_reads(self, pruned_index):
+        self._random_trees(pruned_index)
+
     def test_random_trees_match_oracle_spark_build(self, spark_build_index):
         self._random_trees(spark_build_index)
 
@@ -375,6 +379,10 @@ class TestFuzzComposedExtras:
                                                      spark_tier):
         self._composed_extras(boost_engines)
 
+    def test_composed_extras_match_oracle_pruned_reads(self, boost_engines):
+        idx, *rest = boost_engines
+        self._composed_extras((pruned_handle(idx), *rest))
+
     @staticmethod
     def _composed_extras(boost_engines):
         from veloci_spark.search import search
@@ -478,6 +486,10 @@ class TestFuzzQueryStrings:
     def test_query_strings_match_oracle_spark_tier(self, query_engines,
                                                    spark_tier):
         self._query_strings(query_engines)
+
+    def test_query_strings_match_oracle_pruned_reads(self, query_engines):
+        idx, ref = query_engines
+        self._query_strings((pruned_handle(idx), ref))
 
     @staticmethod
     def _query_strings(query_engines):

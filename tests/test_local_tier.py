@@ -8,6 +8,7 @@ these tests pin which tier runs and that the local one runs no Spark job.
 The build tiers' parity and cost rule are in test_build_tiers.
 """
 
+import contextlib
 import json
 import operator
 import os
@@ -15,6 +16,8 @@ import sys
 import threading
 
 import numpy as np
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from veloci_spark import search as S
 
@@ -196,11 +199,13 @@ class TestPostProcessing:
 
     def test_rows_match_collect(self, spark, tmp_path):
         """The driver read's rows carry ``collect()``'s values and Python
-        types: INT96 timestamps at any depth, NTZ timestamps, binary."""
+        types: INT96 timestamps at any depth, instants outside the
+        nanosecond range included, NTZ timestamps, binary."""
         import datetime as dt
 
-        import pyarrow.dataset as ds
         from pyspark.sql import types as T
+
+        from veloci_spark.build import doc_store_dataset, doc_store_table
 
         ts = T.TimestampType()
         schema = T.StructType([
@@ -213,17 +218,53 @@ class TestPostProcessing:
             T.StructField("a", T.ArrayType(ts)),
             T.StructField("m", T.MapType(T.StringType(), ts))])
         t0 = dt.datetime(2024, 3, 31, 1, 30, 5, 123456)
+        # past pyarrow's nanosecond range on both sides
+        late, early = dt.datetime(9999, 12, 31, 12), dt.datetime(1700, 1, 1, 12)
         path = str(tmp_path / "rows")
         spark.createDataFrame(
             [(1, t0, t0, b"x", (t0, b"y"), [t0, None], {"k": t0}),
-             (2, None, None, None, None, None, None)],
+             (2, None, None, None, None, None, None),
+             (3, late, early, None, (early, None), [late, early], {"k": late}),
+             (4, early, late, None, (late, None), [early], {"e": early})],
             schema).write.parquet(path)
         df = spark.read.parquet(path)
-        got = S._arrow_rows(ds.dataset(path).to_table(columns=df.columns),
-                            df.schema)
+        got = S._arrow_rows(
+            doc_store_table(doc_store_dataset(path), df.columns), df.schema)
         by_id = operator.itemgetter("doc_id")
         assert repr(sorted(got, key=by_id)) == \
             repr(sorted(df.collect(), key=by_id))
+
+
+def test_out_of_range_instants_read_alike(spark, corpus, tmp_path,
+                                          monkeypatch):
+    """A doc store's 9999-12-31 and 1700-01-01 instants, outside
+    pyarrow's nanosecond range, and a pre-1970 one off midnight, whose
+    INT96 nanosecond-of-day pyarrow's writer stores negative, read back as
+    written on the local and the Spark tier, from either build tier's
+    INT96 files."""
+    import datetime as dt
+
+    from tests.conftest import forced_spark_build, sized_df
+    from veloci_spark.build import build_index
+    from veloci_spark.config import webtext_config
+    from veloci_spark.synth import WEBTEXT_SCHEMA
+
+    rows = [dict(r) for r in corpus[:6]]
+    stamps = [dt.datetime(9999, 12, 31, 12), dt.datetime(1700, 1, 1, 12),
+              dt.datetime(1969, 6, 1, 12, 30, 0, 1)]
+    for r, ts in zip(rows, stamps):
+        r["warc_ts"] = ts
+    for spark_build in (False, True):
+        d = str(tmp_path / f"idx{int(spark_build)}")
+        df = sized_df(spark, rows, WEBTEXT_SCHEMA)
+        with forced_spark_build() if spark_build else contextlib.nullcontext():
+            build_index(spark, df, webtext_config(segment_docs=4), d)
+        local = S.get_docs(S.FulltextIndex(spark, d), [0, 1, 2, 3])
+        with monkeypatch.context() as mp:
+            mp.setattr(S, "LOCAL_TIER_MAX_SCAN_BYTES", -1)
+            on_spark = S.get_docs(S.FulltextIndex(spark, d), [0, 1, 2, 3])
+        assert [r["warc_ts"] for r in local[:3]] == stamps
+        assert repr(local) == repr(on_spark)
 
 
 class TestFallbackShapes:
@@ -265,32 +306,206 @@ class TestFallbackShapes:
         assert [(r["doc_id"], np.float32(r["score"])) for r in rows] == want
 
 
-def test_concurrent_requests_on_fresh_handle(spark, spark_index, ref_index):
-    """The lazy driver-side dictionary, facet maps and pyarrow datasets are
-    published whole under a lock: threads racing to fill fresh handles all
-    get the single-thread response."""
+def _merged(index, table: str, keys):
+    """The local tier's rows before resident tables: the pruned pyarrow
+    read of ``table``, then the pandas merge with ``keys`` on its key
+    columns — the reference :func:`S._join` must reproduce."""
+    columns, key_cols = S._LOCAL_TABLES[table]
+    if table == "postings":
+        flt = S._posting_filter(keys)
+    else:
+        flt = S._phrase_filter(list(keys[list(key_cols)].itertuples(
+            index=False, name=None)))
+    rows = index.arrow_dataset(table).to_table(columns=columns, filter=flt)
+    return rows.to_pandas().merge(keys, on=list(key_cols))
+
+
+def _multiset(frame, columns):
+    return sorted(frame[columns].itertuples(index=False, name=None))
+
+
+class TestResidentTables:
+    """Posting and phrase rows found by key (``S._join``) in a resident
+    copy or in a pruned read are the rows the pandas merge of a pruned
+    read gives, as a multiset."""
+
+    def test_resident_rule(self, spark, spark_index, pruned_index,
+                           monkeypatch):
+        """A table is resident when its read columns' footer bytes are
+        within LOCAL_TIER_MAX_SCAN_BYTES at load; a handle without
+        resident tables still runs the local tier, on pruned reads, with
+        the same response."""
+        req = {**PHRASE, **POST, "explain": True}
+        nbytes = {}
+        for table in ("postings", "phrase"):
+            columns, _keys = S._LOCAL_TABLES[table]
+            nbytes[table] = S._footer_bytes(
+                spark_index.arrow_dataset(table), None, columns)
+            assert spark_index.resident(table).nbytes == nbytes[table] > 0
+            assert pruned_index.resident(table) is None
+        with monkeypatch.context() as mp:
+            mp.setattr(S, "LOCAL_TIER_MAX_SCAN_BYTES", nbytes["postings"])
+            at = S.FulltextIndex(spark, spark_index.index_dir)
+            assert at.resident("postings") is not None
+            assert (at.resident("phrase") is None) == \
+                (nbytes["phrase"] > nbytes["postings"])
+        want, got = S.search(spark_index, req), S.search(pruned_index, req)
+        assert want["explain"]["tier"] == got["explain"]["tier"] == "local"
+        assert want["explain"]["scan_bytes"] == sum(nbytes.values())
+        assert got["explain"]["scan_bytes"] <= sum(nbytes.values())
+        for res in (want, got):
+            res.pop("execution_time_ms")
+            res["explain"].pop("scan_bytes")
+        assert repr(got) == repr(want)
+
+    def test_cache_runs_no_spark_job(self, spark, spark_index):
+        """On a local dir ``cache()`` loads the driver dictionary and the
+        resident tables with no Spark job; the Spark tier's postings pin
+        is made, and filled, by its first use."""
+        fresh = S.FulltextIndex(spark, spark_index.index_dir)
+        sc = spark.sparkContext
+        sc.setJobGroup("cache-no-job", "cache on a local dir")
+        try:
+            fresh.cache()
+        finally:
+            sc.setJobGroup("", "")
+        assert list(sc.statusTracker().getJobIdsForGroup("cache-no-job")) == []
+        assert fresh._local_dict is not None
+        assert fresh.resident("postings") is not None
+        assert fresh.resident("phrase") is not None
+        assert "postings" not in vars(fresh)
+        assert fresh.postings.is_cached
+
+    @given(rows=st.lists(st.tuples(st.sampled_from(["text", "title"]),
+                                   st.sampled_from("abcd"),
+                                   st.sampled_from("abc"),
+                                   st.integers(0, 3)), max_size=40),
+           keys=st.lists(st.tuples(st.sampled_from(["text", "title", "body"]),
+                                   st.sampled_from("abcde"),
+                                   st.sampled_from("abcz")), max_size=12))
+    @settings(max_examples=80, deadline=None, derandomize=True)
+    def test_join_is_the_merge(self, rows, keys):
+        """String and integer keys, several fields, absent keys, repeated
+        keys, and a (key, segment) split across several rows."""
+        import pandas as pd
+        import pyarrow as pa
+
+        table = pa.table({
+            "field": pa.array([r[0] for r in rows], pa.string()),
+            "tok_a": pa.array([r[1] for r in rows], pa.string()),
+            "tok_b": pa.array([r[2] for r in rows], pa.string()),
+            "term_id": pa.array([ord(r[1]) - 97 for r in rows], pa.int64()),
+            "segment": pa.array([r[3] for r in rows], pa.int32()),
+            "row": pa.array(range(len(rows)), pa.int64())})
+        spec = pd.DataFrame(keys, columns=["field", "tok_a", "tok_b"])
+        spec["term_id"] = [ord(a) - 97 for a in spec["tok_a"]]
+        spec["leaf_id"] = np.arange(len(spec), dtype=np.int32)
+        for key_cols in (("field", "tok_a", "tok_b"), ("field", "term_id")):
+            keys_df = spec[[*key_cols, "leaf_id"]]
+            got = S._join(S._keyed(table, key_cols), keys_df,
+                          ["segment", "row"])
+            want = table.to_pandas().merge(keys_df, on=list(key_cols))
+            cols = ["segment", "row", "leaf_id"]
+            assert _multiset(got, cols) == _multiset(want, cols)
+            assert got["leaf_id"].dtype == np.int32
+            segs = [1, 3]
+            got = S._join(S._keyed(table, key_cols), keys_df, ["row"], segs)
+            assert _multiset(got, ["row", "leaf_id"]) == _multiset(
+                want[want["segment"].isin(segs)], ["row", "leaf_id"])
+
+    @given(data=st.data())
+    @settings(max_examples=25, deadline=None, derandomize=True)
+    def test_kernel_rows_are_the_merge(self, spark_index, pruned_index,
+                                       ref_index, data):
+        """On the golden index, the kernel-input rows of matched terms
+        (text and lang fields, terms repeated across leaves, term ids no
+        field holds) and of phrase pairs (absent pairs among them) from
+        the resident copy and from the pruned read equal today's pruned
+        read plus merge."""
+        import pandas as pd
+
+        assert spark_index.resident("postings") is not None
+        dicts = {f: spark_index.local_dict(f) for f in ("text", "lang")}
+        n_leaves = data.draw(st.integers(1, 4))
+        picks = data.draw(st.lists(st.tuples(
+            st.integers(0, n_leaves - 1), st.sampled_from(sorted(dicts)),
+            st.integers(0, 10_000), st.booleans()), min_size=1, max_size=12))
+        matched = pd.DataFrame({
+            "field": [f for _l, f, _i, _a in picks],
+            "term_id": [int(dicts[f]["term_id"].iloc[i % len(dicts[f])])
+                        if not absent else 10**6 + i
+                        for _l, f, i, absent in picks],
+            "leaf_id": np.array([l for l, *_ in picks], dtype=np.int32),
+            "term_score": np.array([0.5 + l for l, *_ in picks],
+                                   dtype=np.float32)})
+        pairs = sorted(ref_index.fields["text"].phrase_pairs)
+        specs = [("text", *pairs[i % len(pairs)]) for i in data.draw(
+            st.lists(st.integers(0, 10_000), min_size=1, max_size=4))]
+        specs += [("text", "die", "nichtda"), ("lang", *pairs[0])]
+        kernel = S._LOCAL_KERNEL_COLS[:-1]
+        want = _merged(spark_index, "postings", matched)
+        want_p = _merged(spark_index, "phrase", pd.DataFrame(
+            [(*s, len(picks) + i) for i, s in enumerate(specs)],
+            columns=["field", "tok_a", "tok_b", "leaf_id"]))
+        for index in (spark_index, pruned_index):
+            got = S._local_posting_rows(index, matched,
+                                        S._posting_filter(matched))
+            assert _multiset(got, kernel) == _multiset(want, kernel)
+            assert got["doc_ids"].isna().all()
+            got = S._local_phrase_rows(index, specs, len(picks),
+                                       S._phrase_filter(specs))
+            cols = ["segment", "leaf_id", "docs_bin"]
+            assert _multiset(got, cols) == _multiset(want_p, cols)
+
+
+def test_concurrent_requests_on_fresh_handle(spark, spark_index, ref_index,
+                                            monkeypatch):
+    """The lazy driver-side dictionary, facet maps, pyarrow datasets and
+    resident tables are published whole under a lock: threads racing to
+    fill fresh handles all get the single-thread response, and each
+    handle loads each resident table once."""
+    from collections import Counter
     from concurrent.futures import ThreadPoolExecutor
 
     terms = ref_index.fields["text"].terms[100:1100:125]
+    a, b = sorted(ref_index.fields["text"].phrase_pairs)[0]
     req = {"or": [{"search": {"terms": [t], "path": "text"}} for t in terms],
-           "top": 5, "facets": [{"field": "lang", "top": 5}]}
+           "top": 5, "facets": [{"field": "lang", "top": 5}],
+           "phrase_boosts": [{"path": "text",
+                              "search1": {"terms": [a], "path": "text"},
+                              "search2": {"terms": [b], "path": "text"}}]}
     want = _result(S.search(spark_index, req))
     assert want[0] > 0
+    loads = Counter()
+    load = S.FulltextIndex._load_resident
+
+    def counted(index, table):
+        loads[table] += 1
+        return load(index, table)
+
+    monkeypatch.setattr(S.FulltextIndex, "_load_resident", counted)
     n_threads = 12
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)  # switch threads inside the lazy fills
     try:
         for _round in range(3):
             fresh = S.FulltextIndex(spark, spark_index.index_dir)
+            loads.clear()
             barrier = threading.Barrier(n_threads, timeout=60)
 
             def one(_):
                 barrier.wait()
-                return _result(S.search(fresh, req))
+                res = S.search(fresh, {**req, "explain": True})
+                return _result(res), res["explain"]["tier"]
 
             with ThreadPoolExecutor(max_workers=n_threads) as ex:
                 got = list(ex.map(one, range(n_threads), timeout=300))
-            assert got == [want] * n_threads
+            assert got == [(want, "local")] * n_threads
+            for table in ("postings", "phrase"):
+                assert loads[table] == 1
+                kt = fresh.resident(table)
+                assert kt.table.num_rows == len(kt.keys) == \
+                    fresh.arrow_dataset(table).count_rows()
     finally:
         sys.setswitchinterval(interval)
 

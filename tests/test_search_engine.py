@@ -160,6 +160,11 @@ def test_request_matches_oracle_spark_tier(spark_index, ref_index, req,
 
 
 @pytest.mark.parametrize("req", REQUESTS, ids=lambda r: str(r)[:60])
+def test_request_matches_oracle_pruned_reads(pruned_index, ref_index, req):
+    _check_request(pruned_index, ref_index, req)
+
+
+@pytest.mark.parametrize("req", REQUESTS, ids=lambda r: str(r)[:60])
 def test_request_matches_oracle_spark_build(spark_build_index, ref_index,
                                             req):
     _check_request(spark_build_index, ref_index, req)

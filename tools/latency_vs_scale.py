@@ -10,7 +10,11 @@ Rationale: BENCH/BASELINE.md §2 proves the WRITE path scales (N vs 4N
 cores); this tool documents the READ path's corpus-size behavior — the
 north rule's 10^12-doc claim rests on per-segment evaluation + top-k
 merge, so latency should grow with segments touched, not docs indexed.
-Prints ONE JSON line like bench.py.
+Prints ONE JSON line like bench.py; its ``resident`` entry says, per
+table, whether the handle holds the local tier's resident copy
+(``search.FulltextIndex.resident``) and the footer bytes the rule
+weighed against ``LOCAL_TIER_MAX_SCAN_BYTES``, so a run at each scale
+shows where the rule stops.
 
 Usage: python tools/latency_vs_scale.py [n_docs]   (default 1,000,000)
 
@@ -88,9 +92,15 @@ def main():
     idx_dir = f"/dev/shm/veloci_qlat_idx_{n_docs}"
     t0 = time.time()
     n, build_sec = bench.run_build_synth(spark, corpus, idx_dir)  # resumable
+    from veloci_spark import search as S
     from veloci_spark.search import FulltextIndex, search
 
     idx = FulltextIndex(spark, idx_dir).cache()
+    resident = {
+        table: {"resident": idx.resident(table) is not None,
+                "bytes": S._footer_bytes(idx.arrow_dataset(table), None,
+                                         columns)}
+        for table, (columns, _keys) in S._LOCAL_TABLES.items()}
     timings: dict[str, float] = {}
     hits: dict[str, int] = {}
     for name, req in SHAPES.items():
@@ -111,6 +121,8 @@ def main():
         "build_sec": round(build_sec, 2),
         "queries": timings,
         "num_hits": hits,
+        "resident": resident,
+        "resident_max_bytes": S.LOCAL_TIER_MAX_SCAN_BYTES,
         "query_stat": f"min_of_{bench.N_RUNS}_runs",
         "query_p50_sec": round(statistics.median(list(timings.values())), 4),
         "cpus": bench.CPUS,

@@ -284,55 +284,7 @@ def assign_doc_ids(df: DataFrame, out_path: str, order_col: str = "url",
 
 
 # ---------------------------------------------------------------------------
-# 2. tokenization → flat token rows
-
-_TOKEN_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("token", T.StringType()),
-    T.StructField("is_sep", T.BooleanType()),
-    T.StructField("pos", T.IntegerType()),
-    T.StructField("n_tokens", T.IntegerType()),
-])
-
-
-def token_rows(docs: DataFrame, field: str, separators: str) -> DataFrame:
-    """Exploded token rows for one field: (doc_id, token, is_sep, pos, n_tokens).
-
-    Texts that are a single run (no ≥2 splits) emit nothing — the reference
-    gates the token loop on ``has_tokens``
-    (/root/reference/src/create.rs:225-280).
-    """
-    pattern = _runs_re(separators).pattern
-
-    def explode_tokens(iterator):
-        import re as _re
-
-        rx = _re.compile(pattern)
-        seps = _sep_set(separators)
-        for pdf in iterator:
-            ids_out, tok_out, sep_out, pos_out, ntok_out = [], [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"].values, pdf[field].values):
-                if not text:
-                    continue
-                runs = rx.findall(text)
-                n = len(runs)
-                if n < 2:
-                    continue
-                ids_out.extend([doc_id] * n)
-                tok_out.extend(runs)
-                sep_out.extend([r[0] in seps for r in runs])
-                pos_out.extend(range(n))
-                ntok_out.extend([n] * n)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids_out, dtype="int64"),
-                "token": pd.Series(tok_out, dtype="object"),
-                "is_sep": pd.Series(sep_out, dtype="bool"),
-                "pos": pd.Series(pos_out, dtype="int32"),
-                "n_tokens": pd.Series(ntok_out, dtype="int32"),
-            })
-
-    return docs.select("doc_id", F.col(field).cast("string").alias(field)).mapInPandas(explode_tokens, schema=_TOKEN_SCHEMA)
-
+# 2. tokenization → term entries
 
 # the tokens stage's output on both tiers, ``_tokens/``: one row per
 # (text, token) entry; ``next_toks`` lists the distinct non-separator tokens
@@ -1232,6 +1184,89 @@ def _write_doc_store(table: pa.Table, schema: T.StructType, path: str,
                  row_group_size=config.segment_docs,
                  use_deprecated_int96_timestamps=True, store_schema=False)
     return table
+
+
+# read as pyarrow's default nanoseconds, an INT96 timestamp outside
+# 1677-2262 overflows without an error; Spark's unit is microseconds
+_INT96_US = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(
+    coerce_int96_timestamp_unit="us"))
+
+
+def doc_store_dataset(path: str) -> ds.Dataset:
+    """pyarrow dataset over a doc store (``docs/`` or a ``values/<path>``
+    relation) whose INT96 leaves — Spark's ``timestamp``, written so by
+    both tiers, holding UTC instants — read as ``timestamp[us, UTC]``,
+    the Arrow type of that Spark type, at any nesting depth. Which leaves
+    are INT96 the footers say: by its Arrow type alone such a leaf, naive
+    microseconds, would pass for a TimestampNTZ one."""
+    dset = ds.dataset(path, format=_INT96_US)
+    int96 = np.zeros(0, dtype=bool)
+    for frag in dset.get_fragments():
+        if frag.physical_schema.equals(dset.schema):
+            meta = frag.metadata.schema
+            flags = np.array([meta.column(i).physical_type == "INT96"
+                              for i in range(len(meta))], dtype=bool)
+            int96 = flags if not len(int96) else int96 | flags
+    if not int96.any():
+        return dset
+    leaves = iter(int96.tolist())
+    return ds.dataset(path, format=_INT96_US, schema=pa.schema(
+        [f.with_type(_int96_leaves_utc(f.type, leaves)) for f in dset.schema]))
+
+
+# a microsecond INT96 read of a negative nanosecond-of-day is this late
+_INT96_LATE_US = (1 << 64) // 1000
+
+
+def doc_store_table(dset: ds.Dataset, columns=None, filter=None) -> pa.Table:
+    """``dset.to_table(columns=..., filter=...)`` of a
+    :func:`doc_store_dataset`, each top-level INT96 column holding the
+    instants written. pyarrow's microsecond INT96 read takes the
+    nanosecond-of-day as unsigned, and pyarrow's INT96 writer (the driver
+    docs stage's) stores a negative one for an instant before 1970 that
+    is not at midnight: such a value reads 2^64 ns (~584 years) late. A
+    nanosecond read of the column, exact modulo 2^64, tells the two
+    apart: both writers store whole microseconds, so ``1000·us − ns`` is
+    0 modulo 2^64 for a value read right and −616 for one read late.
+    (Nested INT96 leaves come from Spark's writer only, whose
+    nanosecond-of-day is never negative.)"""
+    table = dset.to_table(columns=columns, filter=filter)
+    utc = pa.timestamp("us", tz="UTC")
+    names = [f.name for f in table.schema if f.type == utc]
+    if not names:
+        return table
+    raw = ds.dataset(dset.files, format="parquet").to_table(
+        columns=names, filter=filter)
+    for name in names:
+        if raw.schema.field(name).type != pa.timestamp("ns"):
+            continue  # not INT96
+        col = table[name]
+        us = pc.cast(col, pa.int64()).fill_null(0).to_numpy()
+        ns = pc.cast(raw[name], pa.int64()).fill_null(0).to_numpy()
+        late = us * 1000 - ns == -616
+        if late.any():
+            fixed = pa.array(np.where(late, us - _INT96_LATE_US, us),
+                             mask=col.is_null().to_numpy())
+            table = table.set_column(table.schema.get_field_index(name),
+                                     name, fixed.cast(utc))
+    return table
+
+
+def _int96_leaves_utc(t: pa.DataType, leaves) -> pa.DataType:
+    """``t`` with each leaf column whose flag ``leaves`` yields typed
+    ``timestamp[us, UTC]``; ``leaves`` holds one flag per parquet leaf
+    column, in the footer's depth-first order."""
+    if pa.types.is_struct(t):
+        return pa.struct([f.with_type(_int96_leaves_utc(f.type, leaves))
+                          for f in t])
+    if pa.types.is_map(t):
+        key = t.key_field.with_type(_int96_leaves_utc(t.key_type, leaves))
+        return pa.map_(key, t.item_field.with_type(
+            _int96_leaves_utc(t.item_type, leaves)))
+    if pa.types.is_list(t):
+        return pa.list_(t.value_field.with_type(
+            _int96_leaves_utc(t.value_type, leaves)))
+    return pa.timestamp("us", tz="UTC") if next(leaves) else t
 
 
 class _DocStore(NamedTuple):

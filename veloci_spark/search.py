@@ -40,8 +40,9 @@ doc-partitioned segments, in four steps:
 4. *Post-processing* — select, snippets, why-found, explain: bounded
    reads of the result docs (:meth:`FulltextIndex.read_docs`) and of
    their segments' posting / phrase rows (``read_postings``,
-   ``read_phrase``), each under the same scan rule as the local tier
-   (below), whichever tier ran the kernel.
+   ``read_phrase``, found by the local tier's :func:`_join`), each under
+   the same scan rule as the local tier (below), whichever tier ran the
+   kernel.
 
 Steps 2-3 run on one of two **execution tiers**, both with the same
 kernel and merge functions:
@@ -52,15 +53,33 @@ kernel and merge functions:
   doc-partitioned by segment, every per-doc operation is segment-local —
   no shuffle of hits; a 1000-executor cluster evaluates segments
   independently.
-* *local* (:func:`_local_hits`) — the driver reads the same pruned rows
-  with ``pyarrow.dataset`` and runs the kernel and the pre-merge
-  in-process, as one partition. No Spark job: a selective request costs
-  tens of ms instead of the ~0.7 s Spark scheduling floor.
+* *local* (:func:`_local_hits`) — the driver finds the same rows by key
+  and runs the kernel and the pre-merge in-process, as one partition.
+  No Spark job: a selective request costs milliseconds instead of the
+  ~0.7 s Spark scheduling floor.
+
+The local tier's rows come from a **resident** copy of ``postings/`` and
+of ``phrase/`` (:meth:`FulltextIndex.resident`, the reference's
+LoadingType=InMemory): the columns it reads, as one Arrow table sorted
+by (field, term_id, segment) or (field, tok_a, tok_b, segment), loaded
+once per handle with each key packed into an int64. :func:`_join` finds
+a request's keys in it by binary search and tags the rows with their
+leaf — an exact inner join, so a term two leaves match feeds both. A
+table is resident when the uncompressed footer bytes of those columns
+are at most LOCAL_TIER_MAX_SCAN_BYTES (64 MiB); the driver holds that
+Arrow copy (about that size, plus 8 B of key and 4-8 B of segment per
+row) per handle, and so per generation of a ``MultiIndex``. Past the
+bound the table stays on disk and each request reads its pruned rows
+with ``pyarrow.dataset`` (a row-group-pruning filter), then runs the
+same :func:`_join` over them.
 
 The cost rule (:func:`_choose_tier`) runs a request locally when the index
 dir is on the local disk, Σ doc_freq of its matched dictionary rows is
-at most LOCAL_TIER_MAX_POSTINGS and its pyarrow reads decode at most
-LOCAL_TIER_MAX_SCAN_BYTES bytes of parquet column chunks. Identity
+at most LOCAL_TIER_MAX_POSTINGS (a lookup in the driver dictionary's
+term_id/doc_freq arrays) and its reads decode at most
+LOCAL_TIER_MAX_SCAN_BYTES bytes of parquet column chunks — for a
+resident table, the bytes counted when it loaded, with no footer walk
+per request (:func:`_scan_bytes`). Identity
 leaves, per-leg field boosts (the composed path), anchor ``boost``, nested
 post-locality and Spark-join facets stay on Spark, as does
 :func:`search_df`. Each post-processing read is
@@ -104,7 +123,8 @@ from pyspark.sql import types as T
 
 from veloci_spark.build import (_DRIVER_DOCS_TYPES,
                                  LOCAL_TIER_MAX_SCAN_BYTES, _arrow_dtypes,
-                                 _local_dir, _spark_schema, load_manifest)
+                                 _local_dir, _spark_schema, doc_store_dataset,
+                                 doc_store_table, load_manifest)
 from veloci_spark.scoring import index_score_u32, levenshtein_batch, term_score
 from veloci_spark.vbyte import unpack_ids, unpack_postings, vbyte_decode
 
@@ -142,12 +162,13 @@ TID_PUSHDOWN_MAX_IN = 1_000
 # facet request took 2.05 s local vs 2.38 s on Spark, the top-k one 0.91 s
 # vs 1.81 s; with more executors the parallel decode wins sooner.
 LOCAL_TIER_MAX_POSTINGS = 1_000_000
-# ... and when its pyarrow reads decode at most LOCAL_TIER_MAX_SCAN_BYTES
+# ... and when its reads decode at most LOCAL_TIER_MAX_SCAN_BYTES
 # (veloci_spark.build, the driver-read bound the build's docs stage shares):
 # the uncompressed chunks of the columns they read, in the row groups their
-# predicates cannot skip (:func:`_scan_bytes`). The post-processing reads
-# (FulltextIndex.read_docs / read_postings / read_phrase) follow the same
-# bound.
+# predicates cannot skip, or a resident table's whole columns
+# (:func:`_scan_bytes`). The same bound decides which tables are resident
+# (FulltextIndex.resident), and the post-processing reads
+# (FulltextIndex.read_docs / read_postings / read_phrase) follow it.
 
 
 def _tid_pushdown_pred(col, tids):
@@ -207,11 +228,14 @@ class FulltextIndex:
         # execution tier reads it with pyarrow in the driver), else None
         self.local_path = _local_dir(index_dir)
         self._datasets: dict[str, object] = {}
+        # resident copies of the local tier's tables (see resident); None
+        # where the rule refused one
+        self._resident: dict[str, "_Keyed | None"] = {}
+        self._pin_postings = False  # set by cache()
         # guards the lazy driver-side fills above: a fill is built into a
         # local and published whole, so a concurrent request under the
-        # threaded server never sees a half-built dictionary or map.
-        # Reentrant: the dictionary and facet-map fills open their pyarrow
-        # dataset under it
+        # threaded server never sees a half-built dictionary, map or
+        # table. Reentrant: the fills open their pyarrow dataset under it
         self._lazy_lock = threading.RLock()
 
     # Spark handles on the index tables, each made on first use: opening
@@ -224,7 +248,8 @@ class FulltextIndex:
 
     @cached_property
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.index_dir}/postings")
+        df = self.spark.read.parquet(f"{self.index_dir}/postings")
+        return df.cache() if self._pin_postings else df
 
     @cached_property
     def phrase(self) -> DataFrame:
@@ -255,9 +280,23 @@ class FulltextIndex:
                 else None)
 
     def cache(self):
-        """Pin the dictionary + postings (the reference's LoadingType=InMemory)."""
-        self.dict_df.cache().count()
-        self.postings.cache().count()
+        """Load the index for serving, as the reference's
+        LoadingType=InMemory: on a local dir, the driver-side dictionary
+        and the resident posting and phrase tables (:meth:`resident`).
+        The dictionary is pinned in Spark's cache only where the driver
+        does not hold it (a remote dir, a dictionary past
+        ``local_dict_max_terms``). The postings stay pinned for the Spark
+        tier — on unpinned postings, bench.py's shapes forced onto Spark
+        ran ~7% slower on a local sf0.1 dir — but where they are resident
+        the pin fills with the first Spark job that scans them, not
+        here."""
+        if self.local_path is None or self._local_dicts() is None:
+            self.dict_df.cache().count()
+        self._pin_postings = True
+        vars(self).pop("postings", None)  # a handle made unpinned before
+        if self.resident("postings") is None:
+            self.postings.count()
+        self.resident("phrase")
         return self
 
     def facet_map(self, fld: str) -> "tuple[np.ndarray, np.ndarray] | None":
@@ -303,10 +342,19 @@ class FulltextIndex:
     def local_dict(self, field: str) -> "pd.DataFrame | None":
         """Per-field driver-side dictionary (term, term_id, lower) sorted by
         term, or None when the dictionary exceeds the local threshold."""
+        local = self._local_dicts()
+        if local is None:
+            return None
+        return local.get(
+            field, pd.DataFrame(columns=["field", "term", "num_occurences",
+                                         "doc_freq", "term_id", "lower"]))
+
+    def _local_dicts(self) -> "dict[str, pd.DataFrame] | None":
+        """Every field's driver-side dictionary (:meth:`local_dict`),
+        filled once per handle; None past the local threshold."""
         if self.manifest["n_terms"] > self._local_dict_max_terms:
             return None
-        local = self._local_dict
-        if local is None:
+        if self._local_dict is None:
             with self._lazy_lock:
                 if self._local_dict is None:
                     full = (self.arrow_dataset("dict").to_table().to_pandas()
@@ -319,22 +367,60 @@ class FulltextIndex:
                         g["lower"] = g["term"].str.lower()
                         built[fld] = g
                     self._local_dict = built
-                local = self._local_dict
-        return local.get(
-            field, pd.DataFrame(columns=["field", "term", "num_occurences",
-                                         "doc_freq", "term_id", "lower"]))
+        return self._local_dict
 
     def arrow_dataset(self, table: str):
-        """pyarrow dataset over one parquet table of a local index dir
-        (``postings`` / ``phrase``), opened once per handle."""
+        """pyarrow dataset over one parquet table of a local index dir,
+        opened once per handle. The doc store and the ``values/<path>``
+        relations open through ``build.doc_store_dataset``, so their INT96
+        timestamps read as the instants Spark reads."""
         dset = self._datasets.get(table)
         if dset is None:
             with self._lazy_lock:
                 if table not in self._datasets:
-                    self._datasets[table] = ds.dataset(
-                        os.path.join(self.local_path, table), format="parquet")
+                    path = os.path.join(self.local_path, table)
+                    self._datasets[table] = (
+                        doc_store_dataset(path)
+                        if table == "docs" or table.startswith("values/")
+                        else ds.dataset(path, format="parquet"))
                 dset = self._datasets[table]
         return dset
+
+    def resident(self, table: str) -> "_Keyed | None":
+        """The driver-resident copy of ``postings`` or ``phrase``: the
+        local tier's read columns of the whole table, sorted by key for
+        :func:`_join`, loaded once per handle — on a local dir whose
+        table holds at most LOCAL_TIER_MAX_SCAN_BYTES uncompressed bytes
+        of those columns (its footers' count, kept as ``nbytes``). None
+        otherwise: the local tier then reads the pruned rows per
+        request."""
+        kt = self._resident.get(table)
+        if kt is None and table not in self._resident:
+            with self._lazy_lock:
+                if table not in self._resident:
+                    self._resident[table] = self._load_resident(table)
+                kt = self._resident[table]
+        return kt
+
+    def _load_resident(self, table: str) -> "_Keyed | None":
+        if self.local_path is None:
+            return None
+        columns, key_cols = _LOCAL_TABLES[table]
+        dset = self.arrow_dataset(table)
+        nbytes = _footer_bytes(dset, None, columns)
+        if nbytes > LOCAL_TIER_MAX_SCAN_BYTES:
+            return None
+        return _keyed(dset.to_table(columns=columns), key_cols, nbytes)
+
+    def _keyed_rows(self, table: str, flt) -> "_Keyed":
+        """The rows a local read of ``table`` looks keys up in: its
+        resident copy, or else the rows the pruned read ``flt`` keeps."""
+        kt = self.resident(table)
+        if kt is None:
+            columns, key_cols = _LOCAL_TABLES[table]
+            kt = _keyed(self.arrow_dataset(table).to_table(
+                columns=columns, filter=flt), key_cols)
+        return kt
 
     # -- bounded reads of post-processing (select, snippets, why-found,
     # explain). A read runs in the driver with pyarrow when the index dir
@@ -370,8 +456,8 @@ class FulltextIndex:
                                         ["doc_id", *(columns or full.names)])):
             schema = (full if columns is None else
                       T.StructType([full[c] for c in columns]))
-            return _arrow_rows(self.arrow_dataset(table).to_table(
-                columns=schema.names, filter=flt), schema)
+            return _arrow_rows(doc_store_table(
+                self.arrow_dataset(table), schema.names, flt), schema)
         sdf = self.docs if path is None else self.values[path]
         if columns is not None:
             sdf = sdf.select(*columns)
@@ -387,9 +473,10 @@ class FulltextIndex:
         segs = sorted({int(s) for s in segments})
         cols = ["field", "term_id", "segment", "docs_bin", "scores_bin"]
         flt = _posting_filter(keys) & pc.field("segment").isin(segs)
-        if self._reads_locally("postings", flt, cols):
-            rows = self.arrow_dataset("postings").to_table(
-                columns=cols, filter=flt).to_pandas()
+        if self._reads_locally("postings", flt, _POSTING_READ_COLS):
+            rows = _join(self._keyed_rows("postings", flt),
+                         keys[["field", "term_id"]].drop_duplicates(),
+                         cols, segs)
         else:
             tids = sorted(set(keys["term_id"].tolist()))
             rows = (self.postings
@@ -402,14 +489,16 @@ class FulltextIndex:
 
     def read_phrase(self, phrase_specs, segments) -> pd.DataFrame:
         """Phrase rows (field, tok_a, tok_b, segment, docs_bin) of the
-        requested (field, tok_a, tok_b) pairs within ``segments`` — a
-        superset over the tok_a × tok_b sets; callers match the pairs."""
+        requested (field, tok_a, tok_b) pairs within ``segments`` — on
+        Spark a superset over the tok_a × tok_b sets; callers match the
+        pairs."""
         segs = sorted({int(s) for s in segments})
         cols = _PHRASE_READ_COLS
         flt = _phrase_filter(phrase_specs) & pc.field("segment").isin(segs)
         if self._reads_locally("phrase", flt, cols):
-            return self.arrow_dataset("phrase").to_table(
-                columns=cols, filter=flt).to_pandas()
+            specs = pd.DataFrame(list(dict.fromkeys(map(tuple, phrase_specs))),
+                                 columns=["field", "tok_a", "tok_b"])
+            return _join(self._keyed_rows("phrase", flt), specs, cols, segs)
         a_set = sorted({a for _f, a, _b in phrase_specs})
         b_set = sorted({b for _f, _a, b in phrase_specs})
         return (self.phrase
@@ -433,33 +522,14 @@ def _doc_id_filter(ids: list):
     return terms[0]
 
 
-def _int96_as_utc(t):
-    """``t`` with every INT96 timestamp — pyarrow reads them as naive ns
-    values; they hold UTC instants — typed ``timestamp[us, UTC]``, at any
-    nesting depth. (Spark writes TimestampNTZType as naive us.)"""
-    if pa.types.is_timestamp(t):
-        return (pa.timestamp("us", tz="UTC")
-                if t.tz is None and t.unit == "ns" else t)
-    if pa.types.is_struct(t):
-        return pa.struct([f.with_type(_int96_as_utc(f.type)) for f in t])
-    if pa.types.is_map(t):
-        return pa.map_(t.key_field.with_type(_int96_as_utc(t.key_type)),
-                       t.item_field.with_type(_int96_as_utc(t.item_type)))
-    if pa.types.is_list(t):
-        return pa.list_(t.value_field.with_type(_int96_as_utc(t.value_type)))
-    return t
-
-
 def _arrow_rows(table, schema: T.StructType) -> list:
-    """pyspark Rows of a pyarrow table with the values ``collect()``
-    gives (Spark Connect's Arrow→Row conversion). Spark writes
-    TimestampType as INT96: marked UTC, the conversion shifts those
-    instants to local time, as ``collect()`` does."""
+    """pyspark Rows of a pyarrow table read through
+    ``build.doc_store_table`` with the values ``collect()`` gives
+    (Spark Connect's Arrow→Row conversion): its INT96 timestamps, typed
+    UTC, shift to local time as ``collect()`` shifts them."""
     from pyspark.sql.conversion import ArrowTableToRowsConversion
 
-    utc = pa.schema([f.with_type(_int96_as_utc(f.type)) for f in table.schema])
-    return ArrowTableToRowsConversion.convert(table.cast(utc, safe=False),
-                                              schema)
+    return ArrowTableToRowsConversion.convert(table, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1641,13 +1711,15 @@ def _posting_estimate(index: FulltextIndex, sp: _SearchPlan) -> "int | None":
     """Posting entries the request's kernel input holds at most: Σ doc_freq
     of the matched dictionary rows. None when a field's dictionary is not
     driver-resident (no cheap estimate)."""
+    fields = sp.matched["field"].to_numpy(object)
+    tids = sp.matched["term_id"].to_numpy(np.int64)
     total = 0
-    for field, g in sp.matched.groupby("field", sort=False):
+    for field in dict.fromkeys(fields.tolist()):
         local = index.local_dict(field)
         if local is None or "doc_freq" not in local:
             return None
         pos = np.searchsorted(local["term_id"].to_numpy(np.int64),
-                              g["term_id"].to_numpy(np.int64))
+                              tids[fields == field])
         total += int(local["doc_freq"].to_numpy(np.int64)[pos].sum())
     return total
 
@@ -1675,6 +1747,88 @@ def _phrase_filter(phrase_specs):
 _POSTING_READ_COLS = ["field", "term_id", "segment", "max_score",
                       "docs_bin", "scores_bin"]
 _PHRASE_READ_COLS = ["field", "tok_a", "tok_b", "segment", "docs_bin"]
+# the local tier's tables: {table: (columns read, key columns)}
+_LOCAL_TABLES = {"postings": (_POSTING_READ_COLS, ("field", "term_id")),
+                 "phrase": (_PHRASE_READ_COLS, ("field", "tok_a", "tok_b"))}
+
+
+class _Keyed(NamedTuple):
+    """Rows of an index table sorted by key, then segment, each key packed
+    into one int64 (``keys``, ascending) so :func:`_join` finds a key's
+    rows by binary search. A key column's code is its value (an integer
+    column) or its rank in ``vocabs`` (a string column's sorted distinct
+    values); ``sizes`` are the codes' ranges."""
+
+    table: pa.Table
+    key_cols: tuple
+    keys: np.ndarray
+    segments: np.ndarray
+    vocabs: tuple
+    sizes: tuple
+    nbytes: int  # footer bytes of a resident copy (FulltextIndex.resident)
+
+
+def _keyed(table: pa.Table, key_cols: tuple, nbytes: int = 0) -> _Keyed:
+    """``table`` (key columns and ``segment`` among its columns) as a
+    :class:`_Keyed`."""
+    keys = np.zeros(table.num_rows, dtype=np.int64)
+    vocabs, sizes = [], []
+    for c in key_cols:
+        col = table[c]
+        if pa.types.is_integer(col.type):
+            vocab, code = None, col.to_numpy().astype(np.int64)
+            size = int(code.max()) + 1 if len(code) else 1
+        else:
+            vocab = pc.unique(col)
+            vocab = vocab.take(pc.sort_indices(vocab))
+            code = pc.index_in(col, value_set=vocab).to_numpy()
+            size = max(len(vocab), 1)
+        keys = keys * size + code
+        vocabs.append(vocab)
+        sizes.append(size)
+    if np.prod(np.array(sizes, dtype=object)) >= 1 << 63:
+        raise OverflowError(f"keys of {key_cols} overflow int64: {sizes}")
+    segments = table["segment"].to_numpy()
+    order = np.lexsort((segments, keys))
+    return _Keyed(table.take(order), tuple(key_cols), keys[order],
+                  segments[order], tuple(vocabs), tuple(sizes), nbytes)
+
+
+def _join(kt: _Keyed, keys: pd.DataFrame, columns: list,
+          segments=None) -> pd.DataFrame:
+    """The inner join of ``keys`` with ``kt`` on its key columns — one row
+    per pair of a ``kt`` row and a ``keys`` row with equal keys, as the
+    pandas merge gives them, duplicate ``keys`` rows included — with the
+    ``kt`` ``columns`` and ``keys``' other columns; only the rows in
+    ``segments`` when given. Rows come grouped by ``keys`` row, each
+    group in (key, segment) order."""
+    n = len(keys)
+    qkey = np.zeros(n, dtype=np.int64)
+    found = np.ones(n, dtype=bool)
+    for c, vocab, size in zip(kt.key_cols, kt.vocabs, kt.sizes):
+        if vocab is None:
+            code = keys[c].to_numpy(np.int64)
+            found &= (code >= 0) & (code < size)
+        else:
+            code = pc.index_in(pa.array(keys[c].to_numpy(object),
+                                        type=vocab.type), value_set=vocab)
+            found &= code.is_valid().to_numpy(zero_copy_only=False)
+            code = code.fill_null(0).to_numpy()
+        qkey = qkey * size + np.where(found, code, 0)
+    lo = np.searchsorted(kt.keys, qkey, "left")
+    hi = np.where(found, np.searchsorted(kt.keys, qkey, "right"), lo)
+    counts = hi - lo
+    q = np.repeat(np.arange(n), counts)
+    rows = (np.arange(int(counts.sum()))
+            + np.repeat(lo - (np.cumsum(counts) - counts), counts))
+    if segments is not None:
+        keep = np.isin(kt.segments[rows], segments)
+        rows, q = rows[keep], q[keep]
+    out = kt.table.take(rows).select(columns).to_pandas()
+    for c in keys.columns:
+        if c not in kt.key_cols:
+            out[c] = keys[c].to_numpy()[q]
+    return out
 
 
 def _local_reads(sp: _SearchPlan) -> dict:
@@ -1689,22 +1843,34 @@ def _local_reads(sp: _SearchPlan) -> dict:
 
 
 def _scan_bytes(index: FulltextIndex, reads: dict) -> int:
-    """Uncompressed bytes of the column chunks the ``{table: (filter,
-    columns)}`` reads decode: those columns' chunks (the filter's columns
-    among them) in the row groups the filters cannot skip by statistics —
-    what pyarrow decodes, whatever the filter keeps. (Spark's reader also
-    skips pages by column index; pyarrow decodes whole column chunks, so a
-    big row group costs a full scan of the columns read.)"""
+    """Bytes the ``{table: (filter, columns)}`` reads decode: a resident
+    table's bytes, counted at load (:meth:`FulltextIndex.resident`);
+    else the uncompressed column chunks the read decodes
+    (:func:`_footer_bytes`)."""
     total = 0
     for table, (flt, columns) in reads.items():
-        for frag in index.arrow_dataset(table).get_fragments(filter=flt):
-            meta = frag.metadata
-            paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
-            chunks = [j for j, p in enumerate(paths)
-                      if any(p == c or p.startswith(c + ".") for c in columns)]
-            total += sum(meta.row_group(rg.id).column(j).total_uncompressed_size
-                         for part in frag.split_by_row_group(flt)
-                         for rg in part.row_groups for j in chunks)
+        kt = index.resident(table) if table in _LOCAL_TABLES else None
+        total += (kt.nbytes if kt is not None else
+                  _footer_bytes(index.arrow_dataset(table), flt, columns))
+    return total
+
+
+def _footer_bytes(dset, flt, columns: list) -> int:
+    """Uncompressed bytes of the column chunks a read of ``dset``
+    decodes: those columns' chunks (the filter's columns among them) in
+    the row groups the filter cannot skip by statistics — what pyarrow
+    decodes, whatever the filter keeps. (Spark's reader also skips pages
+    by column index; pyarrow decodes whole column chunks, so a big row
+    group costs a full scan of the columns read.)"""
+    total = 0
+    for frag in dset.get_fragments(filter=flt):
+        meta = frag.metadata
+        paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
+        chunks = [j for j, p in enumerate(paths)
+                  if any(p == c or p.startswith(c + ".") for c in columns)]
+        total += sum(meta.row_group(rg.id).column(j).total_uncompressed_size
+                     for part in frag.split_by_row_group(flt)
+                     for rg in part.row_groups for j in chunks)
     return total
 
 
@@ -1735,28 +1901,25 @@ _LOCAL_KERNEL_COLS = ["segment", "leaf_id", "term_score", "max_score",
 
 
 def _local_posting_rows(index: FulltextIndex, matched: pd.DataFrame,
-                        read) -> pd.DataFrame:
-    """Kernel-input rows of the matched terms, read in the driver, then the
-    exact join on (field, term_id) that tags each row with its leaf and
-    term score."""
-    flt, cols = read
-    table = index.arrow_dataset("postings").to_table(columns=cols, filter=flt)
-    rows = table.to_pandas().merge(matched, on=["field", "term_id"])
+                        flt) -> pd.DataFrame:
+    """Kernel-input rows of the matched terms: their posting rows, each
+    tagged with its leaf and term score (:func:`_join` on (field,
+    term_id))."""
+    rows = _join(index._keyed_rows("postings", flt), matched,
+                 ["segment", "max_score", "docs_bin", "scores_bin"])
     rows["doc_ids"] = None
     return rows[_LOCAL_KERNEL_COLS]
 
 
 def _local_phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int,
-                       read) -> pd.DataFrame:
-    """Driver-side :func:`_phrase_rows`: the pruned read, joined exactly
-    with the requested (field, a, b) pairs."""
-    specs = pd.DataFrame(
-        [(f, a, b, next_leaf_id + i) for i, (f, a, b) in enumerate(phrase_specs)],
-        columns=["field", "tok_a", "tok_b", "leaf_id"])
-    flt, cols = read
-    table = index.arrow_dataset("phrase").to_table(columns=cols, filter=flt)
-    rows = table.to_pandas().merge(specs, on=["field", "tok_a", "tok_b"])
-    rows["leaf_id"] = rows["leaf_id"].astype(np.int32)
+                       flt) -> pd.DataFrame:
+    """Driver-side :func:`_phrase_rows`: the rows of the requested (field,
+    a, b) pairs, tagged with their synthetic leaf ids."""
+    specs = pd.DataFrame(phrase_specs, columns=["field", "tok_a", "tok_b"])
+    specs["leaf_id"] = np.arange(next_leaf_id, next_leaf_id + len(specs),
+                                 dtype=np.int32)
+    rows = _join(index._keyed_rows("phrase", flt), specs,
+                 ["segment", "docs_bin"])
     rows["term_score"] = _F32(0.0)
     rows["max_score"] = np.int64(0)
     rows["scores_bin"] = None
@@ -1772,10 +1935,10 @@ def _local_hits(index: FulltextIndex, sp: _SearchPlan) -> list:
     reads = _local_reads(sp)
     if not reads:
         return []
-    parts = [_local_posting_rows(index, sp.matched, reads["postings"])]
+    parts = [_local_posting_rows(index, sp.matched, reads["postings"][0])]
     if "phrase" in reads:
         parts.append(_local_phrase_rows(index, sp.phrase_specs, len(sp.leaves),
-                                        reads["phrase"]))
+                                        reads["phrase"][0]))
     data = pd.concat(parts, ignore_index=True)
     kernel = _segment_kernel_factory(sp.plan, sp.plan["scored_leaf_ids"])
     return list(kernel(iter([data])))

@@ -416,32 +416,6 @@ class MultiIndex:
         return None
 
 
-# read as pyarrow's default nanoseconds, an INT96 timestamp outside
-# 1677-2262 overflows without an error; Spark's unit is microseconds
-_INT96_US = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(
-    coerce_int96_timestamp_unit="us"))
-
-
-def _docs_dataset(gen_dir: str) -> ds.Dataset:
-    """pyarrow dataset over a generation's doc store whose INT96 columns —
-    Spark's ``timestamp``, written so by both tiers, holding UTC instants —
-    read as ``timestamp[us, UTC]``, the Arrow type of that Spark type.
-    Which columns are INT96 the footers say: by its Arrow type alone such
-    a column, naive microseconds, would pass for a TimestampNTZ one."""
-    path = os.path.join(gen_dir, "docs")
-    dset = ds.dataset(path, format=_INT96_US)
-    int96 = set()
-    for frag in dset.get_fragments():
-        schema = frag.metadata.schema
-        int96.update(schema.column(i).path for i in range(len(schema))
-                     if schema.column(i).physical_type == "INT96")
-    if not int96:
-        return dset
-    return ds.dataset(path, format=_INT96_US, schema=pa.schema(
-        [f.with_type(pa.timestamp("us", tz="UTC")) if f.name in int96 else f
-         for f in dset.schema]))
-
-
 def _arrow_docs(root: str, gens: list, config: IndexConfig
                 ) -> "pa.Table | None":
     """Compaction's Arrow route: the live docs of every generation as one
@@ -451,7 +425,8 @@ def _arrow_docs(root: str, gens: list, config: IndexConfig
     Spark."""
     from veloci_spark import build as B
 
-    dsets = [_docs_dataset(g["dir"]) for g in gens]
+    dsets = [B.doc_store_dataset(os.path.join(g["dir"], "docs"))
+             for g in gens]
     types: dict[str, pa.DataType] = {}
     for dset in dsets:
         for f in dset.schema:
@@ -473,7 +448,7 @@ def _arrow_docs(root: str, gens: list, config: IndexConfig
         return None
     tables = []
     for dset in dsets:
-        t = dset.to_table()
+        t = B.doc_store_table(dset)
         tables.append(pa.table(
             [t[name] if name in t.column_names else pa.nulls(len(t), typ)
              for name, typ in types.items()], schema=schema))
