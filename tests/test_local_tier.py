@@ -64,8 +64,8 @@ class TestCostRule:
     def test_scan_bytes_guard(self, spark_index, monkeypatch):
         ex = _tier(spark_index, PHRASE)
         postings = S._scan_bytes(spark_index, {
-            "postings": S._local_reads(S._plan_search(spark_index, PHRASE,
-                                                      False))["postings"]})
+            "postings": S._local_reads(spark_index, S._plan_search(
+                spark_index, PHRASE, False))["postings"]})
         assert ex["tier"] == "local" and ex["scan_bytes"] > postings > 0
         monkeypatch.setattr(S, "LOCAL_TIER_MAX_SCAN_BYTES",
                             ex["scan_bytes"] - 1)
@@ -403,13 +403,14 @@ class TestResidentTables:
         for key_cols in (("field", "tok_a", "tok_b"), ("field", "term_id")):
             keys_df = spec[[*key_cols, "leaf_id"]]
             got = S._join(S._keyed(table, key_cols), keys_df,
-                          ["segment", "row"])
+                          ["segment", "row"]).to_pandas()
             want = table.to_pandas().merge(keys_df, on=list(key_cols))
             cols = ["segment", "row", "leaf_id"]
             assert _multiset(got, cols) == _multiset(want, cols)
             assert got["leaf_id"].dtype == np.int32
             segs = [1, 3]
-            got = S._join(S._keyed(table, key_cols), keys_df, ["row"], segs)
+            got = S._join(S._keyed(table, key_cols), keys_df, ["row"],
+                          segs).to_pandas()
             assert _multiset(got, ["row", "leaf_id"]) == _multiset(
                 want[want["segment"].isin(segs)], ["row", "leaf_id"])
 
@@ -449,11 +450,11 @@ class TestResidentTables:
             columns=["field", "tok_a", "tok_b", "leaf_id"]))
         for index in (spark_index, pruned_index):
             got = S._local_posting_rows(index, matched,
-                                        S._posting_filter(matched))
+                                        S._posting_filter(matched)).to_pandas()
             assert _multiset(got, kernel) == _multiset(want, kernel)
             assert got["doc_ids"].isna().all()
             got = S._local_phrase_rows(index, specs, len(picks),
-                                       S._phrase_filter(specs))
+                                       S._phrase_filter(specs)).to_pandas()
             cols = ["segment", "leaf_id", "docs_bin"]
             assert _multiset(got, cols) == _multiset(want_p, cols)
 

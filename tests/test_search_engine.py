@@ -360,6 +360,8 @@ class TestPartitionPreMerge:
 
     def test_bounded_rows_and_exact_merge(self, spark):
         import pandas as pd
+        import pyarrow as pa
+
         from veloci_spark.search import _partition_topk_factory
 
         # 40 "segments" of kernel output (3 hits + exact count each) spread
@@ -372,8 +374,8 @@ class TestPartitionPreMerge:
         pdf = pd.DataFrame(recs, columns=["doc_id", "score", "seg_hits"])
         hits = spark.createDataFrame(pdf).repartition(4)
         k = 10
-        rows = (hits.mapInPandas(_partition_topk_factory(k, count_col="seg_hits"),
-                                 schema="doc_id long, score float, cnt long")
+        rows = (hits.mapInArrow(_partition_topk_factory(k, count_col="seg_hits"),
+                                schema="doc_id long, score float, cnt long")
                 .collect())
         assert len(rows) <= 4 * (k + 1)          # bounded by partitions, not segments
         assert sum(r["cnt"] for r in rows) == 40 * 17  # counts survive the merge
@@ -384,8 +386,10 @@ class TestPartitionPreMerge:
             == [(np.float32(s), d) for s, d in want]
         # the local tier runs the same function over its kernel output as
         # ONE driver-side partition: same count, same k best rows
-        local = pd.concat(_partition_topk_factory(k, count_col="seg_hits")(
-            iter([pdf.iloc[:50], pdf.iloc[50:]])))
+        batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+        local = pa.Table.from_batches(list(
+            _partition_topk_factory(k, count_col="seg_hits")(
+                iter([batch.slice(0, 50), batch.slice(50)])))).to_pandas()
         assert int(local["cnt"].sum()) == 40 * 17
         assert [(np.float32(s), d) for d, s in
                 zip(local["doc_id"], local["score"])] \
@@ -709,6 +713,27 @@ class TestWandOr:
                 "scores_bin": scores_bin}
 
     @staticmethod
+    def _seg(rows):
+        """One segment's kernel input: the rows as the kernel's Arrow
+        input, decoded by the kernel's own reader (scores left packed, as
+        the WAND kernel gets them)."""
+        import pyarrow as pa
+
+        from veloci_spark import search as S
+
+        table = pa.table({
+            "segment": pa.array([0] * len(rows), pa.int32()),
+            "leaf_id": pa.array([r["leaf_id"] for r in rows], pa.int32()),
+            "term_score": pa.array([r["term_score"] for r in rows],
+                                   pa.float32()),
+            "max_score": pa.array([r["max_score"] for r in rows], pa.int64()),
+            "docs_bin": pa.array([r["docs_bin"] for r in rows], pa.binary()),
+            "scores_bin": pa.array([r["scores_bin"] for r in rows],
+                                   pa.binary()),
+            "doc_ids": pa.nulls(len(rows), pa.list_(pa.int64()))})
+        return S._kernel_rows(table, 256, False)
+
+    @staticmethod
     def _node(op, tag_of_leaf):
         """The planner's WAND node: a lone leaf, or an OR/AND of leaves."""
         children = [{"op": "leaf", "leaf_id": l, "tag": t, "boost": None}
@@ -719,12 +744,13 @@ class TestWandOr:
     @classmethod
     def _brute_topk(cls, g, tag_of_leaf, k, op="or"):
         from veloci_spark import search as S
+        from veloci_spark.vbyte import unpack_postings
 
         leaf_hits = {}
-        for leaf_id, rr in g.groupby("leaf_id"):
+        for leaf_id in sorted({r["leaf_id"] for r in g}):
             all_i, all_s = [], []
-            for _, r in rr.iterrows():
-                ids, stored = S.unpack_postings(r["docs_bin"], r["scores_bin"])
+            for r in (r for r in g if r["leaf_id"] == leaf_id):
+                ids, stored = unpack_postings(r["docs_bin"], r["scores_bin"])
                 all_i.append(ids)
                 all_s.append((np.float32(r["term_score"])
                               * S._stored_to_f32(stored, True)).astype(np.float32))
@@ -735,8 +761,6 @@ class TestWandOr:
         return list(zip(ids[order].tolist(), sc[order].tolist()))
 
     def test_prunes_low_rows_exactly(self, monkeypatch):
-        import pandas as pd
-
         from veloci_spark import search as S
 
         rows = [self._row(0, 1.0, range(10), [4000] * 10),
@@ -747,19 +771,22 @@ class TestWandOr:
                 # only BELOW the kth score
                 self._row(0, 1.0, range(100, 140), [1] * 40),
                 self._row(1, 1.0, range(150, 190), [2] * 40)]
-        g = pd.DataFrame(rows)
         tags = {0: "a", 1: "b"}
-        want = self._brute_topk(g, tags, 5)
+        want = self._brute_topk(rows, tags, 5)
+        seg = self._seg(rows)
 
+        # the kernel decodes a row's scores (vbyte_decode of its bytes)
+        # only when it scores the row
         calls = {"n": 0}
-        real = S.unpack_postings
+        real = S.vbyte_decode
 
-        def counting(a, b):
+        def counting(buf):
             calls["n"] += 1
-            return real(a, b)
+            return real(buf)
 
-        monkeypatch.setattr(S, "unpack_postings", counting)
-        gi, gs, n = S._wand_tree_segment(g, self._node("or", tags), 5, 0, 256)
+        monkeypatch.setattr(S, "vbyte_decode", counting)
+        gi, gs, n = S._wand_tree_segment(seg, self._node("or", tags), 5, 0,
+                                         256)
         assert list(zip(gi.tolist(), gs.tolist())) == want
         assert calls["n"] == 4  # the two low rows were never decoded
         assert n == 100  # ... but their ids still count
@@ -768,8 +795,6 @@ class TestWandOr:
         """1-4 legs over a lone leaf, OR and AND, with and without
         tombstones: the top k + |tombstones| (the kernel's widened k; the
         caller drops the tombstoned rows) and the exact live count."""
-        import pandas as pd
-
         from veloci_spark import search as S
 
         for seed in range(36):
@@ -787,7 +812,7 @@ class TestWandOr:
                                           ids, stored))
                     ids_l.append(ids)
                 leg_ids.append(np.unique(np.concatenate(ids_l)))
-            g = pd.DataFrame(rows)
+            g = rows
             deleted = (np.sort(rng.choice(256, size=int(rng.randint(1, 30)),
                                           replace=False))
                        if seed % 2 else None)
@@ -802,7 +827,8 @@ class TestWandOr:
                 hits = hits[~np.isin(hits, deleted)]
             want = self._brute_topk(g, tags, k, op)
             gi, gs, n_hits = S._wand_tree_segment(
-                g, self._node(op, tags), k, 0, 256, deleted=deleted)
+                self._seg(g), self._node(op, tags), k, 0, 256,
+                deleted=deleted)
             assert list(zip(gi.tolist(), gs.tolist())) == want, seed
             assert n_hits == len(hits), seed
 
@@ -810,22 +836,22 @@ class TestWandOr:
         """A one-tag OR of two leaves is one leg but keeps the OR formula:
         a leg max below 1e-5 counts no tag, so every score is 0 — where a
         lone leaf passes its max through."""
-        import pandas as pd
-
         from veloci_spark import search as S
 
         rng = np.random.RandomState(11)
         rows = [self._row(l, 1e-4, np.sort(rng.choice(256, 30, replace=False)),
                           rng.randint(1, 6, size=30)) for l in (0, 1, 0)]
-        g = pd.DataFrame(rows)
+        g = rows
         tags = {0: "a", 1: "a"}
         want = self._brute_topk(g, tags, 5)
-        gi, gs, n = S._wand_tree_segment(g, self._node("or", tags), 5, 0, 256)
+        gi, gs, n = S._wand_tree_segment(self._seg(g), self._node("or", tags),
+                                         5, 0, 256)
         assert list(zip(gi.tolist(), gs.tolist())) == want
         assert gs.max() == 0.0 and n == len(set(np.concatenate(
-            [S.unpack_ids(b) for b in g["docs_bin"]])))
+            [S.unpack_ids(r["docs_bin"]) for r in g])))
         _i, leaf_scores, _n = S._wand_tree_segment(
-            g[g["leaf_id"] == 0], self._node("leaf", {0: "a"}), 5, 0, 256)
+            self._seg([r for r in g if r["leaf_id"] == 0]),
+            self._node("leaf", {0: "a"}), 5, 0, 256)
         assert 0.0 < leaf_scores.max() < 1e-5
 
     def test_engine_or_fast_path_matches_emit_all(self, spark_index):
@@ -847,8 +873,6 @@ class TestWandOr:
             [(r["doc_id"], r["score"]) for r in slow]
 
     def test_randomized_equality_and(self):
-        import pandas as pd
-
         from veloci_spark import search as S
 
         for seed in range(6):
@@ -862,12 +886,12 @@ class TestWandOr:
                     stored = rng.randint(1, 5000, size=n)
                     rows.append(self._row(leaf, rng.uniform(0.1, 1.0),
                                           ids, stored))
-            g = pd.DataFrame(rows)
+            g = rows
             tag_of_leaf = {l: chr(ord("a") + l) for l in range(n_leaves)}
             k = int(rng.randint(1, 12))
             want = self._brute_topk(g, tag_of_leaf, k, op="and")
             gi, gs, _n = S._wand_tree_segment(
-                g, self._node("and", tag_of_leaf), k, 0, 256)
+                self._seg(g), self._node("and", tag_of_leaf), k, 0, 256)
             assert list(zip(gi.tolist(), gs.tolist())) == want, seed
 
     def test_engine_and_fast_path_matches_emit_all(self, spark_index):
@@ -889,8 +913,6 @@ class TestWandOr:
     def test_count_hits_exact_randomized(self):
         """The kernel returns the brute distinct-hit count even though
         the skipped rows were never score-decoded."""
-        import pandas as pd
-
         from veloci_spark import search as S
 
         for seed in range(8):
@@ -906,7 +928,7 @@ class TestWandOr:
                     rows.append(self._row(leaf, rng.uniform(0.1, 1.0),
                                           ids, stored))
                     leg_ids[leaf].append(ids)
-            g = pd.DataFrame(rows)
+            g = rows
             legs = [np.unique(np.concatenate(v)) for v in leg_ids.values()]
             k = int(rng.randint(1, 6))
             for op in ("or", "and"):
@@ -920,15 +942,13 @@ class TestWandOr:
                 tags = {l: chr(ord("a") + l) for l in range(n_leaves)}
                 want = self._brute_topk(g, tags, k, op)
                 gi, gs, n_hits = S._wand_tree_segment(
-                    g, self._node(op, tags), k, 0, 256)
+                    self._seg(g), self._node(op, tags), k, 0, 256)
                 assert n_hits == want_n, (seed, op)
                 assert list(zip(gi.tolist(), gs.tolist())) == want, (seed, op)
 
     def test_many_leg_randomized_equality(self):
         """VERDICT r4 #4 companion: the kernel stays exact at a wide leg
         count (64 legs; the 256-doc segment keeps its dense state tiny)."""
-        import pandas as pd
-
         from veloci_spark import search as S
 
         rng = np.random.RandomState(4242)
@@ -940,10 +960,11 @@ class TestWandOr:
                 ids = np.sort(rng.choice(256, size=n, replace=False))
                 stored = rng.randint(1, 5000, size=n)
                 rows.append(self._row(leaf, rng.uniform(0.1, 1.0), ids, stored))
-        g = pd.DataFrame(rows)
+        g = rows
         tag_of_leaf = {l: f"{l:03d}" for l in range(n_leaves)}
         want = self._brute_topk(g, tag_of_leaf, 10)
-        gi, gs, n = S._wand_tree_segment(g, self._node("or", tag_of_leaf),
+        gi, gs, n = S._wand_tree_segment(self._seg(g),
+                                         self._node("or", tag_of_leaf),
                                          10, 0, 256)
         assert list(zip(gi.tolist(), gs.tolist())) == want
         assert n == 256  # 64 legs x up to 40 ids saturate the tiny segment
@@ -982,9 +1003,8 @@ class TestWandOr:
         after decoding >= candidates/2 posting entries) bounds refreshes by
         total_entries / (candidates/2) — single digits here, vs one dense
         rescan per surviving row (~180) pre-fix."""
-        import pandas as pd
-
         from veloci_spark import search as S
+        from veloci_spark.vbyte import unpack_postings
 
         rng = np.random.RandomState(99)
         seg_docs = 1 << 18
@@ -994,17 +1014,18 @@ class TestWandOr:
                 ids = np.sort(rng.choice(200_000, size=5_000, replace=False))
                 stored = rng.randint(1, 5000, size=len(ids))
                 rows.append(self._row(leaf, rng.uniform(0.5, 1.0), ids, stored))
-        g = pd.DataFrame(rows)
+        g = rows
         node = self._node("or", {0: "0", 1: "1", 2: "2"})
 
         def plain():
             # the non-WAND kernel's work for this segment: decode every row,
             # dedup-max per leg, eval_tree, top-k
             leaf_hits = {}
-            for leaf_id, rr in g.groupby("leaf_id"):
+            for leaf_id in range(3):
                 all_i, all_s = [], []
-                for _, r in rr.iterrows():
-                    ids, stored = S.unpack_postings(r["docs_bin"], r["scores_bin"])
+                for r in (r for r in g if r["leaf_id"] == leaf_id):
+                    ids, stored = unpack_postings(r["docs_bin"],
+                                                  r["scores_bin"])
                     all_i.append(ids)
                     all_s.append((np.float32(r["term_score"])
                                   * S._stored_to_f32(stored, True)).astype(np.float32))
@@ -1025,7 +1046,8 @@ class TestWandOr:
             return real_part(a, kth, *args, **kw)
 
         monkeypatch.setattr(S.np, "partition", counting_partition)
-        gi, gs, _n = S._wand_tree_segment(g, node, 10, 0, seg_docs)
+        seg = self._seg(g)
+        gi, gs, _n = S._wand_tree_segment(seg, node, 10, 0, seg_docs)
         monkeypatch.undo()
         assert list(zip(gi.tolist(), gs.tolist())) == want
         # 180 rows x 5000 entries = 900k decoded entries over ~195k

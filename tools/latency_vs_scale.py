@@ -1,6 +1,6 @@
 """Query latency vs corpus size: the read-path scale evidence.
 
-Builds (or reuses) an index over the 1M-doc synthetic scaling corpus and
+Builds an index over the 1M-doc synthetic scaling corpus and
 runs the bench's 12 query shapes — re-termed onto the synthetic vocabulary
 at matched densities — plus a stopword shape (`ba`, ~5.8% of all tokens,
 ~1.9M postings) that exercises WAND pruning against a posting list three
@@ -14,7 +14,11 @@ Prints ONE JSON line like bench.py; its ``resident`` entry says, per
 table, whether the handle holds the local tier's resident copy
 (``search.FulltextIndex.resident``) and the footer bytes the rule
 weighed against ``LOCAL_TIER_MAX_SCAN_BYTES``, so a run at each scale
-shows where the rule stops.
+shows where the rule stops, and its ``tiers`` entry the execution tier
+each shape ran on (``local``: the driver-side segment kernel; ``spark``:
+the ``mapInArrow`` kernel stage), read from one untimed ``explain``
+request per shape. The Spark session's scratch dir and the index are
+removed when the run ends, failed or not.
 
 Usage: python tools/latency_vs_scale.py [n_docs]   (default 1,000,000)
 
@@ -88,31 +92,36 @@ def main():
     health = bench.probe_host_health()
     corpus = bench.materialize_synth_corpus(n_docs)
     spark = bench.make_spark(bench.CPUS)
-    spark.sparkContext.setLogLevel("ERROR")
     idx_dir = f"/dev/shm/veloci_qlat_idx_{n_docs}"
-    t0 = time.time()
-    n, build_sec = bench.run_build_synth(spark, corpus, idx_dir)  # resumable
-    from veloci_spark import search as S
-    from veloci_spark.search import FulltextIndex, search
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
+        n, build_sec = bench.run_build_synth(spark, corpus, idx_dir)
+        from veloci_spark import search as S
+        from veloci_spark.search import FulltextIndex, search
 
-    idx = FulltextIndex(spark, idx_dir).cache()
-    resident = {
-        table: {"resident": idx.resident(table) is not None,
-                "bytes": S._footer_bytes(idx.arrow_dataset(table), None,
-                                         columns)}
-        for table, (columns, _keys) in S._LOCAL_TABLES.items()}
-    timings: dict[str, float] = {}
-    hits: dict[str, int] = {}
-    for name, req in SHAPES.items():
-        for _ in range(bench.WARMUPS):
-            res = search(idx, req)
-        samples = []
-        for _ in range(bench.N_RUNS):
-            t = time.time()
-            res = search(idx, req)
-            samples.append(time.time() - t)
-        timings[name] = round(min(samples), 4)
-        hits[name] = int(res["num_hits"])
+        idx = FulltextIndex(spark, idx_dir).cache()
+        resident = {
+            table: {"resident": idx.resident(table) is not None,
+                    "bytes": S._footer_bytes(idx.arrow_dataset(table), None,
+                                             columns)}
+            for table, (columns, _keys) in S._LOCAL_TABLES.items()}
+        timings: dict[str, float] = {}
+        hits: dict[str, int] = {}
+        tiers: dict[str, str] = {}
+        for name, req in SHAPES.items():
+            tiers[name] = search(idx, {**req, "explain": True})[
+                "explain"]["tier"]
+            for _ in range(bench.WARMUPS):
+                res = search(idx, req)
+            samples = []
+            for _ in range(bench.N_RUNS):
+                t = time.time()
+                res = search(idx, req)
+                samples.append(time.time() - t)
+            timings[name] = round(min(samples), 4)
+            hits[name] = int(res["num_hits"])
+    finally:
+        bench.stop_spark(spark, idx_dir)
     import statistics
 
     out = {
@@ -121,6 +130,7 @@ def main():
         "build_sec": round(build_sec, 2),
         "queries": timings,
         "num_hits": hits,
+        "tiers": tiers,
         "resident": resident,
         "resident_max_bytes": S.LOCAL_TIER_MAX_SCAN_BYTES,
         "query_stat": f"min_of_{bench.N_RUNS}_runs",
@@ -128,7 +138,6 @@ def main():
         "cpus": bench.CPUS,
         **health,
     }
-    spark.stop()
     print(json.dumps(out))
 
 

@@ -17,23 +17,29 @@ doc-partitioned segments, in four steps:
    boosts) plus the matched (field, term_id, leaf_id, term_score) rows
    become a small plan dict.
 2. *Segment kernel* (:func:`_segment_kernel_factory`) — postings rows for
-   the matched term_ids (``field``/``term_id`` predicates) are grouped by
-   segment and the **entire** request tree is evaluated per segment with
-   numpy over unpacked delta+VByte postings: leaf max-dedup (semantics of
-   reference src/search/search_field.rs:449-463),
+   the matched term_ids (``field``/``term_id`` predicates) arrive as Arrow
+   rows; one grouped delta+VByte decode per kernel call
+   (:func:`_kernel_rows`, ``vbyte.unpack_ids_grouped``) yields every
+   row's doc ids, with no Python call per row. The rows are split by
+   segment (numpy index sets, first-appearance order) and the **entire**
+   request tree is evaluated per segment with numpy: leaf max-dedup
+   (semantics of reference src/search/search_field.rs:449-463),
    OR = ``sum(max per distinct query term) × n_distinct²``
    (set_op.rs:166-186), AND = sum of leg scores (set_op.rs:414-417),
    ids-only filter (set_op.rs:311-326), phrase ×5.0
    (plan_steps.rs:267), term boost, text-locality 2n² (boost.rs:70-80).
    A plain top-k plan over a lone leaf or an unboosted OR/AND of leaves
    prunes posting rows WAND-style in one kernel
-   (:func:`_wand_tree_segment`; the lone leaf is its one-leg case). Each
+   (:func:`_wand_tree_segment`; the lone leaf is its one-leg case), which
+   decodes a row's scores only when it scores the row; the plain kernel
+   decodes every row's scores in the same grouped pass as the ids. Each
    segment emits its top (top+skip) hits plus its exact hit count, or its
    full hit set when facets, anchor boosts, nested post-locality or a
-   caller that filters the hits need it (one rule, :func:`_plan_search`).
+   caller that filters the hits need it (one rule, :func:`_plan_search`),
+   as a ``(doc_id, score, seg_hits)`` Arrow record batch.
 3. *Partition pre-merge* (:func:`_partition_topk_factory`) — one
-   narrow pass per partition keeps its k best rows by (score DESC,
-   doc_id DESC), the required tie-break (reference
+   narrow pass per partition over those batches keeps its k best rows by
+   (score DESC, doc_id DESC), the required tie-break (reference
    src/search.rs:128-135), sums the exact counts and, for fused facets,
    counts facet values from driver-resident doc→value maps; the driver
    merges partitions × (k+1) rows.
@@ -45,18 +51,19 @@ doc-partitioned segments, in four steps:
    kernel.
 
 Steps 2-3 run on one of two **execution tiers**, both with the same
-kernel and merge functions:
+kernel and merge functions over Arrow record batches — no pandas frame
+between the kernel input and the merge output:
 
 * *spark* (:func:`_spark_hits`) — a ``repartition("segment")`` of the
-  pruned posting rows feeds a ``mapInPandas`` kernel stage; the pre-merge
-  is chained onto it, so a request is one Spark job. Because postings are
-  doc-partitioned by segment, every per-doc operation is segment-local —
-  no shuffle of hits; a 1000-executor cluster evaluates segments
-  independently.
+  pruned posting rows feeds a ``mapInArrow`` kernel stage; the pre-merge
+  (``mapInArrow`` too) is chained onto it, so a request is one Spark job.
+  Because postings are doc-partitioned by segment, every per-doc
+  operation is segment-local — no shuffle of hits; a 1000-executor
+  cluster evaluates segments independently.
 * *local* (:func:`_local_hits`) — the driver finds the same rows by key
-  and runs the kernel and the pre-merge in-process, as one partition.
-  No Spark job: a selective request costs milliseconds instead of the
-  ~0.7 s Spark scheduling floor.
+  (an Arrow ``take``) and runs the kernel and the pre-merge in-process,
+  as one partition. No Spark job: a selective request costs milliseconds
+  instead of the ~0.7 s Spark scheduling floor.
 
 The local tier's rows come from a **resident** copy of ``postings/`` and
 of ``phrase/`` (:meth:`FulltextIndex.resident`, the reference's
@@ -126,7 +133,9 @@ from veloci_spark.build import (_DRIVER_DOCS_TYPES,
                                  _local_dir, _spark_schema, doc_store_dataset,
                                  doc_store_table, load_manifest)
 from veloci_spark.scoring import index_score_u32, levenshtein_batch, term_score
-from veloci_spark.vbyte import unpack_ids, unpack_postings, vbyte_decode
+from veloci_spark.vbyte import (binary_buffers, unpack_ids,
+                                 unpack_ids_grouped, vbyte_decode,
+                                 vbyte_decode_grouped)
 
 _F32 = np.float32
 
@@ -345,9 +354,11 @@ class FulltextIndex:
         local = self._local_dicts()
         if local is None:
             return None
-        return local.get(
-            field, pd.DataFrame(columns=["field", "term", "num_occurences",
-                                         "doc_freq", "term_id", "lower"]))
+        got = local.get(field)
+        if got is None:
+            got = pd.DataFrame(columns=["field", "term", "num_occurences",
+                                        "doc_freq", "term_id", "lower"])
+        return got
 
     def _local_dicts(self) -> "dict[str, pd.DataFrame] | None":
         """Every field's driver-side dictionary (:meth:`local_dict`),
@@ -476,7 +487,7 @@ class FulltextIndex:
         if self._reads_locally("postings", flt, _POSTING_READ_COLS):
             rows = _join(self._keyed_rows("postings", flt),
                          keys[["field", "term_id"]].drop_duplicates(),
-                         cols, segs)
+                         cols, segs).to_pandas()
         else:
             tids = sorted(set(keys["term_id"].tolist()))
             rows = (self.postings
@@ -498,7 +509,8 @@ class FulltextIndex:
         if self._reads_locally("phrase", flt, cols):
             specs = pd.DataFrame(list(dict.fromkeys(map(tuple, phrase_specs))),
                                  columns=["field", "tok_a", "tok_b"])
-            return _join(self._keyed_rows("phrase", flt), specs, cols, segs)
+            return _join(self._keyed_rows("phrase", flt), specs, cols,
+                         segs).to_pandas()
         a_set = sorted({a for _f, a, _b in phrase_specs})
         b_set = sorted({b for _f, _a, b in phrase_specs})
         return (self.phrase
@@ -852,7 +864,8 @@ def _tree_tag(node) -> str:
 
 
 # ---------------------------------------------------------------------------
-# the segment kernel (pure numpy/pandas; shared by Spark and by unit tests)
+# the segment kernel's tree evaluation (pure numpy; shared by both tiers
+# and by unit tests)
 
 
 def _dedup_max(ids: np.ndarray, scores: np.ndarray):
@@ -1264,22 +1277,19 @@ def _apply_post_locality(index: FulltextIndex, hits: DataFrame,
                 .select("segment", "docs_bin")
             )
 
-            def decode(iterator, _tag=leaf.tag, _field=leaf.field):
-                from veloci_spark.vbyte import vbyte_decode, delta_decode
+            def decode(batches, _tag=leaf.tag, _field=leaf.field):
+                for b in batches:
+                    ids, offs = unpack_ids_grouped(b.column("docs_bin"))
+                    ids += np.repeat(b.column("segment").to_numpy()
+                                     .astype(np.int64) * segment_docs,
+                                     np.diff(offs))
+                    yield pa.RecordBatch.from_pydict({
+                        "field": pa.array([_field] * len(ids), pa.string()),
+                        "doc_id": ids,
+                        "pos": np.zeros(len(ids), dtype=np.int64),
+                        "tag": pa.array([_tag] * len(ids), pa.string())})
 
-                for pdf in iterator:
-                    outs = []
-                    for seg, b in zip(pdf["segment"].values, pdf["docs_bin"].values):
-                        ids = delta_decode(vbyte_decode(b)).astype(np.int64) \
-                            + int(seg) * segment_docs
-                        outs.append(pd.DataFrame({
-                            "field": _field, "doc_id": ids,
-                            "pos": np.zeros(len(ids), dtype=np.int64),
-                            "tag": _tag}))
-                    yield pd.concat(outs) if outs else pd.DataFrame(
-                        {"field": [], "doc_id": [], "pos": [], "tag": []})
-
-            group_parts.append(rows.mapInPandas(
+            group_parts.append(rows.mapInArrow(
                 decode, schema="field string, doc_id long, pos long, tag string"))
     if not group_parts:
         return hits
@@ -1380,7 +1390,7 @@ def _posting_kernel_rows(index: FulltextIndex, matched: pd.DataFrame) -> DataFra
 
 
 def _combine_plan_factory(cplan: dict):
-    """mapInPandas kernel over doc_id-partitioned (leaf_id, doc_id, score)
+    """mapInArrow kernel over doc_id-partitioned (leaf_id, doc_id, score)
     rows: per partition, rebuild each leaf's (ids asc, f32 scores) arrays
     and run :func:`eval_segment` — the exact post-tree pipeline the segment
     kernel uses (tree combine → filter ∩ → phrase ×5 → term boost →
@@ -1391,64 +1401,58 @@ def _combine_plan_factory(cplan: dict):
     ids-leg rows land together."""
     scored = set(cplan["scored_leaf_ids"])
 
-    def fn(iterator):
-        parts = []
-        for pdf in iterator:
-            parts.append(pdf)
-        if not parts:
-            yield _hits_pdf(np.empty(0, np.int64), np.empty(0, _F32), 0)
-            return
-        allp = pd.concat(parts, ignore_index=True)
+    def fn(batches):
+        batches = list(batches)
+
+        def column(name, dtype):
+            return np.concatenate([b.column(name).to_numpy() for b in batches]
+                                  or [np.empty(0, dtype)])
+
+        lids = column("leaf_id", np.int32)
+        all_ids = column("doc_id", np.int64)
+        all_sc = column("score", _F32)
         leaf_hits = {}
         leaf_idsets = {}
-        for lid, g in allp.groupby("leaf_id"):
-            ids = g["doc_id"].values.astype(np.int64)
-            if int(lid) in scored:
-                sc = g["score"].values.astype(_F32)
+        for lid in np.unique(lids).tolist():
+            m = lids == lid
+            ids = all_ids[m]
+            if lid in scored:
                 order = np.argsort(ids)
                 ids = ids[order]
-                leaf_hits[int(lid)] = (ids, sc[order])
-                leaf_idsets[int(lid)] = ids  # scored legs are pre-deduped
+                leaf_hits[lid] = (ids, all_sc[m][order].astype(_F32))
+                leaf_idsets[lid] = ids  # scored legs are pre-deduped
             else:
-                leaf_idsets[int(lid)] = np.unique(ids)
+                leaf_idsets[lid] = np.unique(ids)
         ids, sc = eval_segment(cplan, leaf_hits, leaf_idsets)
-        yield _hits_pdf(ids, sc, len(ids))
+        yield _hits_batch(ids, sc, len(ids))
 
     return fn
 
 
 _LEG_SCHEMA = "leaf_id int, doc_id long, score float"
+_LEG_ARROW = pa.schema([("leaf_id", pa.int32()), ("doc_id", pa.int64()),
+                        ("score", pa.float32())])
 
 
 def _leg_ids_kernel_factory(segment_docs: int):
-    """mapInPandas kernel turning packed kernel-input rows (postings /
+    """mapInArrow kernel turning packed kernel-input rows (postings /
     phrase / identity) into flat ids-only leg rows (leaf_id, doc_id, 0.0)
     for the composed combine's ``leaf_idsets`` (filter legs, term-boost
-    legs, phrase legs need doc-id SETS, never scores)."""
+    legs, phrase legs need doc-id SETS, never scores); one grouped decode
+    per batch (:func:`_kernel_rows`)."""
 
-    def fn(iterator):
-        for pdf in iterator:
-            if pdf.empty:
+    def fn(batches):
+        for b in batches:
+            if not b.num_rows:
                 continue
-            out_lids, out_ids = [], []
-            docs_col = pdf.columns.get_loc("docs_bin")
-            for i in range(len(pdf)):
-                if pdf.iat[i, docs_col] is not None:
-                    ids = (unpack_ids(pdf.iat[i, docs_col])
-                           + int(pdf["segment"].values[i]) * segment_docs)
-                elif pdf["doc_ids"].values[i] is not None:
-                    # identity rows carry absolute doc ids
-                    ids = np.asarray(pdf["doc_ids"].values[i], dtype=np.int64)
-                else:
-                    continue
-                out_ids.append(ids)
-                out_lids.append(np.full(len(ids), int(pdf["leaf_id"].values[i]),
-                                        dtype=np.int32))
-            if out_ids:
-                ids = np.concatenate(out_ids)
-                yield pd.DataFrame({"leaf_id": np.concatenate(out_lids),
-                                    "doc_id": ids,
-                                    "score": np.zeros(len(ids), dtype=np.float32)})
+            r = _kernel_rows(pa.Table.from_batches([b]), segment_docs, False)
+            lens = r.hi - r.lo
+            ids = (r.ids[_ranges(r.lo, r.hi)]
+                   + np.repeat(r.segment * segment_docs, lens))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.repeat(r.leaf_id, lens).astype(np.int32)),
+                 pa.array(ids), pa.array(np.zeros(len(ids), dtype=_F32))],
+                schema=_LEG_ARROW)
 
     return fn
 
@@ -1504,21 +1508,21 @@ def _composed_search_hits(index: FulltextIndex, cplan: dict, leaves,
         if leaf.leaf_id not in scored:
             # ids-only leg (filter-only / term-boost leaf): no scoring, no
             # boosts — just its doc-id set for the combine's leaf_idsets
-            legs.append(rows.mapInPandas(
+            legs.append(rows.mapInArrow(
                 _leg_ids_kernel_factory(segment_docs), schema=_LEG_SCHEMA))
             continue
         plan = _kernel_plan(index, {"op": "leaf", "leaf_id": leaf.leaf_id,
                                     "tag": leaf.tag, "boost": leaf.boost},
                             cplan["seg_deleted"])
         kernel = _segment_kernel_factory(plan, {leaf.leaf_id})
-        h = rows.repartition("segment").mapInPandas(kernel, schema=_HITS_SCHEMA)
+        h = rows.repartition("segment").mapInArrow(kernel, schema=_HITS_SCHEMA)
         if leaf.field_boosts:
             h = _apply_anchor_boosts(index, h, {"boost": leaf.field_boosts},
                                      [leaf])
         legs.append(h.select(F.lit(leaf.leaf_id).alias("leaf_id"),
                              "doc_id", "score"))
     if phrase_rows is not None:
-        legs.append(phrase_rows.mapInPandas(
+        legs.append(phrase_rows.mapInArrow(
             _leg_ids_kernel_factory(segment_docs), schema=_LEG_SCHEMA))
     if not legs:
         return index.spark.createDataFrame([], schema=_HITS_SCHEMA)
@@ -1526,7 +1530,7 @@ def _composed_search_hits(index: FulltextIndex, cplan: dict, leaves,
     for df in legs[1:]:
         union = union.unionByName(df)
     return (union.repartition("doc_id")
-            .mapInPandas(_combine_plan_factory(cplan), schema=_HITS_SCHEMA))
+            .mapInArrow(_combine_plan_factory(cplan), schema=_HITS_SCHEMA))
 
 
 def _phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int):
@@ -1692,7 +1696,7 @@ def _spark_hits(index: FulltextIndex, sp: _SearchPlan):
     if sp.phrase_specs:
         rows = rows.unionByName(_phrase_rows(index, sp.phrase_specs, len(leaves)))
     kernel = _segment_kernel_factory(plan, plan["scored_leaf_ids"])
-    hits = rows.repartition("segment").mapInPandas(kernel, schema=_HITS_SCHEMA)
+    hits = rows.repartition("segment").mapInArrow(kernel, schema=_HITS_SCHEMA)
     return hits, plan, leaves
 
 
@@ -1795,13 +1799,14 @@ def _keyed(table: pa.Table, key_cols: tuple, nbytes: int = 0) -> _Keyed:
 
 
 def _join(kt: _Keyed, keys: pd.DataFrame, columns: list,
-          segments=None) -> pd.DataFrame:
+          segments=None) -> pa.Table:
     """The inner join of ``keys`` with ``kt`` on its key columns — one row
     per pair of a ``kt`` row and a ``keys`` row with equal keys, as the
     pandas merge gives them, duplicate ``keys`` rows included — with the
-    ``kt`` ``columns`` and ``keys``' other columns; only the rows in
-    ``segments`` when given. Rows come grouped by ``keys`` row, each
-    group in (key, segment) order."""
+    ``kt`` ``columns`` and ``keys``' other columns, as an Arrow table (a
+    ``take`` of ``kt.table``); only the rows in ``segments`` when given.
+    Rows come grouped by ``keys`` row, each group in (key, segment)
+    order."""
     n = len(keys)
     qkey = np.zeros(n, dtype=np.int64)
     found = np.ones(n, dtype=bool)
@@ -1817,29 +1822,37 @@ def _join(kt: _Keyed, keys: pd.DataFrame, columns: list,
         qkey = qkey * size + np.where(found, code, 0)
     lo = np.searchsorted(kt.keys, qkey, "left")
     hi = np.where(found, np.searchsorted(kt.keys, qkey, "right"), lo)
-    counts = hi - lo
-    q = np.repeat(np.arange(n), counts)
-    rows = (np.arange(int(counts.sum()))
-            + np.repeat(lo - (np.cumsum(counts) - counts), counts))
+    q = np.repeat(np.arange(n), hi - lo)
+    rows = _ranges(lo, hi)
     if segments is not None:
         keep = np.isin(kt.segments[rows], segments)
         rows, q = rows[keep], q[keep]
-    out = kt.table.take(rows).select(columns).to_pandas()
+    out = kt.table.select(columns).take(rows)
     for c in keys.columns:
         if c not in kt.key_cols:
-            out[c] = keys[c].to_numpy()[q]
+            out = out.append_column(c, pa.array(keys[c].to_numpy()[q]))
     return out
 
 
-def _local_reads(sp: _SearchPlan) -> dict:
+def _ranges(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """The concatenated ranges ``[lo[i], hi[i])``, in order."""
+    lens = hi - lo
+    return (np.arange(int(lens.sum()))
+            + np.repeat(lo - (np.cumsum(lens) - lens), lens))
+
+
+def _local_reads(index: FulltextIndex, sp: _SearchPlan) -> dict:
     """{table: (pyarrow filter, columns)} of the reads the local tier
-    makes."""
+    makes. A resident table is looked up by key with no filter, so its
+    filter is None."""
     if sp.matched.empty:
         return {}
-    reads = {"postings": (_posting_filter(sp.matched), _POSTING_READ_COLS)}
+    filters = {"postings": lambda: _posting_filter(sp.matched)}
     if sp.phrase_specs:
-        reads["phrase"] = (_phrase_filter(sp.phrase_specs), _PHRASE_READ_COLS)
-    return reads
+        filters["phrase"] = lambda: _phrase_filter(sp.phrase_specs)
+    return {table: (None if index.resident(table) is not None else flt(),
+                    _LOCAL_TABLES[table][0])
+            for table, flt in filters.items()}
 
 
 def _scan_bytes(index: FulltextIndex, reads: dict) -> int:
@@ -1891,7 +1904,7 @@ def _choose_tier(index: FulltextIndex, request: dict, sp: _SearchPlan,
             and not request.get("boost")
             and not sp.plan.get("post_locality")
             and (fused_facets or not request.get("facets"))):
-        scan = _scan_bytes(index, _local_reads(sp))
+        scan = _scan_bytes(index, _local_reads(index, sp))
     local = scan is not None and scan <= LOCAL_TIER_MAX_SCAN_BYTES
     return ("local" if local else "spark"), est, scan
 
@@ -1901,18 +1914,19 @@ _LOCAL_KERNEL_COLS = ["segment", "leaf_id", "term_score", "max_score",
 
 
 def _local_posting_rows(index: FulltextIndex, matched: pd.DataFrame,
-                        flt) -> pd.DataFrame:
+                        flt) -> pa.Table:
     """Kernel-input rows of the matched terms: their posting rows, each
     tagged with its leaf and term score (:func:`_join` on (field,
     term_id))."""
     rows = _join(index._keyed_rows("postings", flt), matched,
                  ["segment", "max_score", "docs_bin", "scores_bin"])
-    rows["doc_ids"] = None
-    return rows[_LOCAL_KERNEL_COLS]
+    return rows.append_column(
+        "doc_ids", pa.nulls(rows.num_rows, pa.list_(pa.int64()))
+    ).select(_LOCAL_KERNEL_COLS)
 
 
 def _local_phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int,
-                       flt) -> pd.DataFrame:
+                       flt) -> pa.Table:
     """Driver-side :func:`_phrase_rows`: the rows of the requested (field,
     a, b) pairs, tagged with their synthetic leaf ids."""
     specs = pd.DataFrame(phrase_specs, columns=["field", "tok_a", "tok_b"])
@@ -1920,28 +1934,30 @@ def _local_phrase_rows(index: FulltextIndex, phrase_specs, next_leaf_id: int,
                                  dtype=np.int32)
     rows = _join(index._keyed_rows("phrase", flt), specs,
                  ["segment", "docs_bin"])
-    rows["term_score"] = _F32(0.0)
-    rows["max_score"] = np.int64(0)
-    rows["scores_bin"] = None
-    rows["doc_ids"] = None
-    return rows[_LOCAL_KERNEL_COLS]
+    n = rows.num_rows
+    return pa.Table.from_arrays(
+        [rows["segment"], rows["leaf_id"], pa.array(np.zeros(n, _F32)),
+         pa.array(np.zeros(n, np.int64)), rows["docs_bin"],
+         pa.nulls(n, pa.binary()), pa.nulls(n, pa.list_(pa.int64()))],
+        names=_LOCAL_KERNEL_COLS)
 
 
 def _local_hits(index: FulltextIndex, sp: _SearchPlan) -> list:
     """Local executor: the segment kernel of :func:`_spark_hits`, run in
     the driver over every matched segment at once. Returns the kernel's
-    output frames (doc_id, score, seg_hits) — the input the partition
+    output batches (doc_id, score, seg_hits) — the input the partition
     merge functions take on the Spark tier."""
-    reads = _local_reads(sp)
+    reads = _local_reads(index, sp)
     if not reads:
         return []
-    parts = [_local_posting_rows(index, sp.matched, reads["postings"][0])]
+    rows = _local_posting_rows(index, sp.matched, reads["postings"][0])
+    batches = rows.to_batches()
     if "phrase" in reads:
-        parts.append(_local_phrase_rows(index, sp.phrase_specs, len(sp.leaves),
-                                        reads["phrase"][0]))
-    data = pd.concat(parts, ignore_index=True)
+        batches += _local_phrase_rows(
+            index, sp.phrase_specs, len(sp.leaves), reads["phrase"][0]
+        ).cast(rows.schema).to_batches()
     kernel = _segment_kernel_factory(sp.plan, sp.plan["scored_leaf_ids"])
-    return list(kernel(iter([data])))
+    return list(kernel(batches))
 
 
 def _stored_to_f32(stored: np.ndarray, quantize_f16: bool) -> np.ndarray:
@@ -1960,11 +1976,79 @@ def _wand_legs(node: dict) -> dict:
     return {c["leaf_id"]: legs.index(key) for c, key in zip(kids, keys)}
 
 
-def _wand_tree_segment(g: pd.DataFrame, node: dict, k: int, base: int,
+class _KernelRows(NamedTuple):
+    """The segment kernel's input rows (:func:`_kernel_rows`) as numpy
+    arrays: one entry per row in the per-row arrays, and every row's
+    segment-relative doc ids decoded into one array, row i's at
+    ``ids[lo[i]:hi[i]]``. ``stored`` (aligned with ``ids``, 0 on rows
+    without scores) holds the decoded stored scores when the kernel scores
+    every row; otherwise row i's packed scores are
+    ``sdata[slo[i]:shi[i]]``, decoded only if the row is scored."""
+
+    segment: np.ndarray     # int64
+    leaf_id: np.ndarray     # int64
+    term_score: np.ndarray  # f32
+    max_score: np.ndarray   # uint32
+    scored: np.ndarray      # bool: the row carries scores_bin
+    lo: np.ndarray
+    hi: np.ndarray
+    slo: np.ndarray
+    shi: np.ndarray
+    ids: np.ndarray
+    stored: "np.ndarray | None"
+    sdata: np.ndarray
+
+    def take(self, idx: np.ndarray) -> "_KernelRows":
+        """The rows ``idx``, in that order; the last three fields, the
+        decoded values, are shared."""
+        return self._replace(**{f: getattr(self, f)[idx]
+                                for f in self._fields[:-3]})
+
+
+def _kernel_rows(table: pa.Table, segment_docs: int,
+                 decode_scores: bool) -> _KernelRows:
+    """Kernel-input rows (segment, leaf_id, term_score, max_score,
+    docs_bin, scores_bin, doc_ids) with ONE grouped decode of every row's
+    ``docs_bin`` (:func:`unpack_ids_grouped`) and, when
+    ``decode_scores``, one of every ``scores_bin``. An identity row's
+    ``doc_ids`` (absolute ids; its ``docs_bin`` is null) join the
+    decoded ids segment-relative, like a posting row's."""
+    segment = table["segment"].to_numpy().astype(np.int64)
+    ids, offs = unpack_ids_grouped(table["docs_bin"])
+    lo, hi = offs[:-1], offs[1:]
+    lists = table["doc_ids"]
+    if lists.null_count < len(lists):  # identity rows
+        n_abs = pc.list_value_length(lists).fill_null(0).to_numpy()
+        absolute = pc.list_flatten(lists).to_numpy()
+        ends = len(ids) + np.cumsum(n_abs)
+        lo = np.where(n_abs > 0, ends - n_abs, lo)
+        hi = np.where(n_abs > 0, ends, hi)
+        ids = np.concatenate(
+            [ids, absolute - np.repeat(segment * segment_docs, n_abs)])
+    scores = table["scores_bin"]
+    scored = pc.is_valid(scores).to_numpy()
+    stored, sdata = None, np.empty(0, np.uint8)
+    if decode_scores:
+        # a scored row holds one stored score per doc id
+        stored = np.zeros(len(ids), dtype=np.uint32)
+        stored[_ranges(lo[scored], hi[scored])] = \
+            vbyte_decode_grouped(scores)[0]
+        soffs = np.zeros(len(lo) + 1, dtype=np.int64)
+    else:
+        sdata, soffs = binary_buffers(scores)
+    return _KernelRows(
+        segment, table["leaf_id"].to_numpy().astype(np.int64),
+        table["term_score"].to_numpy().astype(_F32),
+        table["max_score"].to_numpy().astype(np.uint32), scored, lo, hi,
+        soffs[:-1], soffs[1:], ids, stored, sdata)
+
+
+def _wand_tree_segment(r: _KernelRows, node: dict, k: int, base: int,
                        seg_docs: int, quantize_f16: bool = True,
                        deleted: "np.ndarray | None" = None):
-    """Top-k of one segment for a WAND node — a lone unboosted leaf, or an
-    unboosted OR/AND of unboosted leaves — with block-max row pruning.
+    """Top-k of one segment's rows ``r`` for a WAND node — a lone
+    unboosted leaf, or an unboosted OR/AND of unboosted leaves — with
+    block-max row pruning.
 
     A leaf's doc score is the max over its term rows (search_field.rs:
     449-463); OR scores ``(Σ per-leg max) × n²`` (set_op.rs:87-220), AND
@@ -1984,7 +2068,10 @@ def _wand_tree_segment(g: pd.DataFrame, node: dict, k: int, base: int,
     only. The final scores are replayed through :func:`eval_tree` on
     ``node`` itself, each leaf reading its leg's (ids, max) — bit-identical
     to the plain kernel; the 1e-4 slack dwarfs the f32/f64 summation noise
-    between the θ estimate and the replay.
+    between the θ estimate and the replay. θ never falls and a leg's
+    bounds fall in row order, so once a row of leg t is skipped every
+    later row of leg t is too: such rows are set aside unexamined, and
+    once every leg is closed the rest are, in one step.
 
     Per decoded row the kernel only scatters the leg's max and presence
     and the ``touched`` mask, and keeps the newly touched ids as a chunk.
@@ -1994,7 +2081,9 @@ def _wand_tree_segment(g: pd.DataFrame, node: dict, k: int, base: int,
     touched/2). The θ partials are computed there, over the touched docs:
     the sum over legs, × (legs ≥ 1e-5)² for OR, and for AND only the docs
     present in every leg. θ only grows, so a stale θ is a sound, merely
-    weaker, bound. Skipped rows get an ids-only decode for the count.
+    weaker, bound. Row ids come decoded (:func:`_kernel_rows`); a row's
+    scores are decoded from its bytes only when the row is scored, so a
+    skipped row costs nothing but its ids in the count.
 
     The finish costs O(hits): the sorted touched ids feed the replay, and
     the exact hit count is taken over the union of decoded and skipped
@@ -2008,11 +2097,11 @@ def _wand_tree_segment(g: pd.DataFrame, node: dict, k: int, base: int,
     n_legs = len(set(leg_of.values()))
     # a one-child node passes its child through (eval_tree)
     op = node["op"] if len(node.get("children", ())) > 1 else "leaf"
-    ts = g["term_score"].values.astype(_F32)
-    upper = (ts * _stored_to_f32(
-        g["max_score"].values.astype(np.uint32), quantize_f16)).astype(np.float64)
-    leg_arr = np.array([leg_of[int(l)] for l in g["leaf_id"].values],
-                       dtype=np.int64)
+    ts = r.term_score
+    upper = (ts * _stored_to_f32(r.max_score, quantize_f16)).astype(np.float64)
+    leg_lut = np.zeros(max(leg_of) + 1, dtype=np.int64)
+    leg_lut[list(leg_of)] = list(leg_of.values())
+    leg_arr = leg_lut[r.leaf_id]
     seg_u = np.zeros(n_legs, dtype=np.float64)
     np.maximum.at(seg_u, leg_arr, upper)
     other = seg_u.sum() - seg_u  # Σ of the OTHER legs' max uppers
@@ -2024,12 +2113,11 @@ def _wand_tree_segment(g: pd.DataFrame, node: dict, k: int, base: int,
     touched = np.zeros(seg_docs, dtype=bool)
     cand: list = []  # newly touched id chunks
     n_cand = 0
-    skipped: list = [[] for _ in range(n_legs)]  # ids of skipped rows
+    skipped: list = []  # rows never score-decoded
+    closed = np.zeros(n_legs, dtype=bool)  # legs past θ
     thresh = None
     dirty = False
     entries = 1 << 62  # posting entries decoded since the last refresh
-    docs_col = g.columns.get_loc("docs_bin")
-    scores_col = g.columns.get_loc("scores_bin")
 
     def refresh():
         nonlocal thresh, dirty, cand, entries
@@ -2047,8 +2135,11 @@ def _wand_tree_segment(g: pd.DataFrame, node: dict, k: int, base: int,
         dirty = False
         entries = 0
 
-    for i in order:
+    for pos, i in enumerate(order.tolist()):
         t = int(leg_arr[i])
+        if closed[t]:
+            skipped.append(i)
+            continue
         bound = (upper[i] + other[t]) * factor * 1.0001
         if thresh is not None and bound < thresh:
             skip = True
@@ -2058,9 +2149,14 @@ def _wand_tree_segment(g: pd.DataFrame, node: dict, k: int, base: int,
         else:
             skip = False
         if skip:
-            skipped[t].append(unpack_ids(g.iat[i, docs_col]))
+            skipped.append(i)
+            closed[t] = True
+            if closed.all():
+                skipped.extend(order[pos + 1:].tolist())
+                break
             continue
-        ids, stored = unpack_postings(g.iat[i, docs_col], g.iat[i, scores_col])
+        ids = r.ids[r.lo[i]:r.hi[i]]
+        stored = vbyte_decode(r.sdata[r.slo[i]:r.shi[i]]).astype(np.uint32)
         fin = (ts[i] * _stored_to_f32(stored, quantize_f16)).astype(_F32)
         # a posting row holds each doc once: a plain scatter keeps the max
         row = maxes[t]
@@ -2078,10 +2174,13 @@ def _wand_tree_segment(g: pd.DataFrame, node: dict, k: int, base: int,
     ids, sc = eval_tree(node, {l: (leg_ids[t], maxes[t, leg_ids[t]])
                                for l, t in leg_of.items()})
     hit = ids
-    if any(skipped):
-        hit = reduce(np.intersect1d if op == "and" else np.union1d,
-                     [np.union1d(d, np.concatenate(s)) if s else d
-                      for d, s in zip(leg_ids, skipped)])
+    if skipped:
+        skipped = np.array(skipped, dtype=np.int64)
+        leg_hits = []
+        for t, d in enumerate(leg_ids):
+            s = skipped[leg_arr[skipped] == t]
+            leg_hits.append(np.union1d(d, r.ids[_ranges(r.lo[s], r.hi[s])]))
+        hit = reduce(np.intersect1d if op == "and" else np.union1d, leg_hits)
     n_hits = len(hit)
     if deleted is not None and len(deleted):
         n_hits -= int(np.isin(hit, deleted).sum())
@@ -2162,18 +2261,23 @@ def _identity_leaf_rows(index: FulltextIndex, leaf) -> DataFrame:
     )
 
 
-def _hits_pdf(ids: np.ndarray, scores: np.ndarray, n_hits: int) -> pd.DataFrame:
+_HITS_ARROW = pa.schema([("doc_id", pa.int64()), ("score", pa.float32()),
+                         ("seg_hits", pa.int64())])
+
+
+def _hits_batch(ids: np.ndarray, scores: np.ndarray,
+                n_hits: int) -> pa.RecordBatch:
     seg_hits = np.zeros(len(ids), dtype=np.int64)
     if len(ids) and n_hits > 0:
         seg_hits[0] = n_hits
-    return pd.DataFrame({"doc_id": ids.astype(np.int64),
-                         "score": scores.astype(np.float32),
-                         "seg_hits": seg_hits})
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids.astype(np.int64)), pa.array(scores.astype(_F32)),
+         pa.array(seg_hits)], schema=_HITS_ARROW)
 
 
 def _partition_topk_factory(k: int, count_col: str | None = None,
                             facet_maps=()):
-    """mapInPandas kernel: one output group per partition carrying the
+    """mapInArrow kernel: one output batch per partition carrying the
     partition's exact row count (``cnt`` on the first row, seg_hits-style)
     plus its k best rows by (score DESC, doc_id DESC). Running it over a
     just-cached hit set materializes the cache AND replaces both the
@@ -2201,28 +2305,26 @@ def _partition_topk_factory(k: int, count_col: str | None = None,
     driver sums on facet rows."""
     k = max(k, 1)
 
-    def fn(iterator):
+    def fn(batches):
         ids_parts, sc_parts, n = [], [], 0
         pending = 0
         fcounts: list[dict] = [dict() for _ in facet_maps]
-        for pdf in iterator:
-            n += int(pdf[count_col].sum()) if count_col else len(pdf)
-            if not len(pdf):
+        for b in batches:
+            n += (int(b.column(count_col).to_numpy().sum()) if count_col
+                  else b.num_rows)
+            if not b.num_rows:
                 continue
-            ids_parts.append(pdf["doc_id"].to_numpy(np.int64))
-            sc_parts.append(pdf["score"].to_numpy(_F32))
+            ids_parts.append(b.column("doc_id").to_numpy().astype(np.int64))
+            sc_parts.append(b.column("score").to_numpy().astype(_F32))
             for d, (_fld, mids, mvals) in zip(fcounts, facet_maps):
                 lo = np.searchsorted(mids, ids_parts[-1], side="left")
                 hi = np.searchsorted(mids, ids_parts[-1], side="right")
-                sel = np.flatnonzero(hi > lo)
-                if not len(sel):
-                    continue
-                gath = np.concatenate([np.arange(lo[i], hi[i]) for i in sel])
-                vc = pd.Series(mvals[gath]).value_counts(dropna=False)
-                for v, c in vc.items():
-                    key = None if pd.isna(v) else v
-                    d[key] = d.get(key, 0) + int(c)
-            pending += len(pdf)
+                vc = pc.value_counts(pa.array(mvals[_ranges(lo, hi)],
+                                              type=pa.string()))
+                for v, c in zip(vc.field("values").to_pylist(),
+                                vc.field("counts").to_pylist()):
+                    d[v] = d.get(v, 0) + c
+            pending += b.num_rows
             if pending > 4 * k and len(ids_parts) > 1:
                 # compact the running state so memory stays O(k + batch)
                 ids = np.concatenate(ids_parts)
@@ -2237,18 +2339,31 @@ def _partition_topk_factory(k: int, count_col: str | None = None,
         order = np.lexsort((-ids, -sc.astype(np.float64)))[:k]
         cnt = np.zeros(len(order), dtype=np.int64)
         cnt[0] = n
-        tag = {"ff": None, "fv": None, "fcnt": np.int64(0)} if facet_maps else {}
-        yield pd.DataFrame({"doc_id": ids[order], "score": sc[order],
-                            "cnt": cnt, **tag})
+        yield _merge_batch(ids[order], sc[order], cnt,
+                           [None] * len(order) if facet_maps else None)
         for (fld, _m, _v), d in zip(facet_maps, fcounts):
             if d:
-                yield pd.DataFrame({
-                    "doc_id": np.int64(0), "score": _F32(0.0),
-                    "cnt": np.int64(0), "ff": fld,
-                    "fv": np.array(list(d.keys()), dtype=object),
-                    "fcnt": np.array(list(d.values()), dtype=np.int64)})
+                m = len(d)
+                yield _merge_batch(np.zeros(m, np.int64), np.zeros(m, _F32),
+                                   np.zeros(m, np.int64), [fld] * m,
+                                   list(d), list(d.values()))
 
     return fn
+
+
+def _merge_batch(ids, scores, cnt, ff=None, fv=None,
+                 fcnt=None) -> pa.RecordBatch:
+    """A batch of :func:`_partition_topk_factory`'s output: (doc_id,
+    score, cnt), plus (ff, fv, fcnt) when ``ff`` is given — hit rows
+    carry a null ``ff`` and ``fcnt`` 0."""
+    cols = {"doc_id": pa.array(ids, pa.int64()),
+            "score": pa.array(scores, pa.float32()),
+            "cnt": pa.array(cnt, pa.int64())}
+    if ff is not None:
+        cols["ff"] = pa.array(ff, pa.string())
+        cols["fv"] = pa.array(fv or [None] * len(ff), pa.string())
+        cols["fcnt"] = pa.array(fcnt or [0] * len(ff), pa.int64())
+    return pa.RecordBatch.from_pydict(cols)
 
 
 def _segment_kernel_factory(plan: dict, scored_leaf_ids: set):
@@ -2263,72 +2378,68 @@ def _segment_kernel_factory(plan: dict, scored_leaf_ids: set):
     seg_deleted = {int(s): np.asarray(v, dtype=np.int64)
                    for s, v in (plan.get("seg_deleted") or {}).items()}
 
-    def kernel(iterator):
-        # a task may hold several segments; concat then group by segment
-        pdfs = [pdf for pdf in iterator if not pdf.empty]
-        if not pdfs:
+    def kernel(batches):
+        # a task may hold several segments: one decode of all their rows
+        # (_kernel_rows), then each segment's rows in first-appearance
+        # order, every segment's rows in input order (WAND's stable ties)
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
             return
-        data = pd.concat(pdfs, ignore_index=True)
-        for _seg, g in data.groupby("segment", sort=False):
-            seg_base = int(_seg) * plan["segment_docs"]
+        rows = _kernel_rows(pa.Table.from_batches(batches),
+                            plan["segment_docs"], not plan.get("wand"))
+        segs = rows.segment
+        _u, first = np.unique(segs, return_index=True)
+        for seg in segs[np.sort(first)].tolist():
+            r = rows.take(np.flatnonzero(segs == seg))
+            seg_base = seg * plan["segment_docs"]
             k = plan.get("top")
-            dl = seg_deleted.get(int(_seg))
+            dl = seg_deleted.get(seg)
             if k is not None and dl is not None:
                 k += len(dl)
             if plan.get("wand"):
                 ids, scores, n_hits = _wand_tree_segment(
-                    g, plan["tree"], k, seg_base, plan["segment_docs"],
+                    r, plan["tree"], k, seg_base, plan["segment_docs"],
                     plan.get("quantize_f16", True), dl)
             else:
                 ids, scores, n_hits = _plain_segment(
-                    g, plan, scored_leaf_ids, k, seg_base, dl)
+                    r, plan, scored_leaf_ids, k, seg_base, dl)
             if dl is not None and len(dl) and len(ids):
                 live = ~np.isin(ids - seg_base, dl)
                 ids, scores = ids[live], scores[live]
-            yield _hits_pdf(ids, scores, n_hits)
+            yield _hits_batch(ids, scores, n_hits)
 
     return kernel
 
 
-def _plain_segment(g: pd.DataFrame, plan: dict, scored_leaf_ids: set,
+def _plain_segment(r: _KernelRows, plan: dict, scored_leaf_ids: set,
                    k: "int | None", seg_base: int, deleted):
-    """The whole plan over one segment's kernel rows: every row decoded,
-    each leaf max-deduped, then :func:`eval_segment`. Returns its top k
-    (all hits when k is None) and the exact hit count minus ``deleted``."""
-    quantize_f16 = plan.get("quantize_f16", True)
+    """The whole plan over one segment's kernel rows ``r`` (scores
+    decoded): every row scored, each leaf max-deduped, then
+    :func:`eval_segment`. Returns its top k (all hits when k is None) and
+    the exact hit count minus ``deleted``."""
+    lens = r.hi - r.lo
+    vals = _ranges(r.lo, r.hi)
+    ids = r.ids[vals] + seg_base  # stored segment-relative
+    leaf = np.repeat(r.leaf_id, lens)
+    # a posting row's doc score is term_score × its stored score; an
+    # identity row carries its f32 score in term_score, a phrase row 0.0
+    ts = np.repeat(r.term_score, lens)
+    sc = np.where(np.repeat(r.scored, lens),
+                  ts * _stored_to_f32(r.stored[vals],
+                                      plan.get("quantize_f16", True)),
+                  ts).astype(_F32)
     leaf_hits: dict = {}
     leaf_idsets: dict = {}
-    for leaf_id, rows in g.groupby("leaf_id", sort=False):
-        all_ids, all_sc = [], []
-        for docs_bin, scores_bin, term_score, doc_ids in zip(
-                rows["docs_bin"].values, rows["scores_bin"].values,
-                rows["term_score"].values, rows["doc_ids"].values):
-            if docs_bin is not None and scores_bin is not None:
-                ids, stored = unpack_postings(docs_bin, scores_bin)
-                ids = ids + seg_base  # stored segment-relative
-                fin = (_F32(term_score)
-                       * _stored_to_f32(stored, quantize_f16)).astype(_F32)
-                all_ids.append(ids)
-                all_sc.append(fin)
-            elif docs_bin is not None:
-                # ids-only packed row (phrase leg): no scores
-                ids = unpack_ids(docs_bin) + seg_base
-                all_ids.append(ids)
-                all_sc.append(np.zeros(len(ids), dtype=_F32))
-            elif doc_ids is not None:
-                # identity-leaf rows carry the per-group f32 score in
-                # term_score; phrase rows carry 0.0 (ids-only use)
-                all_ids.append(np.asarray(doc_ids, dtype=np.int64))
-                all_sc.append(np.full(len(doc_ids), _F32(term_score),
-                                      dtype=_F32))
-        if not all_ids:
+    for leaf_id in dict.fromkeys(r.leaf_id.tolist()):
+        m = leaf == leaf_id
+        if not m.any():
             continue
-        ids = np.concatenate(all_ids)
-        sc = np.concatenate(all_sc)
         if leaf_id in scored_leaf_ids:
             # dedup keep MAX (search_field.rs:449-463)
-            leaf_hits[leaf_id] = _dedup_max(ids, sc)
-        leaf_idsets[leaf_id] = np.unique(ids)
+            leaf_hits[leaf_id] = _dedup_max(ids[m], sc[m])
+            leaf_idsets[leaf_id] = leaf_hits[leaf_id][0]
+        else:
+            leaf_idsets[leaf_id] = np.unique(ids[m])
     ids, scores = eval_segment(plan, leaf_hits, leaf_idsets)
     n_hits = len(ids)  # exact, pre-truncation — free on this path
     if deleted is not None and len(deleted) and len(ids):
@@ -2347,7 +2458,7 @@ def _plain_segment(g: pd.DataFrame, plan: dict, scored_leaf_ids: set,
 class _Part(NamedTuple):
     """One index's share of a search: the handle, its plan, the tier its
     kernel ran on with the estimates behind that choice, the kernel output
-    (``frames``, the local tier's driver frames, or ``hits``, the Spark
+    (``batches``, the local tier's Arrow batches, or ``hits``, the Spark
     DataFrame) and the doc ids ``[lo, hi)`` it owns."""
 
     index: FulltextIndex
@@ -2355,7 +2466,7 @@ class _Part(NamedTuple):
     tier: str
     posting_estimate: "int | None"
     scan_bytes: "int | None"
-    frames: "list | None"
+    batches: "list | None"
     hits: "DataFrame | None"
     lo: int = 0
     hi: int = 1 << 63
@@ -2464,13 +2575,12 @@ def _finish_parts(request: dict, parts: list, fused_facets: bool,
     def _merge_pass(p: _Part, fn, schema: str, kernel_cols: bool = False):
         """Run a partition-merge function over one part's kernel output:
         chained onto the kernel stage on the Spark tier (one job,
-        partitions × (k+1) rows collected), or over the local kernel frames
-        as ONE partition in the driver. Returns row records."""
+        partitions × (k+1) rows collected), or over the local kernel
+        batches as ONE partition in the driver. Returns row records."""
         if p.hits is None:
-            return [r for pdf in fn(iter(p.frames))
-                    for r in pdf.to_dict("records")]
+            return [r for b in fn(iter(p.batches)) for r in b.to_pylist()]
         src = p.hits if kernel_cols else p.hits.select("doc_id", "score")
-        return src.mapInPandas(fn, schema=schema).collect()
+        return src.mapInArrow(fn, schema=schema).collect()
 
     # fused facet counts ride on the merge rows as (ff, fv, fcnt)
     schema = "doc_id long, score float, cnt long" + (

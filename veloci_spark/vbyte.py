@@ -6,13 +6,20 @@ anchor_id and VInt-compressed
 this is our from-scratch equivalent: doc ids are delta-encoded then
 LEB128-varint packed; scores are LEB128 packed directly. Both encode and
 decode are O(5) vectorized numpy passes (one per possible byte of a u32) —
-no per-value Python, so the kernels are Arrow-batch friendly inside
-``applyInPandas``/``mapInPandas``.
+no per-value Python.
+
+The query kernel decodes a whole Arrow column of packed rows at once
+(:func:`vbyte_decode_grouped`, the inverse of
+:func:`vbyte_encode_grouped`): one pass over the column's data buffer
+gives every row's values and per-row value offsets, so a kernel call over
+any number of posting rows (a ``mapInArrow`` batch, or the local tier's
+rows) pays one decode, not one per row.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _THRESH = [1 << 7, 1 << 14, 1 << 21, 1 << 28]
 
@@ -48,10 +55,15 @@ def vbyte_encode(values: np.ndarray) -> bytes:
 def vbyte_decode(buf: bytes | np.ndarray) -> np.ndarray:
     """Decode LEB128 bytes → uint64 array."""
     arr = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray, memoryview)) else np.asarray(buf, dtype=np.uint8)
+    return _leb128(arr)[0]
+
+
+def _leb128(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """A uint8 LEB128 stream → (uint64 values, position of each value's
+    last byte)."""
     if arr.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_last = (arr & 0x80) == 0
-    ends = np.flatnonzero(is_last)
+        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
+    ends = np.flatnonzero((arr & 0x80) == 0)
     starts = np.empty(ends.size, dtype=np.int64)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
@@ -60,7 +72,59 @@ def vbyte_decode(buf: bytes | np.ndarray) -> np.ndarray:
     for k in range(int(lens.max())):
         mask = lens > k
         vals[mask] |= (arr[starts[mask] + k] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(7 * k)
-    return vals
+    return vals, ends
+
+
+def binary_buffers(arr) -> tuple[np.ndarray, np.ndarray]:
+    """The bytes of a ``binary`` / ``large_binary`` Arrow array or
+    ChunkedArray and its per-row byte offsets (int64, one more than rows):
+    row i is ``data[offsets[i]:offsets[i + 1]]``, a null row is empty.
+    Zero-copy for one chunk without nulls."""
+    if isinstance(arr, pa.ChunkedArray):
+        parts = [binary_buffers(c) for c in arr.chunks]
+        if len(parts) == 1:
+            return parts[0]
+        base = np.cumsum([0] + [len(d) for d, _o in parts])
+        return (np.concatenate([d for d, _o in parts]
+                               or [np.empty(0, np.uint8)]),
+                np.concatenate([[0]] + [o[1:] + b
+                                        for (_d, o), b in zip(parts, base)]))
+    if arr.null_count:
+        arr = arr.fill_null(pa.scalar(b"", arr.type))
+    _valid, offsets, data = arr.buffers()
+    otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(offsets, otype, len(arr) + 1,
+                         arr.offset * otype().itemsize).astype(np.int64)
+    data = (np.frombuffer(data, np.uint8) if data is not None
+            else np.empty(0, np.uint8))
+    return data[offs[0]:offs[-1]], offs - offs[0]
+
+
+def vbyte_decode_grouped(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Decode every row of a binary Arrow array (or ChunkedArray) of LEB128
+    groups in ONE vectorized pass — the inverse of
+    :func:`vbyte_encode_grouped`. Returns (uint64 values of all rows,
+    per-row value offsets, int64, one more than rows): row i's values are
+    ``values[offsets[i]:offsets[i + 1]]``, equal to ``vbyte_decode`` of
+    its bytes. Null and empty rows decode to no values. A group ends on a
+    byte without the continuation bit, so a row's values are exactly the
+    values whose last byte lies in it."""
+    data, offs = binary_buffers(arr)
+    vals, ends = _leb128(data)
+    return vals, np.searchsorted(ends, offs, "left").astype(np.int64)
+
+
+def unpack_ids_grouped(arr) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`unpack_ids` of every row of a binary Arrow array in one
+    pass: (int64 ids of all rows, each row delta-decoded on its own, and
+    the per-row offsets of :func:`vbyte_decode_grouped`)."""
+    vals, offs = vbyte_decode_grouped(arr)
+    run = np.zeros(len(vals) + 1, dtype=np.uint64)
+    np.cumsum(vals, out=run[1:])
+    # each row's running sum restarts at its first value (u64 wraps
+    # alike on both sides of the subtraction)
+    ids = run[1:] - np.repeat(run[offs[:-1]], np.diff(offs))
+    return ids.astype(np.int64), offs
 
 
 def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
